@@ -16,14 +16,81 @@ this is driver-side KB metadata: resolution lists ONE directory.
 The reference tool takes explicit file paths
 (``ManifestFileReadTool`` args); this layer adds the by-name lookup
 its README assumes users perform by hand.
+
+Install rule. Every metadata version a commit produces — table and
+view ``vN.metadata.json``, and Delta ``_delta_log/N.json`` — lands
+through :func:`install_metadata`: the bytes go to a temp file in the
+target's directory, which is then hard-linked (``os.link``) onto the
+target name. The link fails when the name already exists (the "rename only
+if absent" rule HadoopTableOperations follows), so a version is
+written whole or not at all and is never overwritten; the loser of a
+race gets :class:`CommitConflictError` and retries through the
+rebase functions in ``concurrency.py``. :func:`next_metadata_path`
+is the one rule naming the next version, and
+:func:`write_version_hint` stamps the hint as a best-effort last
+step.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
+import uuid
+from typing import Any
 
 _V_RE = re.compile(r"v(\d+)\.metadata\.json(\.gz)?$")
+
+
+class CommitConflictError(RuntimeError):
+    """A concurrent commit invalidated the staged operation; the
+    writer must re-plan against the new head (Iceberg's
+    ``ValidationException`` / ``CommitFailedException`` role)."""
+
+
+def table_root_of(base_dir: str) -> str:
+    """The table root for a ``base_dir`` that is either the root
+    itself (it holds ``metadata/``) or the directory of a metadata
+    file inside ``metadata/`` (the HadoopCatalog layout)."""
+    if os.path.isdir(os.path.join(base_dir, "metadata")):
+        return base_dir
+    return os.path.dirname(base_dir)
+
+
+def next_metadata_path(metadata_path: str, snapshot_id: int = 0) -> str:
+    """The path of the version after ``metadata_path``:
+    ``v<N+1>.metadata.json`` next to a ``vN`` file; for any other
+    name, ``<stem>.commit-<snapshot_id>.metadata.json``."""
+    d, base = os.path.dirname(metadata_path), os.path.basename(metadata_path)
+    m = _V_RE.fullmatch(base)
+    if m:
+        return os.path.join(d, f"v{int(m.group(1)) + 1}.metadata.json")
+    stem = base.removesuffix(".metadata.json").removesuffix(".json")
+    return os.path.join(d, f"{stem}.commit-{snapshot_id}.metadata.json")
+
+
+def install_metadata(path: str, raw: dict[str, Any] | str) -> str:
+    """Publish ``raw`` (a metadata dict, written as indented JSON, or
+    ready text) at ``path`` exclusively and atomically: write a temp
+    file beside it, then hard-link it onto ``path``. Raises
+    :class:`CommitConflictError` when ``path`` already exists. A
+    crash before the link leaves only the hidden temp file, which
+    the orphan-file sweep reports. Returns ``path``."""
+    text = raw if isinstance(raw, str) else json.dumps(raw, indent=2)
+    d, base = os.path.split(path)
+    tmp = os.path.join(d, f".{base}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "x") as f:
+        f.write(text)
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        os.unlink(tmp)
+        raise CommitConflictError(
+            f"{path} already exists: a concurrent commit installed this "
+            "version first; re-plan against the new head"
+        ) from None
+    os.unlink(tmp)
+    return path
 
 
 def table_location(warehouse: str, identifier: str) -> str:

@@ -10,7 +10,10 @@ forward verbatim + the new one with partition summaries), and a new
 number and current-snapshot bumps) — the same layered commit an
 Iceberg ``AppendFiles`` operation produces
 (reference schema lineage: ManifestFileReadTool.java:170-197 reads
-exactly the record shapes written here).
+exactly the record shapes written here). The new version is installed
+through ``catalog.install_metadata``, so a second commit against the
+same base raises ``CommitConflictError`` instead of replacing the
+first; writers retry through ``concurrency.py``.
 
 Deterministic by construction: no wall clock (timestamp defaults to
 parent's + 1 s), no randomness (Avro sync markers are md5 of the
@@ -27,10 +30,15 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from typing import Any
 
 from ..avro.writer import write_container
+from .catalog import (
+    install_metadata,
+    next_metadata_path,
+    table_root_of,
+    write_version_hint,
+)
 from .conversions import to_bytes
 from .metadata import TableMetadata, parse_metadata
 from .snapshots import _local, read_manifest_list
@@ -272,15 +280,6 @@ def _canonical_metadata_uri(metadata_path: str, table_root: str, loc: str | None
     return f"{loc}/{rel}" if loc else metadata_path
 
 
-def _next_metadata_path(metadata_path: str, snapshot_id: int) -> str:
-    d, base = os.path.dirname(metadata_path), os.path.basename(metadata_path)
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", base)
-    if m:
-        return os.path.join(d, f"v{int(m.group(1)) + 1}.metadata.json")
-    stem = base.removesuffix(".metadata.json").removesuffix(".json")
-    return os.path.join(d, f"{stem}.commit-{snapshot_id}.metadata.json")
-
-
 def append_snapshot(
     metadata_path: str,
     data_files: list[dict[str, Any]],
@@ -503,14 +502,18 @@ def _commit_files(
     stage_ref: str | None = None,
     replace_dv_refs: set[str] | None = None,
     extra_summary: dict[str, str] | None = None,
+    replace_all: bool = False,
 ) -> dict[str, Any]:
+    """The shared commit builder. ``replace_all``: the new files
+    supersede every live file (a full sorted rewrite), so none of the
+    parent's manifests, data or delete, is carried forward."""
     if not data_files:
         raise ValueError(f"{operation} commit with no data files (empty commits carry no manifest)")
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
     raw = json.loads(json.dumps(meta.raw))  # deep copy
     loc = raw.get("location") or f"file://{os.path.dirname(base_dir)}"
-    table_root = base_dir if os.path.isdir(os.path.join(base_dir, "metadata")) else os.path.dirname(base_dir)
+    table_root = table_root_of(base_dir)
     meta_dir = os.path.join(table_root, "metadata")
 
     snaps = raw.get("snapshots", [])
@@ -623,7 +626,7 @@ def _commit_files(
     # ---- new manifest(s): parent manifest-list rows carried
     # forward + one new row per spec group
     rows: list[dict] = []
-    if parent_id is not None:
+    if parent_id is not None and not replace_all:
         parent = next(s for s in snaps if s["snapshot-id"] == parent_id)
         rows.extend(read_manifest_list(_local(parent["manifest-list"], base_dir, loc)))
     if replace_dv_refs:
@@ -768,9 +771,7 @@ def _commit_files(
     if vmax > 0 and len(raw["metadata-log"]) > vmax:
         dropped_meta = raw["metadata-log"][:-vmax]
         raw["metadata-log"] = raw["metadata-log"][-vmax:]
-    new_path = _next_metadata_path(metadata_path, snapshot_id)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = install_metadata(next_metadata_path(metadata_path, snapshot_id), raw)
     if dropped_meta and props.get(
         "write.metadata.delete-after-commit.enabled"
     ) == "true":
@@ -951,9 +952,7 @@ def expire_snapshots(
             if timestamp_ms is None:
                 timestamp_ms = raw.get("last-updated-ms", 0) + 1000
             raw["last-updated-ms"] = timestamp_ms
-            new_path = _next_metadata_path(metadata_path, 0)
-            with open(new_path, "w") as f:
-                json.dump(raw, f, indent=2)
+            new_path = install_metadata(next_metadata_path(metadata_path), raw)
             return {
                 "metadata_path": new_path, "expired": [], "removable": [],
                 "removed_refs": removed_refs,
@@ -1012,14 +1011,12 @@ def expire_snapshots(
             "timestamp-ms": timestamp_ms,
             "metadata-file": _canonical_metadata_uri(
                 metadata_path,
-                base_dir if os.path.isdir(os.path.join(base_dir, "metadata")) else os.path.dirname(base_dir),
+                table_root_of(base_dir),
                 loc,
             ),
         }
     )
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = install_metadata(next_metadata_path(metadata_path), raw)
 
     if delete_files:
         for p in removable:
@@ -1153,7 +1150,7 @@ def commit_schema_update(
     meta = parse_metadata(metadata_path)
     raw = json.loads(json.dumps(meta.raw))
     loc = raw.get("location")
-    table_root = base_dir if os.path.isdir(os.path.join(base_dir, "metadata")) else os.path.dirname(base_dir)
+    table_root = table_root_of(base_dir)
 
     cur = next(
         s for s in raw.get("schemas", [raw.get("schema", {})])
@@ -1183,9 +1180,7 @@ def commit_schema_update(
         {"timestamp-ms": timestamp_ms,
          "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc)}
     )
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = install_metadata(next_metadata_path(metadata_path), raw)
     return {
         "metadata_path": new_path,
         "schema_id": new_schema_id,
@@ -1222,9 +1217,7 @@ def set_ref(
     if timestamp_ms is None:
         timestamp_ms = raw.get("last-updated-ms", 0) + 1000
     raw["last-updated-ms"] = timestamp_ms
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = install_metadata(next_metadata_path(metadata_path), raw)
     return {"metadata_path": new_path, "name": name, "snapshot_id": snapshot_id}
 
 
@@ -1370,9 +1363,7 @@ def rollback_to(
     raw.setdefault("snapshot-log", []).append(
         {"timestamp-ms": timestamp_ms, "snapshot-id": snapshot_id}
     )
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = install_metadata(next_metadata_path(metadata_path), raw)
     return {"metadata_path": new_path, "snapshot_id": snapshot_id}
 
 
@@ -1492,9 +1483,7 @@ def publish_snapshot(
     raw.setdefault("snapshot-log", []).append(
         {"timestamp-ms": timestamp_ms, "snapshot-id": sid}
     )
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = install_metadata(next_metadata_path(metadata_path), raw)
     return {"metadata_path": new_path, "snapshot_id": sid}
 
 
@@ -1818,11 +1807,9 @@ def create_table(
     }
     if format_version >= 3:
         meta0["next-row-id"] = 0
-    path = os.path.join(table_root, "metadata", "v1.metadata.json")
-    with open(path, "w") as f:
-        json.dump(meta0, f, indent=2)
-    from .catalog import write_version_hint
-
+    path = install_metadata(
+        os.path.join(table_root, "metadata", "v1.metadata.json"), meta0
+    )
     write_version_hint(path)
     return path
 
@@ -1846,11 +1833,7 @@ def update_table_properties(
     meta = parse_metadata(metadata_path)
     raw = json.loads(json.dumps(meta.raw))
     loc = raw.get("location")
-    table_root = (
-        base_dir
-        if os.path.isdir(os.path.join(base_dir, "metadata"))
-        else os.path.dirname(base_dir)
-    )
+    table_root = table_root_of(base_dir)
     props = dict(raw.get("properties") or {})
     for k in unset or []:
         props.pop(k, None)
@@ -1863,13 +1846,9 @@ def update_table_properties(
         {"timestamp-ms": timestamp_ms,
          "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc)}
     )
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = install_metadata(next_metadata_path(metadata_path), raw)
     hint = os.path.join(os.path.dirname(new_path), "version-hint.text")
     if os.path.exists(hint):
-        from .catalog import write_version_hint
-
         try:
             write_version_hint(new_path)
         except ValueError:

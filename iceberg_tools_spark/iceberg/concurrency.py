@@ -42,16 +42,11 @@ from __future__ import annotations
 import os
 from typing import Any
 
+from .catalog import CommitConflictError  # re-exported: the rebase API raises it
 from .commit import append_snapshot, commit_delete_snapshot, commit_row_delta
 from .deletes import EQUALITY_DELETES, POSITION_DELETES, mor_entries_at
 from .metadata import parse_metadata
 from .snapshots import ancestor_chain
-
-
-class CommitConflictError(RuntimeError):
-    """A concurrent commit invalidated the staged operation; the
-    writer must re-plan against the new head (Iceberg's
-    ``ValidationException`` role)."""
 
 
 def _heads(base_metadata_path: str, head_metadata_path: str, base_dir: str | None):

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..avro.reader import AvroContainerFile
+from .catalog import install_metadata
 from .metadata import TableMetadata, parse_metadata
 from .snapshots import _REPO_ROOT, _local, manifest_files_at
 
@@ -1525,7 +1526,6 @@ def row_lineage_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORIGINAL row ids (0,1,3,4,5,6,7 — stable under MoR deletes, the
     property row lineage exists for) and per-row
     ``_last_updated_sequence_number``. Golden oracle."""
-    import json as _json
     import tempfile
 
     import pyarrow as pa
@@ -1560,8 +1560,7 @@ def row_lineage_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "metadata-log": [],
     }
     mp = os.path.join(root, "v1.metadata.json")
-    with open(mp, "w") as f:
-        _json.dump(meta0, f, indent=2)
+    install_metadata(mp, meta0)
 
     def _write(rel, ids, cat):
         pq.write_table(

@@ -34,6 +34,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog import table_root_of
 from .commit import commit_delete_snapshot
 from .deletes import apply_deletes, mor_entries_at, mor_frame
 from .metadata import parse_metadata
@@ -85,7 +86,7 @@ def delete_where(
     semi-join, no driver round-trip). Returns
     ``commit_delete_snapshot``'s result dict plus
     ``staged_files``/``n_partitions``."""
-    base_dir = base_dir or os.path.dirname(metadata_path)
+    base_dir = base_dir or table_root_of(os.path.dirname(metadata_path))
     meta = parse_metadata(metadata_path)
     loc = meta.raw.get("location")
     if not loc:
@@ -174,7 +175,7 @@ def delete_where_dv(
     per affected FILE (path/offset/length/cardinality), the same
     KB-per-thousand-files scale as every manifest the driver writes.
     """
-    base_dir = base_dir or os.path.dirname(metadata_path)
+    base_dir = base_dir or table_root_of(os.path.dirname(metadata_path))
     meta = parse_metadata(metadata_path)
     loc = meta.raw.get("location")
     if not loc:
@@ -372,7 +373,7 @@ def update_where(
 
     if not set_exprs:
         raise ValueError("update_where needs at least one SET expression")
-    base_dir = base_dir or os.path.dirname(metadata_path)
+    base_dir = base_dir or table_root_of(os.path.dirname(metadata_path))
     meta = parse_metadata(metadata_path)
     loc = meta.raw.get("location")
     if not loc:
@@ -503,7 +504,7 @@ def merge_into(
     if when_matched is not None and when_matched[0] not in ("update", "delete"):
         raise ValueError(f"unsupported when_matched {when_matched[0]!r}")
 
-    base_dir = base_dir or os.path.dirname(metadata_path)
+    base_dir = base_dir or table_root_of(os.path.dirname(metadata_path))
     meta = parse_metadata(metadata_path)
     loc = meta.raw.get("location")
     if not loc:

@@ -57,7 +57,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .commit import _canonical_metadata_uri, _next_metadata_path
+from .catalog import install_metadata, next_metadata_path, table_root_of
+from .commit import _canonical_metadata_uri
 from .metadata import TableMetadata, parse_metadata
 
 __all__ = [
@@ -115,11 +116,7 @@ def evolve_schema(
     meta = parse_metadata(metadata_path)
     raw = json.loads(json.dumps(meta.raw))
     loc = raw.get("location")
-    table_root = (
-        base_dir
-        if os.path.isdir(os.path.join(base_dir, "metadata"))
-        else os.path.dirname(base_dir)
-    )
+    table_root = table_root_of(base_dir)
 
     cur = next(
         s
@@ -209,9 +206,7 @@ def evolve_schema(
             "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc),
         }
     )
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = install_metadata(next_metadata_path(metadata_path), raw)
     return {
         "metadata_path": new_path,
         "schema_id": new_schema_id,
@@ -864,11 +859,7 @@ def evolve_partition_spec(
     if timestamp_ms is None:
         timestamp_ms = raw.get("last-updated-ms", 0) + 1000
     raw["last-updated-ms"] = timestamp_ms
-    from .commit import _next_metadata_path
-
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = install_metadata(next_metadata_path(metadata_path), raw)
     return {"metadata_path": new_path, "spec_id": new_id}
 
 
@@ -909,8 +900,7 @@ def spec_evolution_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
         "properties": {}, "snapshots": [], "snapshot-log": [], "metadata-log": [],
     }
     mp = os.path.join(root, "v1.metadata.json")
-    with open(mp, "w") as f:
-        json.dump(meta0, f, indent=2)
+    install_metadata(mp, meta0)
 
     def _write(rel: str, ids: list[int], cats: list[str]) -> None:
         p = os.path.join(root, rel)

@@ -384,22 +384,10 @@ def refresh_materialized_view(
         "ivm.refresh-snapshot-id": str(to_id),
         "ivm.state-path": new_rel,
     }
-    mdir = _os.path.dirname(view_metadata_path)
-    # next version = max(parsed vN) + 1 — a COUNT of files collides
-    # (and silently overwrites a live version) after any deletion
-    # (ADVICE r9)
-    import re as _re
+    from .catalog import install_metadata, next_metadata_path, write_version_hint
 
-    vre = _re.compile(r"v(\d+)\.metadata\.json$")
-    n = 1 + max(
-        (int(m.group(1)) for x in _os.listdir(mdir) if (m := vre.fullmatch(x))),
-        default=0,
-    )
-    new_vmp = _os.path.join(mdir, f"v{n}.metadata.json")
-    with open(new_vmp, "w") as f:
-        _json.dump(vmeta, f, indent=2)
-    with open(_os.path.join(mdir, "version-hint.text"), "w") as f:
-        f.write(str(n))
+    new_vmp = install_metadata(next_metadata_path(view_metadata_path), vmeta)
+    write_version_hint(new_vmp)
     return {
         "view_metadata_path": new_vmp,
         "from_snapshot": from_id,

@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .catalog import table_root_of
 from .metadata import TableMetadata
 
 
@@ -386,11 +387,7 @@ def delete_orphan_files(
     import os
 
     base_dir = base_dir or os.path.dirname(metadata_path)
-    table_root = (
-        base_dir
-        if os.path.isdir(os.path.join(base_dir, "metadata"))
-        else os.path.dirname(base_dir)
-    )
+    table_root = table_root_of(base_dir)
     data_root = os.path.join(table_root, "data")
     listing_df = distributed_listing(spark, data_root)
     # the reference side stays a DISTRIBUTED frame — manifest entries

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .catalog import table_root_of
 from .deletes import DATA, EQUALITY_DELETES, POSITION_DELETES, mor_entries_at
 from .metadata import TableMetadata, parse_metadata
 
@@ -194,11 +195,7 @@ def write_partition_stats(
     meta = parse_metadata(metadata_path)
     if snapshot_id is None:
         snapshot_id = meta.current_snapshot_id
-    table_root = (
-        base_dir
-        if os.path.isdir(os.path.join(base_dir, "metadata"))
-        else os.path.dirname(base_dir)
-    )
+    table_root = table_root_of(base_dir)
     loc = meta.raw.get("location") or f"file://{table_root}"
     stats = compute_partition_stats(spark, metadata_path, snapshot_id, base_dir)
 
@@ -268,11 +265,7 @@ def read_partition_stats(
         raise ValueError(
             f"no partition-statistics registered for snapshot {snapshot_id}"
         )
-    table_root = (
-        base_dir
-        if os.path.isdir(os.path.join(base_dir, "metadata"))
-        else os.path.dirname(base_dir)
-    )
+    table_root = table_root_of(base_dir)
     local = _local(entry["statistics-path"], table_root, meta.raw.get("location"))
     return spark.read.parquet(local)
 

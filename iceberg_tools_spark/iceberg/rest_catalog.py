@@ -231,7 +231,7 @@ class RestCatalogClient:
         import urllib.error
         import urllib.request
 
-        from .concurrency import CommitConflictError
+        from .catalog import CommitConflictError
 
         url = self.uri + path
         body = json.dumps(payload).encode("utf-8") if payload is not None else None
@@ -551,12 +551,17 @@ class RestCatalogClient:
             )
         import tempfile
 
-        d = scratch_dir or tempfile.mkdtemp(prefix="rest_meta_")
-        os.makedirs(d, exist_ok=True)
-        p = os.path.join(d, f"{identifier.replace('.', '_')}.metadata.json")
-        with open(p, "w") as f:
-            json.dump(meta, f)
-        return p
+        from .catalog import install_metadata
+
+        if scratch_dir:
+            os.makedirs(scratch_dir, exist_ok=True)
+        # a fresh directory per call: materializing the same table
+        # again never collides with an earlier copy
+        d = tempfile.mkdtemp(prefix="rest_meta_", dir=scratch_dir)
+        return install_metadata(
+            os.path.join(d, f"{identifier.replace('.', '_')}.metadata.json"),
+            json.dumps(meta),
+        )
 
 
 def load_table_rest(
@@ -680,14 +685,14 @@ def _apply_commit(
 ) -> tuple[int, dict[str, Any]]:
     """Validate a CommitTableRequest against the table's CURRENT
     state and apply its updates as a new ``v(N+1).metadata.json``
-    (tmp + atomic rename + version-hint, the HadoopCatalog commit
+    (exclusive install + version-hint, the HadoopCatalog commit
     protocol). Returns ``(http_status, payload)``; requirement
-    failures are 409 (the spec's CommitFailedException), unsupported
-    requirement/update kinds are 400 — never silently ignored."""
+    failures and a lost race for ``v(N+1)`` are 409 (the spec's
+    CommitFailedException), unsupported requirement/update kinds are
+    400 — never silently ignored."""
     import gzip
-    import re as _re
 
-    from .catalog import current_metadata_path, write_version_hint
+    from .catalog import current_metadata_path
 
     mpath = current_metadata_path(warehouse, identifier)
     opener = gzip.open if mpath.endswith(".gz") else open
@@ -961,20 +966,7 @@ def _apply_commit(
         "metadata-file": f"{loc}/{rel}" if loc else mpath,
     })
 
-    m = _re.search(r"v(\d+)\.metadata\.json", os.path.basename(mpath))
-    nxt = os.path.join(
-        os.path.dirname(mpath), f"v{int(m.group(1)) + 1}.metadata.json"
-    )
-    tmp = nxt + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(raw, f, indent=2)
-    os.replace(tmp, nxt)
-    write_version_hint(nxt)
-    return 200, {
-        "metadata-location": f"file://{os.path.abspath(nxt)}",
-        "metadata": raw,
-        "config": {},
-    }
+    return _install_next(mpath, raw, config={})
 
 
 def _resolve_kind(warehouse: str, ident: str) -> str:
@@ -1055,22 +1047,33 @@ def _apply_view_commit(
         else:
             return 400, {"error": {"message": (
                 f"unsupported view update action {a!r}"), "code": 400}}
-    import re as _re
+    return _install_next(mpath, raw)
 
-    m = _re.search(r"v(\d+)\.metadata\.json", os.path.basename(mpath))
-    nxt = os.path.join(
-        os.path.dirname(mpath), f"v{int(m.group(1)) + 1}.metadata.json"
+
+def _install_next(
+    mpath: str, raw: dict[str, Any], **extra: Any
+) -> tuple[int, dict[str, Any]]:
+    """Install ``raw`` as the version after ``mpath`` and stamp the
+    hint: 200 with the LoadTableResult/LoadViewResult shape, or 409
+    CommitFailedException when a concurrent writer already installed
+    that version (nothing is overwritten)."""
+    from .catalog import (
+        CommitConflictError,
+        install_metadata,
+        next_metadata_path,
+        write_version_hint,
     )
-    tmp = nxt + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(raw, f, indent=2)
-    os.replace(tmp, nxt)
-    from .catalog import write_version_hint
 
+    try:
+        nxt = install_metadata(next_metadata_path(mpath), raw)
+    except CommitConflictError as e:
+        return 409, {"error": {"message": str(e),
+                     "type": "CommitFailedException", "code": 409}}
     write_version_hint(nxt)
     return 200, {
         "metadata-location": f"file://{os.path.abspath(nxt)}",
         "metadata": raw,
+        **extra,
     }
 
 

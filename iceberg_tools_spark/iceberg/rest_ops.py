@@ -51,6 +51,7 @@ import shutil
 import uuid
 from typing import Any, Callable
 
+from .catalog import install_metadata
 from .concurrency import CommitConflictError, validate_concurrent_commits
 from .rest_catalog import RestCatalogClient
 
@@ -142,18 +143,16 @@ class RestTableOps:
                 f"dir; {mdir!r} is not (object-store metadata "
                 f"locations need a FileIO-backed staging path)"
             )
-        scratch = os.path.join(
-            mdir, f"staged-{uuid.uuid4().hex[:12]}.metadata.json"
-        )
-        if head_mpath.endswith(".gz"):
-            # spec-legal gzip head: the scratch copy is named .json,
-            # so it must hold PLAIN bytes for the builder to parse
-            import gzip
+        import gzip
 
-            with gzip.open(head_mpath, "rb") as src, open(scratch, "wb") as dst:
-                shutil.copyfileobj(src, dst)
-        else:
-            shutil.copyfile(head_mpath, scratch)
+        # spec-legal gzip head: the scratch copy is named .json, so it
+        # holds the PLAIN text for the builder to parse
+        opener = gzip.open if head_mpath.endswith(".gz") else open
+        with opener(head_mpath, "rt") as f:
+            scratch = install_metadata(
+                os.path.join(mdir, f"staged-{uuid.uuid4().hex[:12]}.metadata.json"),
+                f.read(),
+            )
         out_mpath = None
         try:
             res = build(scratch)

@@ -38,9 +38,9 @@ from pyspark.sql import functions as F
 
 from ..avro.reader import AvroContainerFile
 from ..avro.writer import write_container
+from .catalog import install_metadata, next_metadata_path, table_root_of
 from .commit import (
     MANIFEST_LIST_SCHEMA,
-    _next_metadata_path,
     _spec_partition_fields,
     manifest_entry_schema,
     partition_summaries,
@@ -311,7 +311,7 @@ def rewrite_data_files(
     meta = parse_metadata(metadata_path)
     raw = json.loads(json.dumps(meta.raw))
     loc = raw.get("location")
-    table_root = base_dir if os.path.isdir(os.path.join(base_dir, "metadata")) else os.path.dirname(base_dir)
+    table_root = table_root_of(base_dir)
     meta_dir = os.path.join(table_root, "metadata")
 
     parent_id = raw.get("current-snapshot-id")
@@ -392,7 +392,7 @@ def _replace_commit(
     rebuilt with EXISTING survivors), add ``new_entries`` in fresh
     ADDED manifests, write manifest list + metadata.json."""
     loc = raw.get("location")
-    table_root = base_dir if os.path.isdir(os.path.join(base_dir, "metadata")) else os.path.dirname(base_dir)
+    table_root = table_root_of(base_dir)
     meta_dir = os.path.join(table_root, "metadata")
     parent_id = raw.get("current-snapshot-id")
     # v3 row lineage (r15 — found by the row-tracking bridge): a
@@ -564,9 +564,7 @@ def _replace_commit(
         {"timestamp-ms": timestamp_ms,
          "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc)}
     )
-    new_path = _next_metadata_path(metadata_path, snapshot_id)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = install_metadata(next_metadata_path(metadata_path, snapshot_id), raw)
 
     return {
         "metadata_path": new_path,
@@ -653,7 +651,7 @@ def binpack_rewrite(
     meta = parse_metadata(metadata_path)
     raw = json.loads(json.dumps(meta.raw))
     loc = raw.get("location")
-    table_root = base_dir if os.path.isdir(os.path.join(base_dir, "metadata")) else os.path.dirname(base_dir)
+    table_root = table_root_of(base_dir)
     parent_id = raw.get("current-snapshot-id")
     data, dels = mor_entries_at(meta, parent_id, base_dir)
 
@@ -824,8 +822,7 @@ def binpack_rewrite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "properties": {}, "snapshots": [], "snapshot-log": [], "metadata-log": [],
     }
     mp = os.path.join(root, "v1.metadata.json")
-    with open(mp, "w") as f:
-        json.dump(meta0, f, indent=2)
+    install_metadata(mp, meta0)
 
     import pyarrow.parquet as _pq
 

@@ -40,9 +40,9 @@ from pyspark.sql import functions as F
 
 from ..avro.reader import AvroContainerFile
 from ..avro.writer import write_container
+from .catalog import install_metadata, next_metadata_path, table_root_of
 from .commit import (
     MANIFEST_LIST_SCHEMA,
-    _next_metadata_path,
     _spec_partition_fields,
     manifest_entry_schema,
     partition_summaries,
@@ -71,11 +71,7 @@ def rewrite_position_deletes(
     meta = parse_metadata(metadata_path)
     raw = json.loads(json.dumps(meta.raw))
     loc = raw.get("location")
-    table_root = (
-        base_dir
-        if os.path.isdir(os.path.join(base_dir, "metadata"))
-        else os.path.dirname(base_dir)
-    )
+    table_root = table_root_of(base_dir)
     meta_dir = os.path.join(table_root, "metadata")
 
     parent_id = raw.get("current-snapshot-id")
@@ -317,9 +313,7 @@ def rewrite_position_deletes(
             "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc),
         }
     )
-    new_path = _next_metadata_path(metadata_path, snapshot_id)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = install_metadata(next_metadata_path(metadata_path, snapshot_id), raw)
     return {
         "metadata_path": new_path,
         "snapshot_id": snapshot_id,

@@ -41,7 +41,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .commit import _next_metadata_path
+from .catalog import install_metadata, next_metadata_path, table_root_of
 from .conversions import to_bytes
 from .metadata import parse_metadata
 
@@ -95,9 +95,7 @@ def commit_sort_order(
     if timestamp_ms is None:
         timestamp_ms = raw.get("last-updated-ms", 0) + 1000
     raw["last-updated-ms"] = timestamp_ms
-    new_path = _next_metadata_path(metadata_path, 0)
-    with open(new_path, "w") as f:
-        json.dump(raw, f, indent=2)
+    new_path = install_metadata(next_metadata_path(metadata_path), raw)
     return {"metadata_path": new_path, "order_id": order_id}
 
 
@@ -174,11 +172,7 @@ def rewrite_sorted(
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
     raw = meta.raw
-    table_root = (
-        base_dir
-        if os.path.isdir(os.path.join(base_dir, "metadata"))
-        else os.path.dirname(base_dir)
-    )
+    table_root = table_root_of(base_dir)
     cols = _sort_columns(meta, order_id)
     oid = order_id if order_id is not None else raw.get("default-sort-order-id", 0)
     parent_id = meta.current_snapshot_id
@@ -261,9 +255,9 @@ def rewrite_sorted(
                     }
                 )
 
-    # replace commit: append the sorted files as a fresh snapshot,
-    # then surgically drop every pre-rewrite manifest from its
-    # manifest list (data fully replaced; deletes all dangling)
+    # replace commit: the sorted files supersede every pre-rewrite
+    # manifest (data fully replaced; deletes all dangling), so the
+    # one install carries the final manifest list and summary totals
     res = _commit_files(
         metadata_path,
         new_files,
@@ -272,33 +266,8 @@ def rewrite_sorted(
         base_dir=base_dir,
         snapshot_id=snapshot_id,
         timestamp_ms=timestamp_ms,
+        replace_all=True,
     )
-    from ..avro.writer import write_container
-    from .commit import MANIFEST_LIST_SCHEMA
-    from .snapshots import _local, read_manifest_list, snapshot_by_id
-
-    meta2 = parse_metadata(res["metadata_path"])
-    snap = snapshot_by_id(meta2, res["snapshot_id"])
-    loc = meta2.raw.get("location")
-    mlist_path = _local(snap["manifest-list"], base_dir, loc)
-    keep = [
-        r
-        for r in read_manifest_list(mlist_path)
-        if r["added_snapshot_id"] == res["snapshot_id"]
-    ]
-    with open(mlist_path, "wb") as f:
-        f.write(write_container(MANIFEST_LIST_SCHEMA, keep))
-    # the commit wrote summary totals over the UNTRIMMED list;
-    # recompute them from what actually remains
-    from .commit import _summary_totals
-
-    raw2 = parse_metadata(res["metadata_path"]).raw
-    snap2 = next(
-        s for s in raw2["snapshots"] if s["snapshot-id"] == res["snapshot_id"]
-    )
-    snap2["summary"].update(_summary_totals(keep))
-    with open(res["metadata_path"], "w") as f:
-        json.dump(raw2, f, indent=2)
     return {**res, "n_files": len(new_files), "sort_order_id": oid}
 
 
@@ -354,8 +323,7 @@ def sorted_rewrite_prunes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "metadata-log": [],
     }
     v1 = os.path.join(root, "v1.metadata.json")
-    with open(v1, "w") as f:
-        json.dump(meta0, f, indent=2)
+    install_metadata(v1, meta0)
     files = []
     for k in range(3):  # residue classes mod 3: fully interleaved
         ids = list(range(k + 1, 301, 3))

@@ -37,6 +37,7 @@ from typing import Any, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog import table_root_of
 from .metadata import parse_metadata
 from .theta import (
     DEFAULT_LG_K,
@@ -227,11 +228,7 @@ def write_table_stats(
     meta = parse_metadata(metadata_path)
     if snapshot_id is None:
         snapshot_id = meta.current_snapshot_id
-    table_root = (
-        base_dir
-        if os.path.isdir(os.path.join(base_dir, "metadata"))
-        else os.path.dirname(base_dir)
-    )
+    table_root = table_root_of(base_dir)
     loc = meta.raw.get("location") or f"file://{table_root}"
     fids = _field_ids(meta)
     columns = columns or list(fids)
@@ -532,11 +529,7 @@ def update_table_stats_partition_scoped(
             "no ancestor snapshot has registered statistics; run "
             "write_table_stats(per_partition=True) first"
         )
-    table_root = (
-        base_dir
-        if os.path.isdir(os.path.join(base_dir, "metadata"))
-        else os.path.dirname(base_dir)
-    )
+    table_root = table_root_of(base_dir)
     loc = meta.raw.get("location") or f"file://{table_root}"
     entry = registered[base_id]
     local = _local(entry["statistics-path"], table_root, meta.raw.get("location"))
@@ -654,11 +647,7 @@ def update_table_stats_incremental(
     from .puffin import read_blob
     from .snapshots import _local
 
-    table_root = (
-        base_dir
-        if os.path.isdir(os.path.join(base_dir, "metadata"))
-        else os.path.dirname(base_dir)
-    )
+    table_root = table_root_of(base_dir)
     loc = meta.raw.get("location") or f"file://{table_root}"
     entry = registered[base_id]
     local = _local(entry["statistics-path"], table_root, meta.raw.get("location"))
@@ -727,11 +716,7 @@ def read_table_stats(
     )
     if entry is None:
         raise ValueError(f"no statistics registered for snapshot {snapshot_id}")
-    table_root = (
-        base_dir
-        if os.path.isdir(os.path.join(base_dir, "metadata"))
-        else os.path.dirname(base_dir)
-    )
+    table_root = table_root_of(base_dir)
     local = _local(entry["statistics-path"], table_root, meta.raw.get("location"))
     # integrity: the footer must agree with the registered metadata
     footer = read_puffin_footer(local)

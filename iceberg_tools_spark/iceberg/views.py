@@ -33,6 +33,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .catalog import install_metadata, next_metadata_path, write_version_hint
+
 _TS0 = 1700000000000
 
 
@@ -62,11 +64,8 @@ def create_view(
     }
     mdir = os.path.join(view_root, "metadata")
     os.makedirs(mdir)
-    path = os.path.join(mdir, "v1.metadata.json")
-    with open(path, "w") as f:
-        json.dump(meta, f, indent=2)
-    with open(os.path.join(mdir, "version-hint.text"), "w") as f:
-        f.write("1")
+    path = install_metadata(os.path.join(mdir, "v1.metadata.json"), meta)
+    write_version_hint(path)
     return path
 
 
@@ -93,7 +92,9 @@ def _version(
 def replace_view(metadata_path: str, sql: str, *, dialect: str = "spark") -> str:
     """CREATE OR REPLACE: append a new version (the old stays in
     ``versions`` — readable by id), point ``current-version-id`` at
-    it, extend the version log, write ``v<N+1>.metadata.json``."""
+    it, extend the version log, install ``v<N+1>.metadata.json``
+    (:class:`~.catalog.CommitConflictError` when ``metadata_path`` is
+    no longer the head)."""
     with open(metadata_path) as f:
         meta = json.load(f)
     vid = max(v["version-id"] for v in meta["versions"]) + 1
@@ -101,13 +102,8 @@ def replace_view(metadata_path: str, sql: str, *, dialect: str = "spark") -> str
     meta["versions"].append(_version(vid, ts, sql, dialect, None, "replace"))
     meta["current-version-id"] = vid
     meta["version-log"].append({"timestamp-ms": ts, "version-id": vid})
-    mdir = os.path.dirname(metadata_path)
-    n = len([x for x in os.listdir(mdir) if x.endswith(".metadata.json")]) + 1
-    path = os.path.join(mdir, f"v{n}.metadata.json")
-    with open(path, "w") as f:
-        json.dump(meta, f, indent=2)
-    with open(os.path.join(mdir, "version-hint.text"), "w") as f:
-        f.write(str(n))
+    path = install_metadata(next_metadata_path(metadata_path), meta)
+    write_version_hint(path)
     return path
 
 

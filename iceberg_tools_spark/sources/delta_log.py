@@ -48,6 +48,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..iceberg.catalog import install_metadata
+
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CHECKPOINT_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
 # multi-part form per the protocol: <v>.checkpoint.<part>.<total>.parquet
@@ -2051,7 +2053,8 @@ def append_delta_commit(
     ``checkpoint_interval`` — the writer-side cadence PROTOCOL.md
     describes, so a replica accumulating versions stays cheap to
     open (VERDICT r8 #7: JSON-only replication replayed every
-    version on each open)."""
+    version on each open). Raises ``CommitConflictError`` when a
+    concurrent writer already committed that version."""
     commits = list_commits(table_root)
     v = commits[-1][0] + 1 if commits else 0
     d = _log_dir(table_root)
@@ -2108,11 +2111,12 @@ def append_delta_commit(
             ci_action = actions.pop(ci_idx)
             ci_action["commitInfo"]["inCommitTimestamp"] = ict
             actions.insert(0, ci_action)
-    tmp = os.path.join(d, f".{v:020d}.json.tmp")
-    with open(tmp, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a, sort_keys=True) + "\n")
-    os.replace(tmp, os.path.join(d, f"{v:020d}.json"))
+    # put-if-absent: a concurrent writer that already committed v
+    # makes this raise CommitConflictError instead of being overwritten
+    install_metadata(
+        os.path.join(d, f"{v:020d}.json"),
+        "".join(json.dumps(a, sort_keys=True) + "\n" for a in actions),
+    )
     out = {"version": v, "checkpointed": False}
     if checkpoint_interval and v > 0 and v % checkpoint_interval == 0:
         # callers replicating with a fixed clock (determinism) thread

@@ -31,6 +31,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
+from ..iceberg.catalog import install_metadata
 from .delta_log import read_delta_log, replay_log
 
 _DELTA_TO_ICEBERG_TYPE = {
@@ -251,8 +252,7 @@ def migrate_delta_to_iceberg(
         "snapshots": [], "snapshot-log": [], "metadata-log": [],
     }
     mp = os.path.join(target_root, "v1.metadata.json")
-    with open(mp, "w") as f:
-        json.dump(meta0, f, indent=2)
+    install_metadata(mp, meta0)
 
     # ---- ONE Spark job: restore partition cols, one file per
     # partition directory. partitionBy EXCLUDES its columns from
@@ -485,9 +485,10 @@ def export_iceberg_to_delta(
             "dataChange": True,
         }})
     actions.append({"commitInfo": {"operation": "WRITE", "timestamp": 1700000001000}})
-    with open(os.path.join(target_root, "_delta_log", f"{0:020d}.json"), "w") as f:
-        for a in actions:
-            f.write(json.dumps(a, sort_keys=True) + "\n")
+    install_metadata(
+        os.path.join(target_root, "_delta_log", f"{0:020d}.json"),
+        "".join(json.dumps(a, sort_keys=True) + "\n" for a in actions),
+    )
     return {"table_root": target_root, "n_files": len(adds), "version": 0}
 
 
@@ -586,8 +587,7 @@ def replicate_delta_stream(
         "snapshots": [], "snapshot-log": [], "metadata-log": [],
     }
     mp = os.path.join(target_root, "v1.metadata.json")
-    with open(mp, "w") as f:
-        _json.dump(meta0, f, indent=2)
+    install_metadata(mp, meta0)
 
     # add-only replication is this function's DOCUMENTED limitation
     # (replicate_delta_versions is the removes-included path), so it
@@ -1643,8 +1643,7 @@ def replicate_delta_versions(
     if name_mapping_prop:
         meta0["properties"]["schema.name-mapping.default"] = name_mapping_prop
     mp = os.path.join(target_root, "v1.metadata.json")
-    with open(mp, "w") as f:
-        json.dump(meta0, f, indent=2)
+    install_metadata(mp, meta0)
 
     # Delta path → the replica rel that currently represents it: a
     # DV fold renames (data/dvN-<path>), so a LATER remove of the
@@ -1958,8 +1957,7 @@ def _init_cdf_replica(
         "snapshots": [], "snapshot-log": [], "metadata-log": [],
     }
     mp = os.path.join(target_root, "v1.metadata.json")
-    with open(mp, "w") as f:
-        json.dump(meta0, f, indent=2)
+    install_metadata(mp, meta0)
     return mp, ice_fields, head
 
 
@@ -2503,7 +2501,6 @@ def lineage_bridge_rows(spark: SparkSession, sf_dir: str):
     onto ``_row_id`` again). Every hop must show the SOURCE row
     ids for the 7 survivors — stable identity is the whole point of
     lineage. Golden oracle: 21 (hop, id, row_id) rows."""
-    import json as _json
     import tempfile
 
     import pyarrow as pa
@@ -2544,8 +2541,7 @@ def lineage_bridge_rows(spark: SparkSession, sf_dir: str):
         "metadata-log": [],
     }
     mp = os.path.join(root, "v1.metadata.json")
-    with open(mp, "w") as f:
-        _json.dump(meta0, f, indent=2)
+    install_metadata(mp, meta0)
 
     def _write(rel, ids, cat):
         pq.write_table(

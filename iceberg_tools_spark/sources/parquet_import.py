@@ -49,6 +49,8 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..iceberg.catalog import install_metadata
+
 _EPOCH_DATE = date(1970, 1, 1)
 
 # arrow type id/name → iceberg type
@@ -226,8 +228,7 @@ def import_parquet_table(
         "snapshots": [], "snapshot-log": [], "metadata-log": [],
     }
     mp = os.path.join(target_root, "v1.metadata.json")
-    with open(mp, "w") as f:
-        json.dump(meta0, f, indent=2)
+    install_metadata(mp, meta0)
 
     # ---- per-file: hard link into the table layout + footer stats
     data_files: list[dict[str, Any]] = []

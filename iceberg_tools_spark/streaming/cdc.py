@@ -29,6 +29,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..iceberg.catalog import install_metadata
 from ..iceberg.changelog import changelog_between
 from ..iceberg.metadata import parse_metadata
 from ..iceberg.snapshots import ancestor_chain
@@ -156,7 +157,6 @@ def replicate_changelog(
     list plus a multi-MB predicate string for a commit deleting
     millions of rows). Returns ``{"metadata_path", "n_batches",
     "target_root"}``."""
-    import json as _json
     import os
 
     from ..iceberg.commit import append_snapshot
@@ -192,8 +192,7 @@ def replicate_changelog(
         "metadata-log": [],
     }
     mp = os.path.join(target_root, "v1.metadata.json")
-    with open(mp, "w") as f:
-        _json.dump(meta0, f, indent=2)
+    install_metadata(mp, meta0)
     seed = read_mor(spark, src_metadata, from_id, base_dir).select("id", "category")
     _write_single_parquet(seed.orderBy("id"), os.path.join(target_root, "data", "seed.parquet"))
     state = append_snapshot(mp, [{"path": "data/seed.parquet", "partition": {}}])

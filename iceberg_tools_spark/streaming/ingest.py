@@ -34,6 +34,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from ..iceberg.catalog import table_root_of
 from ..iceberg.concurrency import commit_append_concurrent
 from ..iceberg.metadata import parse_metadata
 
@@ -43,7 +44,7 @@ STREAM_BATCH_PROP = "streaming-batch-id"
 
 def latest_metadata_path(metadata_path: str) -> str:
     """The table's CURRENT metadata file: the highest ``vN`` sibling
-    of ``metadata_path`` (the chain ``_next_metadata_path`` writes).
+    of ``metadata_path`` (the chain ``catalog.next_metadata_path`` names).
     Non-versioned layouts return the given path unchanged."""
     d, base = os.path.dirname(metadata_path), os.path.basename(metadata_path)
     if not re.fullmatch(r"v(\d+)\.metadata\.json", base):
@@ -109,11 +110,7 @@ def make_batch_committer(
     if table_ops is not None:
         metadata_path = table_ops.client.metadata_path(table_ops.identifier)
     base_dir = base_dir or os.path.dirname(metadata_path)
-    table_root = (
-        base_dir
-        if os.path.isdir(os.path.join(base_dir, "metadata"))
-        else os.path.dirname(base_dir)
-    )
+    table_root = table_root_of(base_dir)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> dict[str, Any] | None:
         head = (

@@ -199,3 +199,45 @@ def test_create_table_visible_to_catalog(spark, tmp_path):
     # the commit wrote v2 next to v1; hint is stale → listing wins
     assert current_metadata_path(wh, "db.t1") == res["metadata_path"]
     assert load_table(spark, wh, "db.t1").count() == 7
+
+
+def test_install_metadata_racing_writers_one_wins(tmp_path):
+    """More writers than cores race to install the same version: one
+    links it, every other gets CommitConflictError, the file holds
+    exactly the winner's bytes and no temp file is left behind."""
+    import json
+    import sys
+    import threading
+
+    from iceberg_tools_spark.iceberg.catalog import (
+        CommitConflictError,
+        install_metadata,
+    )
+
+    target = str(tmp_path / "v2.metadata.json")
+    n = 4 * (os.cpu_count() or 1)
+    barrier = threading.Barrier(n)
+    won, lost = [], []
+
+    def writer(i: int) -> None:
+        barrier.wait(timeout=30)
+        try:
+            install_metadata(target, {"writer": i, "pad": "x" * 4096})
+            won.append(i)
+        except CommitConflictError:
+            lost.append(i)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=writer, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(won) == 1 and len(lost) == n - 1
+    assert json.load(open(target))["writer"] == won[0]
+    assert os.listdir(tmp_path) == ["v2.metadata.json"]

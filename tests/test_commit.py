@@ -15,6 +15,8 @@ import shutil
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from iceberg_tools_spark.iceberg.commit import append_snapshot
 from iceberg_tools_spark.iceberg.deletes import MOR_DIR, read_mor
@@ -878,3 +880,153 @@ def test_update_table_properties_roundtrip(spark, tmp_path):
 
     with pytest.raises(ValueError, match="no changes"):
         update_table_properties(r2["metadata_path"])
+
+
+# ---- exclusive install: lost updates and crash points -------------
+
+
+def _write_ids(root: str, name: str, ids: list[int]) -> str:
+    rel = f"data/category=w/id_trunc=400/{name}.parquet"
+    path = os.path.join(root, rel)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(
+        pa.table({
+            "id": pa.array(ids, pa.int64()),
+            "category": pa.array(["w"] * len(ids), pa.string()),
+        }),
+        path,
+    )
+    return rel
+
+
+def test_second_writer_on_same_base_raises_not_overwrites(table):
+    """Two appends staged against the same v2 both name v3. The first
+    installs it; the second raises CommitConflictError instead of
+    replacing v3 (which silently dropped snapshot 9001), and its retry
+    through the rebase path keeps both snapshots."""
+    from iceberg_tools_spark.iceberg.concurrency import (
+        CommitConflictError,
+        commit_append_concurrent,
+    )
+    from iceberg_tools_spark.iceberg.metadata import parse_metadata
+
+    base = os.path.join(table, "v2.metadata.json")
+    part = {"category": "w", "id_trunc": 400}
+    first = append_snapshot(
+        base, [{"path": _write_ids(table, "A1", [401]), "partition": part}],
+        snapshot_id=9001,
+    )
+    v3 = first["metadata_path"]
+    v3_bytes = open(v3, "rb").read()
+    second = [{"path": _write_ids(table, "B1", [402]), "partition": part}]
+    with pytest.raises(CommitConflictError, match="v3.metadata.json"):
+        append_snapshot(base, second, snapshot_id=9002)
+    assert open(v3, "rb").read() == v3_bytes  # the winner is intact
+
+    res = commit_append_concurrent(base, v3, second, snapshot_id=9002)
+    assert res["retried"] and res["metadata_path"].endswith("v4.metadata.json")
+    ids = [s["snapshot-id"] for s in parse_metadata(res["metadata_path"]).snapshots]
+    assert ids[-2:] == [9001, 9002]
+
+
+_CRASH_POINTS = ("after_manifest", "after_manifest_list", "before_link", "before_hint")
+
+
+class _Crash(Exception):
+    pass
+
+
+def _raise_crash(*_a, **_kw):
+    raise _Crash
+
+
+def _files(root: str) -> set[str]:
+    return {os.path.join(dp, f) for dp, _, fns in os.walk(root) for f in fns}
+
+
+def _arm_crash(mp, point: str) -> None:
+    from iceberg_tools_spark.iceberg import catalog, commit
+
+    if point == "after_manifest":
+        # the manifest's partition summaries are built right after
+        # its file is written, before the manifest list
+        mp.setattr(commit, "partition_summaries", _raise_crash)
+    elif point == "after_manifest_list":
+        mp.setattr(commit, "install_metadata", _raise_crash)
+    elif point == "before_link":
+        mp.setattr(os, "link", _raise_crash)
+    else:
+        mp.setattr(catalog, "write_version_hint", _raise_crash)
+
+
+@given(point=st.sampled_from(_CRASH_POINTS), prior=st.integers(0, 2))
+@example(point="after_manifest", prior=1)
+@example(point="after_manifest_list", prior=0)
+@example(point="before_link", prior=2)
+@example(point="before_hint", prior=1)
+@settings(max_examples=8, deadline=None)
+def test_crash_at_any_commit_step_leaves_a_complete_version(spark, point, prior):
+    """A commit (manifest → manifest list → temp metadata → link →
+    version hint) that dies at any step leaves the catalog resolving
+    a complete, parseable version — the old one, or the new one when
+    only the hint was lost — and every leftover of the dead commit
+    shows up in the orphan-file anti-join."""
+    import tempfile
+
+    from iceberg_tools_spark.iceberg import catalog
+    from iceberg_tools_spark.iceberg.commit import create_table
+    from iceberg_tools_spark.iceberg.maintenance import (
+        find_orphan_files,
+        referenced_paths,
+        referenced_paths_df,
+    )
+    from iceberg_tools_spark.iceberg.metadata import parse_metadata
+
+    with tempfile.TemporaryDirectory() as wh:
+        root = os.path.join(wh, "db", "t")
+
+        def commit_next(k: int) -> None:
+            rel = f"data/f{k}.parquet"
+            pq.write_table(pa.table({"id": pa.array([k], pa.int64())}), os.path.join(root, rel))
+            head = catalog.current_metadata_path(wh, "db.t")
+            res = append_snapshot(head, [{"path": rel, "partition": {}}])
+            catalog.write_version_hint(res["metadata_path"])
+
+        create_table(root, [("id", "long")])
+        for k in range(prior):
+            commit_next(k)
+        before = _files(root)
+
+        with pytest.MonkeyPatch.context() as mp:
+            _arm_crash(mp, point)
+            with pytest.raises(_Crash):
+                commit_next(prior)
+
+        cur = catalog.current_metadata_path(wh, "db.t")
+        meta = parse_metadata(cur)  # parseable
+        survived = point == "before_hint"
+        assert len(meta.snapshots) == prior + survived
+        assert all(os.path.exists(p) for p in referenced_paths(cur, root))  # complete
+
+        after = _files(root)
+        listing = spark.createDataFrame(
+            [(p,) for p in sorted(after) if not p.endswith("version-hint.text")],
+            "file_path string",
+        )
+        orphans = {
+            r.file_path
+            for r in find_orphan_files(listing, referenced_paths_df(spark, cur, root)).collect()
+        }
+        assert orphans == (set() if survived else after - before)
+        names = sorted(os.path.basename(p) for p in orphans)
+        sid = prior + 1
+        expected = {
+            "after_manifest": [f"f{prior}.parquet", f"manifest-{sid}.avro"],
+            "after_manifest_list": [f"f{prior}.parquet", f"manifest-{sid}.avro", f"snap-{sid}.avro"],
+            "before_link": [f"f{prior}.parquet", f"manifest-{sid}.avro", f"snap-{sid}.avro"],
+            "before_hint": [],
+        }[point]
+        if point == "before_link":
+            assert names[0].startswith(f".v{prior + 2}.metadata.json.")
+            names = names[1:]
+        assert names == expected

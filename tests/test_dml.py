@@ -257,3 +257,25 @@ def test_merge_insert_null_partition_source(spark, table):
     (new,) = [e for e in data if "_merge-ins-" in e["rel"]]
     # derived partition: category null, truncate[100](995) = 900
     assert new["partition"] == {"category": None, "id_trunc": 900}
+
+
+def test_delete_where_default_base_dir_on_created_table(spark, tmp_path):
+    """A ``create_table`` table keeps its metadata under
+    ``metadata/``; DELETE WHERE without ``base_dir`` resolves the table
+    root from the metadata path and stages its delete files under the
+    root's ``data/``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_tools_spark.iceberg.commit import append_snapshot, create_table
+
+    root = str(tmp_path / "t")
+    mp = create_table(root, [("id", "long")])
+    pq.write_table(pa.table({"id": pa.array(range(10), pa.int64())}), f"{root}/data/f.parquet")
+    mp = append_snapshot(mp, [{"path": "data/f.parquet", "partition": {}}])["metadata_path"]
+    res = delete_where(spark, mp, "id < 3")
+    staged = res["staged_files"]
+    assert staged and all(p.startswith("data/deletes/") for p in staged)
+    assert all(os.path.exists(os.path.join(root, p)) for p in staged)
+    got = sorted(r.id for r in read_mor(spark, res["metadata_path"], res["snapshot_id"]).collect())
+    assert got == list(range(3, 10))

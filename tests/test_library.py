@@ -5,8 +5,10 @@ the hash arithmetic against hashlib and DuckDB."""
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
 import hashlib
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -304,3 +306,174 @@ def test_column_stats_one_pass_and_hll_bound(spark):
     }
     for c, nd in exact.items():
         assert abs(approx[c] - nd) <= max(2, 0.1 * nd), (c, nd, approx[c])
+
+
+# ---- one install site per metadata format -------------------------
+
+_PKG = Path(__file__).resolve().parent.parent / "iceberg_tools_spark"
+
+# the two statistics writers register stats in a derived
+# ``vN.pstats<sid>.metadata.json`` / ``vN.tstats<sid>.metadata.json``
+# side file that never enters the version chain (the catalog's
+# listing ignores it) and is replaced when the same statistics are
+# written again from the same base
+_STATS_SIDE_FILES = {
+    ("iceberg/partition_stats.py", "write_partition_stats"),
+    ("iceberg/table_stats.py", "_write_and_register"),
+}
+
+
+def _write_target(call: ast.Call) -> ast.expr | None:
+    """The path a call writes, or None: ``open``-style calls in a
+    write mode, and the destination of a rename, replace, link or
+    copy."""
+    f = call.func
+    name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+    if name == "open" and call.args:
+        mode = call.args[1] if len(call.args) > 1 else next(
+            (k.value for k in call.keywords if k.arg == "mode"), None
+        )
+        if isinstance(mode, ast.Constant) and set(str(mode.value)) & set("wax+"):
+            return call.args[0]
+    owner = getattr(getattr(f, "value", None), "id", "").lstrip("_")
+    if len(call.args) == 2 and (
+        (owner == "os" and name in ("replace", "rename", "link"))
+        or (owner == "shutil" and name in ("copyfile", "copy", "copy2", "move"))
+    ):
+        return call.args[1]
+    return None
+
+
+def _target_kind(expr: ast.expr, assigns: dict[str, list[ast.expr]]) -> str | None:
+    """'metadata' / 'hint' / 'delta' when ``expr`` — followed through
+    the local assignments of the names it uses — builds a
+    ``*.metadata.json``, ``version-hint.text`` or ``_delta_log/*.json``
+    path."""
+    literals: list[str] = []
+    calls: set[str] = set()
+    todo, seen = [expr], set()
+    while todo:
+        for n in ast.walk(todo.pop()):
+            if isinstance(n, ast.Constant) and isinstance(n.value, str):
+                literals.append(n.value)
+            elif isinstance(n, ast.Call):
+                f = n.func
+                calls.add(f.id if isinstance(f, ast.Name) else getattr(f, "attr", ""))
+            elif isinstance(n, ast.Name) and n.id not in seen:
+                seen.add(n.id)
+                todo.extend(assigns.get(n.id, ()))
+    text = "\n".join(literals)
+    if "metadata.json" in text or any(c.endswith("next_metadata_path") for c in calls):
+        return "metadata"
+    if "version-hint" in text:
+        return "hint"
+    if ("_delta_log" in text or "_log_dir" in calls) and ".json" in text:
+        return "delta"
+    return None
+
+
+def _assignments(scope: ast.AST) -> dict[str, list[ast.expr]]:
+    """name → assigned values: a function's whole body, or a
+    module's top-level statements only."""
+    nodes = ast.iter_child_nodes(scope) if isinstance(scope, ast.Module) else ast.walk(scope)
+    out: dict[str, list[ast.expr]] = {}
+    for n in nodes:
+        if isinstance(n, ast.Assign):
+            for t in n.targets:
+                if isinstance(t, ast.Name):
+                    out.setdefault(t.id, []).append(n.value)
+        elif isinstance(n, (ast.AnnAssign, ast.NamedExpr)) and n.value is not None:
+            if isinstance(n.target, ast.Name):
+                out.setdefault(n.target.id, []).append(n.value)
+    return out
+
+
+def _file_writes(tree: ast.Module):
+    """(enclosing function, call, install kind or None) for every
+    file-writing call in a module."""
+    parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+    module_assigns = _assignments(tree)
+    for call in ast.walk(tree):
+        if not isinstance(call, ast.Call):
+            continue
+        target = _write_target(call)
+        if target is None:
+            continue
+        assigns, fn, n = dict(module_assigns), None, call
+        while n in parent:
+            n = parent[n]
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                fn = fn or n.name
+                for k, v in _assignments(n).items():
+                    assigns[k] = assigns.get(k, []) + v
+        yield fn, call, _target_kind(target, assigns)
+
+
+def test_metadata_installed_only_through_catalog():
+    """Table/view ``*.metadata.json``, ``version-hint.text`` and Delta
+    ``_delta_log/*.json`` are written by ``catalog.py`` alone: one
+    exclusive install site per format, one hint writer."""
+    offenders = []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        tree = ast.parse(path.read_text())
+        writers = set()
+        for fn, call, kind in _file_writes(tree):
+            writers.add(fn)
+            if rel == "iceberg/catalog.py" or kind is None:
+                continue
+            if kind == "metadata" and (rel, fn) in _STATS_SIDE_FILES:
+                continue
+            offenders.append(f"{rel}:{call.lineno} {fn}() writes a {kind} path")
+        if rel == "iceberg/catalog.py":
+            assert writers == {"install_metadata", "write_version_hint"}, writers
+    assert offenders == [], "\n".join(offenders)
+
+
+def test_next_version_named_only_by_catalog():
+    """``v<N+1>.metadata.json`` is named in one place
+    (``catalog.next_metadata_path``): no other module formats a
+    ``v{...}.metadata.json`` name."""
+    namers = []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        for n in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(n, ast.JoinedStr) or not n.values:
+                continue
+            head, tail = n.values[0], n.values[-1]
+            if (
+                isinstance(head, ast.Constant) and str(head.value).endswith("v")
+                and isinstance(tail, ast.Constant)
+                and str(tail.value).endswith(".metadata.json")
+            ):
+                namers.append(f"{rel}:{n.lineno}")
+    assert [n.split(":")[0] for n in namers] == ["iceberg/catalog.py"], namers
+
+
+def test_file_write_scan_sees_each_install_shape():
+    """The rule's own detector flags every shape the package used to
+    hand-roll, so a regression cannot slip past it."""
+    src = """
+import json, os
+def a(metadata_path, raw):
+    new_path = next_metadata_path(metadata_path)
+    with open(new_path, "w") as f:
+        json.dump(raw, f)
+def b(mdir):
+    with open(os.path.join(mdir, "version-hint.text"), "w") as f:
+        f.write("1")
+def c(table_root, v):
+    d = os.path.join(table_root, "_delta_log")
+    tmp = os.path.join(d, f".{v:020d}.json.tmp")
+    os.replace(tmp, os.path.join(d, f"{v:020d}.json"))
+def d(root, meta0):
+    mp = os.path.join(root, "v1.metadata.json")
+    with open(mp, "w") as f:
+        json.dump(meta0, f)
+def e(root):
+    with open(os.path.join(root, "data.txt"), "w") as f:
+        f.write("x")
+"""
+    kinds = {fn: kind for fn, _call, kind in _file_writes(ast.parse(src))}
+    assert kinds == {"a": "metadata", "b": "hint", "c": "delta", "d": "metadata", "e": None}
+

@@ -854,3 +854,47 @@ def test_rename_table_and_view(spark, served):
     assert c.view_exists("db.v_new") and not c.view_exists("db.v_old")
     with pytest.raises(ValueError, match="400"):
         c._send("POST", c._p("/tables/rename"), {"source": {}})
+
+
+def test_racing_commits_to_one_version_get_one_409(served, monkeypatch):
+    """Two commits that both read v2 as the head race for v3: the
+    first installs it (200), the second gets the spec's 409
+    CommitFailedException instead of overwriting the winner, and both
+    v2 and the winner's v3 keep their bytes."""
+    import json
+    import urllib.error
+    import urllib.request
+
+    from iceberg_tools_spark.iceberg import catalog
+
+    wh, uri = served
+    mdir = os.path.join(wh, "db", "events", "metadata")
+    stale = os.path.join(mdir, "v2.metadata.json")
+    # the server resolves the head each writer read before either
+    # installed: the stale v2 for both
+    monkeypatch.setattr(catalog, "current_metadata_path", lambda _wh, _ident: stale)
+    url = uri + RestCatalogClient(uri)._table_path("db.events")
+
+    def commit(writer: str) -> tuple[int, dict]:
+        body = {"requirements": [], "updates": [
+            {"action": "set-properties", "updates": {"writer": writer}}]}
+        req = urllib.request.Request(
+            url, data=json.dumps(body).encode(), method="POST",
+            headers={"Content-Type": "application/json"},
+        )
+        try:
+            with urllib.request.urlopen(req, timeout=30) as r:
+                return r.status, json.loads(r.read())
+        except urllib.error.HTTPError as e:
+            return e.code, json.loads(e.read())
+
+    v2_bytes = open(stale, "rb").read()
+    (s1, b1), (s2, b2) = commit("a"), commit("b")
+    assert (s1, s2) == (200, 409)
+    assert b1["metadata-location"].endswith("v3.metadata.json")
+    assert b2["error"]["type"] == "CommitFailedException"
+    assert open(stale, "rb").read() == v2_bytes
+    v3 = json.load(open(os.path.join(mdir, "v3.metadata.json")))
+    assert v3["properties"]["writer"] == "a"
+    assert sorted(n for n in os.listdir(mdir) if n.endswith(".metadata.json")) == [
+        "v2.metadata.json", "v3.metadata.json"]

@@ -127,3 +127,24 @@ def test_view_overlapping_table_names(spark, tmp_path):
     item_ext = spark.createDataFrame([(1, "x"), (2, "y")], "id int, val string")
     out = read_view(spark, p, {"item": item, "item_ext": item_ext})
     assert out.count() == 2
+
+
+def test_replace_view_after_deleting_an_old_version(tmp_path):
+    """Deleting an old version no longer shifts the next version's
+    number onto a live file: replace names v<N+1> after the version it
+    replaces, every live version keeps its bytes, and replacing from a
+    superseded version is a conflict, not an overwrite."""
+    from iceberg_tools_spark.iceberg.concurrency import CommitConflictError
+
+    p1 = create_view(str(tmp_path / "v"), VIEW_SQL_V1)
+    p2 = replace_view(p1, VIEW_SQL_V2)
+    p3 = replace_view(p2, VIEW_SQL_V1)
+    os.remove(p1)
+    live = {p: open(p, "rb").read() for p in (p2, p3)}
+    p4 = replace_view(p3, VIEW_SQL_V2)
+    assert os.path.basename(p4) == "v4.metadata.json"
+    assert {p: open(p, "rb").read() for p in (p2, p3)} == live
+    assert json.load(open(p4))["current-version-id"] == 4
+    with pytest.raises(CommitConflictError):
+        replace_view(p3, VIEW_SQL_V1)
+    assert open(os.path.join(os.path.dirname(p4), "version-hint.text")).read() == "4"
