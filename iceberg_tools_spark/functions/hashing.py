@@ -12,10 +12,11 @@ compute identically — then derives what each consumer needs:
   both engines compute with the same expression shape;
 * per-bit extraction for SimHash planes.
 
-Each Spark builder has a ``*_duck`` twin returning the equivalent
-DuckDB SQL so oracles replicate the arithmetic 1:1. The dedup /
-similarity operators (operators/dedup.py, operators/similarity.py,
-functions/vectors.py) follow exactly these recipes.
+Spark expressions that an oracle replicates have a ``*_duck`` twin
+returning the equivalent DuckDB SQL, so the arithmetic matches 1:1.
+The dedup / similarity operators (operators/dedup.py,
+operators/similarity.py, functions/vectors.py) follow exactly these
+recipes.
 """
 
 from __future__ import annotations
@@ -29,20 +30,11 @@ from pyspark.sql import functions as F
 # ---- hex keys ------------------------------------------------------
 
 
-def md5_hex(col: Column | str) -> Column:
-    """md5 hex digest of a string column (the universal key)."""
-    return F.md5(F.col(col) if isinstance(col, str) else col)
-
-
 def salted_md5_hex(col: Column | str, salt: str) -> Column:
     """md5(f"{salt}|{value}") — independent hash per salt; the basis
     of minhash slots (salt = slot index) and hash families."""
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(F.concat(F.lit(f"{salt}|"), c))
-
-
-def salted_md5_hex_duck(expr: str, salt: str) -> str:
-    return f"md5('{salt}|' || {expr})"
 
 
 # ---- integer keys --------------------------------------------------
@@ -91,18 +83,4 @@ def md5_bit_duck(hex_expr: str, j: int) -> str:
     return (
         f"((strpos('0123456789abcdef', substring({hex_expr}, {j // 4 + 1}, 1)) - 1)"
         f" >> {j % 4}) & 1"
-    )
-
-
-# ---- band keys (LSH) -----------------------------------------------
-
-
-def band_key(sig_col: str, band: Column | str, rows_per_band: int) -> Column:
-    """Bucket key for one LSH band: md5 of the band's signature
-    slice joined with '|'. ``band`` is 0-based."""
-    b = F.col(band) if isinstance(band, str) else band
-    return F.md5(
-        F.concat_ws(
-            "|", F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band)
-        )
     )

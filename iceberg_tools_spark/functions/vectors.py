@@ -75,35 +75,10 @@ def _dot_udf():
     return _UDF_CACHE["dot"]
 
 
-def _sum_squares_udf():
-    if "ss" not in _UDF_CACHE:
-
-        @F.pandas_udf("double")
-        def _ss(xa: pd.Series) -> pd.Series:
-            if len(xa) == 0:
-                return pd.Series([], dtype="float64")
-            A = _stack(xa)
-            acc = np.zeros(len(A))
-            for j in range(A.shape[1]):
-                acc += A[:, j] * A[:, j]
-            return pd.Series(acc)
-
-        _UDF_CACHE["ss"] = _ss
-    return _UDF_CACHE["ss"]
-
-
 def dot_fast(a: Column | str, b: Column | str) -> Column:
     return _dot_udf()(
         F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
     )
-
-
-def sum_squares_fast(a: Column | str) -> Column:
-    return _sum_squares_udf()(F.col(a) if isinstance(a, str) else a)
-
-
-def l2_norm(a: str) -> Column:
-    return F.sqrt(sum_squares(a))
 
 
 DOT_DUCK = (

@@ -234,9 +234,9 @@ def abort_staged(metadata_path: str, ref: str) -> dict[str, Any]:
         raise ValueError(f"no staged ref {ref!r}")
     sid = raw["refs"][ref]["snapshot-id"]
     del raw["refs"][ref]
-    from .catalog import install_metadata, next_metadata_path
+    from .commit import commit_version
 
-    new_path = install_metadata(next_metadata_path(metadata_path), raw)
+    new_path = commit_version(metadata_path, raw)
     return {"metadata_path": new_path, "aborted_snapshot_id": sid}
 
 

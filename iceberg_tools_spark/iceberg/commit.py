@@ -10,10 +10,16 @@ forward verbatim + the new one with partition summaries), and a new
 number and current-snapshot bumps) — the same layered commit an
 Iceberg ``AppendFiles`` operation produces
 (reference schema lineage: ManifestFileReadTool.java:170-197 reads
-exactly the record shapes written here). The new version is installed
-through ``catalog.install_metadata``, so a second commit against the
-same base raises ``CommitConflictError`` instead of replacing the
-first; writers retry through ``concurrency.py``.
+exactly the record shapes written here).
+
+Two pieces are shared by every table commit in the package.
+:class:`SnapshotProducer` writes manifests and manifest lists for the
+snapshot-adding commits (appends, deletes, rewrites), and
+:func:`commit_version` is the one version step: metadata-log,
+retention, the exclusive ``catalog.install_metadata`` (a second
+commit against the same base raises ``CommitConflictError`` instead
+of replacing the first; writers retry through ``concurrency.py``)
+and the version hint.
 
 Deterministic by construction: no wall clock (timestamp defaults to
 parent's + 1 s), no randomness (Avro sync markers are md5 of the
@@ -28,8 +34,11 @@ counts when the caller doesn't (one footer read per appended file).
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
+import tempfile
 from typing import Any
 
 from ..avro.writer import write_container
@@ -43,7 +52,7 @@ from .conversions import to_bytes
 from .metadata import TableMetadata, parse_metadata
 from .snapshots import _local, read_manifest_list
 
-ADDED = 1
+ADDED, EXISTING, DELETED = 1, 0, 2
 
 # Iceberg type → (avro primitive for partition values). Dates and
 # timestamps store as their spec physical forms: int days since
@@ -280,6 +289,247 @@ def _canonical_metadata_uri(metadata_path: str, table_root: str, loc: str | None
     return f"{loc}/{rel}" if loc else metadata_path
 
 
+def _next_timestamp(raw: dict[str, Any], timestamp_ms: int | None) -> int:
+    """A new version's ``last-updated-ms``: the caller's, else the
+    base's + 1 s (no wall clock, so commits are deterministic)."""
+    return raw.get("last-updated-ms", 0) + 1000 if timestamp_ms is None else timestamp_ms
+
+
+def commit_version(
+    metadata_path: str,
+    raw: dict[str, Any],
+    *,
+    base_dir: str | None = None,
+    timestamp_ms: int | None = None,
+    snapshot_id: int = 0,
+) -> str:
+    """Install ``raw`` (the caller's changed copy of the table at
+    ``metadata_path``) as the next table version — the last step of
+    every table commit, so each version records the same history:
+
+    * ``last-updated-ms`` is stamped (default: the base's + 1 s);
+    * the base file is appended to ``metadata-log``, which keeps at
+      most ``write.metadata.previous-versions-max`` entries; with
+      ``write.metadata.delete-after-commit.enabled`` the dropped
+      version files are deleted once the new one is in;
+    * the version is installed through ``catalog.install_metadata``,
+      so a second commit on the same base raises
+      ``CommitConflictError``;
+    * an existing ``version-hint.text`` is moved to the new version.
+
+    ``snapshot_id`` names the version after a non-``vN`` base
+    (``catalog.next_metadata_path``). Returns the new path."""
+    base_dir = base_dir or os.path.dirname(metadata_path)
+    loc = raw.get("location")
+    timestamp_ms = _next_timestamp(raw, timestamp_ms)
+    raw["last-updated-ms"] = timestamp_ms
+    log = raw.setdefault("metadata-log", [])
+    log.append(
+        {"timestamp-ms": timestamp_ms,
+         "metadata-file": _canonical_metadata_uri(metadata_path, table_root_of(base_dir), loc)}
+    )
+    props = raw.get("properties", {})
+    vmax = int(props.get("write.metadata.previous-versions-max", 0) or 0)
+    dropped = log[:-vmax] if 0 < vmax < len(log) else []
+    if dropped:
+        raw["metadata-log"] = log[-vmax:]
+    new_path = install_metadata(next_metadata_path(metadata_path, snapshot_id), raw)
+    if dropped and props.get("write.metadata.delete-after-commit.enabled") == "true":
+        for e in dropped:
+            p = _local(e["metadata-file"], base_dir, loc)
+            if os.path.exists(p) and os.path.abspath(p) != os.path.abspath(new_path):
+                os.remove(p)
+    if os.path.exists(os.path.join(os.path.dirname(new_path), "version-hint.text")):
+        try:
+            write_version_hint(new_path)
+        except ValueError:
+            pass  # non-vN layout: the listing fallback resolves it
+    return new_path
+
+
+class SnapshotProducer:
+    """The shared body of the snapshot-adding commits (appends,
+    deletes and row deltas, data and delete-file rewrites): the
+    parsed base, the new snapshot's id, sequence number and
+    timestamp, and the three steps every such commit takes — write
+    new manifests, rebuild carried ones, commit the snapshot."""
+
+    def __init__(
+        self,
+        metadata_path: str,
+        base_dir: str | None = None,
+        *,
+        snapshot_id: int | None = None,
+        timestamp_ms: int | None = None,
+    ) -> None:
+        self.metadata_path = metadata_path
+        self.base_dir = base_dir or os.path.dirname(metadata_path)
+        self.meta = parse_metadata(metadata_path)
+        self.raw = json.loads(json.dumps(self.meta.raw))  # deep copy
+        self.loc = self.raw.get("location") or f"file://{os.path.dirname(self.base_dir)}"
+        self.table_root = table_root_of(self.base_dir)
+        self.meta_dir = os.path.join(self.table_root, "metadata")
+        self.parent_id = self.raw.get("current-snapshot-id")
+        if snapshot_id is None:
+            snapshot_id = max((s["snapshot-id"] for s in self.raw.get("snapshots", [])), default=0) + 1
+        self.snapshot_id = snapshot_id
+        self.seq = self.raw.get("last-sequence-number", 0) + 1
+        self.timestamp_ms = _next_timestamp(self.raw, timestamp_ms)
+
+    def write_manifest(
+        self,
+        name: str,
+        entries: list[dict[str, Any]],
+        *,
+        spec_id: int,
+        content: int,
+        suffix: str,
+        lineage: bool = False,
+        seq: int | None = None,
+        added_snapshot_id: int | None = None,
+    ) -> dict[str, Any]:
+        """Write ``entries`` as manifest ``metadata/<name>`` and return
+        its manifest-list row: per-status file and row counts, the
+        minimum entry sequence number (a null one inherits ``seq``,
+        default the new snapshot's) and partition summaries.
+        ``added_snapshot_id`` defaults to the new snapshot."""
+        seq = self.seq if seq is None else seq
+        part_fields = _spec_partition_fields(self.meta, spec_id)
+        v3 = any(e["data_file"].get("referenced_data_file") is not None for e in entries)
+        blob = write_container(
+            manifest_entry_schema(part_fields, suffix, v3=v3, lineage=lineage), entries
+        )
+        with open(os.path.join(self.meta_dir, name), "wb") as f:
+            f.write(blob)
+        counts = {
+            f"{kind}_{unit}_count": 0
+            for kind in ("added", "existing", "deleted")
+            for unit in ("files", "rows")
+        }
+        label = {ADDED: "added", EXISTING: "existing", DELETED: "deleted"}
+        for e in entries:
+            counts[f"{label[e['status']]}_files_count"] += 1
+            counts[f"{label[e['status']]}_rows_count"] += e["data_file"]["record_count"]
+        return {
+            "manifest_path": f"{self.loc}/metadata/{name}",
+            "manifest_length": len(blob),
+            "partition_spec_id": spec_id,
+            "content": content,
+            "sequence_number": seq,
+            "min_sequence_number": min(
+                seq if e["sequence_number"] is None else e["sequence_number"]
+                for e in entries
+            ),
+            "added_snapshot_id": (
+                self.snapshot_id if added_snapshot_id is None else added_snapshot_id
+            ),
+            **counts,
+            "partitions": partition_summaries(entries, part_fields),
+        }
+
+    def rebuild_manifest(
+        self,
+        mrow: dict[str, Any],
+        records: list[dict[str, Any]],
+        keep,
+        tag: str,
+        *,
+        lineage: bool = False,
+    ) -> dict[str, Any] | None:
+        """Rebuild the carried manifest ``mrow`` (its decoded
+        ``records``) as ``<name>-<tag><snapshot id>.avro`` holding the
+        live entries whose data file ``keep`` accepts, re-statused
+        EXISTING with their sequence number and snapshot id made
+        explicit. Returns its list row, or None when nothing
+        survives (the manifest is dropped)."""
+        kept = [
+            {
+                "status": EXISTING,
+                "snapshot_id": (
+                    mrow.get("added_snapshot_id")
+                    if rec.get("snapshot_id") is None
+                    else rec["snapshot_id"]
+                ),
+                "sequence_number": (
+                    mrow.get("sequence_number", 0)
+                    if rec.get("sequence_number") is None
+                    else rec["sequence_number"]
+                ),
+                "data_file": rec["data_file"],
+            }
+            for rec in records
+            if rec["status"] != DELETED and keep(rec["data_file"])
+        ]
+        if not kept:
+            return None
+        name = os.path.basename(mrow["local_path"]).rsplit(".", 1)[0]
+        return self.write_manifest(
+            f"{name}-{tag}{self.snapshot_id}.avro",
+            kept,
+            spec_id=mrow.get("partition_spec_id", 0),
+            content=mrow.get("content", 0),
+            suffix=f"{tag}{self.snapshot_id}_{name}",
+            lineage=lineage,
+            seq=mrow.get("sequence_number", 0),
+            added_snapshot_id=mrow.get("added_snapshot_id", self.parent_id),
+        )
+
+    def commit(
+        self,
+        rows: list[dict[str, Any]],
+        summary: dict[str, str],
+        *,
+        extra_summary: dict[str, str] | None = None,
+        stage_ref: str | None = None,
+        next_row_id: int | None = None,
+        first_row_id: int | None = None,
+    ) -> dict[str, Any]:
+        """Write the manifest list of ``rows``, add the snapshot (its
+        summary gets the table totals and ``extra_summary``) and its
+        snapshot-log entry, and install the version through
+        :func:`commit_version`. ``stage_ref`` stages the snapshot on
+        that branch instead of moving ``main``; ``next_row_id`` and
+        ``first_row_id`` carry v3 row lineage."""
+        raw, sid, ts = self.raw, self.snapshot_id, self.timestamp_ms
+        list_name = f"snap-{sid}.avro"
+        with open(os.path.join(self.meta_dir, list_name), "wb") as f:
+            f.write(write_container(MANIFEST_LIST_SCHEMA, rows))
+        raw["last-sequence-number"] = self.seq
+        raw["last-updated-ms"] = ts
+        if next_row_id is not None:
+            raw["next-row-id"] = next_row_id
+        if stage_ref is None:
+            raw["current-snapshot-id"] = sid
+        else:
+            # write-audit-publish staging: the snapshot exists (and is
+            # readable through its branch ref) but main does NOT move
+            # until publish_snapshot fast-forwards it
+            raw.setdefault("refs", {})[stage_ref] = {"snapshot-id": sid, "type": "branch"}
+        raw.setdefault("snapshots", []).append(
+            {
+                "sequence-number": self.seq,
+                "snapshot-id": sid,
+                **({"parent-snapshot-id": self.parent_id} if self.parent_id is not None else {}),
+                **({"first-row-id": first_row_id} if first_row_id is not None else {}),
+                "timestamp-ms": ts,
+                "summary": {**summary, **_summary_totals(rows), **(extra_summary or {})},
+                "manifest-list": f"{self.loc}/metadata/{list_name}",
+                "schema-id": raw.get("current-schema-id", 0),
+            }
+        )
+        if stage_ref is None:
+            raw.setdefault("snapshot-log", []).append({"timestamp-ms": ts, "snapshot-id": sid})
+        new_path = commit_version(
+            self.metadata_path, raw, base_dir=self.base_dir, timestamp_ms=ts, snapshot_id=sid
+        )
+        return {
+            "metadata_path": new_path,
+            "snapshot_id": sid,
+            "sequence_number": self.seq,
+            "manifest_list_path": os.path.join(self.meta_dir, list_name),
+        }
+
+
 def append_snapshot(
     metadata_path: str,
     data_files: list[dict[str, Any]],
@@ -417,13 +667,7 @@ def commit_delete_snapshot(
 
 
 def _retire_replaced_dvs(
-    rows: list[dict[str, Any]],
-    refs: set[str],
-    meta: TableMetadata,
-    base_dir: str,
-    loc: str,
-    meta_dir: str,
-    snapshot_id: int,
+    producer: SnapshotProducer, rows: list[dict[str, Any]], refs: set[str]
 ) -> None:
     """v3 deletion-vector replacement: any carried-forward delete
     manifest holding a live DV entry whose ``referenced_data_file``
@@ -440,46 +684,35 @@ def _retire_replaced_dvs(
     for i, row in enumerate(rows):
         if row.get("content", 0) != 1:
             continue
-        local = _local(row["manifest_path"], base_dir, loc)
+        local = _local(row["manifest_path"], producer.base_dir, producer.loc)
         with open(local, "rb") as f:
             records = list(AvroContainerFile(f.read()))
         hits = [
             r
             for r in records
-            if r["status"] != 2
+            if r["status"] != DELETED
             and r["data_file"].get("referenced_data_file") in refs
         ]
         if not hits:
             continue
         for r in hits:
-            r["status"] = 2  # DELETED tombstone
+            r["status"] = DELETED  # tombstone
             if r.get("sequence_number") is None:
                 r["sequence_number"] = row["sequence_number"]
             found.add(r["data_file"]["referenced_data_file"])
-        gspec = row.get("partition_spec_id", 0)
-        part_fields = _spec_partition_fields(meta, gspec)
-        blob = write_container(
-            manifest_entry_schema(part_fields, f"ret{snapshot_id}i{i}", v3=True),
+        sid = producer.snapshot_id
+        rebuilt = producer.write_manifest(
+            f"manifest-{sid}-retire{i}.avro",
             records,
+            spec_id=row.get("partition_spec_id", 0),
+            content=1,
+            suffix=f"ret{sid}i{i}",
+            seq=row["sequence_number"],
+            added_snapshot_id=row["added_snapshot_id"],
         )
-        man_name = f"manifest-{snapshot_id}-retire{i}.avro"
-        with open(os.path.join(meta_dir, man_name), "wb") as f:
-            f.write(blob)
-        label = {1: "added", 0: "existing", 2: "deleted"}
-        counts = {
-            f"{k}_{u}_count": 0
-            for k in label.values()
-            for u in ("files", "rows")
-        }
-        for r in records:
-            counts[f"{label[r['status']]}_files_count"] += 1
-            counts[f"{label[r['status']]}_rows_count"] += r["data_file"]["record_count"]
+        # the row keeps its sequence numbers and partition summaries
         row.update(
-            {
-                "manifest_path": f"{loc}/metadata/{man_name}",
-                "manifest_length": len(blob),
-                **counts,
-            }
+            {k: v for k, v in rebuilt.items() if k.startswith("manifest_") or k.endswith("_count")}
         )
     missing = refs - found
     if missing:
@@ -509,20 +742,12 @@ def _commit_files(
     parent's manifests, data or delete, is carried forward."""
     if not data_files:
         raise ValueError(f"{operation} commit with no data files (empty commits carry no manifest)")
-    base_dir = base_dir or os.path.dirname(metadata_path)
-    meta = parse_metadata(metadata_path)
-    raw = json.loads(json.dumps(meta.raw))  # deep copy
-    loc = raw.get("location") or f"file://{os.path.dirname(base_dir)}"
-    table_root = table_root_of(base_dir)
-    meta_dir = os.path.join(table_root, "metadata")
-
-    snaps = raw.get("snapshots", [])
-    parent_id = raw.get("current-snapshot-id")
-    if snapshot_id is None:
-        snapshot_id = max((s["snapshot-id"] for s in snaps), default=0) + 1
-    seq = raw.get("last-sequence-number", 0) + 1
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
+    producer = SnapshotProducer(
+        metadata_path, base_dir, snapshot_id=snapshot_id, timestamp_ms=timestamp_ms
+    )
+    raw, meta, loc = producer.raw, producer.meta, producer.loc
+    base_dir, table_root = producer.base_dir, producer.table_root
+    snapshot_id, parent_id = producer.snapshot_id, producer.parent_id
     if spec_id is None:
         spec_id = raw.get("default-spec-id", 0)
 
@@ -553,9 +778,8 @@ def _commit_files(
     snapshot_first_row_id = row_counter[0]
 
     def _build_entries(group: list[dict[str, Any]], gspec: int):
-        part_fields = _spec_partition_fields(meta, gspec)
-        want_fields = {fn for fn, _ in part_fields}
-        entries, rows_count = [], 0
+        want_fields = {fn for fn, _ in _spec_partition_fields(meta, gspec)}
+        entries = []
         for df in group:
             part = dict(df["partition"])
             if set(part) != want_fields:
@@ -579,7 +803,6 @@ def _commit_files(
                 record_count = pq.read_metadata(local).num_rows
             if file_size is None:
                 file_size = os.path.getsize(local)
-            rows_count += record_count
             first_row_id = df.get("first_row_id")
             if lineage and int(df.get("content", 0)) == 0 and first_row_id is None:
                 first_row_id = row_counter[0]
@@ -621,31 +844,28 @@ def _commit_files(
                     },
                 }
             )
-        return part_fields, entries, rows_count
+        return entries
 
     # ---- new manifest(s): parent manifest-list rows carried
     # forward + one new row per spec group
     rows: list[dict] = []
     if parent_id is not None and not replace_all:
-        parent = next(s for s in snaps if s["snapshot-id"] == parent_id)
+        parent = next(s for s in raw.get("snapshots", []) if s["snapshot-id"] == parent_id)
         rows.extend(read_manifest_list(_local(parent["manifest-list"], base_dir, loc)))
     if replace_dv_refs:
-        _retire_replaced_dvs(
-            rows, set(replace_dv_refs), meta, base_dir, loc, meta_dir, snapshot_id
-        )
+        _retire_replaced_dvs(producer, rows, set(replace_dv_refs))
     man_paths: list[str] = []
     added_rows = 0
     n_data_files = n_delete_files = 0
-    any_v3 = False
     single = len(by_group) == 1
     added_pos_deletes = added_eq_deletes = 0
     for (mc, gspec) in sorted(by_group):
-        part_fields, entries, rows_count = _build_entries(by_group[(mc, gspec)], gspec)
+        entries = _build_entries(by_group[(mc, gspec)], gspec)
         if mc == 0:
             # "added-records" counts DATA rows only (Iceberg
             # SnapshotSummary); delete-file rows go under the
             # added-*-deletes keys below
-            added_rows += rows_count
+            added_rows += sum(e["data_file"]["record_count"] for e in entries)
             n_data_files += len(entries)
         else:
             n_delete_files += len(entries)
@@ -659,135 +879,51 @@ def _commit_files(
             if single
             else f"manifest-{snapshot_id}-c{mc}s{gspec}.avro"
         )
-        group_v3 = any(
-            e["data_file"].get("referenced_data_file") is not None for e in entries
-        )
-        any_v3 = any_v3 or group_v3
-        man_blob = write_container(
-            manifest_entry_schema(
-                part_fields,
-                f"c{snapshot_id}m{mc}s{gspec}",
-                v3=group_v3,
-                lineage=lineage and mc == 0,
-            ),
-            entries,
-        )
-        with open(os.path.join(meta_dir, man_name), "wb") as f:
-            f.write(man_blob)
-        man_paths.append(os.path.join(meta_dir, man_name))
-
-        summaries = partition_summaries(entries, part_fields)
         rows.append(
-            {
-                "manifest_path": f"{loc}/metadata/{man_name}",
-                "manifest_length": len(man_blob),
-                "partition_spec_id": gspec,
-                "content": mc,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": rows_count,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": summaries,
-            }
+            producer.write_manifest(
+                man_name,
+                entries,
+                spec_id=gspec,
+                content=mc,
+                suffix=f"c{snapshot_id}m{mc}s{gspec}",
+                lineage=lineage and mc == 0,
+            )
         )
-    list_name = f"snap-{snapshot_id}.avro"
-    with open(os.path.join(meta_dir, list_name), "wb") as f:
-        f.write(write_container(MANIFEST_LIST_SCHEMA, rows))
+        man_paths.append(os.path.join(producer.meta_dir, man_name))
 
-    # ---- new metadata.json
-    if any_v3:
+    if any(df.get("referenced_data_file") is not None for df in data_files):
         # deletion vectors are v3-only: committing one upgrades the
         # table's format version (the spec's supported v2 -> v3
         # upgrade path) so a spec-compliant reader knows to expect
         # DV manifest fields
         raw["format-version"] = max(int(raw.get("format-version", 2)), 3)
-    raw["last-sequence-number"] = seq
-    raw["last-updated-ms"] = timestamp_ms
-    if lineage and row_counter[0] != snapshot_first_row_id:
-        raw["next-row-id"] = row_counter[0]
-    if stage_ref is None:
-        raw["current-snapshot-id"] = snapshot_id
-    else:
-        # write-audit-publish staging: the snapshot exists (and is
-        # readable through its branch ref) but main does NOT move
-        # until publish_snapshot fast-forwards it
-        raw.setdefault("refs", {})[stage_ref] = {
-            "snapshot-id": snapshot_id, "type": "branch",
-        }
-    raw.setdefault("snapshots", []).append(
+    assigned = lineage and row_counter[0] != snapshot_first_row_id
+    res = producer.commit(
+        rows,
         {
-            "sequence-number": seq,
-            "snapshot-id": snapshot_id,
-            **({"parent-snapshot-id": parent_id} if parent_id is not None else {}),
+            "operation": operation,
+            **({"added-data-files": str(n_data_files)} if n_data_files else {}),
+            **({"added-delete-files": str(n_delete_files)} if n_delete_files else {}),
+            **({"added-records": str(added_rows)} if n_data_files else {}),
             **(
-                {"first-row-id": snapshot_first_row_id}
-                if lineage and row_counter[0] != snapshot_first_row_id
+                {"added-position-deletes": str(added_pos_deletes)}
+                if added_pos_deletes
                 else {}
             ),
-            "timestamp-ms": timestamp_ms,
-            "summary": {
-                "operation": operation,
-                **({"added-data-files": str(n_data_files)} if n_data_files else {}),
-                **({"added-delete-files": str(n_delete_files)} if n_delete_files else {}),
-                **({"added-records": str(added_rows)} if n_data_files else {}),
-                **(
-                    {"added-position-deletes": str(added_pos_deletes)}
-                    if added_pos_deletes
-                    else {}
-                ),
-                **(
-                    {"added-equality-deletes": str(added_eq_deletes)}
-                    if added_eq_deletes
-                    else {}
-                ),
-                **_summary_totals(rows),
-                # caller-supplied summary properties (e.g. the
-                # streaming sink's exactly-once batch markers)
-                **(extra_summary or {}),
-            },
-            "manifest-list": f"{loc}/metadata/{list_name}",
-            "schema-id": raw.get("current-schema-id", 0),
-        }
+            **(
+                {"added-equality-deletes": str(added_eq_deletes)}
+                if added_eq_deletes
+                else {}
+            ),
+        },
+        # caller-supplied summary properties (e.g. the streaming
+        # sink's exactly-once batch markers)
+        extra_summary=extra_summary,
+        stage_ref=stage_ref,
+        next_row_id=row_counter[0] if assigned else None,
+        first_row_id=snapshot_first_row_id if assigned else None,
     )
-    if stage_ref is None:
-        raw.setdefault("snapshot-log", []).append(
-            {"timestamp-ms": timestamp_ms, "snapshot-id": snapshot_id}
-        )
-    raw.setdefault("metadata-log", []).append(
-        {"timestamp-ms": timestamp_ms,
-         "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc)}
-    )
-    # spec metadata-log retention: `write.metadata.previous-versions-max`
-    # caps the log on every commit; `write.metadata.delete-after-
-    # commit.enabled` also deletes the dropped vN.metadata.json files
-    props = raw.get("properties", {})
-    vmax = int(props.get("write.metadata.previous-versions-max", 0) or 0)
-    dropped_meta: list[dict] = []
-    if vmax > 0 and len(raw["metadata-log"]) > vmax:
-        dropped_meta = raw["metadata-log"][:-vmax]
-        raw["metadata-log"] = raw["metadata-log"][-vmax:]
-    new_path = install_metadata(next_metadata_path(metadata_path, snapshot_id), raw)
-    if dropped_meta and props.get(
-        "write.metadata.delete-after-commit.enabled"
-    ) == "true":
-        for e in dropped_meta:
-            p = _local(e["metadata-file"], base_dir, loc)
-            if os.path.exists(p) and os.path.abspath(p) != os.path.abspath(new_path):
-                os.remove(p)
-
-    return {
-        "metadata_path": new_path,
-        "snapshot_id": snapshot_id,
-        "sequence_number": seq,
-        "manifest_path": man_paths[0],
-        "manifest_paths": man_paths,
-        "manifest_list_path": os.path.join(meta_dir, list_name),
-    }
+    return {**res, "manifest_path": man_paths[0], "manifest_paths": man_paths}
 
 
 # ----------------------------------------------- driver-gate queries
@@ -801,18 +937,24 @@ def _commit_files(
 _SCRATCH_ROOTS: list[str] = []
 
 
-def _scratch_table(prefix: str, fixture_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
+def _remove_scratch_roots() -> None:
+    for d in _SCRATCH_ROOTS:
+        shutil.rmtree(d, ignore_errors=True)
 
-    if not _SCRATCH_ROOTS:
-        atexit.register(
-            lambda: [shutil.rmtree(d, ignore_errors=True) for d in _SCRATCH_ROOTS]
-        )
+
+atexit.register(_remove_scratch_roots)
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temp directory, removed at process exit."""
     scratch = tempfile.mkdtemp(prefix=prefix)
     _SCRATCH_ROOTS.append(scratch)
-    root = os.path.join(scratch, "t")
+    return scratch
+
+
+def _scratch_table(prefix: str, fixture_dir: str) -> str:
+    """A scratch copy of ``fixture_dir`` (removed at process exit)."""
+    root = os.path.join(_scratch_dir(prefix), "t")
     shutil.copytree(fixture_dir, root)
     return root
 
@@ -949,10 +1091,9 @@ def expire_snapshots(
             raw.get("refs", {}).pop(name, None)
     if not expired:
         if removed_refs:
-            if timestamp_ms is None:
-                timestamp_ms = raw.get("last-updated-ms", 0) + 1000
-            raw["last-updated-ms"] = timestamp_ms
-            new_path = install_metadata(next_metadata_path(metadata_path), raw)
+            new_path = commit_version(
+                metadata_path, raw, base_dir=base_dir, timestamp_ms=timestamp_ms
+            )
             return {
                 "metadata_path": new_path, "expired": [], "removable": [],
                 "removed_refs": removed_refs,
@@ -982,8 +1123,6 @@ def expire_snapshots(
             if p not in removable:
                 removable.append(p)
 
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
     raw["snapshots"] = kept_snaps
     raw["snapshot-log"] = [
         e for e in raw.get("snapshot-log", []) if e["snapshot-id"] not in expired
@@ -1005,18 +1144,7 @@ def expire_snapshots(
                 kept_stats.append(s)
         if key in raw:
             raw[key] = kept_stats
-    raw["last-updated-ms"] = timestamp_ms
-    raw.setdefault("metadata-log", []).append(
-        {
-            "timestamp-ms": timestamp_ms,
-            "metadata-file": _canonical_metadata_uri(
-                metadata_path,
-                table_root_of(base_dir),
-                loc,
-            ),
-        }
-    )
-    new_path = install_metadata(next_metadata_path(metadata_path), raw)
+    new_path = commit_version(metadata_path, raw, base_dir=base_dir, timestamp_ms=timestamp_ms)
 
     if delete_files:
         for p in removable:
@@ -1125,69 +1253,6 @@ ORDER BY id
 
 # ----------------------------------- schema evolution + named refs
 
-_ALLOWED_ADD_TYPES = {"long", "int", "string", "double", "float", "boolean", "date"}
-
-
-def commit_schema_update(
-    metadata_path: str,
-    add_columns: list[tuple[str, str]],
-    *,
-    base_dir: str | None = None,
-    timestamp_ms: int | None = None,
-) -> dict[str, Any]:
-    """Schema evolution: ADD optional columns (the only always-safe
-    evolution; drops/renames/promotions need reader-side projection
-    rules this engine doesn't claim yet). Writes a new schema with a
-    bumped ``schema-id`` and fresh field ids past ``last-column-id``,
-    points ``current-schema-id`` at it, and keeps every old schema
-    in ``schemas`` — existing data files stay readable because added
-    columns are optional (readers fill null), exactly Iceberg's
-    add-column contract.
-    """
-    if not add_columns:
-        raise ValueError("commit_schema_update with no columns to add")
-    base_dir = base_dir or os.path.dirname(metadata_path)
-    meta = parse_metadata(metadata_path)
-    raw = json.loads(json.dumps(meta.raw))
-    loc = raw.get("location")
-    table_root = table_root_of(base_dir)
-
-    cur = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
-    existing = {f["name"] for f in cur.get("fields", [])}
-    last_col = raw.get("last-column-id", max((f["id"] for f in cur["fields"]), default=0))
-    new_fields = list(cur["fields"])
-    for name, typ in add_columns:
-        if name in existing:
-            raise ValueError(f"column {name!r} already exists in the current schema")
-        if typ not in _ALLOWED_ADD_TYPES:
-            raise ValueError(f"unsupported added-column type {typ!r}")
-        last_col += 1
-        new_fields.append({"id": last_col, "name": name, "required": False, "type": typ})
-    new_schema_id = max(s.get("schema-id", 0) for s in raw.get("schemas", [cur])) + 1
-    raw.setdefault("schemas", [cur])
-    raw["schemas"].append(
-        {"schema-id": new_schema_id, "type": "struct", "fields": new_fields}
-    )
-    raw["current-schema-id"] = new_schema_id
-    raw["last-column-id"] = last_col
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
-    raw["last-updated-ms"] = timestamp_ms
-    raw.setdefault("metadata-log", []).append(
-        {"timestamp-ms": timestamp_ms,
-         "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc)}
-    )
-    new_path = install_metadata(next_metadata_path(metadata_path), raw)
-    return {
-        "metadata_path": new_path,
-        "schema_id": new_schema_id,
-        "last_column_id": last_col,
-    }
-
-
 def set_ref(
     metadata_path: str,
     name: str,
@@ -1214,10 +1279,7 @@ def set_ref(
     ] != snapshot_id:
         raise ValueError(f"tag {name!r} already pins snapshot {existing['snapshot-id']}; tags are immutable")
     raw["refs"][name] = {"snapshot-id": snapshot_id, "type": ref_type}
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
-    raw["last-updated-ms"] = timestamp_ms
-    new_path = install_metadata(next_metadata_path(metadata_path), raw)
+    new_path = commit_version(metadata_path, raw, timestamp_ms=timestamp_ms)
     return {"metadata_path": new_path, "name": name, "snapshot_id": snapshot_id}
 
 
@@ -1357,13 +1419,11 @@ def rollback_to(
     refs = raw.get("refs", {})
     if "main" in refs and refs["main"].get("type") == "branch":
         refs["main"]["snapshot-id"] = snapshot_id
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
-    raw["last-updated-ms"] = timestamp_ms
+    timestamp_ms = _next_timestamp(raw, timestamp_ms)
     raw.setdefault("snapshot-log", []).append(
         {"timestamp-ms": timestamp_ms, "snapshot-id": snapshot_id}
     )
-    new_path = install_metadata(next_metadata_path(metadata_path), raw)
+    new_path = commit_version(metadata_path, raw, timestamp_ms=timestamp_ms)
     return {"metadata_path": new_path, "snapshot_id": snapshot_id}
 
 
@@ -1477,13 +1537,11 @@ def publish_snapshot(
     if "main" in raw.get("refs", {}):
         raw["refs"]["main"]["snapshot-id"] = sid
     del raw["refs"][ref]
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
-    raw["last-updated-ms"] = timestamp_ms
+    timestamp_ms = _next_timestamp(raw, timestamp_ms)
     raw.setdefault("snapshot-log", []).append(
         {"timestamp-ms": timestamp_ms, "snapshot-id": sid}
     )
-    new_path = install_metadata(next_metadata_path(metadata_path), raw)
+    new_path = commit_version(metadata_path, raw, timestamp_ms=timestamp_ms)
     return {"metadata_path": new_path, "snapshot_id": sid}
 
 
@@ -1823,34 +1881,16 @@ def update_table_properties(
     timestamp_ms: int | None = None,
 ) -> dict[str, Any]:
     """ALTER TABLE SET/UNSET TBLPROPERTIES: a properties-only
-    metadata commit — no snapshot, the previous metadata file is
-    logged in ``metadata-log`` and a stale ``version-hint.text`` is
-    refreshed, exactly like a data commit's metadata tail. Returns
-    ``{"metadata_path", "properties"}``."""
+    metadata commit — no snapshot; :func:`commit_version` logs the
+    previous metadata file and refreshes ``version-hint.text`` like
+    for any other commit. Returns ``{"metadata_path", "properties"}``."""
     if not set_props and not unset:
         raise ValueError("update_table_properties with no changes")
-    base_dir = base_dir or os.path.dirname(metadata_path)
-    meta = parse_metadata(metadata_path)
-    raw = json.loads(json.dumps(meta.raw))
-    loc = raw.get("location")
-    table_root = table_root_of(base_dir)
+    raw = json.loads(json.dumps(parse_metadata(metadata_path).raw))
     props = dict(raw.get("properties") or {})
     for k in unset or []:
         props.pop(k, None)
     props.update(set_props or {})
     raw["properties"] = props
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
-    raw["last-updated-ms"] = timestamp_ms
-    raw.setdefault("metadata-log", []).append(
-        {"timestamp-ms": timestamp_ms,
-         "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc)}
-    )
-    new_path = install_metadata(next_metadata_path(metadata_path), raw)
-    hint = os.path.join(os.path.dirname(new_path), "version-hint.text")
-    if os.path.exists(hint):
-        try:
-            write_version_hint(new_path)
-        except ValueError:
-            pass  # non-vN layout: the listing fallback resolves it
+    new_path = commit_version(metadata_path, raw, base_dir=base_dir, timestamp_ms=timestamp_ms)
     return {"metadata_path": new_path, "properties": props}

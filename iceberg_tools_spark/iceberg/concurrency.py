@@ -43,8 +43,8 @@ import os
 from typing import Any
 
 from .catalog import CommitConflictError  # re-exported: the rebase API raises it
-from .commit import append_snapshot, commit_delete_snapshot, commit_row_delta
-from .deletes import EQUALITY_DELETES, POSITION_DELETES, mor_entries_at
+from .commit import append_snapshot, commit_delete_snapshot
+from .deletes import EQUALITY_DELETES, mor_entries_at
 from .metadata import parse_metadata
 from .snapshots import ancestor_chain
 
@@ -231,47 +231,6 @@ def commit_delete_concurrent(
     )
     res = commit_delete_snapshot(
         head_metadata_path, delete_files, base_dir=base_dir, **kwargs
-    )
-    res.update(
-        retried=not v["clean"],
-        base_snapshot_id=v["base_snapshot_id"],
-        head_snapshot_id=v["head_snapshot_id"],
-    )
-    return res
-
-
-def commit_row_delta_concurrent(
-    base_metadata_path: str,
-    head_metadata_path: str,
-    new_data_files: list[dict[str, Any]],
-    delete_files: list[dict[str, Any]],
-    *,
-    referenced_data_files: list[str] = (),
-    base_dir: str | None = None,
-    isolation: str = "serializable",
-    **kwargs: Any,
-) -> dict[str, Any]:
-    """The row-delta (UPDATE/MERGE) twin of
-    :func:`commit_delete_concurrent`: same validation, then one
-    ``commit_row_delta`` on the head."""
-    if isolation not in ("serializable", "snapshot"):
-        raise ValueError(f"unknown isolation level {isolation!r}")
-    eq_parts = [
-        d.get("partition") or {}
-        for d in delete_files
-        if d.get("content") == EQUALITY_DELETES
-    ]
-    v = validate_concurrent_commits(
-        base_metadata_path,
-        head_metadata_path,
-        referenced_data_files=referenced_data_files,
-        equality_delete_partitions=(
-            eq_parts if (eq_parts and isolation == "serializable") else None
-        ),
-        base_dir=base_dir,
-    )
-    res = commit_row_delta(
-        head_metadata_path, new_data_files, delete_files, base_dir=base_dir, **kwargs
     )
     res.update(
         retried=not v["clean"],

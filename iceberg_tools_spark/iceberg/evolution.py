@@ -57,8 +57,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .catalog import install_metadata, next_metadata_path, table_root_of
-from .commit import _canonical_metadata_uri
+from .catalog import install_metadata
+from .commit import commit_version
 from .metadata import TableMetadata, parse_metadata
 
 __all__ = [
@@ -112,11 +112,7 @@ def evolve_schema(
     promote = dict(promote or {})
     if not (add or rename or drop or promote):
         raise ValueError("evolve_schema with no changes")
-    base_dir = base_dir or os.path.dirname(metadata_path)
-    meta = parse_metadata(metadata_path)
-    raw = json.loads(json.dumps(meta.raw))
-    loc = raw.get("location")
-    table_root = table_root_of(base_dir)
+    raw = json.loads(json.dumps(parse_metadata(metadata_path).raw))
 
     cur = next(
         s
@@ -197,16 +193,7 @@ def evolve_schema(
     )
     raw["current-schema-id"] = new_schema_id
     raw["last-column-id"] = last_col
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
-    raw["last-updated-ms"] = timestamp_ms
-    raw.setdefault("metadata-log", []).append(
-        {
-            "timestamp-ms": timestamp_ms,
-            "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc),
-        }
-    )
-    new_path = install_metadata(next_metadata_path(metadata_path), raw)
+    new_path = commit_version(metadata_path, raw, base_dir=base_dir, timestamp_ms=timestamp_ms)
     return {
         "metadata_path": new_path,
         "schema_id": new_schema_id,
@@ -759,17 +746,11 @@ def schema_evolution_name_mapping(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle re-implements both projections per file in DuckDB.
     (``sf_dir`` unused: fixture paths are repo-canonical; the
     scratch copy only exists to mutate fileA.)"""
-    import shutil
-    import tempfile
-
     import pyarrow.parquet as pq
 
-    from .commit import _SCRATCH_ROOTS
+    from .commit import _scratch_table
 
-    scratch = tempfile.mkdtemp(prefix="nm_gate_")
-    _SCRATCH_ROOTS.append(scratch)
-    root = os.path.join(scratch, "t")
-    shutil.copytree(_EVO_DIR, root)
+    root = _scratch_table("nm_gate_", _EVO_DIR)
     fa = os.path.join(root, "data", "fileA.parquet")
     t = pq.read_table(fa)
     t = t.cast(
@@ -856,10 +837,7 @@ def evolve_partition_spec(
     raw["partition-specs"] = specs
     raw["default-spec-id"] = new_id
     raw["last-partition-id"] = last_pid
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
-    raw["last-updated-ms"] = timestamp_ms
-    new_path = install_metadata(next_metadata_path(metadata_path), raw)
+    new_path = commit_version(metadata_path, raw, timestamp_ms=timestamp_ms)
     return {"metadata_path": new_path, "spec_id": new_id}
 
 

@@ -5,8 +5,9 @@ and the reference's single-threaded CLI doesn't need
 
 Every metadata path in this engine funnels manifest Avro through
 here: above ``PARALLEL_THRESHOLD`` manifests, the pure-Python decode
-(`avro/reader.py` — CPU-bound, ~ms per MB of Avro) ships to
-executors as one RDD ``flatMap`` over ``(ctx, local_path)`` tasks;
+(`avro/reader.py` — CPU-bound, about 1.4 s per MB of Avro on one
+core) ships to executors as one RDD ``flatMap`` over
+``(ctx, local_path)`` tasks;
 below it, the driver parses inline, because a Spark job over two
 manifests costs more in scheduling than it saves in parse time.
 

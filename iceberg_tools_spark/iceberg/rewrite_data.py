@@ -37,15 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..avro.reader import AvroContainerFile
-from ..avro.writer import write_container
-from .catalog import install_metadata, next_metadata_path, table_root_of
-from .commit import (
-    MANIFEST_LIST_SCHEMA,
-    _spec_partition_fields,
-    manifest_entry_schema,
-    partition_summaries,
-)
-from .commit import _summary_totals  # noqa: E402
+from .catalog import install_metadata
+from .commit import ADDED, SnapshotProducer
 from .deletes import (
     EQUALITY_DELETES,
     POSITION_DELETES,
@@ -53,10 +46,7 @@ from .deletes import (
     apply_deletes,
     mor_entries_at,
 )
-from .metadata import parse_metadata
-from .snapshots import _local, manifest_files_at, read_manifest_list
-
-ADDED, EXISTING, DELETED = 1, 0, 2
+from .snapshots import manifest_files_at
 
 
 def _plan_rewrite_targets(
@@ -307,15 +297,12 @@ def rewrite_data_files(
     ``delete_compaction_plan`` would flag at threshold 0)."""
     import pyarrow.parquet as pq
 
-    base_dir = base_dir or os.path.dirname(metadata_path)
-    meta = parse_metadata(metadata_path)
-    raw = json.loads(json.dumps(meta.raw))
-    loc = raw.get("location")
-    table_root = table_root_of(base_dir)
-    meta_dir = os.path.join(table_root, "metadata")
-
-    parent_id = raw.get("current-snapshot-id")
-    data, dels = mor_entries_at(meta, parent_id, base_dir)
+    producer = SnapshotProducer(
+        metadata_path, base_dir, snapshot_id=snapshot_id, timestamp_ms=timestamp_ms
+    )
+    meta, raw, loc = producer.meta, producer.raw, producer.loc
+    parent_id, snapshot_id = producer.parent_id, producer.snapshot_id
+    data, dels = mor_entries_at(meta, parent_id, producer.base_dir)
 
     if target_rels is None:
         target_rels = _plan_rewrite_targets(spark, data, dels)
@@ -326,16 +313,10 @@ def rewrite_data_files(
     if missing:
         raise ValueError(f"target files not live at snapshot {parent_id}: {sorted(missing)}")
 
-    if snapshot_id is None:
-        snapshot_id = max(s["snapshot-id"] for s in raw["snapshots"]) + 1
-    seq = raw.get("last-sequence-number", 0) + 1
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
-
     # ---- fold + write ALL replacement files in one Spark job
     new_paths = _fold_and_write(
         spark, meta, sorted(targets.values(), key=lambda e: e["rel"]),
-        dels, table_root, snapshot_id,
+        dels, producer.table_root, snapshot_id,
         lineage=int(raw.get("format-version", 2)) >= 3,
     )
     new_entries = []
@@ -343,11 +324,9 @@ def rewrite_data_files(
         stem, ext = os.path.splitext(rel)
         new_rel = f"{stem}-rw{snapshot_id}{ext}"
         out_path = new_paths[rel]
-        spec_fields = _spec_partition_fields(meta, e["spec_id"])
         new_entries.append(
             {
                 "spec_id": e["spec_id"],
-                "spec_fields": spec_fields,
                 "entry": {
                     "status": ADDED,
                     "snapshot_id": snapshot_id,
@@ -368,22 +347,13 @@ def rewrite_data_files(
             }
         )
 
-    return _replace_commit(
-        metadata_path, meta, raw, base_dir, targets, new_entries,
-        snapshot_id, seq, timestamp_ms,
-    )
+    return _replace_commit(producer, targets, new_entries)
 
 
 def _replace_commit(
-    metadata_path: str,
-    meta,
-    raw: dict,
-    base_dir: str,
+    producer: SnapshotProducer,
     targets: dict[str, dict[str, Any]],
     new_entries: list[dict[str, Any]],
-    snapshot_id: int,
-    seq: int,
-    timestamp_ms: int,
     extra_summary: dict[str, str] | None = None,
 ) -> dict[str, Any]:
     """REPLACE-snapshot commit shared by the delete-folding rewrite
@@ -391,10 +361,7 @@ def _replace_commit(
     (untouched manifests carried forward VERBATIM, touched ones
     rebuilt with EXISTING survivors), add ``new_entries`` in fresh
     ADDED manifests, write manifest list + metadata.json."""
-    loc = raw.get("location")
-    table_root = table_root_of(base_dir)
-    meta_dir = os.path.join(table_root, "metadata")
-    parent_id = raw.get("current-snapshot-id")
+    raw, snapshot_id = producer.raw, producer.snapshot_id
     # v3 row lineage (r15 — found by the row-tracking bridge): a
     # rebuilt manifest's EXISTING survivors must keep their
     # first_row_id (dropping it silently nulls _row_id after any
@@ -408,86 +375,34 @@ def _replace_commit(
     # names); only manifests actually containing a replaced file
     # are rebuilt without it
     replaced_paths = {targets[r]["file_path"] for r in targets}
-    parent = next(s for s in raw["snapshots"] if s["snapshot-id"] == parent_id)
-    parent_rows = {
-        r["manifest_path"]: r
-        for r in read_manifest_list(_local(parent["manifest-list"], base_dir, loc))
-    }
     list_rows: list[dict] = []
-    for mrow in manifest_files_at(meta, parent_id, base_dir):
+    for mrow in manifest_files_at(producer.meta, producer.parent_id, producer.base_dir):
         if mrow.get("content", 0) == 1:
             # delete manifest: carry forward verbatim
-            list_rows.append(parent_rows[mrow["manifest_path"]])
+            list_rows.append(mrow)
             continue
         with open(mrow["local_path"], "rb") as f:
             records = list(AvroContainerFile(f.read()))
         if not any(
             rec["data_file"]["file_path"] in replaced_paths for rec in records
         ):
-            list_rows.append(parent_rows[mrow["manifest_path"]])
+            list_rows.append(mrow)
             continue
-        kept = []
-        for rec in records:
-            if rec["status"] == DELETED:
-                continue
-            if rec["data_file"]["file_path"] in replaced_paths:
-                continue
-            eseq = rec.get("sequence_number")
-            if eseq is None:
-                eseq = mrow.get("sequence_number", 0)
-            sid = rec.get("snapshot_id")
-            if sid is None:
-                sid = mrow.get("added_snapshot_id")
-            kept.append(
-                {
-                    "status": EXISTING,
-                    "snapshot_id": sid,
-                    "sequence_number": eseq,
-                    "data_file": rec["data_file"],
-                }
-            )
-        if not kept:
-            continue  # manifest fully replaced: drop it
-        spec_id = mrow.get("partition_spec_id", 0)
-        spec_fields = _spec_partition_fields(meta, spec_id)
-        name = os.path.basename(mrow["local_path"]).rsplit(".", 1)[0]
-        new_name = f"{name}-rw{snapshot_id}.avro"
-        blob = write_container(
-            manifest_entry_schema(
-                spec_fields, f"rw{snapshot_id}_{name}", lineage=lineage
-            ),
-            kept,
+        row = producer.rebuild_manifest(
+            mrow, records, lambda df_: df_["file_path"] not in replaced_paths,
+            "rw", lineage=lineage,
         )
-        with open(os.path.join(meta_dir, new_name), "wb") as f:
-            f.write(blob)
-        list_rows.append(
-            {
-                "manifest_path": f"{loc}/metadata/{new_name}",
-                "manifest_length": len(blob),
-                "partition_spec_id": spec_id,
-                "content": 0,
-                "sequence_number": mrow.get("sequence_number", 0),
-                "min_sequence_number": min(e["sequence_number"] for e in kept),
-                "added_snapshot_id": mrow.get("added_snapshot_id", parent_id),
-                "added_files_count": 0,
-                "existing_files_count": len(kept),
-                "deleted_files_count": 0,
-                "added_rows_count": 0,
-                "existing_rows_count": sum(e["data_file"]["record_count"] for e in kept),
-                "deleted_rows_count": 0,
-                "partitions": partition_summaries(kept, spec_fields),
-            }
-        )
+        if row is not None:  # a fully replaced manifest is dropped
+            list_rows.append(row)
 
     # ---- the new ADDED manifest(s): one per spec among rewritten files
     by_spec: dict[int, list[dict]] = {}
     for ne in new_entries:
-        by_spec.setdefault(ne["spec_id"], []).append(ne)
+        by_spec.setdefault(ne["spec_id"], []).append(ne["entry"])
     for spec_id, group in sorted(by_spec.items()):
-        name = f"manifest-rw{snapshot_id}-s{spec_id}.avro"
         if lineage:
-            for g in group:
-                df_ = g["entry"]["data_file"]
+            for entry in group:
+                df_ = entry["data_file"]
                 if df_.get("first_row_id") is None:
                     df_["first_row_id"] = row_counter
                     row_counter += int(df_.get("record_count") or 0)
@@ -497,79 +412,35 @@ def _replace_commit(
                         int(df_["first_row_id"])
                         + int(df_.get("record_count") or 0),
                     )
-        blob = write_container(
-            manifest_entry_schema(
-                group[0]["spec_fields"],
-                f"rwnew{snapshot_id}_{spec_id}",
-                lineage=lineage,
-            ),
-            [g["entry"] for g in group],
-        )
-        with open(os.path.join(meta_dir, name), "wb") as f:
-            f.write(blob)
         list_rows.append(
-            {
-                "manifest_path": f"{loc}/metadata/{name}",
-                "manifest_length": len(blob),
-                "partition_spec_id": spec_id,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(group),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(g["entry"]["data_file"]["record_count"] for g in group),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": partition_summaries(
-                    [g["entry"] for g in group], group[0]["spec_fields"]
-                ),
-            }
+            producer.write_manifest(
+                f"manifest-rw{snapshot_id}-s{spec_id}.avro",
+                group,
+                spec_id=spec_id,
+                content=0,
+                suffix=f"rwnew{snapshot_id}_{spec_id}",
+                lineage=lineage,
+            )
         )
 
-    list_name = f"snap-{snapshot_id}.avro"
-    with open(os.path.join(meta_dir, list_name), "wb") as f:
-        f.write(write_container(MANIFEST_LIST_SCHEMA, list_rows))
-
-    # ---- metadata.json
-    raw["last-sequence-number"] = seq
-    raw["last-updated-ms"] = timestamp_ms
-    if lineage and row_counter != int(raw.get("next-row-id", 0)):
-        raw["next-row-id"] = row_counter
-    raw["current-snapshot-id"] = snapshot_id
-    raw["snapshots"].append(
+    res = producer.commit(
+        list_rows,
         {
-            "sequence-number": seq,
-            "snapshot-id": snapshot_id,
-            "parent-snapshot-id": parent_id,
-            "timestamp-ms": timestamp_ms,
-            "summary": {
-                "operation": "replace",
-                "rewritten-data-files": str(len(targets)),
-                "added-data-files": str(len(new_entries)),
-                **_summary_totals(list_rows),
-                **(extra_summary or {}),
-            },
-            "manifest-list": f"{loc}/metadata/{list_name}",
-            "schema-id": raw.get("current-schema-id", 0),
-        }
+            "operation": "replace",
+            "rewritten-data-files": str(len(targets)),
+            "added-data-files": str(len(new_entries)),
+        },
+        extra_summary=extra_summary,
+        next_row_id=(
+            row_counter
+            if lineage and row_counter != int(raw.get("next-row-id", 0))
+            else None
+        ),
     )
-    raw.setdefault("snapshot-log", []).append(
-        {"timestamp-ms": timestamp_ms, "snapshot-id": snapshot_id}
-    )
-    from .commit import _canonical_metadata_uri
-
-    raw.setdefault("metadata-log", []).append(
-        {"timestamp-ms": timestamp_ms,
-         "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc)}
-    )
-    new_path = install_metadata(next_metadata_path(metadata_path, snapshot_id), raw)
-
     return {
-        "metadata_path": new_path,
+        "metadata_path": res["metadata_path"],
         "snapshot_id": snapshot_id,
-        "sequence_number": seq,
+        "sequence_number": res["sequence_number"],
         "rewritten": sorted(targets),
         "new_files": [ne["entry"]["data_file"]["file_path"] for ne in new_entries],
     }
@@ -647,13 +518,12 @@ def binpack_rewrite(
     (executor-parallel across groups, identical plan shape to
     `_fold_and_write`).
     """
-    base_dir = base_dir or os.path.dirname(metadata_path)
-    meta = parse_metadata(metadata_path)
-    raw = json.loads(json.dumps(meta.raw))
-    loc = raw.get("location")
-    table_root = table_root_of(base_dir)
-    parent_id = raw.get("current-snapshot-id")
-    data, dels = mor_entries_at(meta, parent_id, base_dir)
+    producer = SnapshotProducer(
+        metadata_path, base_dir, snapshot_id=snapshot_id, timestamp_ms=timestamp_ms
+    )
+    meta, loc, table_root = producer.meta, producer.loc, producer.table_root
+    snapshot_id = producer.snapshot_id
+    data, dels = mor_entries_at(meta, producer.parent_id, producer.base_dir)
 
     delete_bearing = set(_plan_rewrite_targets(spark, data, dels)) if dels else set()
     delete_bearing |= _equality_affected(data, dels)
@@ -691,12 +561,6 @@ def binpack_rewrite(
             "nothing to compact (no partition has "
             f"{min_group_files}+ sub-target delete-free files)"
         )
-
-    if snapshot_id is None:
-        snapshot_id = max(s["snapshot-id"] for s in raw["snapshots"]) + 1
-    seq = raw.get("last-sequence-number", 0) + 1
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
 
     # ---- ONE Spark job: scan all packed files, shuffle each row to
     # its group token, one output file per group. The scan projects
@@ -747,11 +611,9 @@ def binpack_rewrite(
         dst = os.path.join(table_root, new_rel)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.replace(parts[0], dst)
-        spec_id = g[0]["spec_id"]
         new_entries.append(
             {
-                "spec_id": spec_id,
-                "spec_fields": _spec_partition_fields(meta, spec_id),
+                "spec_id": g[0]["spec_id"],
                 "entry": {
                     "status": ADDED,
                     "snapshot_id": snapshot_id,
@@ -778,8 +640,7 @@ def binpack_rewrite(
     _shutil.rmtree(tmp, ignore_errors=True)
 
     res = _replace_commit(
-        metadata_path, meta, raw, base_dir, targets, new_entries,
-        snapshot_id, seq, timestamp_ms,
+        producer, targets, new_entries,
         extra_summary={"compacted-groups": str(len(groups))},
     )
     res["groups"] = [sorted(e["rel"] for e in g) for g in groups]

@@ -39,21 +39,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..avro.reader import AvroContainerFile
-from ..avro.writer import write_container
-from .catalog import install_metadata, next_metadata_path, table_root_of
-from .commit import (
-    MANIFEST_LIST_SCHEMA,
-    _spec_partition_fields,
-    manifest_entry_schema,
-    partition_summaries,
-)
-from .commit import _summary_totals  # noqa: E402
+from .commit import ADDED, SnapshotProducer
 from .deletes import EQUALITY_DELETES, POSITION_DELETES, _is_dv, mor_entries_at
-from .metadata import parse_metadata
 from .rewrite_data import _write_single_parquet
-from .snapshots import _local, manifest_files_at, read_manifest_list
-
-ADDED, EXISTING, DELETED = 1, 0, 2
+from .snapshots import manifest_files_at
 
 
 def rewrite_position_deletes(
@@ -67,14 +56,11 @@ def rewrite_position_deletes(
     """Compact all positional-delete files at the current snapshot;
     returns ``{"metadata_path", "snapshot_id", "removed_files",
     "added_files", "rows_before", "rows_after"}``."""
-    base_dir = base_dir or os.path.dirname(metadata_path)
-    meta = parse_metadata(metadata_path)
-    raw = json.loads(json.dumps(meta.raw))
-    loc = raw.get("location")
-    table_root = table_root_of(base_dir)
-    meta_dir = os.path.join(table_root, "metadata")
-
-    parent_id = raw.get("current-snapshot-id")
+    producer = SnapshotProducer(
+        metadata_path, base_dir, snapshot_id=snapshot_id, timestamp_ms=timestamp_ms
+    )
+    meta, loc = producer.meta, producer.loc
+    base_dir, parent_id, snapshot_id = producer.base_dir, producer.parent_id, producer.snapshot_id
     data, dels = mor_entries_at(meta, parent_id, base_dir)
     # v3 deletion vectors never need this compaction: there is at
     # most ONE vector per data file by invariant, and a dangling
@@ -90,12 +76,6 @@ def rewrite_position_deletes(
         )
 
     live_rels = sorted({e["rel"] for e in data})
-
-    if snapshot_id is None:
-        snapshot_id = max(s["snapshot-id"] for s in raw["snapshots"]) + 1
-    seq = raw.get("last-sequence-number", 0) + 1
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
 
     # ---- merge groups: (spec, partition, preserved data seq)
     groups: dict[tuple[int, str, int], list[dict]] = {}
@@ -122,7 +102,7 @@ def rewrite_position_deletes(
             .orderBy("file_path", "pos")
         )
         new_rel = f"data/deletes/pd-rw{snapshot_id}-g{gi}.parquet"
-        out_path = os.path.join(table_root, new_rel)
+        out_path = os.path.join(producer.table_root, new_rel)
         _write_single_parquet(df, out_path)
         import pyarrow.parquet as pq
 
@@ -162,160 +142,52 @@ def rewrite_position_deletes(
     # ---- manifest list: data manifests verbatim; delete manifests
     # rebuilt keeping ONLY equality entries (as EXISTING, explicit
     # seqs); one new delete manifest per spec for the compacted files
-    parent = next(s for s in raw["snapshots"] if s["snapshot-id"] == parent_id)
-    parent_rows = {
-        r["manifest_path"]: r
-        for r in read_manifest_list(_local(parent["manifest-list"], base_dir, loc))
-    }
     list_rows: list[dict] = []
     for mrow in manifest_files_at(meta, parent_id, base_dir):
         if mrow.get("content", 0) == 0:
-            list_rows.append(parent_rows[mrow["manifest_path"]])
+            list_rows.append(mrow)
             continue
         with open(mrow["local_path"], "rb") as f:
             records = list(AvroContainerFile(f.read()))
-        kept = []
-        for rec in records:
-            if rec["status"] == DELETED:
-                continue
-            df_ = rec["data_file"]
-            if df_.get("content") != EQUALITY_DELETES and not (
-                (df_.get("file_format") or "").upper() == "PUFFIN"
-            ):
-                continue  # parquet positional: replaced by the
-                # compacted files; equality AND v3 deletion-vector
-                # entries carry forward (vectors were excluded from
-                # compaction — dropping them here would resurrect
-                # their deleted rows)
-            eseq = rec.get("sequence_number")
-            if eseq is None:
-                eseq = mrow.get("sequence_number", 0)
-            sid = rec.get("snapshot_id")
-            if sid is None:
-                sid = mrow.get("added_snapshot_id")
-            kept.append(
-                {
-                    "status": EXISTING,
-                    "snapshot_id": sid,
-                    "sequence_number": eseq,
-                    "data_file": rec["data_file"],
-                }
-            )
-        if not kept:
-            continue  # all-positional delete manifest: fully replaced
-        spec_id = mrow.get("partition_spec_id", 0)
-        spec_fields = _spec_partition_fields(meta, spec_id)
-        name = os.path.basename(mrow["local_path"]).rsplit(".", 1)[0]
-        new_name = f"{name}-eq{snapshot_id}.avro"
-        blob = write_container(
-            manifest_entry_schema(
-                spec_fields,
-                f"eq{snapshot_id}_{name}",
-                v3=any(
-                    e["data_file"].get("referenced_data_file") is not None
-                    for e in kept
-                ),
-            ),
-            kept,
+        # parquet positional entries are replaced by the compacted
+        # files; equality AND v3 deletion-vector entries carry forward
+        # (vectors were excluded from compaction — dropping them here
+        # would resurrect their deleted rows)
+        row = producer.rebuild_manifest(
+            mrow,
+            records,
+            lambda df_: df_.get("content") == EQUALITY_DELETES
+            or (df_.get("file_format") or "").upper() == "PUFFIN",
+            "eq",
         )
-        with open(os.path.join(meta_dir, new_name), "wb") as f:
-            f.write(blob)
-        list_rows.append(
-            {
-                "manifest_path": f"{loc}/metadata/{new_name}",
-                "manifest_length": len(blob),
-                "partition_spec_id": spec_id,
-                "content": 1,
-                "sequence_number": mrow.get("sequence_number", 0),
-                "min_sequence_number": min(e["sequence_number"] for e in kept),
-                "added_snapshot_id": mrow.get("added_snapshot_id", parent_id),
-                "added_files_count": 0,
-                "existing_files_count": len(kept),
-                "deleted_files_count": 0,
-                "added_rows_count": 0,
-                "existing_rows_count": sum(
-                    e["data_file"]["record_count"] for e in kept
-                ),
-                "deleted_rows_count": 0,
-                "partitions": partition_summaries(kept, spec_fields),
-            }
-        )
+        if row is not None:  # an all-positional manifest is dropped
+            list_rows.append(row)
 
     by_spec: dict[int, list[dict]] = {}
     for ne in new_delete_entries:
-        by_spec.setdefault(ne["spec_id"], []).append(ne)
+        by_spec.setdefault(ne["spec_id"], []).append(ne["entry"])
     for spec_id, group in sorted(by_spec.items()):
-        spec_fields = _spec_partition_fields(meta, spec_id)
-        name = f"manifest-pdrw{snapshot_id}-s{spec_id}.avro"
-        blob = write_container(
-            manifest_entry_schema(spec_fields, f"pdrw{snapshot_id}_{spec_id}"),
-            [g["entry"] for g in group],
-        )
-        with open(os.path.join(meta_dir, name), "wb") as f:
-            f.write(blob)
         list_rows.append(
-            {
-                "manifest_path": f"{loc}/metadata/{name}",
-                "manifest_length": len(blob),
-                "partition_spec_id": spec_id,
-                "content": 1,
-                "sequence_number": seq,
-                "min_sequence_number": min(
-                    g["entry"]["sequence_number"] for g in group
-                ),
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(group),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    g["entry"]["data_file"]["record_count"] for g in group
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": partition_summaries(
-                    [g["entry"] for g in group], spec_fields
-                ),
-            }
+            producer.write_manifest(
+                f"manifest-pdrw{snapshot_id}-s{spec_id}.avro",
+                group,
+                spec_id=spec_id,
+                content=1,
+                suffix=f"pdrw{snapshot_id}_{spec_id}",
+            )
         )
 
-    list_name = f"snap-{snapshot_id}.avro"
-    with open(os.path.join(meta_dir, list_name), "wb") as f:
-        f.write(write_container(MANIFEST_LIST_SCHEMA, list_rows))
-
-    raw["last-sequence-number"] = seq
-    raw["last-updated-ms"] = timestamp_ms
-    raw["current-snapshot-id"] = snapshot_id
-    raw["snapshots"].append(
+    res = producer.commit(
+        list_rows,
         {
-            "sequence-number": seq,
-            "snapshot-id": snapshot_id,
-            "parent-snapshot-id": parent_id,
-            "timestamp-ms": timestamp_ms,
-            "summary": {
-                "operation": "replace",
-                "removed-delete-files": str(len(pos_dels)),
-                "added-delete-files": str(len(new_delete_entries)),
-                "removed-position-delete-rows": str(rows_before - rows_after),
-                **_summary_totals(list_rows),
-            },
-            "manifest-list": f"{loc}/metadata/{list_name}",
-            "schema-id": raw.get("current-schema-id", 0),
-        }
+            "operation": "replace",
+            "removed-delete-files": str(len(pos_dels)),
+            "added-delete-files": str(len(new_delete_entries)),
+            "removed-position-delete-rows": str(rows_before - rows_after),
+        },
     )
-    raw.setdefault("snapshot-log", []).append(
-        {"timestamp-ms": timestamp_ms, "snapshot-id": snapshot_id}
-    )
-    from .commit import _canonical_metadata_uri
-
-    raw.setdefault("metadata-log", []).append(
-        {
-            "timestamp-ms": timestamp_ms,
-            "metadata-file": _canonical_metadata_uri(metadata_path, table_root, loc),
-        }
-    )
-    new_path = install_metadata(next_metadata_path(metadata_path, snapshot_id), raw)
     return {
-        "metadata_path": new_path,
+        "metadata_path": res["metadata_path"],
         "snapshot_id": snapshot_id,
         "removed_files": len(pos_dels),
         "added_files": len(new_delete_entries),

@@ -41,7 +41,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import install_metadata, next_metadata_path, table_root_of
+from .catalog import install_metadata, table_root_of
+from .commit import commit_version
 from .conversions import to_bytes
 from .metadata import parse_metadata
 
@@ -92,10 +93,7 @@ def commit_sort_order(
         {"order-id": order_id, "fields": order_fields}
     )
     raw["default-sort-order-id"] = order_id
-    if timestamp_ms is None:
-        timestamp_ms = raw.get("last-updated-ms", 0) + 1000
-    raw["last-updated-ms"] = timestamp_ms
-    new_path = install_metadata(next_metadata_path(metadata_path), raw)
+    new_path = commit_version(metadata_path, raw, timestamp_ms=timestamp_ms)
     return {"metadata_path": new_path, "order_id": order_id}
 
 
@@ -282,17 +280,13 @@ def sorted_rewrite_prunes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``id ∈ [120, 150]`` — exactly ONE file survives, selected by
     the committed entries' decoded bounds. Golden oracle: the
     after-rewrite decision table. (``sf_dir`` unused.)"""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .commit import _SCRATCH_ROOTS, append_snapshot
+    from .commit import _scratch_dir, append_snapshot
     from .snapshots import plan_scan
 
-    scratch = tempfile.mkdtemp(prefix="sorted_gate_")
-    _SCRATCH_ROOTS.append(scratch)
-    root = os.path.join(scratch, "t")
+    root = os.path.join(_scratch_dir("sorted_gate_"), "t")
     os.makedirs(os.path.join(root, "metadata"))
     os.makedirs(os.path.join(root, "data"))
     meta0 = {

@@ -955,10 +955,10 @@ def dedup_substring_coverage(
     # window count below provably equals the oracle's
     # COUNT(DISTINCT doc_id) even if a doc_id ever appeared under
     # two sources; `source` is functionally dependent on doc_id
-    # (gen_scale_corpus keeps ids disjoint) and rides via first()
-    # (ADVICE r16)
+    # (gen_scale_corpus keeps ids disjoint) and rides via min(), a
+    # deterministic pick should that ever break (ADVICE r16)
     g2 = grams.groupBy("h", "doc_id").agg(
-        F.first("source").alias("source"),
+        F.min("source").alias("source"),
         F.count(F.lit(1)).alias("n"),
     )
     tagged = g2.withColumn(

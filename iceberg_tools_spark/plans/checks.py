@@ -55,16 +55,6 @@ def cartesian_joins(df: DataFrame) -> int:
     return p.count("CartesianProduct") + p.count("BroadcastNestedLoopJoin")
 
 
-def has_whole_stage_codegen(df: DataFrame) -> bool:
-    # formatted mode tags operators with "[codegen id : N]"; simple
-    # mode prefixes codegen stages with "*(". NOTE: under AQE the
-    # markers only appear in the FINAL plan (post-execution) — on an
-    # unexecuted AdaptiveSparkPlan this returns False; prefer
-    # no_python_eval() for pre-execution assertions.
-    p = plan_string(df)
-    return "codegen id" in p or "*(" in plan_string(df, "simple")
-
-
 def no_python_eval(df: DataFrame) -> bool:
     """True when no row/batch ever leaves the JVM: no Python UDF
     evaluation operators anywhere in the plan."""

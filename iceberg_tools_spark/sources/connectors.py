@@ -67,14 +67,6 @@ def read_delta(spark: SparkSession, path: str, version: int | None = None) -> Da
     return r.load(path)
 
 
-def read_csv(
-    spark: SparkSession, path: str, schema: StructType | str, **options: str
-) -> DataFrame:
-    """Schema-pinned CSV scan (no inference job; stable types)."""
-    opts = {"header": "true", **options}
-    return spark.read.options(**opts).schema(schema).csv(path)
-
-
 def read_json(
     spark: SparkSession, path: str, schema: StructType | str, **options: str
 ) -> DataFrame:

@@ -1539,9 +1539,8 @@ def replicate_delta_versions(
 
     import pyarrow.parquet as _pq
 
-    from ..iceberg.commit import append_snapshot
+    from ..iceberg.commit import SnapshotProducer, append_snapshot
     from ..iceberg.deletes import mor_entries_at
-    from ..iceberg.metadata import parse_metadata
     from ..iceberg.rewrite_data import _replace_commit
     from .delta_log import (
         _column_mapping,
@@ -1820,10 +1819,10 @@ def replicate_delta_versions(
             # commit, bumping last-sequence-number by exactly 1
             seq_of_version[v] = len(seq_of_version) + 1
         if removes:
-            imeta = parse_metadata(mp)
-            raw = json.loads(json.dumps(imeta.raw))
-            data, _dels = mor_entries_at(imeta, raw["current-snapshot-id"],
-                                         os.path.dirname(mp))
+            producer = SnapshotProducer(mp, snapshot_id=sid, timestamp_ms=ts)
+            data, _dels = mor_entries_at(
+                producer.meta, producer.parent_id, producer.base_dir
+            )
             by_rel = {e["rel"]: e for e in data}
             targets = {}
             for r in removes:
@@ -1839,14 +1838,13 @@ def replicate_delta_versions(
                 local = os.path.join(target_root, e["path"])
                 new_entries.append({
                     "spec_id": 0,
-                    "spec_fields": _spec_fields_of(imeta),
                     "entry": {
                         "status": 1,
                         "snapshot_id": sid,
                         "sequence_number": None,
                         "data_file": {
                             "content": 0,
-                            "file_path": f"{raw['location']}/{e['path']}",
+                            "file_path": f"{producer.loc}/{e['path']}",
                             "file_format": "PARQUET",
                             "partition": e["partition"],
                             "record_count": _pq.read_metadata(local).num_rows,
@@ -1858,11 +1856,7 @@ def replicate_delta_versions(
                         },
                     },
                 })
-            seq = raw.get("last-sequence-number", 0) + 1
-            res = _replace_commit(
-                mp, imeta, raw, os.path.dirname(mp), targets, new_entries,
-                sid, seq, ts, extra_summary=summary,
-            )
+            res = _replace_commit(producer, targets, new_entries, extra_summary=summary)
             mp = res["metadata_path"]
             n_removed += len(targets)
         elif adds:
@@ -1878,12 +1872,6 @@ def replicate_delta_versions(
         "n_removed_files": n_removed,
         "head_delta_version": head,
     }
-
-
-def _spec_fields_of(meta) -> list[tuple[str, int, str, str]]:
-    from ..iceberg.commit import _spec_partition_fields
-
-    return _spec_partition_fields(meta, meta.raw.get("default-spec-id", 0))
 
 
 def delta_replicate_full_rows(spark: SparkSession, sf_dir: str):

@@ -245,14 +245,12 @@ def cdc_replicate_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read against the source's — golden: 3 replayed commits, 323
     live rows, zero missing, zero extra. (``sf_dir`` unused.)"""
     import os
-    import tempfile
 
-    from ..iceberg.commit import _SCRATCH_ROOTS
+    from ..iceberg.commit import _scratch_dir
     from ..iceberg.deletes import MOR_METADATA, read_mor
     from ..iceberg.metadata import parse_metadata
 
-    scratch = tempfile.mkdtemp(prefix="cdc_replica_")
-    _SCRATCH_ROOTS.append(scratch)
+    scratch = _scratch_dir("cdc_replica_")
     res = replicate_changelog(
         spark,
         MOR_METADATA,

@@ -318,11 +318,11 @@ def test_schema_evolution_add_column(spark, table):
     """Add-column evolution: new schema id, old schemas retained,
     existing data still readable (schema-on-read: the added columns
     simply don't constrain old parquet)."""
-    from iceberg_tools_spark.iceberg.commit import commit_schema_update
+    from iceberg_tools_spark.iceberg.evolution import evolve_schema
     from iceberg_tools_spark.iceberg.metadata import parse_metadata
 
     mp = os.path.join(table, "v2.metadata.json")
-    res = commit_schema_update(mp, [("score", "double"), ("note", "string")])
+    res = evolve_schema(mp, add=[("score", "double"), ("note", "string")])
     meta = parse_metadata(res["metadata_path"])
     names = [f["name"] for f in meta.current_schema["fields"]]
     assert names == ["id", "category", "score", "note"]
@@ -333,9 +333,9 @@ def test_schema_evolution_add_column(spark, table):
     assert read_mor(spark, res["metadata_path"], 2004).count() == 323
 
     with pytest.raises(ValueError, match="already exists"):
-        commit_schema_update(res["metadata_path"], [("id", "long")])
-    with pytest.raises(ValueError, match="no columns"):
-        commit_schema_update(res["metadata_path"], [])
+        evolve_schema(res["metadata_path"], add=[("id", "long")])
+    with pytest.raises(ValueError, match="no changes"):
+        evolve_schema(res["metadata_path"], add=[])
 
 
 def test_refs_tag_and_branch(spark, table):
@@ -805,6 +805,100 @@ def test_metadata_log_unbounded_without_property(tmp_path):
     assert len(raw["metadata-log"]) == before + 3  # default: unbounded
 
 
+# ---- one version step: every table-version writer keeps the history
+
+
+def _stage_append(mp: str, root: str) -> str:
+    """Stage an append on branch ``audit-1`` (main does not move)."""
+    rel = _write_ids(root, "S1", [411])
+    part = {"category": "w", "id_trunc": 400}
+    return append_snapshot(mp, [{"path": rel, "partition": part}], stage_ref="audit-1")[
+        "metadata_path"
+    ]
+
+
+def _age_a_tag(mp: str, root: str) -> str:
+    """Add a tag whose max-ref-age has passed, so expiry drops the ref
+    while every snapshot stays."""
+    import json
+
+    raw = json.load(open(mp))
+    raw["refs"] = {"old-tag": {"snapshot-id": 2002, "type": "tag", "max-ref-age-ms": 1}}
+    open(mp, "w").write(json.dumps(raw))
+    return mp
+
+
+def _writers():
+    from iceberg_tools_spark.iceberg import audits, commit, evolution, sortorder
+    from iceberg_tools_spark.iceberg.rewrite_data import rewrite_data_files
+    from iceberg_tools_spark.iceberg.rewrite_deletes import rewrite_position_deletes
+
+    part = {"category": "w", "id_trunc": 400}
+    return {
+        "append_snapshot": (None, lambda spark, mp, root: append_snapshot(
+            mp, [{"path": _write_ids(root, "V1", [420]), "partition": part}])),
+        "expire_snapshots": (None, lambda spark, mp, root: commit.expire_snapshots(
+            mp, keep_last=1)),
+        "expire_snapshots_refs_only": (_age_a_tag, lambda spark, mp, root: commit.expire_snapshots(
+            mp, keep_last=10, now_ms=1_800_000_000_000)),
+        "set_ref": (None, lambda spark, mp, root: commit.set_ref(mp, "t1", snapshot_id=2002)),
+        "rollback_to": (None, lambda spark, mp, root: commit.rollback_to(mp, 2002)),
+        "publish_snapshot": (_stage_append, lambda spark, mp, root: commit.publish_snapshot(
+            mp, "audit-1")),
+        "abort_staged": (_stage_append, lambda spark, mp, root: audits.abort_staged(
+            mp, "audit-1")),
+        "update_table_properties": (None, lambda spark, mp, root: commit.update_table_properties(
+            mp, set_props={"owner": "tests"})),
+        "rewrite_data_files": (None, lambda spark, mp, root: rewrite_data_files(spark, mp)),
+        "rewrite_position_deletes": (None, lambda spark, mp, root: rewrite_position_deletes(
+            spark, mp)),
+        "commit_sort_order": (None, lambda spark, mp, root: sortorder.commit_sort_order(
+            mp, [("id", "asc")])),
+        "evolve_schema": (None, lambda spark, mp, root: evolution.evolve_schema(
+            mp, add=[("note", "string")])),
+        "evolve_partition_spec": (None, lambda spark, mp, root: evolution.evolve_partition_spec(
+            mp, add=[("id_bucket", "bucket[4]", "id")])),
+    }
+
+
+@pytest.mark.parametrize("writer", sorted(_writers()))
+def test_every_table_version_writer_keeps_the_history(spark, tmp_path, writer):
+    """Each writer's new version logs its base in metadata-log, keeps
+    ``last-updated-ms`` from going backwards, honours
+    ``write.metadata.previous-versions-max`` and moves an existing
+    version hint."""
+    import json
+
+    from iceberg_tools_spark.iceberg.catalog import write_version_hint
+
+    root = str(_scratch_mor(tmp_path))
+    mp = os.path.join(root, "v2.metadata.json")
+    raw = json.load(open(mp))
+    raw["properties"]["write.metadata.previous-versions-max"] = "2"
+    raw["metadata-log"] = [
+        {"timestamp-ms": 1_700_000_000_000 + i, "metadata-file": f"file:///tmp/mor_table/v0-{i}.metadata.json"}
+        for i in range(2)
+    ]
+    open(mp, "w").write(json.dumps(raw))
+    write_version_hint(mp)
+
+    setup, run = _writers()[writer]
+    if setup is not None:
+        mp = setup(mp, root)
+    base = json.load(open(mp))
+    new_path = run(spark, mp, root)["metadata_path"]
+    new = json.load(open(new_path))
+
+    assert new["metadata-log"][-1]["metadata-file"] == (
+        f"file:///tmp/mor_table/{os.path.basename(mp)}"
+    )
+    assert len(new["metadata-log"]) == 2  # capped at previous-versions-max
+    assert new["last-updated-ms"] >= base["last-updated-ms"]
+    assert open(os.path.join(root, "version-hint.text")).read() == (
+        os.path.basename(new_path).split(".")[0].lstrip("v")
+    )
+
+
 def test_create_table_api(spark, tmp_path):
     """create_table → append → evolve spec → read: the public
     CREATE TABLE entry point composes with the whole write path."""
@@ -1030,3 +1124,25 @@ def test_crash_at_any_commit_step_leaves_a_complete_version(spark, point, prior)
             assert names[0].startswith(f".v{prior + 2}.metadata.json.")
             names = names[1:]
         assert names == expected
+
+
+def test_scratch_dirs_removed_at_exit_whoever_makes_the_first(tmp_path):
+    """A scratch directory made before the first scratch table copy is
+    removed at process exit too, and so is the later table copy."""
+    import subprocess
+    import sys
+
+    fixture = tmp_path / "fixture"
+    fixture.mkdir()
+    (fixture / "f.txt").write_text("x")
+    code = (
+        "from iceberg_tools_spark.iceberg import commit\n"
+        "print(commit._scratch_dir('first_'))\n"
+        f"print(commit._scratch_table('second_', {str(fixture)!r}))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    made = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, check=True
+    ).stdout.split()
+    assert len(made) == 2
+    assert not any(os.path.exists(p) for p in made)

@@ -344,11 +344,14 @@ def _write_target(call: ast.Call) -> ast.expr | None:
     return None
 
 
-def _target_kind(expr: ast.expr, assigns: dict[str, list[ast.expr]]) -> str | None:
-    """'metadata' / 'hint' / 'delta' when ``expr`` — followed through
-    the local assignments of the names it uses — builds a
-    ``*.metadata.json``, ``version-hint.text`` or ``_delta_log/*.json``
-    path."""
+def _call_name(call: ast.Call) -> str:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+
+
+def _trace(expr: ast.expr, assigns: dict[str, list[ast.expr]]) -> tuple[list[str], set[str]]:
+    """The string literals in ``expr`` and the names of the functions
+    it calls, following the local assignments of the names it uses."""
     literals: list[str] = []
     calls: set[str] = set()
     todo, seen = [expr], set()
@@ -357,11 +360,19 @@ def _target_kind(expr: ast.expr, assigns: dict[str, list[ast.expr]]) -> str | No
             if isinstance(n, ast.Constant) and isinstance(n.value, str):
                 literals.append(n.value)
             elif isinstance(n, ast.Call):
-                f = n.func
-                calls.add(f.id if isinstance(f, ast.Name) else getattr(f, "attr", ""))
+                calls.add(_call_name(n))
             elif isinstance(n, ast.Name) and n.id not in seen:
                 seen.add(n.id)
                 todo.extend(assigns.get(n.id, ()))
+    return literals, calls
+
+
+def _target_kind(expr: ast.expr, assigns: dict[str, list[ast.expr]]) -> str | None:
+    """'metadata' / 'hint' / 'delta' when ``expr`` — followed through
+    the local assignments of the names it uses — builds a
+    ``*.metadata.json``, ``version-hint.text`` or ``_delta_log/*.json``
+    path."""
+    literals, calls = _trace(expr, assigns)
     text = "\n".join(literals)
     if "metadata.json" in text or any(c.endswith("next_metadata_path") for c in calls):
         return "metadata"
@@ -388,25 +399,32 @@ def _assignments(scope: ast.AST) -> dict[str, list[ast.expr]]:
     return out
 
 
-def _file_writes(tree: ast.Module):
-    """(enclosing function, call, install kind or None) for every
-    file-writing call in a module."""
+def _scoped(tree: ast.Module, want):
+    """(innermost enclosing function, node, assignments in scope) for
+    every node of a module that ``want`` accepts."""
     parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
     module_assigns = _assignments(tree)
-    for call in ast.walk(tree):
-        if not isinstance(call, ast.Call):
+    for node in ast.walk(tree):
+        if not want(node):
             continue
-        target = _write_target(call)
-        if target is None:
-            continue
-        assigns, fn, n = dict(module_assigns), None, call
+        assigns, fn, n = dict(module_assigns), None, node
         while n in parent:
             n = parent[n]
             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 fn = fn or n.name
                 for k, v in _assignments(n).items():
                     assigns[k] = assigns.get(k, []) + v
-        yield fn, call, _target_kind(target, assigns)
+        yield fn, node, assigns
+
+
+def _file_writes(tree: ast.Module):
+    """(enclosing function, call, install kind or None) for every
+    file-writing call in a module."""
+    def is_write(n: ast.AST) -> bool:
+        return isinstance(n, ast.Call) and _write_target(n) is not None
+
+    for fn, call, assigns in _scoped(tree, is_write):
+        yield fn, call, _target_kind(_write_target(call), assigns)
 
 
 def test_metadata_installed_only_through_catalog():
@@ -477,3 +495,70 @@ def e(root):
     kinds = {fn: kind for fn, _call, kind in _file_writes(ast.parse(src))}
     assert kinds == {"a": "metadata", "b": "hint", "c": "delta", "d": "metadata", "e": None}
 
+
+# ---- one version step, one snapshot producer ----------------------
+
+# writers that install the next version themselves: the REST catalog
+# server's commit handler and the view writers keep their own rules
+_OWN_VERSION_RULES = {
+    ("iceberg/rest_catalog.py", "_install_next"),
+    ("iceberg/views.py", "replace_view"),
+    ("iceberg/ivm.py", "refresh_materialized_view"),
+}
+
+
+def _commit_shapes(tree: ast.Module):
+    """('install', fn) for each ``install_metadata`` of a
+    ``next_metadata_path`` target, ('list_row', fn) for each dict
+    literal shaped like a manifest-list row and ('list', fn) for each
+    manifest-list write."""
+    def candidate(n: ast.AST) -> bool:
+        return isinstance(n, ast.Dict) or (
+            isinstance(n, ast.Call) and _call_name(n) in ("install_metadata", "write_container")
+        )
+
+    for fn, node, assigns in _scoped(tree, candidate):
+        if isinstance(node, ast.Dict):
+            if any(isinstance(k, ast.Constant) and k.value == "min_sequence_number" for k in node.keys):
+                yield "list_row", fn
+        elif _call_name(node) == "install_metadata" and node.args:
+            if "next_metadata_path" in _trace(node.args[0], assigns)[1]:
+                yield "install", fn
+        elif _call_name(node) == "write_container" and node.args:
+            if "MANIFEST_LIST_SCHEMA" in {n.id for n in ast.walk(node.args[0]) if isinstance(n, ast.Name)}:
+                yield "list", fn
+
+
+def test_table_versions_pass_through_one_version_step():
+    """A table's next ``vN.metadata.json`` is installed only by
+    ``commit.commit_version``; manifest-list rows are built only by
+    ``SnapshotProducer.write_manifest`` and the list is written only
+    by ``SnapshotProducer.commit``."""
+    found: dict[str, set[tuple[str, str]]] = {"install": set(), "list_row": set(), "list": set()}
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        for kind, fn in _commit_shapes(ast.parse(path.read_text())):
+            found[kind].add((rel, fn))
+    assert found["install"] - _OWN_VERSION_RULES == {("iceberg/commit.py", "commit_version")}
+    assert found["list_row"] == {("iceberg/commit.py", "write_manifest")}
+    assert found["list"] == {("iceberg/commit.py", "commit")}
+
+
+def test_commit_shape_scan_sees_hand_rolled_commits():
+    """The rule's detector flags the hand-rolled shapes it replaced."""
+    src = """
+def a(metadata_path, raw):
+    new_path = install_metadata(next_metadata_path(metadata_path), raw)
+def b(metadata_path, raw):
+    nxt = next_metadata_path(metadata_path)
+    install_metadata(nxt, raw)
+def c(root, meta0):
+    install_metadata(os.path.join(root, "v1.metadata.json"), meta0)
+def d(loc, name, blob, seq):
+    return {"manifest_path": f"{loc}/metadata/{name}", "min_sequence_number": seq}
+def e(f, rows):
+    f.write(write_container(MANIFEST_LIST_SCHEMA, rows))
+"""
+    assert sorted(_commit_shapes(ast.parse(src))) == [
+        ("install", "a"), ("install", "b"), ("list", "e"), ("list_row", "d"),
+    ]

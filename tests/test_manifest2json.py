@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import io
 import json
+import os
 from decimal import Decimal
 
 import pytest
@@ -17,23 +18,31 @@ from iceberg_tools_spark.avro.reader import AvroContainerFile
 from iceberg_tools_spark.iceberg import manifest2json as m2j
 from iceberg_tools_spark.iceberg.conversions import decode_bound, from_bytes
 from iceberg_tools_spark.iceberg.metadata import field_id_types, parse_metadata
+from iceberg_tools_spark.iceberg.tables import FIXTURE_MANIFEST, FIXTURE_METADATA
 
-FIXTURE_AVRO = "/root/reference/src/test/resources/1702989a-f66f-423a-aaf1-a01b9a699685-m0.avro"
-FIXTURE_META = "/root/reference/src/test/resources/v1.metadata.json"
+
+def _fixture(path: str) -> str:
+    """``path`` of a reference fixture; raises when it is absent."""
+    if not os.path.exists(path):
+        raise FileNotFoundError(
+            f"reference fixture {path} is missing: it is one of the "
+            "hililiwei/iceberg-tools test resources (src/test/resources)"
+        )
+    return path
 
 
 # ------------------------------------------------------- avro reader
 
 
 def test_avro_container_header_and_codec():
-    f = AvroContainerFile(open(FIXTURE_AVRO, "rb").read())
+    f = AvroContainerFile(open(_fixture(FIXTURE_MANIFEST), "rb").read())
     assert f.codec == "deflate"
     assert f.schema["name"] == "manifest_entry"
     assert f.meta["format-version"] == b"1"
 
 
 def test_avro_records_decode():
-    f = AvroContainerFile(open(FIXTURE_AVRO, "rb").read())
+    f = AvroContainerFile(open(_fixture(FIXTURE_MANIFEST), "rb").read())
     recs = list(f)
     assert len(recs) == 2
     assert {r["status"] for r in recs} == {1}
@@ -45,7 +54,7 @@ def test_avro_records_decode():
 
 
 def test_avro_reader_schema_projection():
-    f = AvroContainerFile(open(FIXTURE_AVRO, "rb").read())
+    f = AvroContainerFile(open(_fixture(FIXTURE_MANIFEST), "rb").read())
     reader = {
         "type": "record",
         "name": "manifest_entry",
@@ -64,7 +73,7 @@ def test_avro_reader_schema_projection():
 
 def test_metadata_field_map_v1():
     # reference: TestDataFileTools.testReadMetaData expectations
-    meta = parse_metadata(FIXTURE_META)
+    meta = parse_metadata(_fixture(FIXTURE_METADATA))
     fm = field_id_types(meta.raw)
     assert fm[1] == "long"
     assert fm[2] == "string"
@@ -136,7 +145,7 @@ def _run(*args: str, stdin: bytes | None = None) -> tuple[int, str, str]:
 
 
 def test_tojson_bounds_decoded():
-    rc, out, _ = _run(FIXTURE_AVRO, FIXTURE_META)
+    rc, out, _ = _run(_fixture(FIXTURE_MANIFEST), _fixture(FIXTURE_METADATA))
     assert rc == 0
     recs = json.loads(out)
     assert len(recs) == 2
@@ -152,7 +161,7 @@ def test_tojson_bounds_decoded():
 
 
 def test_tojson_output_framing():
-    rc, out, _ = _run(FIXTURE_AVRO, FIXTURE_META)
+    rc, out, _ = _run(_fixture(FIXTURE_MANIFEST), _fixture(FIXTURE_METADATA))
     lines = out.splitlines()
     assert lines[0] == "["
     assert lines[-1] == "]"
@@ -160,16 +169,16 @@ def test_tojson_output_framing():
 
 
 def test_head_variants():
-    rc, out, _ = _run("--head=1", FIXTURE_AVRO, FIXTURE_META)
+    rc, out, _ = _run("--head=1", _fixture(FIXTURE_MANIFEST), _fixture(FIXTURE_METADATA))
     assert rc == 0 and len(json.loads(out)) == 1
-    rc, out, _ = _run("--head", FIXTURE_AVRO, FIXTURE_META)
+    rc, out, _ = _run("--head", _fixture(FIXTURE_MANIFEST), _fixture(FIXTURE_METADATA))
     assert rc == 0 and len(json.loads(out)) == 2  # default 10 > record count
-    rc, _, err = _run("--head=-1", FIXTURE_AVRO, FIXTURE_META)
+    rc, _, err = _run("--head=-1", _fixture(FIXTURE_MANIFEST), _fixture(FIXTURE_METADATA))
     assert rc == 1 and "negative" in err
 
 
 def test_pretty_output_parses_and_is_indented():
-    rc, out, _ = _run("--pretty", FIXTURE_AVRO, FIXTURE_META)
+    rc, out, _ = _run("--pretty", _fixture(FIXTURE_MANIFEST), _fixture(FIXTURE_METADATA))
     assert rc == 0
     recs = json.loads(out)
     assert len(recs) == 2
@@ -177,13 +186,13 @@ def test_pretty_output_parses_and_is_indented():
 
 
 def test_stdin_dash():
-    data = open(FIXTURE_AVRO, "rb").read()
-    rc, out, _ = _run("-", FIXTURE_META, stdin=data)
+    data = open(_fixture(FIXTURE_MANIFEST), "rb").read()
+    rc, out, _ = _run("-", _fixture(FIXTURE_METADATA), stdin=data)
     assert rc == 0 and len(json.loads(out)) == 2
 
 
 def test_wrong_args_prints_help():
-    rc, _, err = _run(FIXTURE_AVRO)
+    rc, _, err = _run(FIXTURE_MANIFEST)
     assert rc == 1 and "manifest2json" in err
 
 
