@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from .deletes import mor_entries_at, mor_frame, read_mor
 from .metadata import parse_metadata
 
@@ -342,7 +343,7 @@ def wap_audit_publish_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("passed", T.BooleanType()),
         ]
     )
-    return spark.createDataFrame(rows, schema).orderBy("stage", "check_idx")
+    return local_frame(spark, rows, schema).orderBy("stage", "check_idx")
 
 
 WAP_AUDIT_SQL = """

@@ -39,6 +39,8 @@ import re
 import uuid
 from typing import Any
 
+from .metadata import parse_metadata
+
 _V_RE = re.compile(r"v(\d+)\.metadata\.json(\.gz)?$")
 
 
@@ -115,13 +117,36 @@ def current_metadata_path(warehouse: str, identifier: str) -> str:
     mdir = os.path.join(table_location(warehouse, identifier), "metadata")
     if not os.path.isdir(mdir):
         raise FileNotFoundError(f"no such table {identifier!r} under {warehouse!r}")
+    current = _current_version_in(mdir)
+    if current is None:
+        raise FileNotFoundError(f"table {identifier!r} has no metadata versions")
+    return current
+
+
+def location_of(table_root: str) -> str:
+    """The ``location`` recorded by a table's current metadata
+    version, for a root in either layout: ``<root>/metadata/vN``
+    (``create_table``, HadoopCatalog), else ``vN.metadata.json``
+    directly in the root."""
+    mdir = os.path.join(table_root, "metadata")
+    current = os.path.isdir(mdir) and _current_version_in(mdir)
+    current = current or _current_version_in(table_root)
+    loc = parse_metadata(current).raw.get("location") if current else None
+    if not loc:
+        raise ValueError(f"no vN.metadata.json with a location under {table_root}")
+    return loc
+
+
+def _current_version_in(mdir: str) -> str | None:
+    """The current ``vN.metadata.json`` in a metadata directory (see
+    :func:`current_metadata_path`), or None when it holds none."""
     versions: dict[int, str] = {}
     for name in os.listdir(mdir):
         m = _V_RE.fullmatch(name)
         if m:
             versions[int(m.group(1))] = os.path.join(mdir, name)
     if not versions:
-        raise FileNotFoundError(f"table {identifier!r} has no metadata versions")
+        return None
     hint_path = os.path.join(mdir, "version-hint.text")
     if os.path.exists(hint_path):
         try:
@@ -187,7 +212,6 @@ def load_table(
     through the snapshot log (mutually exclusive with
     ``snapshot_id``)."""
     from .deletes import read_mor
-    from .metadata import parse_metadata
 
     mpath = current_metadata_path(warehouse, identifier)
     meta = parse_metadata(mpath)

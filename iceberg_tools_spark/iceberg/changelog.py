@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from .deletes import MOR_DIR, MOR_METADATA, apply_deletes, mor_entries_at, mor_frame
 from .metadata import TableMetadata, parse_metadata
 from .snapshots import ancestor_chain
@@ -150,7 +151,7 @@ def changelog_between(
                 *_table_schema(meta).fields,
             ]
         )
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     return reduce(DataFrame.unionByName, frames)
 
 

@@ -42,8 +42,10 @@ import tempfile
 from typing import Any
 
 from ..avro.writer import write_container
+from ..session import local_frame
 from .catalog import (
     install_metadata,
+    location_of,
     next_metadata_path,
     table_root_of,
     write_version_hint,
@@ -1027,16 +1029,7 @@ def write_position_deletes(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    meta_candidates = [
-        f for f in os.listdir(table_root) if f.endswith(".metadata.json")
-    ]
-    loc = None
-    for c in sorted(meta_candidates):
-        loc = json.load(open(os.path.join(table_root, c))).get("location")
-        if loc:
-            break
-    if loc is None:
-        raise ValueError(f"no *.metadata.json with a location under {table_root}")
+    loc = location_of(table_root)
     path = os.path.join(table_root, rel_out)
     os.makedirs(os.path.dirname(path), exist_ok=True)
     deletes = sorted(deletes)  # spec: position deletes sort by (file_path, pos)
@@ -1368,7 +1361,7 @@ def expire_execute_roundtrip(spark, sf_dir):
             T.StructField("n_files_removed", T.LongType()),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 EXPIRE_EXECUTE_SQL = """
@@ -1492,7 +1485,7 @@ def meta_refs(spark, sf_dir):
             T.StructField("snapshot_id", T.LongType()),
         ]
     )
-    return spark.createDataFrame(rows, schema).orderBy("name")
+    return local_frame(spark, rows, schema).orderBy("name")
 
 
 META_REFS_SQL = """
@@ -1597,7 +1590,8 @@ def wap_publish_roundtrip(spark, sf_dir):
             T.StructField("published_snapshot", T.LongType()),
         ]
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(pre_main, via_ref, post_main, pub["snapshot_id"])], schema
     )
 
@@ -1775,7 +1769,8 @@ def wap_cherrypick_roundtrip(spark, sf_dir):
             T.StructField("dup_refused", T.LongType()),
         ]
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(
             ff_refused,
             live,

@@ -42,6 +42,7 @@ from __future__ import annotations
 import os
 from typing import Any
 
+from ..session import local_frame
 from .catalog import CommitConflictError  # re-exported: the rebase API raises it
 from .commit import append_snapshot, commit_delete_snapshot
 from .deletes import EQUALITY_DELETES, mor_entries_at
@@ -362,7 +363,8 @@ def commit_conflict_roundtrip(spark, sf_dir):
             ("eq_delete_conflicting_append", "aborted", True, live_after_rewrite)
         )
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "case_name string, outcome string, retried boolean, live_rows bigint"
     ).orderBy("case_name")
 

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..avro.reader import AvroContainerFile
+from ..session import local_frame
 from .catalog import install_metadata
 from .metadata import TableMetadata, parse_metadata
 from .snapshots import _REPO_ROOT, _local, manifest_files_at
@@ -246,7 +247,8 @@ def mor_frame(spark: SparkSession, data: list[dict[str, Any]]) -> DataFrame:
         .withColumn("_rel", F.regexp_extract(F.col("_metadata.file_path"), _REL_RE, 0))
         .withColumn("_pos", F.col("_metadata.row_index"))
     )
-    seq_df = spark.createDataFrame(
+    seq_df = local_frame(
+        spark,
         [(e["rel"], e["sequence_number"]) for e in data],
         T.StructType([
             T.StructField("seq_rel", T.StringType()),
@@ -284,7 +286,8 @@ def _dv_positions_frame(
     its blob and expands the Roaring bitmap — one task per vector,
     the per-data-file parallelism a real v3 reader has, with the
     driver never holding position lists."""
-    tasks = spark.createDataFrame(
+    tasks = local_frame(
+        spark,
         [
             (
                 e["local_path"],
@@ -540,7 +543,7 @@ def _pv_python(value, ice_type: str):
     """Manifest partition values arrive in the spec's RAW physical
     forms — int days since epoch for dates, long micros for
     timestamps (``_AVRO_OF_TYPE`` in ``commit.py``). Convert to the
-    Python objects ``createDataFrame`` needs for the explicit typed
+    Python objects ``local_frame`` needs for the explicit typed
     schema (ADVICE r14: letting Spark infer BIGINT and then
     ``.cast('date')`` is an AnalysisException — BIGINT→DATE is not a
     legal cast)."""
@@ -638,7 +641,7 @@ def attach_identity_partition_columns(
     schema_ddl = ", ".join(
         ["_part_rel string"] + [f"_pc_{src} {t}" for _, src, t in allcols]
     )
-    part_df = spark.createDataFrame(rows, schema_ddl)
+    part_df = local_frame(spark, rows, schema_ddl)
     df = df.join(
         F.broadcast(part_df), df["_rel"] == part_df["_part_rel"], "left"
     ).drop("_part_rel")
@@ -731,7 +734,7 @@ def meta_delete_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for e in dels
     ]
-    return spark.createDataFrame(rows, DELETE_FILES_SCHEMA).orderBy("file_path")
+    return local_frame(spark, rows, DELETE_FILES_SCHEMA).orderBy("file_path")
 
 
 FILES_MOR_SCHEMA = T.StructType([
@@ -773,7 +776,7 @@ def files_at_snapshot_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for d in data
     ]
-    files = spark.createDataFrame(rows, FILES_MOR_SCHEMA)
+    files = local_frame(spark, rows, FILES_MOR_SCHEMA)
 
     pos_dels = [e for e in dels if e["content"] == POSITION_DELETES]
     frames = [
@@ -947,7 +950,7 @@ def scan_plan_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta = parse_metadata(MOR_METADATA)
     rows = plan_scan_tasks(meta, 2004, MOR_DIR)
     return (
-        spark.createDataFrame(rows, SCAN_TASKS_SCHEMA)
+        local_frame(spark, rows, SCAN_TASKS_SCHEMA)
         .orderBy("data_file", "delete_file")
     )
 
@@ -1181,7 +1184,8 @@ def read_mor_projected(
         spark, meta, [e["local_path"] for e in data], tag=True
     )
     df = _reduce(DataFrame.unionByName, parts)
-    seq_df = spark.createDataFrame(
+    seq_df = local_frame(
+        spark,
         [(e["rel"], e["sequence_number"]) for e in data],
         T.StructType([
             T.StructField("seq_rel", T.StringType()),
@@ -1293,7 +1297,7 @@ def meta_dv_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ok,
             )
         )
-    return spark.createDataFrame(rows, DV_BLOBS_SCHEMA).orderBy("referenced_data_file")
+    return local_frame(spark, rows, DV_BLOBS_SCHEMA).orderBy("referenced_data_file")
 
 
 def mor_live_rows_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1314,7 +1318,7 @@ def scan_plan_tasks_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta = parse_metadata(DV_METADATA)
     rows = plan_scan_tasks(meta, 3003, DV_DIR)
     return (
-        spark.createDataFrame(rows, SCAN_TASKS_SCHEMA)
+        local_frame(spark, rows, SCAN_TASKS_SCHEMA)
         .orderBy("data_file", "delete_file")
     )
 
@@ -1428,7 +1432,7 @@ def position_deletes_df(
             "file_path string, pos long, delete_file string, "
             "delete_kind string, sequence_number long"
         )
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return reduce(DataFrame.unionByName, frames)
 
 
@@ -1482,7 +1486,8 @@ def read_mor_lineage(
         raise ValueError(f"snapshot {snapshot_id} has no live data files")
     df = mor_frame(spark, data)
     surv = apply_deletes(spark, meta, df, dels, mode="survivors")
-    lineage_map = spark.createDataFrame(
+    lineage_map = local_frame(
+        spark,
         [(e["rel"], e.get("first_row_id")) for e in data],
         "_rel string, _first_row_id long",
     )

@@ -34,6 +34,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .catalog import table_root_of
 from .commit import commit_delete_snapshot
 from .deletes import apply_deletes, mor_entries_at, mor_frame
@@ -108,7 +109,7 @@ def delete_where(
         (e["rel"], int(e["spec_id"]), json.dumps(e["partition"], sort_keys=True))
         for e in data
     ]
-    parts = spark.createDataFrame(part_rows, "p_rel string, sid int, pjson string")
+    parts = local_frame(spark, part_rows, "p_rel string, sid int, pjson string")
     staged = (
         victims.join(F.broadcast(parts), victims["_rel"] == parts["p_rel"])
         .select(
@@ -229,7 +230,8 @@ def _stage_dvs(
     # one broadcast row per data FILE: its canonical path, spec,
     # partition, and (if present) the locator of the DV this commit
     # would supersede
-    info = spark.createDataFrame(
+    info = local_frame(
+        spark,
         [
             (
                 e["rel"],
@@ -392,7 +394,7 @@ def update_where(
         (e["rel"], int(e["spec_id"]), json.dumps(e["partition"], sort_keys=True))
         for e in data
     ]
-    parts = spark.createDataFrame(part_rows, "p_rel string, sid int, pjson string")
+    parts = local_frame(spark, part_rows, "p_rel string, sid int, pjson string")
     victims = live.filter(predicate)
     vj = victims.join(F.broadcast(parts), victims["_rel"] == parts["p_rel"])
 
@@ -528,7 +530,7 @@ def merge_into(
         (e["rel"], int(e["spec_id"]), json.dumps(e["partition"], sort_keys=True))
         for e in data
     ]
-    parts = spark.createDataFrame(part_rows, "p_rel string, sid int, pjson string")
+    parts = local_frame(spark, part_rows, "p_rel string, sid int, pjson string")
 
     new_data_files: list[dict[str, Any]] = []
     delete_files: list[dict[str, Any]] = []
@@ -837,7 +839,8 @@ def merge_into_roundtrip(spark, sf_dir):
     from .deletes import MOR_DIR
 
     root = _scratch_table("merge_gate_", MOR_DIR)
-    source = spark.createDataFrame(
+    source = local_frame(
+        spark,
         [(118, "y"), (990, "x")], "id bigint, category string"
     )
     res = merge_into(

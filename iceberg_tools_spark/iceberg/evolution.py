@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from .catalog import install_metadata
 from .commit import commit_version
 from .metadata import TableMetadata, parse_metadata
@@ -322,7 +323,7 @@ def read_table_projected(
     data_entries, _ = mor_entries_at(meta, snapshot_id, base_dir)
     files = [e["local_path"] for e in data_entries if e["content"] == 0]
     if not files:
-        return spark.createDataFrame([], spark_read_schema(meta))
+        return local_frame(spark, [], spark_read_schema(meta))
     from functools import reduce
 
     # one scan group per write-schema generation — this also applies
@@ -367,7 +368,7 @@ def schemas_table(spark: SparkSession, metadata_path: str) -> DataFrame:
         for s in raw.get("schemas", [raw.get("schema", {})])
         for f in s.get("fields", [])
     ]
-    return spark.createDataFrame(rows, SCHEMAS_SCHEMA)
+    return local_frame(spark, rows, SCHEMAS_SCHEMA)
 
 
 # ------------------------------------------------ driver-gate queries
@@ -599,7 +600,7 @@ def read_table_projected_with_mapping(
     files = [e["local_path"] for e in data_entries if e["content"] == 0]
     cur_schema = spark_read_schema(meta)
     if not files:
-        return spark.createDataFrame([], cur_schema)
+        return local_frame(spark, [], cur_schema)
     parts = projected_scan_parts(
         spark, meta, files, name_mapping=name_mapping, tag=False
     )

@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .catalog import table_root_of
 from .metadata import TableMetadata
 
@@ -257,7 +258,7 @@ def referenced_paths_df(
     ).map(lambda p: (os.path.abspath(p),))
     df = spark.createDataFrame(rdd, schema)
     return df.unionByName(
-        spark.createDataFrame([(p,) for p in sorted(small)], schema)
+        local_frame(spark, [(p,) for p in sorted(small)], schema)
     )
 
 
@@ -342,9 +343,9 @@ def distributed_listing(spark, data_root: str, *, fanout_target: int | None = No
         )
         deep = spark.createDataFrame(rdd, LISTING_SCHEMA)
         if rows:
-            return deep.unionByName(spark.createDataFrame(rows, LISTING_SCHEMA))
+            return deep.unionByName(local_frame(spark, rows, LISTING_SCHEMA))
         return deep
-    return spark.createDataFrame(rows, LISTING_SCHEMA)
+    return local_frame(spark, rows, LISTING_SCHEMA)
 
 
 # orphan lists below this size unlink in a driver loop; above it the
@@ -467,7 +468,8 @@ def orphan_delete_roundtrip(spark, sf_dir):
         for dp, _, fns in os.walk(os.path.join(root, "data"))
         for _f in fns
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(res["removed"], survivors, live)],
         "n_removed int, n_files_left int, live_rows long",
     )

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from .catalog import table_root_of
 from .deletes import DATA, EQUALITY_DELETES, POSITION_DELETES, mor_entries_at
 from .metadata import TableMetadata, parse_metadata
@@ -114,7 +115,7 @@ def compute_partition_stats(
                 ts_by_snap.get(esnap),
             )
         )
-    entries = spark.createDataFrame(rows, schema)
+    entries = local_frame(spark, rows, schema)
 
     pcols = [f"p_{n}" for n, _ in ufields]
     is_data = F.col("content") == DATA

@@ -34,6 +34,8 @@ from typing import Any
 
 import re as _re_mod
 
+from ..session import local_frame
+
 _SEP = "\x1f"  # the spec's multipart-namespace separator
 _V_HINT = _re_mod.compile(r"v(\d+)\.metadata\.json")
 
@@ -662,7 +664,7 @@ def rest_catalog_rows(spark, sf_dir: str):
         ("rows_at_2002", int(past)),
         ("tables_listed", int(n_tables)),
     ]
-    return spark.createDataFrame(rows, "measure string, value long").orderBy(
+    return local_frame(spark, rows, "measure string, value long").orderBy(
         F.col("measure")
     )
 

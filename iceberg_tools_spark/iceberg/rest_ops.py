@@ -51,6 +51,7 @@ import shutil
 import uuid
 from typing import Any, Callable
 
+from ..session import local_frame
 from .catalog import install_metadata
 from .concurrency import CommitConflictError, validate_concurrent_commits
 from .rest_catalog import RestCatalogClient
@@ -681,7 +682,7 @@ def rest_commit_roundtrip(spark, sf_dir):
         ("metadata_log_delta", int(log_delta)),
         ("props_ok", props_ok),
     ]
-    return spark.createDataFrame(rows, "measure string, value long").orderBy(
+    return local_frame(spark, rows, "measure string, value long").orderBy(
         "measure"
     )
 

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..avro.reader import AvroContainerFile
+from ..session import local_frame
 from .catalog import install_metadata
 from .commit import ADDED, SnapshotProducer
 from .deletes import (
@@ -100,7 +101,8 @@ def _plan_rewrite_targets(
                 for seq, paths in sorted(by_seq.items())
             ],
         )
-        info = spark.createDataFrame(
+        info = local_frame(
+            spark,
             [(e["rel"], e["sequence_number"]) for e in data],
             "rel string, dseq bigint",
         )
@@ -196,7 +198,8 @@ def _fold_and_write(
         spark, meta, [e["local_path"] for e in entries], tag=True
     )
     df = reduce(DataFrame.unionByName, parts)
-    seq_df = spark.createDataFrame(
+    seq_df = local_frame(
+        spark,
         [(e["rel"], e["sequence_number"]) for e in entries],
         "seq_rel string, _seq bigint",
     )
@@ -210,7 +213,8 @@ def _fold_and_write(
         # spec's reserved columns in the replacement files (rows
         # move, so first_row_id + position can no longer derive
         # them); the lineage read prefers the physical column
-        fr = spark.createDataFrame(
+        fr = local_frame(
+            spark,
             [(e["rel"], e.get("first_row_id")) for e in entries],
             "fr_rel string, _fr bigint",
         )
@@ -232,7 +236,8 @@ def _fold_and_write(
             "_last_updated_sequence_number",
         ]
     tok = {e["rel"]: f"t{i:05d}" for i, e in enumerate(entries)}
-    tok_df = spark.createDataFrame(
+    tok_df = local_frame(
+        spark,
         [(rel, t) for rel, t in tok.items()], "tok_rel string, _tok string"
     )
     tmp = os.path.join(table_root, f"_rw{snapshot_id}-spark-tmp")
@@ -574,8 +579,8 @@ def binpack_rewrite(
     from .evolution import projected_scan_parts
 
     rel_to_group = {e["rel"]: gi for gi, g in enumerate(groups) for e in g}
-    token_df = spark.createDataFrame(
-        [(r, g) for r, g in sorted(rel_to_group.items())], ["_bp_rel", "_bp"]
+    token_df = local_frame(
+        spark, sorted(rel_to_group.items()), "_bp_rel string, _bp long"
     )
     all_entries = [e for g in groups for e in g]
     df = reduce(

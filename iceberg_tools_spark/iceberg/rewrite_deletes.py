@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..avro.reader import AvroContainerFile
+from ..session import local_frame
 from .commit import ADDED, SnapshotProducer
 from .deletes import EQUALITY_DELETES, POSITION_DELETES, _is_dv, mor_entries_at
 from .rewrite_data import _write_single_parquet
@@ -219,7 +220,8 @@ def rewrite_pos_deletes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     live = read_mor(
         spark, r2["metadata_path"], r2["snapshot_id"], base_dir=root
     ).count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 r2["removed_files"],

@@ -43,9 +43,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..avro.reader import AvroContainerFile
+from ..session import local_frame
 from .metadata import TableMetadata, parse_metadata
 from .tables import (
     ENTRIES_SCALAR_SCHEMA,
+    ENTRIES_SCHEMA,
     _scalar_entry_rows,
     history_df,
     snapshots_df,
@@ -175,7 +177,7 @@ def files_at(
     meta = parse_metadata(metadata_path)
     rows = _scalar_entry_rows(manifest_paths_at(meta, snapshot_id, base_dir), meta.raw)
     return (
-        spark.createDataFrame(rows, ENTRIES_SCALAR_SCHEMA)
+        local_frame(spark, rows, ENTRIES_SCALAR_SCHEMA)
         .filter(F.col("status") != 2)
         .drop("status", "status_name")
     )
@@ -215,7 +217,7 @@ def files_added_between(
         )
     # empty increment (from_id == to_id) yields an empty, correctly-
     # typed frame rather than an error
-    return spark.createDataFrame(rows, ENTRIES_SCALAR_SCHEMA).drop(
+    return local_frame(spark, rows, ENTRIES_SCALAR_SCHEMA).drop(
         "status", "status_name"
     )
 
@@ -281,7 +283,7 @@ def meta_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
                     m["deleted_rows_count"],
                 )
             )
-    return spark.createDataFrame(rows, MANIFESTS_SCHEMA).orderBy(
+    return local_frame(spark, rows, MANIFESTS_SCHEMA).orderBy(
         "snapshot_id", "manifest_name"
     )
 
@@ -291,8 +293,8 @@ def _snapshot_entry_rows(meta: TableMetadata, base_dir: str) -> list[tuple]:
     manifest Avro parsed exactly once however many snapshot lists
     reference it (m1 appears in 3 of the fixture's 4 lists; the
     naive per-snapshot loop parsed it 3× and built one DataFrame per
-    snapshot — this is one parse per manifest, ONE createDataFrame
-    for the caller)."""
+    snapshot — this is one parse per manifest, ONE frame for the
+    caller)."""
     cache: dict[str, list[tuple]] = {}
     rows = []
     for s in meta.snapshots:
@@ -316,7 +318,7 @@ def meta_entry_status_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta = parse_metadata(MS_METADATA)
     rows = _snapshot_entry_rows(meta, MS_DIR)
     return (
-        spark.createDataFrame(rows, _SNAP_ENTRIES_SCHEMA)
+        local_frame(spark, rows, _SNAP_ENTRIES_SCHEMA)
         .select(F.col("view_snapshot_id").alias("snapshot_id"), "status_name", "record_count")
         .groupBy("snapshot_id", "status_name")
         .agg(
@@ -337,7 +339,7 @@ def meta_all_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta = parse_metadata(MS_METADATA)
     rows = _snapshot_entry_rows(meta, MS_DIR)
     return (
-        spark.createDataFrame(rows, _SNAP_ENTRIES_SCHEMA)
+        local_frame(spark, rows, _SNAP_ENTRIES_SCHEMA)
         .filter(F.col("status") != 2)
         .groupBy("file_path", "partition_json", "record_count")
         .agg(
@@ -382,7 +384,7 @@ def audit_snapshot_summaries(
     which is why real Iceberg audits them in its own test suite.
 
     Driver-side KB metadata work, like all of this module: one
-    manifest parse per file (cached), one createDataFrame."""
+    manifest parse per file (cached), one frame."""
     meta = parse_metadata(metadata_path)
     claimed = {
         s["snapshot-id"]: s.get("summary", {}) for s in meta.snapshots
@@ -464,7 +466,7 @@ def audit_snapshot_summaries(
             T.StructField("consistent", T.BooleanType()),
         ]
     )
-    return spark.createDataFrame(rows, schema).orderBy("snapshot_id")
+    return local_frame(spark, rows, schema).orderBy("snapshot_id")
 
 
 def snapshot_summary_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -531,7 +533,7 @@ def meta_all_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     return (
-        spark.createDataFrame(rows, schema)
+        local_frame(spark, rows, schema)
         .groupBy(
             "manifest_name", "added_snapshot_id", "sequence_number",
             "added_files_count", "existing_files_count",
@@ -570,7 +572,7 @@ def files_at_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta = parse_metadata(MS_METADATA)
     rows = _snapshot_entry_rows(meta, MS_DIR)
     return (
-        spark.createDataFrame(rows, _SNAP_ENTRIES_SCHEMA)
+        local_frame(spark, rows, _SNAP_ENTRIES_SCHEMA)
         .filter(F.col("status") != 2)
         .select(
             F.col("view_snapshot_id").alias("snapshot_id"),
@@ -809,6 +811,26 @@ def _project_source_pred(
     return out
 
 
+def tagged_entries_schema(geo_fids: list[int]) -> T.StructType:
+    """:func:`plan_scan`'s row schema: the manifest name, its spec id
+    and level-1 decision, the entry (``ENTRIES_SCHEMA``), then per
+    geo field the decoded bbox-corner sort keys (see
+    ``_geo_bound_keys`` — decoded where the row is born)."""
+    return T.StructType(
+        [
+            T.StructField("manifest_name", T.StringType()),
+            T.StructField("spec_id", T.IntegerType()),
+            T.StructField("manifest_pruned", T.BooleanType()),
+            *ENTRIES_SCHEMA.fields,
+            *[
+                T.StructField(f"_geo{fid}_{corner}", T.LongType())
+                for fid in geo_fids
+                for corner in ("lox", "loy", "hix", "hiy")
+            ],
+        ]
+    )
+
+
 def plan_scan(
     spark: SparkSession,
     metadata_path: str,
@@ -853,7 +875,6 @@ def plan_scan(
     shape Spark's own Iceberg source uses for scan planning.
     """
     from .pruning import bound_value
-    from .tables import ENTRIES_SCHEMA
 
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
@@ -869,26 +890,12 @@ def plan_scan(
         )
     derived = _project_source_pred(meta, source_pred) if source_pred else {}
 
-    # ONE createDataFrame over driver-tagged rows (manifest name,
-    # its spec id + level-1 decision prepended to each entry) — no
-    # per-manifest frame, no N-deep union chain; at thousands of
-    # manifests the plan stays a single scan
+    # ONE frame over driver-tagged rows (manifest name, its spec id
+    # + level-1 decision prepended to each entry) — no per-manifest
+    # frame, no N-deep union chain; at thousands of manifests the
+    # plan stays a single scan
     geo_fids = sorted(geo_bbox) if geo_bbox else []
-    tagged_schema = T.StructType(
-        [
-            T.StructField("manifest_name", T.StringType()),
-            T.StructField("spec_id", T.IntegerType()),
-            T.StructField("manifest_pruned", T.BooleanType()),
-            *ENTRIES_SCHEMA.fields,
-            # per geo field: decoded bbox-corner sort keys (see
-            # _geo_bound_keys — decoded where the row is born)
-            *[
-                T.StructField(f"_geo{fid}_{corner}", T.LongType())
-                for fid in geo_fids
-                for corner in ("lox", "loy", "hix", "hiy")
-            ],
-        ]
-    )
+    tagged_schema = tagged_entries_schema(geo_fids)
     from .manifest_io import PARALLEL_THRESHOLD, map_manifests
     from .tables import field_id_types
 
@@ -912,7 +919,7 @@ def plan_scan(
             ({**fid_ctx, "tag": (mname, spec_id, m_pruned)}, mrow["local_path"])
         )
     if not tasks:
-        return spark.createDataFrame([], SCAN_PLAN_SCHEMA)
+        return local_frame(spark, [], SCAN_PLAN_SCHEMA)
     if len(tasks) >= PARALLEL_THRESHOLD:
         # level 2 distributed end to end: surviving manifests parse
         # in executors and the decision table is born as a DataFrame
@@ -922,8 +929,8 @@ def plan_scan(
     else:
         rows = map_manifests(None, tasks, _tagged_live_entries_worker)
         if not rows:
-            return spark.createDataFrame([], SCAN_PLAN_SCHEMA)
-        entries = spark.createDataFrame(rows, tagged_schema)
+            return local_frame(spark, [], SCAN_PLAN_SCHEMA)
+        entries = local_frame(spark, rows, tagged_schema)
 
     def _json_scalar(v: Any) -> str:
         # get_json_object renders strings UNQUOTED and booleans as
@@ -1045,7 +1052,7 @@ def meta_rewritten_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats = rewrite_manifests(groups, out_dir)
         rows = _scalar_entry_rows([s["out_path"] for s in stats], meta.raw)
     return (
-        spark.createDataFrame(rows, ENTRIES_SCALAR_SCHEMA)
+        local_frame(spark, rows, ENTRIES_SCALAR_SCHEMA)
         .select(
             "file_path",
             "status_name",
@@ -1081,7 +1088,7 @@ def expire_snapshots_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         (p["snapshot_id"], p["timestamp_ms"], p["action"], p["reason"])
         for p in plan_expire_snapshots(meta, keep_last=2)
     ]
-    return spark.createDataFrame(rows, EXPIRE_PLAN_SCHEMA).orderBy("timestamp_ms")
+    return local_frame(spark, rows, EXPIRE_PLAN_SCHEMA).orderBy("timestamp_ms")
 
 
 def compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1114,7 +1121,8 @@ def orphan_files_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     abandoned branch), and the stray are orphans; A/C/D are not."""
     from .maintenance import find_orphan_files
 
-    listing = spark.createDataFrame(
+    listing = local_frame(
+        spark,
         [
             (f"{_P}/category=x/A.parquet",),
             (f"{_P}/category=y/B.parquet",),
@@ -1394,7 +1402,8 @@ def geo_scan_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         (qname, len(sorted(sel)), ",".join(sorted(sel)))
         for qname, sel in by_q.items()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "query string, n_selected long, selected string"
     ).orderBy("query")
 

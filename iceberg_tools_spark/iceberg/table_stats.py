@@ -37,6 +37,7 @@ from typing import Any, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .catalog import table_root_of
 from .metadata import parse_metadata
 from .theta import (
@@ -412,7 +413,8 @@ def partition_column_sketches(
 
     df = mor_frame(spark, data)
     surv = apply_deletes(spark, meta, df, dels, mode="survivors")
-    pj_df = spark.createDataFrame(
+    pj_df = local_frame(
+        spark,
         [(e["rel"], pj_of[e["rel"]]) for e in data], "pj_rel string, _pj string"
     )
     tagged = surv.join(
@@ -743,7 +745,8 @@ def read_table_stats(
                 props.get("partition"),  # null on table-level blobs
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "col_name string, field_id int, blob_type string, ndv long, "
         "payload_agrees boolean, partition_json string",

@@ -8,8 +8,14 @@ live files, partition summaries — as queryable DataFrames (the
 Iceberg connector, rebuilt from the raw metadata files).
 
 Scale note: manifest/metadata files are KB–MB; they are parsed
-driver-side with the pure-Python reader and handed to Spark via
-``createDataFrame`` with explicit schemas. The DATA files they
+driver-side with the pure-Python reader and handed to Spark through
+``session.local_frame`` with explicit schemas: one Arrow table that
+becomes a ``LocalRelation``, so selecting, filtering and collecting a
+metadata table runs no Spark job and no Python worker (a pickled
+``createDataFrame(list)`` cost one Python-worker job per action,
+about 0.4 s each on a 4-core VM). Above
+``manifest_io.PARALLEL_THRESHOLD`` manifests the entries are parsed
+on executors and stay an RDD. The DATA files they
 describe are what a cluster reads in parallel — planning metadata
 through the driver is exactly what query engines do.
 """
@@ -24,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..avro.reader import AvroContainerFile
+from ..session import local_frame
 from .conversions import decode_bound
 from .metadata import TableMetadata, field_id_types, parse_metadata
 
@@ -89,7 +96,7 @@ def snapshots_df(spark: SparkSession, meta: TableMetadata) -> DataFrame:
         )
         for s in meta.snapshots
     ]
-    return spark.createDataFrame(rows, SNAPSHOTS_SCHEMA)
+    return local_frame(spark, rows, SNAPSHOTS_SCHEMA)
 
 
 def history_df(spark: SparkSession, meta: TableMetadata) -> DataFrame:
@@ -103,7 +110,7 @@ def history_df(spark: SparkSession, meta: TableMetadata) -> DataFrame:
         (_ts(e.get("timestamp-ms")), e.get("snapshot-id"), e.get("snapshot-id") in ancestors)
         for e in meta.snapshot_log
     ]
-    return spark.createDataFrame(rows, HISTORY_SCHEMA)
+    return local_frame(spark, rows, HISTORY_SCHEMA)
 
 
 def _kv_map(arr: Any) -> dict[int, int] | None:
@@ -184,7 +191,8 @@ def manifest_entries_df(
     if len(tasks) >= PARALLEL_THRESHOLD:
         rdd = map_manifests(spark, tasks, _entries_worker, collect=False)
         return spark.createDataFrame(rdd, ENTRIES_SCHEMA)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         manifest_entries_rows(manifest_paths, meta_raw), ENTRIES_SCHEMA
     )
 
@@ -287,7 +295,7 @@ def _scalar_entry_rows(manifest_paths: list[str], meta_raw: dict[str, Any]) -> l
 def meta_manifest_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta = parse_metadata(FIXTURE_METADATA)
     rows = _scalar_entry_rows([FIXTURE_MANIFEST], meta.raw)
-    return spark.createDataFrame(rows, ENTRIES_SCALAR_SCHEMA).orderBy("file_path")
+    return local_frame(spark, rows, ENTRIES_SCALAR_SCHEMA).orderBy("file_path")
 
 
 def meta_files(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,7 +357,7 @@ def meta_typed_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta = parse_metadata(TYPED_BOUNDS_METADATA)
     rows = _scalar_entry_rows([TYPED_BOUNDS_MANIFEST], meta.raw)
     return (
-        spark.createDataFrame(rows, ENTRIES_SCALAR_SCHEMA)
+        local_frame(spark, rows, ENTRIES_SCALAR_SCHEMA)
         .select(
             "file_path",
             "partition_json",
@@ -548,7 +556,7 @@ def metadata_log_df(
          raw.get("current-snapshot-id"), raw.get("current-schema-id", 0),
          raw.get("last-sequence-number", 0), True)
     )
-    return spark.createDataFrame(rows, METADATA_LOG_SCHEMA)
+    return local_frame(spark, rows, METADATA_LOG_SCHEMA)
 
 
 def meta_metadata_log(spark: SparkSession, sf_dir: str) -> DataFrame:

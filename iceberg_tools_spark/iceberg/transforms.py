@@ -36,6 +36,8 @@ from typing import Any
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "murmur3_32",
     "bucket_hash",
@@ -347,7 +349,8 @@ def merge_transform_partitions(spark, sf_dir):
     root = _scratch_table("transform_merge_", _TRANS_DIR)
     mp = os.path.join(root, "v3.metadata.json")
     ts = dt.datetime(2024, 1, 17, 9, 0, 0)
-    source = spark.createDataFrame(
+    source = local_frame(
+        spark,
         [(i, ts, f"n{i}") for i in (8, 15, 21, 26)],
         "id long, ts timestamp_ntz, payload string",
     )

@@ -33,6 +33,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
 from .catalog import install_metadata, next_metadata_path, write_version_hint
 
 _TS0 = 1700000000000
@@ -285,7 +286,8 @@ def rest_view_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("v2_items_total", int(v2_items)),
         ("v2_rows", int(v2_rows)),
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "measure string, value long"
     ).orderBy("measure")
 

@@ -49,6 +49,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from ..iceberg.catalog import install_metadata
+from ..session import local_frame
 
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CHECKPOINT_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
@@ -427,7 +428,7 @@ def _apply_delta_dvs(
     ]
     if not rows:
         return df
-    victims = spark.createDataFrame(rows, "dv_path string, dv_pos long")
+    victims = local_frame(spark, rows, "dv_path string, dv_pos long")
     tagged = df.withColumn("_dv_path", _scan_path_col()).withColumn(
         "_dv_pos", F.col("_metadata.row_index")
     )
@@ -730,7 +731,8 @@ def read_delta_log(
                     f"partition_filter {partition_filter} and the log "
                     f"carries no schemaString to shape an empty result"
                 ) from None
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 [], _strip_mapping_metadata(logical)
             )
     paths = [os.path.join(table_root, a["path"]) for a in adds]
@@ -802,7 +804,7 @@ def read_delta_log(
             [T.StructField("_pv_path", T.StringType())]
             + [T.StructField(f"_pv_{c}", T.StringType()) for c in part_cols]
         )
-        pv = spark.createDataFrame(pv_rows, pv_schema)
+        pv = local_frame(spark, pv_rows, pv_schema)
         df = df.withColumn("_pv_scan", _scan_path_col())
         df = df.join(
             F.broadcast(pv), df["_pv_scan"] == pv["_pv_path"], "left"
@@ -895,7 +897,8 @@ def _attach_row_tracking(spark, df, table_root: str, adds, meta):
         )
         for a in adds
     ]
-    rt = spark.createDataFrame(
+    rt = local_frame(
+        spark,
         rows,
         T.StructType([
             T.StructField("_rt_path", T.StringType()),
@@ -1605,17 +1608,18 @@ def vacuum_delta(
                     cp_rows, "kind string, owner string, file_path string"
                 )
         if cp_df is not None and touched:
-            touched_df = spark.createDataFrame(
+            touched_df = local_frame(
+                spark,
                 [(p,) for p in sorted(touched)], "owner string"
             )
             cp_df = cp_df.join(touched_df, "owner", "left_anti")
 
-    # driver_rows is COMPLETE only here: createDataFrame serializes
-    # the list eagerly, so building ref_df before the v2 JSON-top
+    # driver_rows is COMPLETE only here: local_frame converts the
+    # list eagerly, so building ref_df before the v2 JSON-top
     # harvest above silently dropped inline file actions from the
     # protected set (ADVICE r13 high — data loss on foreign v2
     # checkpoints with a JSON top carrying inline add/remove).
-    ref_df = spark.createDataFrame(driver_rows, "kind string, file_path string")
+    ref_df = local_frame(spark, driver_rows, "kind string, file_path string")
     if cp_df is not None:
         ref_df = ref_df.unionByName(cp_df.drop("owner"))
 
@@ -1642,7 +1646,8 @@ def vacuum_delta(
         # the r13 rework before this branch existed)
         n_live = len({p for k, p in driver_rows if k in ("live", "live_dv")})
         n_tomb_protected = len({p for k, p in driver_rows if k == "tomb"})
-        ref_side = spark.createDataFrame(
+        ref_side = local_frame(
+            spark,
             [(p,) for p in sorted({p for _k, p in driver_rows})],
             "file_path string",
         )
@@ -3218,7 +3223,8 @@ def read_delta_cdf(
         else:
             reader = spark.read.option("mergeSchema", "true")
         df = reader.parquet(*sorted({p for p, _ in cdc_files}))
-        vmap = spark.createDataFrame(
+        vmap = local_frame(
+            spark,
             [(_strip_scheme(p), v) for p, v in cdc_files],
             "_cdc_path string, _commit_version long",
         )
@@ -3253,7 +3259,8 @@ def read_delta_cdf(
             ]
             + [T.StructField(f"_pv_{c}", T.StringType()) for c in part_cols]
         )
-        acts = spark.createDataFrame(
+        acts = local_frame(
+            spark,
             [
                 tuple(
                     [_strip_scheme(r["path"]), r["idx"], r["version"], r["change"]]
@@ -3283,7 +3290,8 @@ def read_delta_cdf(
                 out = out.withColumn(c, F.col(f"_pv_{c}"))
         out = out.drop(*[f"_pv_{c}" for c in part_cols])
         if dv_victims:
-            victims = spark.createDataFrame(
+            victims = local_frame(
+                spark,
                 dv_victims, "dv_idx long, dv_pos long"
             )
             out = out.join(
@@ -3491,7 +3499,8 @@ def domain_checkpoint_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_data = read_delta_log(spark, root).count()
         rows.append((form, n_live, configs_ok, removed_gone, int(n_data)))
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "form string, domains_live long, configs_ok long, "
         "removed_gone long, data_rows long",
@@ -3678,7 +3687,8 @@ def delta_ict_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("v_at_head", int(version_at_timestamp(root, t1 + 1))),
         ("v_at_pre_enable", int(version_at_timestamp(root, t1 - 1))),
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "measure string, value long"
     ).orderBy("measure")
 

@@ -32,6 +32,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from ..iceberg.catalog import install_metadata
+from ..session import local_frame
 from .delta_log import read_delta_log, replay_log
 
 _DELTA_TO_ICEBERG_TYPE = {
@@ -697,7 +698,8 @@ def _dv_blobs_bulk(
     pf = _pos_delete_frame(spark, applicable)
     if pf is None:
         return {}
-    gate = spark.createDataFrame(
+    gate = local_frame(
+        spark,
         [(e["rel"], e["sequence_number"]) for e, _s in cands],
         "g_rel string, g_seq long",
     )

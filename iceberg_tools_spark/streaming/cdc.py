@@ -33,6 +33,7 @@ from ..iceberg.catalog import install_metadata
 from ..iceberg.changelog import changelog_between
 from ..iceberg.metadata import parse_metadata
 from ..iceberg.snapshots import ancestor_chain
+from ..session import local_frame
 
 _GATE_SEQ = itertools.count()
 
@@ -111,7 +112,7 @@ def changelog_stream_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = out.collect()  # materialize BEFORE the memory sink's
         # temp view drops (same containment as the incremental
         # stream gate; the changelog is bounded by design)
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
         spark.catalog.dropTempView(name)
@@ -266,7 +267,8 @@ def cdc_replicate_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     source = read_mor(spark, MOR_METADATA, 2004).select("id", "category")
     missing = source.exceptAll(replica).count()
     extra = replica.exceptAll(source).count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(res["n_batches"], replica.count(), missing, extra)],
         "n_batches int, replica_rows long, missing long, extra long",
     )

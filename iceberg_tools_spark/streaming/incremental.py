@@ -40,6 +40,7 @@ from ..iceberg.snapshots import (
     ancestor_chain,
     manifest_paths_at,
 )
+from ..session import local_frame
 
 # _scalar_entry_rows tuple layout (ENTRIES_SCALAR_SCHEMA):
 _STATUS, _SNAPSHOT_ID, _FILE_PATH = 0, 2, 3
@@ -158,7 +159,7 @@ def incremental_stream_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         got = run_to_memory(stream, name)
         out = got.orderBy("id").select("id", "category")
         rows = out.collect()  # materialize, then release the sink
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
         # drop the memory-sink temp view: repeated gate calls (bench

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from ..iceberg.catalog import table_root_of
 from ..iceberg.concurrency import commit_append_concurrent
 from ..iceberg.metadata import parse_metadata
+from ..session import local_frame
 
 STREAM_QUERY_PROP = "streaming-query"
 STREAM_BATCH_PROP = "streaming-batch-id"
@@ -274,7 +275,7 @@ def stream_ingest_roundtrip(spark, sf_dir):
         mp, query_name="gate", partition_cols=("category",), spec_id=0
     )
     replay = committer(
-        spark.createDataFrame([(999, "s")], "id long, category string"), 0
+        local_frame(spark, [(999, "s")], "id long, category string"), 0
     )
     assert replay is None, "replayed batch must be skipped"
 
@@ -299,7 +300,7 @@ def stream_ingest_roundtrip(spark, sf_dir):
         T.StructField("added_records", T.LongType()),
         T.StructField("final_live_rows", T.LongType()),
     ])
-    return spark.createDataFrame(sorted(rows), schema)
+    return local_frame(spark, sorted(rows), schema)
 
 
 STREAM_INGEST_SQL = """

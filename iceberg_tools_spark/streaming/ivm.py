@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..iceberg.deletes import MOR_DIR, MOR_METADATA, read_mor
 from ..iceberg.ivm import IVM_SQL, grouped_agg, maintain_grouped_agg
+from ..session import local_frame
 from .cdc import changelog_stream
 
 STREAM_IVM_SQL = IVM_SQL  # same head-state recompute oracle
@@ -113,4 +114,4 @@ def stream_ivm_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize before the temp dir can go away with the session
     rows = out.collect()
     shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 EVENTS_RAW_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -230,7 +232,7 @@ def stream_join_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = out.collect()  # materialize, then release the sink
     spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 STREAM_JOIN_SQL = """

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.image_dedup import image_dhash_df, make_image_corpus
+from ..session import local_frame
 
 MEDIA_COLS = "item_id long, group_id long, variant string, payload binary"
 
@@ -98,7 +99,8 @@ def media_stream_dedup_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = media_intake_survivors(spark.read.parquet(staging))
     stream_set = {(r.dhash, r.item_id) for r in out.collect()}
     batch_set = {(r.dhash, r.item_id) for r in batch.collect()}
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(
             len(stream_set),
             1 if stream_set == batch_set else 0,

@@ -201,6 +201,39 @@ def test_delete_commit_round_trip(spark, table):
     assert 450 in got3 and 451 in got3 and len(got3) == 330
 
 
+def test_position_deletes_on_created_table(spark, tmp_path):
+    """``write_position_deletes`` resolves the table location from the
+    current ``metadata/vN.metadata.json`` of a ``create_table`` table
+    (past v9, where name order and version order part ways) and the
+    committed delete removes exactly its rows."""
+    from iceberg_tools_spark.iceberg.commit import (
+        commit_delete_snapshot,
+        create_table,
+        write_position_deletes,
+    )
+
+    root = str(tmp_path / "t")
+    mp = create_table(root, [("id", "long")], location="file:///warehouse/t")
+    for i in range(10):
+        rel = f"data/f{i}.parquet"
+        pq.write_table(
+            pa.table({"id": pa.array(range(10 * i, 10 * i + 10), pa.int64())}),
+            os.path.join(root, rel),
+        )
+        mp = append_snapshot(mp, [{"path": rel, "partition": {}}])["metadata_path"]
+    assert os.path.basename(mp) == "v11.metadata.json"
+    rel = write_position_deletes(
+        root, "data/deletes/pd.parquet", [("data/f3.parquet", 4), ("data/f3.parquet", 0)]
+    )
+    stored = pq.read_table(os.path.join(root, rel)).to_pylist()
+    assert stored == [
+        {"file_path": "file:///warehouse/t/data/f3.parquet", "pos": p} for p in (0, 4)
+    ]
+    res = commit_delete_snapshot(mp, [{"path": rel, "partition": {}, "content": 1}])
+    got = read_mor(spark, res["metadata_path"], res["snapshot_id"]).collect()
+    assert sorted(r.id for r in got) == [i for i in range(100) if i not in (30, 34)]
+
+
 def test_delete_commit_validation(table):
     from iceberg_tools_spark.iceberg.commit import commit_delete_snapshot
 

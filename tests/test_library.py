@@ -562,3 +562,92 @@ def e(f, rows):
     assert sorted(_commit_shapes(ast.parse(src))) == [
         ("install", "a"), ("install", "b"), ("list", "e"), ("list_row", "d"),
     ]
+
+
+# ---- driver rows reach Spark through local_frame ------------------
+
+# (module, function) → why it still hands a driver list to
+# ``createDataFrame``; none today
+_PICKLED_ROW_FRAMES: dict[tuple[str, str], str] = {}
+
+
+def _rdd_built(expr: ast.expr, assigns: dict[str, list[ast.expr]]) -> bool:
+    """True when ``expr`` — followed through the local assignments of
+    the names it uses — is an RDD: a ``parallelize``/``emptyRDD``, a
+    ``map_manifests(..., collect=False)`` or a frame's ``.rdd``."""
+    todo, seen = [expr], set()
+    while todo:
+        for n in ast.walk(todo.pop()):
+            if isinstance(n, ast.Call) and (
+                _call_name(n) in ("parallelize", "emptyRDD")
+                or _call_name(n) == "map_manifests" and any(
+                    k.arg == "collect" and isinstance(k.value, ast.Constant)
+                    and k.value.value is False
+                    for k in n.keywords
+                )
+            ):
+                return True
+            if isinstance(n, ast.Attribute) and n.attr == "rdd":
+                return True
+            if isinstance(n, ast.Name) and n.id not in seen:
+                seen.add(n.id)
+                todo.extend(assigns.get(n.id, ()))
+    return False
+
+
+def _pickled_row_frames(tree: ast.Module):
+    """(enclosing function, call) for every ``createDataFrame`` whose
+    data is not an RDD."""
+    def is_create(n: ast.AST) -> bool:
+        return isinstance(n, ast.Call) and _call_name(n) == "createDataFrame"
+
+    for fn, call, assigns in _scoped(tree, is_create):
+        data = call.args[0] if call.args else next(
+            (k.value for k in call.keywords if k.arg == "data"), None
+        )
+        if data is None or not _rdd_built(data, assigns):
+            yield fn, call
+
+
+def test_driver_rows_reach_spark_through_local_frame():
+    """Under ``iceberg/``, ``streaming/`` and ``sources/`` a frame over
+    rows built on the driver comes from ``session.local_frame`` (one
+    Arrow ``LocalRelation``); ``createDataFrame`` only wraps RDDs."""
+    offenders, seen = [], set()
+    for sub in ("iceberg", "streaming", "sources"):
+        for path in sorted((_PKG / sub).rglob("*.py")):
+            rel = path.relative_to(_PKG).as_posix()
+            for fn, call in _pickled_row_frames(ast.parse(path.read_text())):
+                seen.add((rel, fn))
+                if (rel, fn) not in _PICKLED_ROW_FRAMES:
+                    offenders.append(f"{rel}:{call.lineno} {fn}()")
+    assert offenders == [], "\n".join(offenders)
+    assert set(_PICKLED_ROW_FRAMES) <= seen, "stale allow-list entries"
+
+
+def test_pickled_row_scan_sees_each_driver_list_shape():
+    """The rule's detector flags driver lists however they are spelled
+    and passes RDDs."""
+    src = """
+def a(spark, meta):
+    rows = [(s["snapshot-id"],) for s in meta]
+    return spark.createDataFrame(rows, "id long")
+def b(spark):
+    return spark.createDataFrame([], SCHEMA)
+def c(spark, tasks):
+    rows = map_manifests(None, tasks, worker)
+    return spark.createDataFrame(rows, SCHEMA)
+def d(spark, rows):
+    return spark.createDataFrame(data=sorted(rows), schema="a long")
+def e(spark, tasks):
+    rdd = map_manifests(spark, tasks, worker, collect=False)
+    return spark.createDataFrame(rdd, SCHEMA)
+def f(spark, shards):
+    rdd = spark.sparkContext.parallelize(shards).flatMap(walk)
+    return spark.createDataFrame(rdd, SCHEMA)
+def g(spark, df):
+    return spark.createDataFrame(df.rdd.map(fix), df.schema)
+def h(spark, rows):
+    return local_frame(spark, rows, SCHEMA)
+"""
+    assert [fn for fn, _call in _pickled_row_frames(ast.parse(src))] == ["a", "b", "c", "d"]

@@ -422,3 +422,32 @@ def test_salted_topk_equals_plain_topk(spark):
         df, ["g"], order, 7, salt_col="id", n_salts=8
     ).orderBy("g", "rk")
     assert plain.collect() == salted.select(plain.columns).collect()
+
+
+def test_theta_sketch_windows_plan_a_group_limit(spark, monkeypatch):
+    """The per-column and per-(column, partition) top-(k+1) windows of
+    the theta sketches plan a ``WindowGroupLimit`` (k + 1 = 4097 is
+    within ``get_spark``'s windowGroupLimitThreshold), so each group
+    is trimmed to k + 1 hashes before the window sorts it."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from iceberg_tools_spark.iceberg.deletes import MOR_DIR, MOR_METADATA
+    from iceberg_tools_spark.iceberg.table_stats import (
+        columns_theta_sketches,
+        partition_column_sketches,
+    )
+
+    plans: list[str] = []
+    collect = DataFrame.collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    df = spark.range(50).selectExpr("id", "CAST(id % 7 AS STRING) AS s")
+    columns_theta_sketches(df, {"id": "long", "s": "string"}, ["id", "s"])
+    partition_column_sketches(spark, MOR_METADATA, 2004, MOR_DIR)
+    windowed = [p for p in plans if "row_number()" in p]
+    assert len(windowed) == 2, plans
+    assert all("WindowGroupLimit" in p for p in windowed), windowed
