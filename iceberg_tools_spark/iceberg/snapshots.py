@@ -667,16 +667,14 @@ def _geo_bound_keys(bmap: dict[int, str] | None, fid: int) -> tuple[int | None, 
     )
 
 
-def _tagged_live_entries_worker(ctx: dict[str, Any], blob: bytes) -> list[tuple]:
-    """plan_scan's per-manifest parse: ENTRIES_SCHEMA tuples with the
-    manifest tag (name, spec id, level-1 decision) prepended, dead
-    entries dropped (runs driver- or executor-side via
-    :func:`manifest_io.map_manifests`). With ``ctx["geo_fids"]``,
-    each row additionally carries the decoded bbox-corner sort keys
-    (lo_x, lo_y, hi_x, hi_y per field id) for the geo filter."""
+def _tagged_live_entries(ctx: dict[str, Any], tag: tuple, blob: bytes) -> list[tuple]:
+    """One manifest's live entries as ENTRIES_SCHEMA tuples with
+    ``tag`` (name, spec id, level-1 decision) prepended. With
+    ``ctx["geo_fids"]``, each row additionally carries the decoded
+    bbox-corner sort keys (lo_x, lo_y, hi_x, hi_y per field id) for
+    the geo filter."""
     from .tables import _entries_worker
 
-    tag = ctx["tag"]
     geo_fids = ctx.get("geo_fids") or ()
     if not geo_fids:
         return [(*tag, *r) for r in _entries_worker(ctx, blob) if r[0] != 2]
@@ -690,6 +688,26 @@ def _tagged_live_entries_worker(ctx: dict[str, Any], blob: bytes) -> list[tuple]
             keys.extend(_geo_bound_keys(r[13], fid))  # upper_bounds
         out.append((*tag, *r, *keys))
     return out
+
+
+def _file_path_order(row: tuple) -> tuple[bool, str]:
+    # Spark's ascending order: nulls first, then UTF-8 byte order,
+    # which for str is Python's code-point order
+    path = row[6]  # after the 3-field tag, ENTRIES_SCHEMA's file_path
+    return (path is not None, path or "")
+
+
+def _tagged_live_entries_worker(ctx: dict[str, Any], blob: bytes) -> list[tuple]:
+    """plan_scan's per-task parse (driver- or executor-side via
+    :func:`manifest_io.map_manifests`): the live tagged entries of
+    the task's manifest and of the ``ctx["same_name"]`` manifests
+    that share its basename, in ``file_path`` order."""
+    rows = _tagged_live_entries(ctx, ctx["tag"], blob)
+    for tag, path in ctx["same_name"]:
+        with open(path, "rb") as f:
+            rows += _tagged_live_entries(ctx, tag, f.read())
+    rows.sort(key=_file_path_order)
+    return rows
 
 
 def _normalize_partition_pred(
@@ -869,10 +887,19 @@ def plan_scan(
     pruned manifests ARE read so the table shows every file's
     decision — the metadata analogue of ``EXPLAIN``.
 
-    At 100 TB: manifest lists are KB per thousand manifests; level 1
-    drops whole MB-scale manifests before any parse, level 2 is a
-    driver-side filter over the entries of what remains — the same
-    shape Spark's own Iceberg source uses for scan planning.
+    Rows come in ``(manifest_name, file_path)`` order without a Spark
+    sort: the surviving manifests are parse tasks in manifest-name
+    order and each task returns its rows in ``file_path`` order
+    (nulls first, UTF-8 byte order, as ``orderBy`` sorts). The plan
+    has no ``Exchange``: collecting it runs one job when the
+    manifests parse on executors and none when they parse on the
+    driver (``manifest_io.PARALLEL_THRESHOLD``).
+
+    At scale: manifest lists are KB per thousand manifests; level 1
+    drops whole MB-scale manifests before any parse, and level 2 is
+    a Spark filter over the entries of what remains, evaluated where
+    those entries were parsed — the same shape Spark's own Iceberg
+    source uses for scan planning.
     """
     from .pruning import bound_value
 
@@ -902,7 +929,7 @@ def plan_scan(
     fid_ctx = {"fid_types": field_id_types(meta.raw)}
     if geo_fids:
         fid_ctx["geo_fids"] = tuple(geo_fids)
-    tasks: list[tuple[dict, str]] = []
+    by_name: dict[str, list[tuple[tuple, str]]] = {}
     for mrow in manifest_files_at(meta, snapshot_id, base_dir):
         if mrow.get("content", 0) != 0:
             continue  # delete manifests: deletes.py's input, not data
@@ -915,15 +942,22 @@ def plan_scan(
         )
         if m_pruned and not debug:
             continue
-        tasks.append(
-            ({**fid_ctx, "tag": (mname, spec_id, m_pruned)}, mrow["local_path"])
+        by_name.setdefault(mname, []).append(
+            ((mname, spec_id, m_pruned), mrow["local_path"])
         )
+    # tasks in manifest-name order; manifests sharing a basename parse
+    # as one task, so their rows interleave by path as a sort would
+    tasks = [
+        ({**fid_ctx, "tag": tag, "same_name": rest}, path)
+        for _, ((tag, path), *rest) in sorted(by_name.items())
+    ]
     if not tasks:
         return local_frame(spark, [], SCAN_PLAN_SCHEMA)
     if len(tasks) >= PARALLEL_THRESHOLD:
         # level 2 distributed end to end: surviving manifests parse
         # in executors and the decision table is born as a DataFrame
-        # — no per-entry driver materialization (VERDICT r8 #1)
+        # — no per-entry driver materialization (VERDICT r8 #1);
+        # map_manifests keeps task order, so the RDD is ordered too
         rdd = map_manifests(spark, tasks, _tagged_live_entries_worker, collect=False)
         entries = spark.createDataFrame(rdd, tagged_schema)
     else:
@@ -1000,17 +1034,14 @@ def plan_scan(
                 disjoint, F.lit(False)
             )
     file_pruned = ~(part_match & bounds_overlap)
-    return (
-        entries.select(
-            "manifest_name",
-            "file_path",
-            "partition_json",
-            "record_count",
-            "manifest_pruned",
-            file_pruned.alias("file_pruned"),
-            (~F.col("manifest_pruned") & ~file_pruned).alias("selected"),
-        )
-        .orderBy("manifest_name", "file_path")
+    return entries.select(
+        "manifest_name",
+        "file_path",
+        "partition_json",
+        "record_count",
+        "manifest_pruned",
+        file_pruned.alias("file_pruned"),
+        (~F.col("manifest_pruned") & ~file_pruned).alias("selected"),
     )
 
 

@@ -15,7 +15,10 @@ metadata table runs no Spark job and no Python worker (a pickled
 ``createDataFrame(list)`` cost one Python-worker job per action,
 about 0.4 s each on a 4-core VM). Above
 ``manifest_io.PARALLEL_THRESHOLD`` manifests the entries are parsed
-on executors and stay an RDD. The DATA files they
+on executors and stay an RDD. Scan plans are born in output order
+on either path (tasks by manifest name, rows by file path), so
+``snapshots.plan_scan`` runs no Spark sort: one job to collect on
+executors, none on the driver. The DATA files they
 describe are what a cluster reads in parallel — planning metadata
 through the driver is exactly what query engines do.
 """

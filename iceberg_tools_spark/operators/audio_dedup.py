@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from .flac import encode_flac
 from .image_dedup import banded_hamming_pairs
 from .multimodal import decode_media
@@ -164,8 +165,8 @@ def make_audio_corpus(spark: SparkSession, n_groups: int = 12) -> DataFrame:
             )
         ):
             rows.append((g * 10 + v, g, variant, bytearray(payload)))
-    return spark.createDataFrame(
-        rows, "item_id long, group_id long, variant string, payload binary"
+    return local_frame(
+        spark, rows, "item_id long, group_id long, variant string, payload binary"
     )
 
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.readers import load_table
 from .topk import top_k_per_group_salted
 
@@ -72,7 +73,8 @@ def bm25_topk(spark: SparkSession, sf_dir: str, *, k: int = TOP_K) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     post = _postings(docs)
 
-    terms = spark.createDataFrame(
+    terms = local_frame(
+        spark,
         [(qid, t) for qid, q in sorted(QUERIES.items()) for t in q.split()],
         "query_id int, term string",
     )

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from .dedup import MAX_BUCKET
 from .multimodal import decode_media, encode_bmp, encode_png
 
@@ -317,8 +318,8 @@ def make_image_corpus(spark: SparkSession, n_groups: int = 16) -> DataFrame:
             )
         ):
             rows.append((g * 10 + v, g, variant, bytearray(payload)))
-    return spark.createDataFrame(
-        rows, "item_id long, group_id long, variant string, payload binary"
+    return local_frame(
+        spark, rows, "item_id long, group_id long, variant string, payload binary"
     )
 
 

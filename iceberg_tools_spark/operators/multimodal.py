@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("item_id", T.LongType(), False),
@@ -430,7 +432,7 @@ def make_synthetic_media(spark: SparkSession, n: int = 64) -> DataFrame:
                 30 if modality == "video" else None,
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def extract_features(df: DataFrame) -> DataFrame:
@@ -685,7 +687,7 @@ def make_container_corpus(spark: SparkSession) -> DataFrame:
     add("audio", build_ogg_opus(n_audio_packets=25, samples_per_packet=1920, seed=8))
     for i in range(2):  # junk → unknown
         add("image", hashlib.md5(f"junk{i}".encode()).digest() * 3)
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def media_probe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

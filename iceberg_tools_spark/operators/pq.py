@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.vectors import dot_fast, sum_squares
 from ..sources.readers import load_table
@@ -88,7 +89,7 @@ def encode(
     bit-identical (pinned by
     tests/test_similarity.py::test_pq_encode_kernel_matches_engine).
     ``extra`` columns (e.g. the IVF ``cell``) ride through the
-    kernel untouched."""
+    kernel untouched, with their types from ``base.schema``."""
     import numpy as np
 
     from ..functions.pq_kernel import make_pq_encode_kernel
@@ -103,9 +104,11 @@ def encode(
     kernel = make_pq_encode_kernel(
         PQ_M, PQ_KSUB, dsub, cbooks, ("vec_id", *extra)
     )
-    schema = ", ".join(
-        ["vec_id bigint", *[f"{c} bigint" for c in extra], "codes array<int>"]
-    )
+    schema = T.StructType([
+        T.StructField("vec_id", T.LongType()),
+        *[T.StructField(c, base.schema[c].dataType) for c in extra],
+        T.StructField("codes", T.ArrayType(T.IntegerType())),
+    ])
     return base.select("vec_id", *extra, "embedding").mapInPandas(kernel, schema)
 
 

@@ -37,6 +37,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def hashed_token_features(
     docs: DataFrame,
@@ -63,8 +65,8 @@ def hashed_token_features(
 
 
 def _weights_df(spark: SparkSession, w: np.ndarray) -> DataFrame:
-    return spark.createDataFrame(
-        [(int(i), float(v)) for i, v in enumerate(w)], "feat int, wv double"
+    return local_frame(
+        spark, [(int(i), float(v)) for i, v in enumerate(w)], "feat int, wv double"
     )
 
 
@@ -253,7 +255,7 @@ def quality_model_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("test_acc_ge_85", int(acc_test >= 0.85)),
         ("train_acc_ge_85", int(acc_train >= 0.85)),
     ]
-    return spark.createDataFrame(rows, "measure string, value long").orderBy(
+    return local_frame(spark, rows, "measure string, value long").orderBy(
         "measure"
     )
 

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from .image_dedup import banded_hamming_pairs, dhash64, smooth_texture
 from .jpeg import decode_jpeg, encode_jpeg
 from .media_containers import build_mp4, mp4_sample_bytes, parse_mp4
@@ -183,8 +184,8 @@ def make_video_corpus(spark: SparkSession, n_groups: int = 8) -> DataFrame:
             )
         ):
             rows.append((g * 10 + v, g, variant, bytearray(payload)))
-    return spark.createDataFrame(
-        rows, "item_id long, group_id long, variant string, payload binary"
+    return local_frame(
+        spark, rows, "item_id long, group_id long, variant string, payload binary"
     )
 
 

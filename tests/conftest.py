@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import sys
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -27,3 +29,18 @@ def duck():
     con = duck_connection(SF_ORACLE)
     yield con
     con.close()
+
+
+@contextmanager
+def spark_job_ids(spark):
+    """The ids of the Spark jobs submitted inside the block."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count pin")
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))

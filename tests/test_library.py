@@ -610,11 +610,12 @@ def _pickled_row_frames(tree: ast.Module):
 
 
 def test_driver_rows_reach_spark_through_local_frame():
-    """Under ``iceberg/``, ``streaming/`` and ``sources/`` a frame over
-    rows built on the driver comes from ``session.local_frame`` (one
-    Arrow ``LocalRelation``); ``createDataFrame`` only wraps RDDs."""
+    """Under ``iceberg/``, ``streaming/``, ``sources/`` and
+    ``operators/`` a frame over rows built on the driver comes from
+    ``session.local_frame`` (one Arrow ``LocalRelation``);
+    ``createDataFrame`` only wraps RDDs."""
     offenders, seen = [], set()
-    for sub in ("iceberg", "streaming", "sources"):
+    for sub in ("iceberg", "streaming", "sources", "operators"):
         for path in sorted((_PKG / sub).rglob("*.py")):
             rel = path.relative_to(_PKG).as_posix()
             for fn, call in _pickled_row_frames(ast.parse(path.read_text())):

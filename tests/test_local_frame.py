@@ -16,8 +16,6 @@ import datetime as dt
 import decimal
 import os
 import time
-import uuid
-from contextlib import contextmanager
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -42,6 +40,8 @@ from iceberg_tools_spark.iceberg.tables import (
     snapshots_df,
 )
 from iceberg_tools_spark.session import local_frame
+
+from .conftest import spark_job_ids
 
 # every type a library schema uses, plus TimestampType, dates,
 # decimals, a non-nullable array element and timestamps in an array
@@ -239,24 +239,9 @@ def test_local_frame_takes_dicts_by_name(spark):
 # ---- job counts ----------------------------------------------------
 
 
-@contextmanager
-def _jobs(spark):
-    """The ids of the Spark jobs submitted inside the block."""
-    sc = spark.sparkContext
-    group = f"local-frame-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count pin")
-    ids: list[int] = []
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_metadata_tables_collect_without_a_job(spark):
     meta = parse_metadata(MS_METADATA)
-    with _jobs(spark) as control:
+    with spark_job_ids(spark) as control:
         spark.createDataFrame([(1,)], "a long").collect()
     assert control, "the job counter sees a pickled-rows collect"
     for build in (
@@ -265,7 +250,7 @@ def test_metadata_tables_collect_without_a_job(spark):
         lambda: files_at(spark, MS_METADATA, 1004, MS_DIR),  # 3 manifests: driver branch
     ):
         df = build()
-        with _jobs(spark) as ids:
+        with spark_job_ids(spark) as ids:
             rows = df.collect()
         assert rows and ids == []
 

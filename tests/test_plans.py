@@ -339,6 +339,37 @@ def test_plan_scan_distributed_is_rdd_scan(spark, monkeypatch):
     assert df.count() > 0
 
 
+@pytest.mark.parametrize(
+    "threshold, jobs", [(1, 1), (10**9, 0)], ids=["executor", "driver"]
+)
+def test_plan_scan_collects_in_order_without_a_sort(
+    spark, monkeypatch, threshold, jobs
+):
+    """plan_scan's rows are born in (manifest_name, file_path) order:
+    its plan holds no Sort and no Exchange, collecting it runs one
+    job when the manifests parse on executors and none when they
+    parse on the driver."""
+    import re
+
+    from iceberg_tools_spark.iceberg import manifest_io
+    from iceberg_tools_spark.iceberg.deletes import MOR_METADATA
+    from iceberg_tools_spark.iceberg.metadata import parse_metadata
+    from iceberg_tools_spark.iceberg.snapshots import plan_scan
+
+    from .conftest import spark_job_ids
+
+    meta = parse_metadata(MOR_METADATA)
+    monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", threshold)
+    df = plan_scan(spark, MOR_METADATA, meta.current_snapshot_id)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert re.findall(r"\b(?:Sort|Exchange)\b", plan) == []
+    with spark_job_ids(spark) as ids:
+        rows = df.collect()
+    assert len(rows) > 1 and len(ids) == jobs
+    keys = [(r.manifest_name, r.file_path) for r in rows]
+    assert keys == sorted(keys)
+
+
 def test_perceptual_dedup_plans_no_cartesian(spark):
     """The image/audio/video dedupers must join only through band
     buckets (equi-join) — never a cartesian — and keep exactly one

@@ -221,6 +221,27 @@ def test_pq_encode_kernel_matches_engine(spark):
     assert got == want
 
 
+def test_pq_encode_carries_extra_columns_with_their_types(spark):
+    """``encode``'s ``extra`` columns keep the type and the value they
+    have in ``base`` — a string and an int column, not just bigint."""
+    from pyspark.sql import types as T
+
+    from iceberg_tools_spark.operators.pq import PQ_DIM, PQ_M, encode, train_codebooks
+
+    rows = [
+        (i, [float((i * 7 + d) % 11) for d in range(PQ_DIM)], f"doc-é{i}", i % 3)
+        for i in range(40)
+    ]
+    base = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label string, shard int"
+    )
+    codes = encode(base, train_codebooks(base), PQ_DIM, extra=("label", "shard"))
+    assert codes.schema["label"].dataType == T.StringType()
+    assert codes.schema["shard"].dataType == T.IntegerType()
+    got = sorted((r.vec_id, r.label, r.shard, len(r.codes)) for r in codes.collect())
+    assert got == [(i, label, shard, PQ_M) for i, _, label, shard in rows]
+
+
 def test_pq_adc_scan_is_jvm_only(spark):
     # Python appears ONLY in the single-task training kernel; the
     # corpus-wide ADC scan plan of the candidate stage is pure JVM

@@ -7,9 +7,9 @@ from __future__ import annotations
 import json
 import os
 
-
-
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from iceberg_tools_spark.iceberg import snapshots as S
 from iceberg_tools_spark.iceberg.manifest2json import manifest2json
@@ -189,6 +189,135 @@ def test_scan_plan_bounds_only(spark):
     # A (1-100) and C (151-250) overlap [1,160]; D (251-300) pruned;
     # B is DELETED at 1003 so it never enters the plan
     assert sel == ["A.parquet", "C.parquet"]
+
+
+# names mix ASCII with characters whose code-point (= UTF-8 byte)
+# order differs from Java's UTF-16 order: U+FF21 sorts before an
+# astral U+1F600 by code point and after it by UTF-16 unit
+_NAME_CHARS = "aZ_é中Ａ\U0001f600"
+_PLAN_KW = {
+    "all": {},
+    "category": {"partition_pred": {"category": "y"}},
+    "bounds": {"field_id": 1, "lo": 3, "hi": 6},
+    "geo": {"geo_bbox": {2: (2.0, 2.0, 6.0, 6.0)}},
+}
+
+
+@st.composite
+def _scan_tables(draw):
+    """Manifests as (relative name, entries) in manifest-list order.
+    Names may share a basename in two directories; an entry is
+    (path stem, category, low id, deleted)."""
+    stem = st.text(_NAME_CHARS, min_size=1, max_size=2)
+    names = draw(st.lists(
+        st.tuples(st.sampled_from(["", "a/"]), stem).map("".join),
+        min_size=1, max_size=5, unique=True,
+    ))
+    entry = st.tuples(stem, st.sampled_from("xyz"), st.integers(0, 9), st.booleans())
+    return {
+        "manifests": [
+            (f"{name}.avro", draw(st.lists(entry, min_size=1, max_size=4)))
+            for name in names
+        ],
+        "plan": draw(st.sampled_from(sorted(_PLAN_KW))),
+        "debug": draw(st.booleans()),
+    }
+
+
+def _write_scan_table(root: str, manifests: list) -> tuple[str, int]:
+    """A v3 table (id, geometry shape, identity-partitioned category)
+    whose one snapshot lists ``manifests`` in the given order. A file
+    whose low id is not a multiple of 3 has id bounds [lo, lo + 2]
+    and shape box [lo, lo + 1]²; the others have no bounds."""
+    from iceberg_tools_spark.iceberg.commit import SnapshotProducer, create_table
+    from iceberg_tools_spark.iceberg.conversions import to_bytes, wkb_point
+
+    mp = create_table(
+        root, [("id", "long"), ("shape", "geometry"), ("category", "string")],
+        partition_by=[("category", "identity", "category")], format_version=3,
+    )
+    producer = SnapshotProducer(mp, root, snapshot_id=7)
+    rows = []
+    for name, entries in manifests:
+        os.makedirs(os.path.dirname(os.path.join(root, "metadata", name)), exist_ok=True)
+        records = []
+        for path, category, lo, deleted in entries:
+            bounded = lo % 3 != 0
+            records.append({
+                "status": 2 if deleted else 1,
+                "snapshot_id": 7,
+                "sequence_number": None,
+                "data_file": {
+                    "content": 0,
+                    "file_path": f"{producer.loc}/data/{path}.parquet",
+                    "file_format": "PARQUET",
+                    "partition": {"category": category},
+                    "record_count": 1,
+                    "file_size_in_bytes": 10,
+                    "lower_bounds": [
+                        {"key": 1, "value": to_bytes("long", lo)},
+                        {"key": 2, "value": wkb_point(lo, lo)},
+                    ] if bounded else None,
+                    "upper_bounds": [
+                        {"key": 1, "value": to_bytes("long", lo + 2)},
+                        {"key": 2, "value": wkb_point(lo + 1, lo + 1)},
+                    ] if bounded else None,
+                },
+            })
+        rows.append(producer.write_manifest(name, records, spec_id=0, content=0, suffix="t"))
+    res = producer.commit(rows, {"operation": "append"})
+    return res["metadata_path"], res["snapshot_id"]
+
+
+_MIXED_TABLE = {
+    # the list is not in name order, paths inside a manifest are not
+    # in path order, two manifests are both named "m.avro", and names
+    # and paths are non-ASCII
+    "manifests": [
+        ("\U0001f600.avro", [("\U0001f600", "x", 4, False), ("Ａ", "y", 1, False)]),
+        ("a/m.avro", [("z", "y", 4, False), ("c", "x", 2, True), ("é", "y", 5, False)]),
+        ("m.avro", [("\U0001f600", "y", 3, False), ("d", "z", 4, False)]),
+        ("Ａ.avro", [("a", "x", 7, False)]),
+    ],
+}
+
+
+@pytest.mark.parametrize("threshold", [1, 10**9], ids=["executor", "driver"])
+@settings(
+    max_examples=8, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(table=_scan_tables())
+@example(table={**_MIXED_TABLE, "plan": "category", "debug": True})
+@example(table={**_MIXED_TABLE, "plan": "geo", "debug": False})
+def test_plan_scan_rows_come_in_sorted_order(spark, monkeypatch, threshold, table):
+    """Without a Spark sort, ``plan_scan`` still collects exactly what
+    ``orderBy("manifest_name", "file_path")`` of the same frame
+    collects, on the executor and on the driver placement; rows with
+    equal keys compare as multisets."""
+    import shutil
+    import tempfile
+    from collections import Counter
+
+    from iceberg_tools_spark.iceberg import manifest_io
+    from iceberg_tools_spark.iceberg.snapshots import plan_scan
+
+    monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", threshold)
+    root = tempfile.mkdtemp(prefix="plan-order-")
+    try:
+        mp, sid = _write_scan_table(root, table["manifests"])
+        df = plan_scan(
+            spark, mp, sid, base_dir=root, debug=table["debug"],
+            **_PLAN_KW[table["plan"]],
+        )
+        got = df.collect()
+        want = df.orderBy("manifest_name", "file_path").collect()
+    finally:
+        shutil.rmtree(root)
+    assert [(r.manifest_name, r.file_path) for r in got] == [
+        (r.manifest_name, r.file_path) for r in want
+    ]
+    assert Counter(got) == Counter(want)
 
 
 # ------------------------------------------------ rewrite executor
