@@ -12,12 +12,13 @@ canonical Iceberg type string (`Types.fromPrimitiveString(x)
 
 from __future__ import annotations
 
+import functools
 import re
 import struct
 import uuid as _uuid
 from decimal import Decimal
 from decimal import localcontext as _dec_localcontext
-from typing import Any
+from typing import Any, Callable
 
 _DECIMAL_RE = re.compile(r"^decimal\(\s*(\d+)\s*,\s*(\d+)\s*\)$")
 _FIXED_RE = re.compile(r"^fixed\[\s*(\d+)\s*\]$")
@@ -72,7 +73,10 @@ def canonical_type(type_str: str) -> str:
 
 def from_bytes(type_str: str, data: bytes) -> Any:
     """Deserialize one Iceberg single-value."""
-    t = canonical_type(type_str)
+    return _from_bytes(canonical_type(type_str), data)
+
+
+def _from_bytes(t: str, data: bytes) -> Any:
     if t == "unknown":
         # the v3 always-null type has NO single-value serialization
         # (spec: "unknown" rows carry no value) — a bound/default
@@ -203,7 +207,10 @@ def _java_float_str(v: float, single: bool) -> str:
 def value_to_string(type_str: str, value: Any) -> str:
     """Render a deserialized value the way Java `toString` would
     (the reference feeds `metricValue.toString()` into the output)."""
-    t = canonical_type(type_str)
+    return _to_string(canonical_type(type_str), value)
+
+
+def _to_string(t: str, value: Any) -> str:
     if t == "boolean":
         return "true" if value else "false"
     if t == "float":
@@ -218,8 +225,15 @@ def value_to_string(type_str: str, value: Any) -> str:
 def decode_bound(type_str: str, data: bytes) -> str:
     """The reference's bound rendering: ``value:<v>;type:<t>``
     (`IcebergDatumWriter.java:200`)."""
+    return _bound_renderer(type_str)(data)
+
+
+@functools.lru_cache(maxsize=1024)
+def _bound_renderer(type_str: str) -> Callable[[bytes], str]:
+    """``decode_bound`` for one metadata type string: the string is
+    normalised once here, not once per bound."""
     t = canonical_type(type_str)
-    return f"value:{value_to_string(t, from_bytes(t, data))};type:{t}"
+    return lambda data: f"value:{_to_string(t, _from_bytes(t, data))};type:{t}"
 
 
 def wkb_point(x: float, y: float, z: float | None = None) -> bytes:

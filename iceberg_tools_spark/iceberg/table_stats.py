@@ -37,7 +37,7 @@ from typing import Any, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import local_frame
+from ..session import WINDOW_GROUP_LIMIT, local_frame
 from .catalog import table_root_of
 from .metadata import parse_metadata
 from .theta import (
@@ -129,6 +129,19 @@ def column_theta_sketch(
     return build_compact_theta(smallest, lg_k=lg_k)
 
 
+def _window_k(lg_k: int) -> int:
+    """k for a top-(k+1) theta window. Past the session's
+    ``windowGroupLimitThreshold`` Spark plans the window without its
+    ``WindowGroupLimit`` and sorts every group whole, so refuse."""
+    k = 1 << lg_k
+    if k + 1 > WINDOW_GROUP_LIMIT:
+        raise ValueError(
+            f"lg_k={lg_k} needs a top-{k + 1} window, above "
+            f"spark.sql.optimizer.windowGroupLimitThreshold={WINDOW_GROUP_LIMIT}"
+        )
+    return k
+
+
 def columns_theta_sketches(
     df: DataFrame,
     ftypes: dict[str, str],
@@ -148,7 +161,7 @@ def columns_theta_sketches(
 
     from pyspark.sql import Window
 
-    k = 1 << lg_k
+    k = _window_k(lg_k)
 
     def _col_hashed(c: str) -> DataFrame:
         def _hb(it: Iterator, t=ftypes[c], cname=c) -> Iterator:
@@ -396,6 +409,8 @@ def partition_column_sketches(
     Returns ``(sketches, scanned_local_paths)``."""
     from .deletes import apply_deletes, mor_entries_at, mor_frame
 
+    k = _window_k(lg_k)
+
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
     if snapshot_id is None:
@@ -421,7 +436,6 @@ def partition_column_sketches(
         F.broadcast(pj_df), surv["_rel"] == pj_df["pj_rel"]
     ).drop("pj_rel")
 
-    k = 1 << lg_k
     from functools import reduce
 
     from pyspark.sql import Window

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+# the largest k + 1 a ``row_number() <= k + 1`` window trims in place
+WINDOW_GROUP_LIMIT = 4097
 
 
 def get_spark(
@@ -75,7 +77,7 @@ def get_spark(
         # top-k pushdown: a ``row_number() <= k + 1`` filter plans a
         # WindowGroupLimit only up to this k; the theta sketches trim
         # to 2**12 + 1 hashes per group (default 1000 would miss it)
-        .config("spark.sql.optimizer.windowGroupLimitThreshold", "4097")
+        .config("spark.sql.optimizer.windowGroupLimitThreshold", str(WINDOW_GROUP_LIMIT))
         # split size: scan tasks target this many bytes per
         # partition; at cluster SF size it (with executor memory) so
         # a partition's working set fits — 128m default is the

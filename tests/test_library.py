@@ -652,3 +652,66 @@ def h(spark, rows):
     return local_frame(spark, rows, SCHEMA)
 """
     assert [fn for fn, _call in _pickled_row_frames(ast.parse(src))] == ["a", "b", "c", "d"]
+
+
+_AVRO_SHARED = {"_resolve", "_branch_for"}  # manifest2json walks schemas with these
+_INTERPRETERS = {"decode_value", "encode_value"}
+
+
+def _codec_breaches(tree: ast.Module, in_avro: bool) -> list[str]:
+    """Per-value interpreter definitions anywhere, and (outside
+    ``avro/``) private names taken from ``avro/`` by import or by
+    attribute of an imported ``avro`` module."""
+    out, avro_mods = [], set()
+    for n in ast.walk(tree):
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)) and n.name in _INTERPRETERS:
+            out.append(f"{n.lineno} defines {n.name}")
+        if in_avro or not isinstance(n, (ast.Import, ast.ImportFrom)):
+            continue
+        mod = (n.module or "") if isinstance(n, ast.ImportFrom) else ""
+        parts = mod.split(".")
+        from_avro = isinstance(n, ast.ImportFrom) and (parts[0] == "avro" if n.level else parts[1:2] == ["avro"])
+        for a in n.names:
+            if from_avro and a.name.startswith("_") and a.name not in _AVRO_SHARED:
+                out.append(f"{n.lineno} imports {a.name}")
+            elif from_avro or ".avro." in f".{a.name}.":
+                avro_mods.add(a.asname or a.name)
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Attribute) and n.attr.startswith("_") and n.attr not in _AVRO_SHARED:
+            if ast.unparse(n.value) in avro_mods:
+                out.append(f"{n.lineno} reads {ast.unparse(n)}")
+    return out
+
+
+def test_one_avro_codec():
+    """The compiled codec in ``avro/`` is the only one: no module
+    defines a per-value ``decode_value``/``encode_value`` again, and
+    nothing outside ``avro/`` reaches into its private names."""
+    offenders = []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        tree = ast.parse(path.read_text())
+        offenders += [f"{rel}:{b}" for b in _codec_breaches(tree, rel.startswith("avro/"))]
+    assert offenders == [], "\n".join(offenders)
+
+
+def test_codec_rule_sees_each_breach_shape():
+    src = """
+from ..avro.reader import AvroContainerFile, _branch_for, _resolve
+from ..avro.reader import _collect_named
+from iceberg_tools_spark.avro.writer import _writer
+from ..avro import reader
+import iceberg_tools_spark.avro.writer as w
+from .conversions import _to_string
+size = len(reader._DECODERS) + len(w._ENCODERS) + len(reader.MAGIC)
+def decode_value(schema, dec, names):
+    pass
+"""
+    assert _codec_breaches(ast.parse(src), in_avro=False) == [
+        "3 imports _collect_named",
+        "4 imports _writer",
+        "9 defines decode_value",
+        "8 reads reader._DECODERS",
+        "8 reads w._ENCODERS",
+    ]
+    assert _codec_breaches(ast.parse(src), in_avro=True) == ["9 defines decode_value"]

@@ -482,3 +482,22 @@ def test_theta_sketch_windows_plan_a_group_limit(spark, monkeypatch):
     windowed = [p for p in plans if "row_number()" in p]
     assert len(windowed) == 2, plans
     assert all("WindowGroupLimit" in p for p in windowed), windowed
+
+
+def test_theta_sketch_windows_reject_lg_k_past_the_group_limit(spark):
+    """Above lg_k 12 the top-(k+1) window would lose its
+    ``WindowGroupLimit`` under ``get_spark``'s threshold: both theta
+    window builders refuse it by name instead of sorting whole groups."""
+    from iceberg_tools_spark.iceberg.deletes import MOR_DIR, MOR_METADATA
+    from iceberg_tools_spark.iceberg.table_stats import (
+        columns_theta_sketches,
+        partition_column_sketches,
+    )
+    from iceberg_tools_spark.session import WINDOW_GROUP_LIMIT
+
+    assert spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold") == str(WINDOW_GROUP_LIMIT)
+    df = spark.range(5).selectExpr("id")
+    with pytest.raises(ValueError, match="windowGroupLimitThreshold=4097"):
+        columns_theta_sketches(df, {"id": "long"}, ["id"], lg_k=13)
+    with pytest.raises(ValueError, match="windowGroupLimitThreshold=4097"):
+        partition_column_sketches(spark, MOR_METADATA, 2004, MOR_DIR, lg_k=13)
