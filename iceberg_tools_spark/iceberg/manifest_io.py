@@ -41,18 +41,15 @@ the whole engine already makes for data files).
 
 from __future__ import annotations
 
-import os
 from typing import Any, Callable, Iterable
 
-PARALLEL_THRESHOLD = int(
-    os.environ.get("ICEBERG_TOOLS_MANIFEST_PARALLEL_THRESHOLD", "16")
-)
+PARALLEL_THRESHOLD = 16
 
 
 def active_session():
     """The ambient SparkSession, or None outside a Spark app — lets
-    26 existing `mor_entries_at` call sites pick up the distributed
-    path without threading a session through every signature."""
+    the `mor_entries_at` call sites pick up the distributed path
+    without threading a session through every signature."""
     try:
         from pyspark.sql import SparkSession
 

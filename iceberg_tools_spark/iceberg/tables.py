@@ -103,12 +103,9 @@ def snapshots_df(spark: SparkSession, meta: TableMetadata) -> DataFrame:
 
 
 def history_df(spark: SparkSession, meta: TableMetadata) -> DataFrame:
-    ancestors = set()
-    cur = meta.current_snapshot_id
-    by_id = {s.get("snapshot-id"): s for s in meta.snapshots}
-    while cur is not None and cur in by_id:
-        ancestors.add(cur)
-        cur = by_id[cur].get("parent-snapshot-id")
+    from .snapshots import ancestor_chain  # snapshots imports this module
+
+    ancestors = set(ancestor_chain(meta, meta.current_snapshot_id))
     rows = [
         (_ts(e.get("timestamp-ms")), e.get("snapshot-id"), e.get("snapshot-id") in ancestors)
         for e in meta.snapshot_log

@@ -29,44 +29,81 @@ via exact int cast + one division by an exact power of ten), which
 holds for every aggregate at the driver's sf=0.01; the parity tests
 compare the resulting doubles bit-exactly at two SFs.
 
-``register(..., raw=True)`` opts a query out (used by the
-``probe_*`` hash diagnostics, which exist to measure the driver's
-canonicalization of each raw type).
+A ``raw`` of ``True`` in the query table opts a query out (used by
+the ``probe_*`` hash diagnostics, which exist to measure the
+driver's canonicalization of each raw type).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .iceberg import (
+    audits,
+    changelog,
+    commit,
+    concurrency,
+    deletes,
+    dml,
+    evolution,
+    ivm,
+    maintenance,
+    partition_stats,
+    rest_catalog,
+    rest_ops,
+    rewrite_data,
+    rewrite_deletes,
+    snapshots,
+    sortorder,
+    table_stats,
+    tables,
+    transforms,
+    views,
+)
 from .operators import (
     analytics,
+    audio_dedup,
+    bm25,
+    bpe,
     components,
     dedup,
     events,
+    image_dedup,
+    multimodal,
     packing,
+    pq,
     probes,
+    quality_model,
+    rangejoin,
     sampling,
+    semdedup,
     similarity,
+    stats,
+    text,
     tpch,
     tpch_ext,
+    video_dedup,
 )
-from .operators import text as text_ops
+from .sources import (
+    delta_log,
+    migrate,
+    parquet_import,
+)
+from .streaming import (
+    cdc,
+    incremental,
+    ingest,
+    ivm as stream_ivm,
+    jobs,
+    media,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-# name → (fn, sql, raw)
-_REGISTRY: dict[str, tuple[QueryFn, str | None, bool]] = {}
-
-
-def register(name: str, fn: QueryFn, sql: str | None, *, raw: bool = False) -> None:
-    # idempotent: module re-exec (importlib.reload, harness re-import)
-    # simply overwrites; a module-level dict is the single source of
-    # truth either way
-    _REGISTRY[name] = (fn, sql, raw)
+Entry = tuple[str, QueryFn, str | None, bool]
 
 
 def _hash_safe_df(df: DataFrame, forced: tuple[str, ...] = ()) -> DataFrame:
@@ -118,1204 +155,275 @@ def _decimal_cols(name: str) -> tuple[str, ...]:
     return DECIMAL_COLS.get(name, ())
 
 
-# REGISTRATION ORDER IS LOAD-BEARING (VERDICT r2 #2): the driver
-# adjudicates only the FIRST 50 registry entries per round, so the
-# order below spends that window deliberately. Round-8 window
-# (final form — restructured late in the round so EVERY round-8
-# newcomer gets a first-certification slot, the lesson VERDICT
-# flagged in r6 AND r7; funding comes from the r5-refresh block and
-# 8 of the 22 r4-refresh slots, all of which keep their green
-# r4/r5 rows + two-SF local parity on every pytest run):
-#   1     probe_double — canary for a driver canonicalization
-#         change (its string twin stays past 50);
-#   2-3   FIRST CERTIFICATION (VERDICT r7 #1): meta_stats_incremental
-#         and lm_bigram_stats (top-V cap now real, bench-swept);
-#   4-17  r4-evidence refresh (VERDICT r7 #3, partial by design):
-#         q2/q3/q8/q10/q11/q18, rollup/cube, meta_typed_bounds
-#         (the reference's distinguishing feature),
-#         text_fingerprint, text_langid — interleaved with three
-#         late-round newcomers that took refresh slots:
-#         spec_evolution_write (retention_day_n's),
-#         binpack_rewrite_roundtrip (funnel's), and
-#         dedup_substring_coverage (q20's). The 11 ceded r4-cohort
-#         keys (five metadata.json tables, q20, funnel,
-#         retention_day_n, dedup_ngram_jaccard,
-#         embedding_norm_stats, token_count_histogram) keep their
-#         green r4 rows + two-SF local parity — refresh loses to
-#         first-certification when the window is oversubscribed;
-#   18-21 round-8 mid-round operators: optimistic-concurrency
-#         commits, partition-scoped stats, IVF-PQ (rows-only),
-#         streaming Iceberg sink;
-#   22-26 re-certs whose implementation changed this round: theta
-#         p=1.0/SingleItem (meta_table_stats), schema-projected
-#         rewrite folds, null-safe eq-delete gates (mor_live_rows,
-#         commit_eq_delete_roundtrip, mor_read_evolved) — and
-#         rewrite_datafiles_roundtrip;
-#   27-35 FIRST CERTIFICATION, mid-round cohort: batch + streaming
-#         IVM, range join, paragraph dedup, cherry-pick,
-#         position_deletes, media probing, frame sampling, row
-#         lineage;
-#   36-50 FIRST CERTIFICATION, late-round cohort: Delta interop ×3,
-#         embedding decontamination, group sampling, parquet
-#         import, Iceberg views, snapshot-summary audit,
-#         $all_manifests, BPE ×2 (one certified + one rows-only),
-#         SemDeDup ×2 (one certified + one rows-only),
-#         stream-stream join, WAP audit gates.
-# Slid past 50: every key with a green r4-r7 row (incl. the whole
-# §2.2 r5 cohort and the r7 first-cert cohort) — all re-verified
-# bit-exactly at TWO SFs by tests/test_oracle_parity.py each run.
-# probe_decimal (EXPECTED-red witness, proven r2/r3) stays retired.
-
-from .iceberg import changelog as meta_changelog  # noqa: E402
-from .iceberg import commit as meta_commit  # noqa: E402
-from .iceberg import concurrency as meta_conc  # noqa: E402
-from .iceberg import deletes as meta_del  # noqa: E402
-from .iceberg import dml as meta_dml  # noqa: E402
-from .iceberg import evolution as meta_evo  # noqa: E402
-from .iceberg import maintenance as meta_maint  # noqa: E402
-from .iceberg import partition_stats as meta_pstats  # noqa: E402
-from .iceberg import rewrite_data as meta_rwdata  # noqa: E402
-from .iceberg import rewrite_deletes as meta_rwdel  # noqa: E402
-from .iceberg import snapshots as meta_snap  # noqa: E402
-from .iceberg import sortorder as meta_sort  # noqa: E402
-from .iceberg import table_stats as meta_tstats  # noqa: E402
-from .iceberg import tables as meta_tables  # noqa: E402
-from .iceberg import transforms as meta_trans  # noqa: E402
-from .operators import pq as pq_ops  # noqa: E402
-from .operators import stats as stats_ops  # noqa: E402
-from .streaming import cdc as stream_cdc  # noqa: E402
-from .streaming import incremental as stream_inc  # noqa: E402
-from .streaming import ingest as stream_ingest  # noqa: E402
-
-# ============================= ROUND-10 WINDOW (the driver's first
-# 50 registry entries; register() overwrites never move a key, so
-# this block alone fixes the window and the legacy registrations
-# below keep every key alive with identical (fn, sql)).
-#
-# Budget: 1 canary; 2-9 FIRST CERTIFICATION of the 8 past-window r9
-# newcomers (VERDICT r9 #2 — the only oracle-checkable keys without
-# a driver row): the perceptual trio (now bucket-census-capped +
-# JPEG-variant corpus, VERDICT r9 #1/#6), streaming media intake,
-# bm25 (now two-stage salted top-k, #3), both replication
-# directions, $metadata_log_entries; 10 NEW r10 first cert
-# (MIN/MAX materialized view, #7); 11-13 re-certification of keys
-# whose implementation changed this round (MV refresh crash-safety
-# + version numbering, spec-gated binpack equality exclusion,
-# single-collect orphan listing); 14-26 the FULL r5-evidence cohort
-# (VERDICT r9 #5 — after this round no key's newest driver row
-# predates r6); 27-43 the FULL r6 cohort; 44-50 the oldest r7 keys
-# (asof, exact dedup, q9, generic top-k, bruteforce ANN, CDC rows,
-# append commit). Still r7 after this round: 35 keys, next refresh
-# wave.
-from .iceberg import ivm as _w_ivm  # noqa: E402
-from .iceberg import maintenance as _w_maint  # noqa: E402
-from .iceberg import rewrite_data as _w_rwdata  # noqa: E402
-from .iceberg import snapshots as _w_snap  # noqa: E402
-from .iceberg import tables as _w_tables  # noqa: E402
-from .iceberg import views as _w_views  # noqa: E402
-from .iceberg import deletes as _w_del  # noqa: E402
-from .operators import bm25 as _w_bm25  # noqa: E402
-from .operators import bpe as _w_bpe  # noqa: E402
-from .operators import audio_dedup as _w_aud  # noqa: E402
-from .operators import image_dedup as _w_img  # noqa: E402
-from .operators import pq as _w_pq  # noqa: E402
-from .operators import semdedup as _w_sem  # noqa: E402
-from .operators import video_dedup as _w_vid  # noqa: E402
-from .sources import delta_log as _w_delta  # noqa: E402
-from .sources import migrate as _w_mig  # noqa: E402
-from .sources import parquet_import as _w_pqimp  # noqa: E402
-from .streaming import media as _w_media  # noqa: E402
-
-# ============================= ROUND-12 WINDOW (replaces the
-# round-10 block below, which stays as overwrite-no-ops keeping its
-# keys alive at slots 51+).
-#
-# Budget (VERDICT r11 #2/#6): 1 canary; 2-3 FIRST CERTIFICATION of
-# the two keys that silently broke OUTSIDE the window last round —
-# Delta deletion-vector reads and Change Data Feed (the
-# _scan_path_col fix, now regression-tested against a real scan);
-# 4 NEW r12 capstone — CDF-driven Delta→Iceberg replication
-# (row-level changes → equality-delete commits, changelog cost);
-# 5-7 re-certification of keys whose implementation changed this
-# round (the Delta reader's path-join normalization, the
-# replication clock threading + zero-victims CDF mask, the
-# full-fidelity path's stacked-DV rel mapping); 8-42 the FULL
-# r7-evidence cohort (35 keys, four rounds stale — VERDICT r10 #3 /
-# r11 #6); 43-50 the oldest r8 keys, Delta-adjacent and
-# reference-distinguishing first. After this round no oracle-checked
-# key's newest driver row predates r8.
-register("probe_double", probes.probe_double, probes.PROBE_DOUBLE_SQL, raw=True)
-# 2-3: FIRST CERTIFICATION — the keys VERDICT r10/r11 flagged
-register("delta_dv_rows", _w_delta.delta_dv_rows, _w_delta.DELTA_DV_SQL)
-register("delta_cdf_rows", _w_delta.delta_cdf_rows, _w_delta.DELTA_CDF_SQL)
-# 4: NEW r12 capstone — replicate a DML-heavy Delta source from its
-# change feed; oracle = DuckDB's pure-SQL replay of the Delta log
-register(
-    "delta_cdf_replicate_rows",
-    _w_mig.delta_cdf_replicate_rows,
-    _w_delta.DELTA_LOG_SQL,
-)
-# 5-7: changed-this-round re-certification
-register("delta_log_rows", _w_delta.delta_log_rows, _w_delta.DELTA_LOG_SQL)
-register("delta_replicate_rows", _w_mig.delta_replicate_rows, _w_mig.DELTA_REPLICATE_SQL)
-register(
-    "delta_replicate_full_rows",
-    _w_mig.delta_replicate_full_rows,
-    _w_delta.DELTA_LOG_SQL,
-)
-# 8-42: the FULL r7-evidence cohort (alphabetical)
-register("cdc_replicate_roundtrip", stream_cdc.cdc_replicate_roundtrip, stream_cdc.CDC_REPLICATE_SQL)
-register("changelog_stream_rows", stream_cdc.changelog_stream_rows, stream_cdc.CHANGELOG_STREAM_SQL)
-register("column_stats_orders", stats_ops.column_stats_orders, stats_ops.COLUMN_STATS_SQL)
-register("commit_delete_roundtrip", meta_commit.commit_delete_roundtrip, meta_commit.COMMIT_DELETE_SQL)
-register("dedup_survivors", components.dedup_survivors, components.DEDUP_SURVIVORS_SQL)
-register("delete_compaction_plan", meta_del.delete_compaction_plan, meta_del.DELETE_COMPACTION_SQL)
-register("delete_where_dv_roundtrip", meta_dml.delete_where_dv_roundtrip, meta_dml.DELETE_WHERE_DV_SQL)
-register("delete_where_roundtrip", meta_dml.delete_where_roundtrip, meta_dml.DELETE_WHERE_SQL)
-register("embedding_near_dup", similarity.embedding_near_dup, similarity.NEAR_DUP_SQL)
-register("expire_execute_roundtrip", meta_commit.expire_execute_roundtrip, meta_commit.EXPIRE_EXECUTE_SQL)
-register("files_at_snapshot_mor", meta_del.files_at_snapshot_mor, meta_del.FILES_AT_SNAPSHOT_MOR_SQL)
-register("files_at_tag", meta_commit.files_at_tag, meta_commit.FILES_AT_TAG_SQL)
-register("incremental_stream_rows", stream_inc.incremental_stream_rows, stream_inc.INCREMENTAL_STREAM_SQL)
-register("merge_into_roundtrip", meta_dml.merge_into_roundtrip, meta_dml.MERGE_INTO_SQL)
-register("merge_transform_partitions", meta_trans.merge_transform_partitions, meta_trans.MERGE_TRANSFORM_PARTITIONS_SQL)
-register("meta_all_files", meta_snap.meta_all_files, meta_snap.META_ALL_FILES_SQL)
-register("meta_delete_files", meta_del.meta_delete_files, meta_del.META_DELETE_FILES_SQL)
-register("meta_dv_blobs", meta_del.meta_dv_blobs, meta_del.META_DV_BLOBS_SQL)
-register("meta_partition_stats", meta_pstats.meta_partition_stats, meta_pstats.META_PARTITION_STATS_SQL)
-register("meta_refs", meta_commit.meta_refs, meta_commit.META_REFS_SQL)
-register("meta_schemas", meta_evo.meta_schemas, meta_evo.META_SCHEMAS_SQL)
-register("mor_live_rows_dv", meta_del.mor_live_rows_dv, meta_del.MOR_LIVE_ROWS_DV_SQL)
-register("near_dup_rate_by_source", dedup.near_dup_rate_by_source, dedup.NEAR_DUP_BY_SOURCE_SQL)
-register("quality_score_linear", text_ops.quality_score_linear, text_ops.QUALITY_LINEAR_SQL)
-register("rewrite_pos_deletes_roundtrip", meta_rwdel.rewrite_pos_deletes_roundtrip, meta_rwdel.REWRITE_POS_DELETES_SQL)
-register("rollback_roundtrip", meta_commit.rollback_roundtrip, meta_commit.ROLLBACK_SQL)
-register("scan_plan_evolved", meta_del.scan_plan_evolved, meta_del.SCAN_PLAN_EVOLVED_SQL)
-register("scan_plan_mor", meta_del.scan_plan_mor, meta_del.SCAN_PLAN_MOR_SQL)
-register("scan_plan_tasks_dv", meta_del.scan_plan_tasks_dv, meta_del.SCAN_PLAN_TASKS_DV_SQL)
-register("scan_plan_transforms", meta_trans.scan_plan_transforms, meta_trans.SCAN_PLAN_TRANSFORMS_SQL)
-register("schema_evolution_name_mapping", meta_evo.schema_evolution_name_mapping, meta_evo.SCHEMA_EVOLUTION_NAME_MAPPING_SQL)
-register("schema_evolution_read", meta_evo.schema_evolution_read, meta_evo.SCHEMA_EVOLUTION_READ_SQL)
-register("sorted_rewrite_prunes", meta_sort.sorted_rewrite_prunes, meta_sort.SORTED_REWRITE_SQL)
-register("update_where_roundtrip", meta_dml.update_where_roundtrip, meta_dml.UPDATE_WHERE_SQL)
-register("wap_publish_roundtrip", meta_commit.wap_publish_roundtrip, meta_commit.WAP_PUBLISH_SQL)
-# 43-50: the oldest r8 keys — Delta-adjacent and the reference's
-# distinguishing typed-bounds surface first
-register("delta_export_rows", _w_mig.delta_export_rows, _w_ivm.IVM_SQL)
-register("delta_migrate_rows", _w_mig.delta_migrate_rows, _w_delta.DELTA_LOG_SQL)
-register("mor_read_evolved", meta_del.mor_read_evolved, meta_del.MOR_READ_EVOLVED_SQL)
-register("commit_eq_delete_roundtrip", meta_commit.commit_eq_delete_roundtrip, meta_commit.COMMIT_EQ_DELETE_SQL)
-register("rewrite_datafiles_roundtrip", meta_rwdata.rewrite_datafiles_roundtrip, meta_rwdata.REWRITE_DATAFILES_SQL)
-register("meta_position_deletes", meta_del.meta_position_deletes, meta_del.META_POSITION_DELETES_SQL)
-register("meta_typed_bounds", meta_tables.meta_typed_bounds, meta_tables.META_TYPED_BOUNDS_SQL)
-register("row_lineage_rows", meta_del.row_lineage_rows, meta_del.ROW_LINEAGE_SQL)
-# ========================= END ROUND-12 WINDOW ====================
-# Former round-10 window below: register() overwrites never move a
-# key, so these keep their (fn, sql) alive at slots 51+; comments
-# describe the round-10 budget.
-
-# 1: canary probe
-register("probe_double", probes.probe_double, probes.PROBE_DOUBLE_SQL, raw=True)
-# 2-9: FIRST CERTIFICATION — the 8 past-window r9 newcomers
-register("dedup_images_dhash", _w_img.dedup_images_dhash, _w_img.DEDUP_IMAGES_SQL)
-register("dedup_audio_afp", _w_aud.dedup_audio_afp, _w_aud.DEDUP_AUDIO_SQL)
-register(
-    "dedup_videos_framehash", _w_vid.dedup_videos_framehash, _w_vid.DEDUP_VIDEOS_SQL
-)
-register(
-    "media_stream_dedup_rows",
-    _w_media.media_stream_dedup_rows,
-    _w_media.MEDIA_STREAM_DEDUP_SQL,
-)
-register("bm25_topk", _w_bm25.bm25_topk, _w_bm25.BM25_TOPK_SQL)
-register("delta_replicate_rows", _w_mig.delta_replicate_rows, _w_mig.DELTA_REPLICATE_SQL)
-register(
-    "delta_replicate_full_rows",
-    _w_mig.delta_replicate_full_rows,
-    _w_delta.DELTA_LOG_SQL,
-)
-register(
-    "meta_metadata_log", _w_tables.meta_metadata_log, _w_tables.META_METADATA_LOG_SQL
-)
-# 10: NEW r10 — MIN/MAX materialized view (group-scoped recompute)
-register("view_ivm_minmax", _w_ivm.view_ivm_minmax, _w_ivm.VIEW_IVM_MINMAX_SQL)
-# 11-13: changed-this-round re-certification
-register("view_ivm_roundtrip", _w_ivm.view_ivm_roundtrip, _w_ivm.VIEW_IVM_SQL)
-register(
-    "binpack_rewrite_roundtrip",
-    _w_rwdata.binpack_rewrite_roundtrip,
-    _w_rwdata.BINPACK_REWRITE_SQL,
-)
-register(
-    "orphan_delete_roundtrip",
-    _w_maint.orphan_delete_roundtrip,
-    _w_maint.ORPHAN_DELETE_SQL,
-)
-# 14-26: the full r5-evidence cohort
-register("decile_value_customers", analytics.decile_value_customers, analytics.DECILE_SQL)
-register("events_dedup_exact", events.events_dedup_exact, events.EVENTS_DEDUP_SQL)
-register("events_props_stats", events.events_props_stats, events.EVENTS_PROPS_SQL)
-register(
-    "expire_snapshots_plan", _w_snap.expire_snapshots_plan, _w_snap.EXPIRE_SNAPSHOTS_PLAN_SQL
-)
-register("funnel_windowed", events.funnel_windowed, events.FUNNEL_WINDOWED_SQL)
-register("meta_history_multi", _w_snap.meta_history_multi, _w_snap.META_HISTORY_MULTI_SQL)
-register(
-    "meta_snapshots_multi", _w_snap.meta_snapshots_multi, _w_snap.META_SNAPSHOTS_MULTI_SQL
-)
-register("orders_cume_dist", analytics.orders_cume_dist, analytics.CUME_DIST_SQL)
-register("orphan_files_current", _w_snap.orphan_files_current, _w_snap.ORPHAN_FILES_SQL)
-register("probe_string", probes.probe_string, probes.PROBE_STRING_SQL, raw=True)
-register("retention_matrix", events.retention_matrix, events.RETENTION_MATRIX_SQL)
-register("sliding_window_agg", events.sliding_window_agg, events.SLIDING_WINDOW_SQL)
-register("stratified_sample", sampling.stratified_sample, sampling.STRATIFIED_SAMPLE_SQL)
-# 27-43: the full r6-evidence cohort
-register("ann_ivf_topk", similarity.ann_ivf_topk, similarity.ANN_IVF_SQL)
-register("compaction_plan", _w_snap.compaction_plan, _w_snap.COMPACTION_PLAN_SQL)
-register("corpus_filter_funnel", text_ops.corpus_filter_funnel, text_ops.CORPUS_FUNNEL_SQL)
-register(
-    "decontaminate_minhash", dedup.decontaminate_minhash, dedup.DECONTAMINATE_MINHASH_SQL
-)
-register("decontaminate_ngram", dedup.decontaminate_ngram, dedup.DECONTAMINATE_SQL)
-register("dedup_clusters", components.dedup_clusters, components.DEDUP_CLUSTERS_SQL)
-register("dedup_minhash_lsh", dedup.dedup_minhash_lsh, dedup.DEDUP_MINHASH_SQL)
-register("dedup_simhash", dedup.dedup_simhash, dedup.DEDUP_SIMHASH_SQL)
-register("doc_repetition_stats", text_ops.doc_repetition_stats, text_ops.DOC_REPETITION_SQL)
-register(
-    "files_added_between", _w_snap.files_added_between_q, _w_snap.FILES_ADDED_BETWEEN_SQL
-)
-register("files_at_snapshot", _w_snap.files_at_snapshot, _w_snap.FILES_AT_SNAPSHOT_SQL)
-register(
-    "meta_entry_status_dist",
-    _w_snap.meta_entry_status_dist,
-    _w_snap.META_ENTRY_STATUS_DIST_SQL,
-)
-register("meta_manifests", _w_snap.meta_manifests, _w_snap.META_MANIFESTS_SQL)
-register(
-    "meta_rewritten_files", _w_snap.meta_rewritten_files, _w_snap.META_REWRITTEN_FILES_SQL
-)
-register("mixture_plan", sampling.mixture_plan, sampling.MIXTURE_PLAN_SQL)
-register("pii_scrub_stats", text_ops.pii_scrub_stats, text_ops.PII_SCRUB_SQL)
-register("source_dup_stats", text_ops.source_dup_stats, text_ops.SOURCE_DUP_SQL)
-# 44-50: the oldest r7 keys (first wave of the r7 refresh)
-register("asof_join_events_orders", events.asof_join_events_orders, events.ASOF_SQL)
-register("dedup_exact", dedup.dedup_exact, dedup.DEDUP_EXACT_SQL)
-register("q9_product_type_profit", tpch.q9_product_type_profit, tpch.Q9_SQL)
-register("top_k_per_group", analytics.top_k_per_group, analytics.TOP_K_SQL)
-register("ann_topk_bruteforce", similarity.ann_topk_bruteforce, similarity.ANN_BRUTE_SQL)
-register("changelog_rows", meta_changelog.changelog_rows, meta_changelog.CHANGELOG_SQL)
-register(
-    "commit_append_files", meta_commit.commit_append_files, meta_commit.COMMIT_APPEND_SQL
-)
-# ========================= END ROUND-10 WINDOW ====================
-# Registrations below keep every other key alive (overwrites never
-# move a key); their old window comments describe rounds ≤8.
-
-# r9 newcomer PAST the window (window oversubscribed; golden-oracle
-# local parity runs every pytest; first driver certification r10):
-# continuous Iceberg→Delta replication with checkpoint WRITE
-from .sources import migrate as _w_migrate  # noqa: E402
-
-register(
-    "delta_replicate_rows",
-    _w_migrate.delta_replicate_rows,
-    _w_migrate.DELTA_REPLICATE_SQL,
-)
-# ...and FULL-FIDELITY Delta→Iceberg replication (removes included;
-# oracle = DuckDB's pure-SQL replay of the DELTA transaction log,
-# compared against the replica head read through the ICEBERG reader)
-register(
-    "delta_replicate_full_rows",
-    _w_migrate.delta_replicate_full_rows,
-    _w_delta.DELTA_LOG_SQL,
-)
-# BM25 retrieval scoring (r9 newcomer past the window; certified
-# surface is integer-exact rank/tf/dl — the double score stays
-# internal because cross-engine float SUMS are ULP-order-dependent)
-from .operators import bm25 as _bm25_ops  # noqa: E402
-
-register("bm25_topk", _bm25_ops.bm25_topk, _bm25_ops.BM25_TOPK_SQL)
-# $metadata_log_entries over a create→append×3→SET/UNSET
-# TBLPROPERTIES chain (r9 newcomer past the window)
-register(
-    "meta_metadata_log", _w_tables.meta_metadata_log, _w_tables.META_METADATA_LOG_SQL
-)
-# perceptual IMAGE dedup: dHash over really-decoded pixels (BMP/PNG
-# re-encode at Hamming 0, patched copy within threshold), banded
-# Hamming join — the SimHash shape on the multimodal battery
-from .operators import image_dedup as _img_dedup  # noqa: E402
-
-register(
-    "dedup_images_dhash", _img_dedup.dedup_images_dhash, _img_dedup.DEDUP_IMAGES_SQL
-)
-# perceptual AUDIO dedup: spectral-band fingerprint over really-
-# decoded WAV/FLAC samples, same banded Hamming join
-from .operators import audio_dedup as _aud_dedup  # noqa: E402
-
-register("dedup_audio_afp", _aud_dedup.dedup_audio_afp, _aud_dedup.DEDUP_AUDIO_SQL)
-# perceptual VIDEO dedup: per-frame dHash over an MJPEG-style MP4
-# track (real box walk + real JPEG decode), frame-vote clip pairs
-from .operators import video_dedup as _vid_dedup  # noqa: E402
-
-register(
-    "dedup_videos_framehash",
-    _vid_dedup.dedup_videos_framehash,
-    _vid_dedup.DEDUP_VIDEOS_SQL,
-)
-# streaming × multimodal: dHash intake dedup over an image STREAM
-# (stream == batch pinned in-query; min-id survivor aggregation)
-from .streaming import media as _stream_media  # noqa: E402
-
-register(
-    "media_stream_dedup_rows",
-    _stream_media.media_stream_dedup_rows,
-    _stream_media.MEDIA_STREAM_DEDUP_SQL,
+# (name, fn, oracle_sql, raw), one row per query. ORDER IS LOAD-BEARING:
+# the driver adjudicates only the first 50 entries, and slot 1 is the
+# ``probe_double`` canary for a change in the driver's value-hash
+# canonicalization.
+_QUERIES: tuple[Entry, ...] = (
+    ("probe_double", probes.probe_double, probes.PROBE_DOUBLE_SQL, True),
+    ("delta_row_tracking_rows", delta_log.delta_row_tracking_rows,
+     delta_log.DELTA_ROW_TRACKING_SQL, False),
+    ("quality_model_check", quality_model.quality_model_check,
+     quality_model.QUALITY_MODEL_CHECK_SQL, False),
+    ("geo_scan_rows", snapshots.geo_scan_rows, snapshots.GEO_SCAN_SQL, False),
+    ("lineage_bridge_rows", migrate.lineage_bridge_rows, migrate.LINEAGE_BRIDGE_SQL, False),
+    ("delta_ict_rows", delta_log.delta_ict_rows, delta_log.DELTA_ICT_SQL, False),
+    ("rest_view_rows", views.rest_view_rows, views.REST_VIEW_SQL, False),
+    ("cdc_replicate_roundtrip", cdc.cdc_replicate_roundtrip, cdc.CDC_REPLICATE_SQL, False),
+    ("changelog_stream_rows", cdc.changelog_stream_rows, cdc.CHANGELOG_STREAM_SQL, False),
+    ("column_stats_orders", stats.column_stats_orders, stats.COLUMN_STATS_SQL, False),
+    ("commit_delete_roundtrip", commit.commit_delete_roundtrip, commit.COMMIT_DELETE_SQL, False),
+    ("commit_eq_delete_roundtrip", commit.commit_eq_delete_roundtrip,
+     commit.COMMIT_EQ_DELETE_SQL, False),
+    ("dedup_survivors", components.dedup_survivors, components.DEDUP_SURVIVORS_SQL, False),
+    ("delete_compaction_plan", deletes.delete_compaction_plan,
+     deletes.DELETE_COMPACTION_SQL, False),
+    ("delete_where_dv_roundtrip", dml.delete_where_dv_roundtrip, dml.DELETE_WHERE_DV_SQL, False),
+    ("delete_where_roundtrip", dml.delete_where_roundtrip, dml.DELETE_WHERE_SQL, False),
+    ("delta_migrate_rows", migrate.delta_migrate_rows, delta_log.DELTA_LOG_SQL, False),
+    ("delta_replicate_full_rows", migrate.delta_replicate_full_rows,
+     delta_log.DELTA_LOG_SQL, False),
+    ("embedding_near_dup", similarity.embedding_near_dup, similarity.NEAR_DUP_SQL, False),
+    ("expire_execute_roundtrip", commit.expire_execute_roundtrip,
+     commit.EXPIRE_EXECUTE_SQL, False),
+    ("files_at_snapshot_mor", deletes.files_at_snapshot_mor,
+     deletes.FILES_AT_SNAPSHOT_MOR_SQL, False),
+    ("files_at_tag", commit.files_at_tag, commit.FILES_AT_TAG_SQL, False),
+    ("incremental_stream_rows", incremental.incremental_stream_rows,
+     incremental.INCREMENTAL_STREAM_SQL, False),
+    ("merge_into_roundtrip", dml.merge_into_roundtrip, dml.MERGE_INTO_SQL, False),
+    ("merge_transform_partitions", transforms.merge_transform_partitions,
+     transforms.MERGE_TRANSFORM_PARTITIONS_SQL, False),
+    ("meta_all_files", snapshots.meta_all_files, snapshots.META_ALL_FILES_SQL, False),
+    ("meta_delete_files", deletes.meta_delete_files, deletes.META_DELETE_FILES_SQL, False),
+    ("meta_dv_blobs", deletes.meta_dv_blobs, deletes.META_DV_BLOBS_SQL, False),
+    ("meta_partition_stats", partition_stats.meta_partition_stats,
+     partition_stats.META_PARTITION_STATS_SQL, False),
+    ("meta_position_deletes", deletes.meta_position_deletes,
+     deletes.META_POSITION_DELETES_SQL, False),
+    ("meta_refs", commit.meta_refs, commit.META_REFS_SQL, False),
+    ("meta_schemas", evolution.meta_schemas, evolution.META_SCHEMAS_SQL, False),
+    ("meta_typed_bounds", tables.meta_typed_bounds, tables.META_TYPED_BOUNDS_SQL, False),
+    ("mor_live_rows_dv", deletes.mor_live_rows_dv, deletes.MOR_LIVE_ROWS_DV_SQL, False),
+    ("mor_read_evolved", deletes.mor_read_evolved, deletes.MOR_READ_EVOLVED_SQL, False),
+    ("near_dup_rate_by_source", dedup.near_dup_rate_by_source,
+     dedup.NEAR_DUP_BY_SOURCE_SQL, False),
+    ("quality_score_linear", text.quality_score_linear, text.QUALITY_LINEAR_SQL, False),
+    ("rewrite_datafiles_roundtrip", rewrite_data.rewrite_datafiles_roundtrip,
+     rewrite_data.REWRITE_DATAFILES_SQL, False),
+    ("rewrite_pos_deletes_roundtrip", rewrite_deletes.rewrite_pos_deletes_roundtrip,
+     rewrite_deletes.REWRITE_POS_DELETES_SQL, False),
+    ("rollback_roundtrip", commit.rollback_roundtrip, commit.ROLLBACK_SQL, False),
+    ("row_lineage_rows", deletes.row_lineage_rows, deletes.ROW_LINEAGE_SQL, False),
+    ("scan_plan_evolved", deletes.scan_plan_evolved, deletes.SCAN_PLAN_EVOLVED_SQL, False),
+    ("scan_plan_mor", deletes.scan_plan_mor, deletes.SCAN_PLAN_MOR_SQL, False),
+    ("scan_plan_tasks_dv", deletes.scan_plan_tasks_dv, deletes.SCAN_PLAN_TASKS_DV_SQL, False),
+    ("scan_plan_transforms", transforms.scan_plan_transforms,
+     transforms.SCAN_PLAN_TRANSFORMS_SQL, False),
+    ("schema_evolution_name_mapping", evolution.schema_evolution_name_mapping,
+     evolution.SCHEMA_EVOLUTION_NAME_MAPPING_SQL, False),
+    ("schema_evolution_read", evolution.schema_evolution_read,
+     evolution.SCHEMA_EVOLUTION_READ_SQL, False),
+    ("sorted_rewrite_prunes", sortorder.sorted_rewrite_prunes,
+     sortorder.SORTED_REWRITE_SQL, False),
+    ("update_where_roundtrip", dml.update_where_roundtrip, dml.UPDATE_WHERE_SQL, False),
+    ("wap_publish_roundtrip", commit.wap_publish_roundtrip, commit.WAP_PUBLISH_SQL, False),
+    # slot 51 onwards: past the driver's window
+    ("rest_commit_roundtrip", rest_ops.rest_commit_roundtrip, rest_ops.REST_COMMIT_SQL, False),
+    ("variant_bridge_rows", migrate.variant_bridge_rows, migrate.VARIANT_BRIDGE_SQL, False),
+    ("domain_checkpoint_rows", delta_log.domain_checkpoint_rows,
+     delta_log.DOMAIN_CHECKPOINT_SQL, False),
+    ("rest_catalog_rows", rest_catalog.rest_catalog_rows, rest_catalog.REST_CATALOG_SQL, False),
+    ("parquet_import_rows", parquet_import.parquet_import_rows,
+     parquet_import.PARQUET_IMPORT_SQL, False),
+    ("delta_v2_checkpoint_rows", delta_log.delta_v2_checkpoint_rows,
+     delta_log.DELTA_V2_CHECKPOINT_SQL, False),
+    ("ann_ivf_topk", similarity.ann_ivf_topk, similarity.ANN_IVF_SQL, False),
+    ("ann_topk_bruteforce", similarity.ann_topk_bruteforce, similarity.ANN_BRUTE_SQL, False),
+    ("asof_join_events_orders", events.asof_join_events_orders, events.ASOF_SQL, False),
+    ("binpack_rewrite_roundtrip", rewrite_data.binpack_rewrite_roundtrip,
+     rewrite_data.BINPACK_REWRITE_SQL, False),
+    ("bm25_topk", bm25.bm25_topk, bm25.BM25_TOPK_SQL, False),
+    ("changelog_rows", changelog.changelog_rows, changelog.CHANGELOG_SQL, False),
+    ("commit_append_files", commit.commit_append_files, commit.COMMIT_APPEND_SQL, False),
+    ("compaction_plan", snapshots.compaction_plan, snapshots.COMPACTION_PLAN_SQL, False),
+    ("corpus_filter_funnel", text.corpus_filter_funnel, text.CORPUS_FUNNEL_SQL, False),
+    ("decile_value_customers", analytics.decile_value_customers, analytics.DECILE_SQL, False),
+    ("decontaminate_minhash", dedup.decontaminate_minhash, dedup.DECONTAMINATE_MINHASH_SQL, False),
+    ("decontaminate_ngram", dedup.decontaminate_ngram, dedup.DECONTAMINATE_SQL, False),
+    ("dedup_audio_afp", audio_dedup.dedup_audio_afp, audio_dedup.DEDUP_AUDIO_SQL, False),
+    ("dedup_clusters", components.dedup_clusters, components.DEDUP_CLUSTERS_SQL, False),
+    ("dedup_exact", dedup.dedup_exact, dedup.DEDUP_EXACT_SQL, False),
+    ("dedup_images_dhash", image_dedup.dedup_images_dhash, image_dedup.DEDUP_IMAGES_SQL, False),
+    ("dedup_minhash_lsh", dedup.dedup_minhash_lsh, dedup.DEDUP_MINHASH_SQL, False),
+    ("dedup_simhash", dedup.dedup_simhash, dedup.DEDUP_SIMHASH_SQL, False),
+    ("dedup_videos_framehash", video_dedup.dedup_videos_framehash,
+     video_dedup.DEDUP_VIDEOS_SQL, False),
+    ("doc_repetition_stats", text.doc_repetition_stats, text.DOC_REPETITION_SQL, False),
+    ("events_dedup_exact", events.events_dedup_exact, events.EVENTS_DEDUP_SQL, False),
+    ("events_props_stats", events.events_props_stats, events.EVENTS_PROPS_SQL, False),
+    ("expire_snapshots_plan", snapshots.expire_snapshots_plan,
+     snapshots.EXPIRE_SNAPSHOTS_PLAN_SQL, False),
+    ("files_added_between", snapshots.files_added_between_q,
+     snapshots.FILES_ADDED_BETWEEN_SQL, False),
+    ("files_at_snapshot", snapshots.files_at_snapshot, snapshots.FILES_AT_SNAPSHOT_SQL, False),
+    ("funnel_windowed", events.funnel_windowed, events.FUNNEL_WINDOWED_SQL, False),
+    ("media_stream_dedup_rows", media.media_stream_dedup_rows,
+     media.MEDIA_STREAM_DEDUP_SQL, False),
+    ("meta_entry_status_dist", snapshots.meta_entry_status_dist,
+     snapshots.META_ENTRY_STATUS_DIST_SQL, False),
+    ("meta_history_multi", snapshots.meta_history_multi, snapshots.META_HISTORY_MULTI_SQL, False),
+    ("meta_rewritten_files", snapshots.meta_rewritten_files,
+     snapshots.META_REWRITTEN_FILES_SQL, False),
+    ("meta_snapshots_multi", snapshots.meta_snapshots_multi,
+     snapshots.META_SNAPSHOTS_MULTI_SQL, False),
+    ("mixture_plan", sampling.mixture_plan, sampling.MIXTURE_PLAN_SQL, False),
+    ("orders_cume_dist", analytics.orders_cume_dist, analytics.CUME_DIST_SQL, False),
+    ("orphan_files_current", snapshots.orphan_files_current, snapshots.ORPHAN_FILES_SQL, False),
+    ("pii_scrub_stats", text.pii_scrub_stats, text.PII_SCRUB_SQL, False),
+    ("q9_product_type_profit", tpch.q9_product_type_profit, tpch.Q9_SQL, False),
+    ("retention_matrix", events.retention_matrix, events.RETENTION_MATRIX_SQL, False),
+    ("sliding_window_agg", events.sliding_window_agg, events.SLIDING_WINDOW_SQL, False),
+    ("source_dup_stats", text.source_dup_stats, text.SOURCE_DUP_SQL, False),
+    ("stratified_sample", sampling.stratified_sample, sampling.STRATIFIED_SAMPLE_SQL, False),
+    ("top_k_per_group", analytics.top_k_per_group, analytics.TOP_K_SQL, False),
+    ("view_ivm_minmax", ivm.view_ivm_minmax, ivm.VIEW_IVM_MINMAX_SQL, False),
+    ("view_ivm_roundtrip", ivm.view_ivm_roundtrip, ivm.VIEW_IVM_SQL, False),
+    ("delta_schema_evolution_rows", delta_log.delta_schema_evolution_rows,
+     delta_log.DELTA_SCHEMA_EVOLUTION_SQL, False),
+    ("delta_type_widening_rows", delta_log.delta_type_widening_rows,
+     delta_log.DELTA_TYPE_WIDENING_SQL, False),
+    ("delta_variant_rows", delta_log.delta_variant_rows, delta_log.DELTA_VARIANT_SQL, False),
+    ("delta_vacuum_rows", delta_log.delta_vacuum_rows, delta_log.DELTA_VACUUM_SQL, False),
+    ("delta_log_rows", delta_log.delta_log_rows, delta_log.DELTA_LOG_SQL, False),
+    ("delta_replicate_rows", migrate.delta_replicate_rows, migrate.DELTA_REPLICATE_SQL, False),
+    ("delta_dv_rows", delta_log.delta_dv_rows, delta_log.DELTA_DV_SQL, False),
+    ("ann_ivfpq_recall_check", pq.ann_ivfpq_recall_check, pq.ANN_RECALL_CHECK_SQL, False),
+    ("ann_pq_recall_check", pq.ann_pq_recall_check, pq.ANN_RECALL_CHECK_SQL, False),
+    ("approx_percentiles_check", analytics.approx_percentiles_check,
+     analytics.APPROX_CHECK_SQL, False),
+    ("bpe_token_check", bpe.bpe_token_check, bpe.BPE_TOKEN_CHECK_SQL, False),
+    ("customer_running_total", analytics.customer_running_total,
+     analytics.RUNNING_TOTAL_SQL, False),
+    ("dataset_split", sampling.dataset_split, sampling.DATASET_SPLIT_SQL, False),
+    ("dedup_ngram_jaccard", dedup.dedup_ngram_jaccard, dedup.DEDUP_NGRAM_SQL, False),
+    ("dedup_semantic_check", semdedup.dedup_semantic_check,
+     semdedup.DEDUP_SEMANTIC_CHECK_SQL, False),
+    ("dedup_substring_coverage", dedup.dedup_substring_coverage, dedup.DEDUP_SUBSTRING_SQL, False),
+    ("embedding_norm_stats", similarity.embedding_norm_stats, similarity.NORM_STATS_SQL, False),
+    ("funnel_view_click_purchase", events.funnel_view_click_purchase, events.FUNNEL_SQL, False),
+    ("monthly_revenue_delta", analytics.monthly_revenue_delta, analytics.MONTHLY_DELTA_SQL, False),
+    ("pack_sequences_check", packing.pack_sequences_check, packing.PACK_CHECK_SQL, False),
+    ("percentiles_order_value", analytics.percentiles_order_value,
+     analytics.PERCENTILES_SQL, False),
+    ("pivot_status_by_priority", analytics.pivot_status_by_priority, analytics.PIVOT_SQL, False),
+    ("q12_priority_shipping", tpch.q12_priority_shipping, tpch.Q12_SQL, False),
+    ("q13_customer_distribution", tpch.q13_customer_distribution, tpch.Q13_SQL, False),
+    ("q14_promo_effect", tpch.q14_promo_effect, tpch.Q14_SQL, False),
+    ("q15_top_supplier", tpch_ext.q15_top_supplier, tpch_ext.Q15_SQL, False),
+    ("q16_supplier_part_variety", tpch_ext.q16_supplier_part_variety, tpch_ext.Q16_SQL, False),
+    ("q17_small_quantity_revenue", tpch_ext.q17_small_quantity_revenue, tpch_ext.Q17_SQL, False),
+    ("q19_discounted_revenue", tpch.q19_discounted_revenue, tpch.Q19_SQL, False),
+    ("q1_pricing_summary", tpch.q1_pricing_summary, tpch.Q1_SQL, False),
+    ("q20_promo_part_shippers", tpch_ext.q20_promo_part_shippers, tpch_ext.Q20_SQL, False),
+    ("q21_sole_fault_supplier", tpch_ext.q21_sole_fault_supplier, tpch_ext.Q21_SQL, False),
+    ("q22_global_sales_opportunity", tpch.q22_global_sales_opportunity, tpch.Q22_SQL, False),
+    ("q4_order_priority", tpch.q4_order_priority, tpch.Q4_SQL, False),
+    ("q5_local_supplier_volume", tpch.q5_local_supplier_volume, tpch.Q5_SQL, False),
+    ("q6_revenue_change", tpch.q6_revenue_change, tpch.Q6_SQL, False),
+    ("q7_volume_shipping", tpch.q7_volume_shipping, tpch.Q7_SQL, False),
+    ("retention_day_n", events.retention_day_n, events.RETENTION_SQL, False),
+    ("session_window_agg", events.session_window_agg, events.SESSION_WINDOW_SQL, False),
+    ("sessionize_events", events.sessionize_events, events.SESSIONIZE_SQL, False),
+    ("text_quality", text.text_quality, text.TEXT_QUALITY_SQL, False),
+    ("text_stats", text.text_stats, text.TEXT_STATS_SQL, False),
+    ("token_count_histogram", sampling.token_count_histogram, sampling.TOKEN_HISTOGRAM_SQL, False),
+    ("view_roundtrip_rows", views.view_roundtrip_rows, views.VIEW_ROUNDTRIP_SQL, False),
+    ("meta_manifests", snapshots.meta_manifests, snapshots.META_MANIFESTS_SQL, False),
+    ("meta_metadata_log", tables.meta_metadata_log, tables.META_METADATA_LOG_SQL, False),
+    ("delta_cdf_rows", delta_log.delta_cdf_rows, delta_log.DELTA_CDF_SQL, False),
+    ("delta_cdf_replicate_rows", migrate.delta_cdf_replicate_rows, delta_log.DELTA_LOG_SQL, False),
+    ("delta_export_rows", migrate.delta_export_rows, ivm.IVM_SQL, False),
+    ("orphan_delete_roundtrip", maintenance.orphan_delete_roundtrip,
+     maintenance.ORPHAN_DELETE_SQL, False),
+    ("probe_string", probes.probe_string, probes.PROBE_STRING_SQL, True),
+    ("meta_stats_incremental", table_stats.meta_stats_incremental,
+     table_stats.META_STATS_INCREMENTAL_SQL, False),
+    ("lm_bigram_stats", text.lm_bigram_stats, text.LM_BIGRAM_SQL, False),
+    ("q2_min_cost_supplier", tpch_ext.q2_min_cost_supplier, tpch_ext.Q2_SQL, False),
+    ("q3_shipping_priority", tpch.q3_shipping_priority, tpch.Q3_SQL, False),
+    ("q8_market_share", tpch_ext.q8_market_share, tpch_ext.Q8_SQL, False),
+    ("q10_returned_items", tpch.q10_returned_items, tpch.Q10_SQL, False),
+    ("q11_important_part_value", tpch_ext.q11_important_part_value, tpch_ext.Q11_SQL, False),
+    ("q18_large_volume_customers", tpch.q18_large_volume_customers, tpch.Q18_SQL, False),
+    ("rollup_revenue", analytics.rollup_revenue, analytics.ROLLUP_SQL, False),
+    ("cube_status_priority", analytics.cube_status_priority, analytics.CUBE_SQL, False),
+    ("spec_evolution_write", evolution.spec_evolution_write_roundtrip,
+     evolution.SPEC_EVOLUTION_WRITE_SQL, False),
+    ("text_fingerprint", text.text_fingerprint, text.TEXT_FINGERPRINT_SQL, False),
+    ("text_langid", text.text_langid, text.TEXT_LANGID_SQL, False),
+    ("commit_conflict_roundtrip", concurrency.commit_conflict_roundtrip,
+     concurrency.COMMIT_CONFLICT_SQL, False),
+    ("meta_stats_partition_scoped", table_stats.meta_stats_partition_scoped,
+     table_stats.META_STATS_PARTITION_SCOPED_SQL, False),
+    ("ann_ivfpq_topk", pq.ann_ivfpq_topk, None, False),
+    ("stream_ingest_roundtrip", ingest.stream_ingest_roundtrip, ingest.STREAM_INGEST_SQL, False),
+    ("meta_table_stats", table_stats.meta_table_stats, table_stats.META_TABLE_STATS_SQL, False),
+    ("mor_live_rows", deletes.mor_live_rows, deletes.MOR_LIVE_ROWS_SQL, False),
+    ("changelog_agg_maintenance", ivm.changelog_agg_maintenance, ivm.IVM_SQL, False),
+    ("stream_ivm_rows", stream_ivm.stream_ivm_rows, stream_ivm.STREAM_IVM_SQL, False),
+    ("range_join_transit", rangejoin.range_join_transit, rangejoin.RANGE_JOIN_TRANSIT_SQL, False),
+    ("dedup_paragraph_stats", dedup.dedup_paragraph_stats, dedup.DEDUP_PARAGRAPH_SQL, False),
+    ("wap_cherrypick_roundtrip", commit.wap_cherrypick_roundtrip,
+     commit.WAP_CHERRYPICK_SQL, False),
+    ("media_probe_stats", multimodal.media_probe_stats, multimodal.MEDIA_PROBE_SQL, False),
+    ("media_frame_sample_stats", multimodal.media_frame_sample_stats,
+     multimodal.MEDIA_FRAME_SAMPLE_SQL, False),
+    ("decontaminate_embedding", similarity.decontaminate_embedding,
+     similarity.DECONTAMINATE_EMB_SQL, False),
+    ("group_sample_topk", sampling.group_sample_topk, sampling.GROUP_SAMPLE_SQL, False),
+    ("snapshot_summary_audit", snapshots.snapshot_summary_audit,
+     snapshots.SNAPSHOT_SUMMARY_AUDIT_SQL, False),
+    ("meta_all_manifests", snapshots.meta_all_manifests, snapshots.META_ALL_MANIFESTS_SQL, False),
+    ("bpe_roundtrip_check", bpe.bpe_roundtrip_check, bpe.BPE_ROUNDTRIP_SQL, False),
+    ("bpe_token_stats", bpe.bpe_token_stats, bpe.BPE_TOKEN_STATS_SQL, False),
+    ("dedup_semantic_pairs", semdedup.dedup_semantic_pairs,
+     semdedup.DEDUP_SEMANTIC_PAIRS_SQL, False),
+    ("dedup_semantic_stats", semdedup.dedup_semantic_stats,
+     semdedup.DEDUP_SEMANTIC_STATS_SQL, False),
+    ("stream_join_rows", jobs.stream_join_rows, jobs.STREAM_JOIN_SQL, False),
+    ("wap_audit_publish_roundtrip", audits.wap_audit_publish_roundtrip,
+     audits.WAP_AUDIT_SQL, False),
+    ("ann_pq_topk", pq.ann_pq_topk, None, False),
+    ("scan_plan_pruned", snapshots.scan_plan_pruned, snapshots.SCAN_PLAN_PRUNED_SQL, False),
+    ("meta_manifest_entries", tables.meta_manifest_entries,
+     tables.META_MANIFEST_ENTRIES_SQL, False),
+    ("meta_files", tables.meta_files, tables.META_FILES_SQL, False),
+    ("meta_partitions", tables.meta_partitions, tables.META_PARTITIONS_SQL, False),
+    ("meta_snapshots", tables.meta_snapshots, tables.META_SNAPSHOTS_SQL, False),
+    ("meta_history", tables.meta_history, tables.META_HISTORY_SQL, False),
+    ("approx_percentiles_order_value", analytics.approx_percentiles_order_value, None, False),
+    ("pack_sequences", packing.pack_sequences, None, False),
+    ("probe_decimal", probes.probe_decimal, probes.PROBE_DECIMAL_SQL, True),
+    ("probe_bigint", probes.probe_bigint, probes.PROBE_BIGINT_SQL, True),
+    ("probe_date", probes.probe_date, probes.PROBE_DATE_SQL, True),
+    ("probe_timestamp", probes.probe_timestamp, probes.PROBE_TIMESTAMP_SQL, True),
+    ("probe_boolean", probes.probe_boolean, probes.PROBE_BOOLEAN_SQL, True),
+    ("delta_ivm_rows", migrate.delta_ivm_rows, delta_log.DELTA_LOG_SQL, False),
 )
 
-# ------------------- 2-3: FIRST CERTIFICATION of the r7 newcomers
-# incremental statistics maintenance: theta union over ONLY the
-# appended files, byte-identical to a recompute (pytest-pinned)
-register(
-    "meta_stats_incremental",
-    meta_tstats.meta_stats_incremental,
-    meta_tstats.META_STATS_INCREMENTAL_SQL,
-)
-# corpus-LM bigram commonness score (the perplexity-filter shape,
-# exact-integer certified surface; top-V capped twin lives in
-# lm_bigram_stats_capped with a bench drift sweep)
-register("lm_bigram_stats", text_ops.lm_bigram_stats, text_ops.LM_BIGRAM_SQL)
 
-# ------------------- r9 FIRST CERTIFICATION: materialized views ×
-# IVM (VERDICT r8 #6): Iceberg view + state table + refresh marker,
-# maintained purely from the changelog; oracle = full recompute
-from .iceberg import ivm as _meta_ivm_mv  # noqa: E402
-
-register(
-    "view_ivm_roundtrip", _meta_ivm_mv.view_ivm_roundtrip, _meta_ivm_mv.VIEW_IVM_SQL
-)
-
-# ------------------- r9 FIRST CERTIFICATION: SQL-checkable
-# companions for the rows-only quality gates (VERDICT r8 #4) — the
-# oracle recomputes probe-set/corpus totals genuinely; the recall /
-# structure invariants ride through the hash gate as pinned booleans
-from .operators import bpe as _bpe_chk  # noqa: E402
-from .operators import pq as _pq_chk  # noqa: E402
-from .operators import semdedup as _sem_chk  # noqa: E402
-
-register(
-    "ann_pq_recall_check", _pq_chk.ann_pq_recall_check, _pq_chk.ANN_RECALL_CHECK_SQL
-)
-register(
-    "ann_ivfpq_recall_check",
-    _pq_chk.ann_ivfpq_recall_check,
-    _pq_chk.ANN_RECALL_CHECK_SQL,
-)
-register("bpe_token_check", _bpe_chk.bpe_token_check, _bpe_chk.BPE_TOKEN_CHECK_SQL)
-register(
-    "dedup_semantic_check",
-    _sem_chk.dedup_semantic_check,
-    _sem_chk.DEDUP_SEMANTIC_CHECK_SQL,
-)
-
-# ------------------- 4-17: r4-evidence cohort refresh (partial —
-# see the window comment above for the 8 keys that ceded slots)
-register("q2_min_cost_supplier", tpch_ext.q2_min_cost_supplier, tpch_ext.Q2_SQL)
-register("q3_shipping_priority", tpch.q3_shipping_priority, tpch.Q3_SQL)
-register("q8_market_share", tpch_ext.q8_market_share, tpch_ext.Q8_SQL)
-register("q10_returned_items", tpch.q10_returned_items, tpch.Q10_SQL)
-register("q11_important_part_value", tpch_ext.q11_important_part_value, tpch_ext.Q11_SQL)
-register("q18_large_volume_customers", tpch.q18_large_volume_customers, tpch.Q18_SQL)
-# cross-doc substring coverage (took q20's slot — r4 row + two-SF
-# parity stand): the exact-substring dedup signal, exact-integer
-# certified
-register(
-    "dedup_substring_coverage",
-    dedup.dedup_substring_coverage,
-    dedup.DEDUP_SUBSTRING_SQL,
-)
-register("rollup_revenue", analytics.rollup_revenue, analytics.ROLLUP_SQL)
-register("cube_status_priority", analytics.cube_status_priority, analytics.CUBE_SQL)
-register("meta_typed_bounds", meta_tables.meta_typed_bounds, meta_tables.META_TYPED_BOUNDS_SQL)
-# binpack small-file compaction executor (took
-# funnel_view_click_purchase's slot — r4 row + two-SF parity stand)
-register(
-    "binpack_rewrite_roundtrip",
-    meta_rwdata.binpack_rewrite_roundtrip,
-    meta_rwdata.BINPACK_REWRITE_SQL,
-)
-# partition-spec evolution WRITE path (took retention_day_n's slot
-# — that key's r4 row + two-SF parity stand): unpartitioned →
-# evolve default spec → partitioned appends → cross-spec planning
-register(
-    "spec_evolution_write",
-    meta_evo.spec_evolution_write_roundtrip,
-    meta_evo.SPEC_EVOLUTION_WRITE_SQL,
-)
-register("text_fingerprint", text_ops.text_fingerprint, text_ops.TEXT_FINGERPRINT_SQL)
-register("text_langid", text_ops.text_langid, text_ops.TEXT_LANGID_SQL)
-
-# ------------------- 18-21: round-8 mid-round operators
-# optimistic-concurrency commits: append rebase onto a moved head,
-# validateDataFilesExist for staged position deletes, serializable
-# validateNoConflictingAppends for equality deletes (golden
-# four-writer scenario; every live-row count re-read via full MoR)
-register(
-    "commit_conflict_roundtrip",
-    meta_conc.commit_conflict_roundtrip,
-    meta_conc.COMMIT_CONFLICT_SQL,
-)
-# partition-scoped statistics maintenance for non-append ranges:
-# one-partition delete → one-partition recompute, untouched
-# partitions reuse registered sketches, table level = theta union
-register(
-    "meta_stats_partition_scoped",
-    meta_tstats.meta_stats_partition_scoped,
-    meta_tstats.META_STATS_PARTITION_SCOPED_SQL,
-)
-# IVF-PQ composition (rows-only: k-means; recall@5 >= 0.9 pinned by
-# pytest vs the exact baseline, monotone in nprobe)
-register("ann_ivfpq_topk", pq_ops.ann_ivfpq_topk, None)
-# streaming Iceberg SINK (foreachBatch staging + exactly-once batch
-# markers + optimistic append commits; golden oracle)
-register(
-    "stream_ingest_roundtrip",
-    stream_ingest.stream_ingest_roundtrip,
-    stream_ingest.STREAM_INGEST_SQL,
-)
-
-# ------------------- 29-33: changed-this-round re-certifications
-register(
-    "meta_table_stats",
-    meta_tstats.meta_table_stats,
-    meta_tstats.META_TABLE_STATS_SQL,
-)
-register(
-    "rewrite_datafiles_roundtrip",
-    meta_rwdata.rewrite_datafiles_roundtrip,
-    meta_rwdata.REWRITE_DATAFILES_SQL,
-)
-register("mor_live_rows", meta_del.mor_live_rows, meta_del.MOR_LIVE_ROWS_SQL)
-register(
-    "commit_eq_delete_roundtrip",
-    meta_commit.commit_eq_delete_roundtrip,
-    meta_commit.COMMIT_EQ_DELETE_SQL,
-)
-register("mor_read_evolved", meta_del.mor_read_evolved, meta_del.MOR_READ_EVOLVED_SQL)
-
-# ------------------- 34-42: FIRST CERTIFICATION of every operator
-# born THIS round (the r6/r7 lesson, twice flagged: newcomers must
-# not wait a round for driver evidence). All 9 also hold two-SF
-# local parity.
-from .iceberg import ivm as meta_ivm  # noqa: E402
-from .operators import multimodal as mm_ops  # noqa: E402
-from .operators import rangejoin  # noqa: E402
-from .streaming import ivm as stream_ivm_mod  # noqa: E402
-
-# incremental view maintenance from the CDC changelog (oracle = full
-# DuckDB recompute of head state; zero shared code)
-register(
-    "changelog_agg_maintenance",
-    meta_ivm.changelog_agg_maintenance,
-    meta_ivm.IVM_SQL,
-)
-# ...and its streaming dual (same independent recompute oracle)
-register("stream_ivm_rows", stream_ivm_mod.stream_ivm_rows, stream_ivm_mod.STREAM_IVM_SQL)
-# bucketized point-in-interval join (non-equi join family as a
-# Catalyst hash join; oracle = DuckDB range join)
-register(
-    "range_join_transit",
-    rangejoin.range_join_transit,
-    rangejoin.RANGE_JOIN_TRANSIT_SQL,
-)
-# chunk-level (pseudo-paragraph) dedup — repeated-passage removal
-register(
-    "dedup_paragraph_stats", dedup.dedup_paragraph_stats, dedup.DEDUP_PARAGRAPH_SQL
-)
-# append cherry-pick (WAP publish onto a moved head)
-register(
-    "wap_cherrypick_roundtrip",
-    meta_commit.wap_cherrypick_roundtrip,
-    meta_commit.WAP_CHERRYPICK_SQL,
-)
-# position_deletes metadata table (engine plans through manifests;
-# oracle reads the same physical parquet directly)
-register(
-    "meta_position_deletes",
-    meta_del.meta_position_deletes,
-    meta_del.META_POSITION_DELETES_SQL,
-)
-# real MP4/MP3/FLAC/Ogg container probing rollup (golden fixture)
-register("media_probe_stats", mm_ops.media_probe_stats, mm_ops.MEDIA_PROBE_SQL)
-# real MP4 frame sampling through the parsed sample table
-register(
-    "media_frame_sample_stats",
-    mm_ops.media_frame_sample_stats,
-    mm_ops.MEDIA_FRAME_SAMPLE_SQL,
-)
-# v3 ROW LINEAGE: commit-assigned first_row_id, _row_id stable
-# under MoR deletes (golden two-append + DV-delete scenario)
-register("row_lineage_rows", meta_del.row_lineage_rows, meta_del.ROW_LINEAGE_SQL)
-
-# ------------------- 36-50: FIRST CERTIFICATION, late-round cohort
-# (every remaining round-8 newcomer; the r5-refresh block that held
-# these slots slid past 50 — its r5 rows + two-SF parity stand)
-from .iceberg import audits as _meta_audits  # noqa: E402
-from .iceberg import views as _meta_views  # noqa: E402
-from .operators import bpe as _bpe_ops  # noqa: E402
-from .operators import semdedup as _semdedup_ops  # noqa: E402
-from .sources import delta_log as _delta_src  # noqa: E402
-from .sources import migrate as _migrate_src  # noqa: E402
-from .sources import parquet_import as _pq_import_src  # noqa: E402
-from .streaming import jobs as _stream_jobs  # noqa: E402
-
-register("delta_log_rows", _delta_src.delta_log_rows, _delta_src.DELTA_LOG_SQL)
-register("delta_migrate_rows", _migrate_src.delta_migrate_rows, _delta_src.DELTA_LOG_SQL)
-register("delta_export_rows", _migrate_src.delta_export_rows, meta_ivm.IVM_SQL)
-register(
-    "decontaminate_embedding",
-    similarity.decontaminate_embedding,
-    similarity.DECONTAMINATE_EMB_SQL,
-)
-register("group_sample_topk", sampling.group_sample_topk, sampling.GROUP_SAMPLE_SQL)
-register(
-    "parquet_import_rows",
-    _pq_import_src.parquet_import_rows,
-    _pq_import_src.PARQUET_IMPORT_SQL,
-)
-register(
-    "view_roundtrip_rows", _meta_views.view_roundtrip_rows, _meta_views.VIEW_ROUNDTRIP_SQL
-)
-register(
-    "snapshot_summary_audit",
-    meta_snap.snapshot_summary_audit,
-    meta_snap.SNAPSHOT_SUMMARY_AUDIT_SQL,
-)
-register(
-    "meta_all_manifests", meta_snap.meta_all_manifests, meta_snap.META_ALL_MANIFESTS_SQL
-)
-register("bpe_roundtrip_check", _bpe_ops.bpe_roundtrip_check, _bpe_ops.BPE_ROUNDTRIP_SQL)
-# r16 (VERDICT r15 #9): golden-VALUES oracle — trained-vocab
-# token totals pinned per (source, corpus), the rest recomputed
-register(
-    "bpe_token_stats", _bpe_ops.bpe_token_stats,
-    _bpe_ops.BPE_TOKEN_STATS_SQL,
-)
-register(
-    "dedup_semantic_pairs",
-    _semdedup_ops.dedup_semantic_pairs,
-    _semdedup_ops.DEDUP_SEMANTIC_PAIRS_SQL,
-)
-# r16 (VERDICT r15 #9): golden-VALUES oracle — zero-drop outcome
-# pinned, corpus size recomputed
-register(
-    "dedup_semantic_stats", _semdedup_ops.dedup_semantic_stats,
-    _semdedup_ops.DEDUP_SEMANTIC_STATS_SQL,
-)
-register(
-    "stream_join_rows", _stream_jobs.stream_join_rows, _stream_jobs.STREAM_JOIN_SQL
-)
-register(
-    "wap_audit_publish_roundtrip",
-    _meta_audits.wap_audit_publish_roundtrip,
-    _meta_audits.WAP_AUDIT_SQL,
-)
-
-# === PAST-50 MARKER ===============================================
-# Everything REGISTERED below sits past the driver's 50-entry window
-# this round and holds a green r4-r7 driver row (or is a retired /
-# rows-only diagnostic); local test_oracle_parity still runs ALL
-# entries bit-exactly at two SFs every pytest run.
+def _index(entries: Iterable[Entry]) -> dict[str, tuple[QueryFn, str | None, bool]]:
+    """name → (fn, sql, raw) in table order; a name declared twice raises."""
+    registry: dict[str, tuple[QueryFn, str | None, bool]] = {}
+    for name, fn, sql, raw in entries:
+        if name in registry:
+            raise ValueError(f"query {name!r} declared twice")
+        registry[name] = (fn, sql, raw)
+    return registry
 
 
-def _register_past_window() -> None:
-    """Registrations past the driver's 50-entry window."""
-    register("probe_string", probes.probe_string, probes.PROBE_STRING_SQL, raw=True)
-
-    # r7 first-certification cohort (all green r7)
-    register("meta_dv_blobs", meta_del.meta_dv_blobs, meta_del.META_DV_BLOBS_SQL)
-    register("mor_live_rows_dv", meta_del.mor_live_rows_dv, meta_del.MOR_LIVE_ROWS_DV_SQL)
-    register("scan_plan_tasks_dv", meta_del.scan_plan_tasks_dv, meta_del.SCAN_PLAN_TASKS_DV_SQL)
-    register(
-        "delete_where_dv_roundtrip",
-        meta_dml.delete_where_dv_roundtrip,
-        meta_dml.DELETE_WHERE_DV_SQL,
-    )
-    register(
-        "meta_partition_stats",
-        meta_pstats.meta_partition_stats,
-        meta_pstats.META_PARTITION_STATS_SQL,
-    )
-    register("meta_refs", meta_commit.meta_refs, meta_commit.META_REFS_SQL)
-    register("dedup_survivors", components.dedup_survivors, components.DEDUP_SURVIVORS_SQL)
-    register("ann_pq_topk", pq_ops.ann_pq_topk, None)
-    register(
-        "quality_score_linear", text_ops.quality_score_linear, text_ops.QUALITY_LINEAR_SQL
-    )
-    register(
-        "column_stats_orders", stats_ops.column_stats_orders, stats_ops.COLUMN_STATS_SQL
-    )
-    register(
-        "near_dup_rate_by_source",
-        dedup.near_dup_rate_by_source,
-        dedup.NEAR_DUP_BY_SOURCE_SQL,
-    )
-
-    # r7 re-cert block (apply_deletes / DML / CDC / transforms)
-    register("files_at_snapshot_mor", meta_del.files_at_snapshot_mor, meta_del.FILES_AT_SNAPSHOT_MOR_SQL)
-    register("meta_delete_files", meta_del.meta_delete_files, meta_del.META_DELETE_FILES_SQL)
-    register("scan_plan_evolved", meta_del.scan_plan_evolved, meta_del.SCAN_PLAN_EVOLVED_SQL)
-    register("scan_plan_mor", meta_del.scan_plan_mor, meta_del.SCAN_PLAN_MOR_SQL)
-    register(
-        "delete_compaction_plan",
-        meta_del.delete_compaction_plan,
-        meta_del.DELETE_COMPACTION_SQL,
-    )
-    register(
-        "commit_delete_roundtrip",
-        meta_commit.commit_delete_roundtrip,
-        meta_commit.COMMIT_DELETE_SQL,
-    )
-    register(
-        "delete_where_roundtrip", meta_dml.delete_where_roundtrip, meta_dml.DELETE_WHERE_SQL
-    )
-    register(
-        "update_where_roundtrip", meta_dml.update_where_roundtrip, meta_dml.UPDATE_WHERE_SQL
-    )
-    register(
-        "merge_into_roundtrip", meta_dml.merge_into_roundtrip, meta_dml.MERGE_INTO_SQL
-    )
-    register(
-        "cdc_replicate_roundtrip",
-        stream_cdc.cdc_replicate_roundtrip,
-        stream_cdc.CDC_REPLICATE_SQL,
-    )
-    register(
-        "changelog_rows", meta_changelog.changelog_rows, meta_changelog.CHANGELOG_SQL
-    )
-    register(
-        "changelog_stream_rows",
-        stream_cdc.changelog_stream_rows,
-        stream_cdc.CHANGELOG_STREAM_SQL,
-    )
-    register(
-        "incremental_stream_rows",
-        stream_inc.incremental_stream_rows,
-        stream_inc.INCREMENTAL_STREAM_SQL,
-    )
-    register(
-        "schema_evolution_read",
-        meta_evo.schema_evolution_read,
-        meta_evo.SCHEMA_EVOLUTION_READ_SQL,
-    )
-    register(
-        "schema_evolution_name_mapping",
-        meta_evo.schema_evolution_name_mapping,
-        meta_evo.SCHEMA_EVOLUTION_NAME_MAPPING_SQL,
-    )
-    register("meta_schemas", meta_evo.meta_schemas, meta_evo.META_SCHEMAS_SQL)
-    register(
-        "scan_plan_transforms",
-        meta_trans.scan_plan_transforms,
-        meta_trans.SCAN_PLAN_TRANSFORMS_SQL,
-    )
-    register(
-        "merge_transform_partitions",
-        meta_trans.merge_transform_partitions,
-        meta_trans.MERGE_TRANSFORM_PARTITIONS_SQL,
-    )
-    register(
-        "rewrite_pos_deletes_roundtrip",
-        meta_rwdel.rewrite_pos_deletes_roundtrip,
-        meta_rwdel.REWRITE_POS_DELETES_SQL,
-    )
-    register(
-        "rollback_roundtrip", meta_commit.rollback_roundtrip, meta_commit.ROLLBACK_SQL
-    )
-    register(
-        "sorted_rewrite_prunes",
-        meta_sort.sorted_rewrite_prunes,
-        meta_sort.SORTED_REWRITE_SQL,
-    )
-    register(
-        "orphan_delete_roundtrip",
-        meta_maint.orphan_delete_roundtrip,
-        meta_maint.ORPHAN_DELETE_SQL,
-    )
-    register(
-        "commit_append_files",
-        meta_commit.commit_append_files,
-        meta_commit.COMMIT_APPEND_SQL,
-    )
-    register("files_at_tag", meta_commit.files_at_tag, meta_commit.FILES_AT_TAG_SQL)
-    register(
-        "wap_publish_roundtrip",
-        meta_commit.wap_publish_roundtrip,
-        meta_commit.WAP_PUBLISH_SQL,
-    )
-    register(
-        "expire_execute_roundtrip",
-        meta_commit.expire_execute_roundtrip,
-        meta_commit.EXPIRE_EXECUTE_SQL,
-    )
-    register("meta_all_files", meta_snap.meta_all_files, meta_snap.META_ALL_FILES_SQL)
-    register("embedding_near_dup", similarity.embedding_near_dup, similarity.NEAR_DUP_SQL)
-    register("q9_product_type_profit", tpch.q9_product_type_profit, tpch.Q9_SQL)
-    register("top_k_per_group", analytics.top_k_per_group, analytics.TOP_K_SQL)
-    register("dedup_exact", dedup.dedup_exact, dedup.DEDUP_EXACT_SQL)
-    register("ann_topk_bruteforce", similarity.ann_topk_bruteforce, similarity.ANN_BRUTE_SQL)
-    register("asof_join_events_orders", events.asof_join_events_orders, events.ASOF_SQL)
-
-    # pure-metadata.json queries (r5/r6 green)
-    register("meta_snapshots_multi", meta_snap.meta_snapshots_multi, meta_snap.META_SNAPSHOTS_MULTI_SQL)
-    register("meta_history_multi", meta_snap.meta_history_multi, meta_snap.META_HISTORY_MULTI_SQL)
-    register("expire_snapshots_plan", meta_snap.expire_snapshots_plan, meta_snap.EXPIRE_SNAPSHOTS_PLAN_SQL)
-    register("orphan_files_current", meta_snap.orphan_files_current, meta_snap.ORPHAN_FILES_SQL)
-    register("scan_plan_pruned", meta_snap.scan_plan_pruned, meta_snap.SCAN_PLAN_PRUNED_SQL)
-    register("meta_manifests", meta_snap.meta_manifests, meta_snap.META_MANIFESTS_SQL)
-    register("meta_entry_status_dist", meta_snap.meta_entry_status_dist, meta_snap.META_ENTRY_STATUS_DIST_SQL)
-    register("files_at_snapshot", meta_snap.files_at_snapshot, meta_snap.FILES_AT_SNAPSHOT_SQL)
-    register("files_added_between", meta_snap.files_added_between_q, meta_snap.FILES_ADDED_BETWEEN_SQL)
-    register("meta_rewritten_files", meta_snap.meta_rewritten_files, meta_snap.META_REWRITTEN_FILES_SQL)
-    register("compaction_plan", meta_snap.compaction_plan, meta_snap.COMPACTION_PLAN_SQL)
-
-    # §2.2 analytics remainder (r5 green)
-    register("monthly_revenue_delta", analytics.monthly_revenue_delta, analytics.MONTHLY_DELTA_SQL)
-    register("decile_value_customers", analytics.decile_value_customers, analytics.DECILE_SQL)
-    register("orders_cume_dist", analytics.orders_cume_dist, analytics.CUME_DIST_SQL)
-    register(
-        "approx_percentiles_check",
-        analytics.approx_percentiles_check,
-        analytics.APPROX_CHECK_SQL,
-    )
-
-    # §2.3 events (r5 green)
-    register("sessionize_events", events.sessionize_events, events.SESSIONIZE_SQL)
-    register("session_window_agg", events.session_window_agg, events.SESSION_WINDOW_SQL)
-    register("sliding_window_agg", events.sliding_window_agg, events.SLIDING_WINDOW_SQL)
-    register("events_props_stats", events.events_props_stats, events.EVENTS_PROPS_SQL)
-    register("funnel_windowed", events.funnel_windowed, events.FUNNEL_WINDOWED_SQL)
-    register("events_dedup_exact", events.events_dedup_exact, events.EVENTS_DEDUP_SQL)
-    register("retention_matrix", events.retention_matrix, events.RETENTION_MATRIX_SQL)
-
-    # §2.4 text/dedup/sampling (r4-r6 green)
-    register("text_stats", text_ops.text_stats, text_ops.TEXT_STATS_SQL)
-    register("text_quality", text_ops.text_quality, text_ops.TEXT_QUALITY_SQL)
-    register("pii_scrub_stats", text_ops.pii_scrub_stats, text_ops.PII_SCRUB_SQL)
-    register("doc_repetition_stats", text_ops.doc_repetition_stats, text_ops.DOC_REPETITION_SQL)
-    register("source_dup_stats", text_ops.source_dup_stats, text_ops.SOURCE_DUP_SQL)
-    register("corpus_filter_funnel", text_ops.corpus_filter_funnel, text_ops.CORPUS_FUNNEL_SQL)
-    register("dedup_minhash_lsh", dedup.dedup_minhash_lsh, dedup.DEDUP_MINHASH_SQL)
-    register("dedup_simhash", dedup.dedup_simhash, dedup.DEDUP_SIMHASH_SQL)
-    register("dedup_clusters", components.dedup_clusters, components.DEDUP_CLUSTERS_SQL)
-    register("decontaminate_ngram", dedup.decontaminate_ngram, dedup.DECONTAMINATE_SQL)
-    register("decontaminate_minhash", dedup.decontaminate_minhash, dedup.DECONTAMINATE_MINHASH_SQL)
-    register("ann_ivf_topk", similarity.ann_ivf_topk, similarity.ANN_IVF_SQL)
-    register("dataset_split", sampling.dataset_split, sampling.DATASET_SPLIT_SQL)
-    register("stratified_sample", sampling.stratified_sample, sampling.STRATIFIED_SAMPLE_SQL)
-    register("mixture_plan", sampling.mixture_plan, sampling.MIXTURE_PLAN_SQL)
-    # r4-cohort keys that ceded their refresh slots to newcomer
-    # certifications (green r4 rows + two-SF local parity stand)
-    register("meta_manifest_entries", meta_tables.meta_manifest_entries, meta_tables.META_MANIFEST_ENTRIES_SQL)
-    register("meta_files", meta_tables.meta_files, meta_tables.META_FILES_SQL)
-    register("meta_partitions", meta_tables.meta_partitions, meta_tables.META_PARTITIONS_SQL)
-    register("meta_snapshots", meta_tables.meta_snapshots, meta_tables.META_SNAPSHOTS_SQL)
-    register("meta_history", meta_tables.meta_history, meta_tables.META_HISTORY_SQL)
-    register("q20_promo_part_shippers", tpch_ext.q20_promo_part_shippers, tpch_ext.Q20_SQL)
-    register("funnel_view_click_purchase", events.funnel_view_click_purchase, events.FUNNEL_SQL)
-    register("retention_day_n", events.retention_day_n, events.RETENTION_SQL)
-    register("dedup_ngram_jaccard", dedup.dedup_ngram_jaccard, dedup.DEDUP_NGRAM_SQL)
-    register("embedding_norm_stats", similarity.embedding_norm_stats, similarity.NORM_STATS_SQL)
-    register("token_count_histogram", sampling.token_count_histogram, sampling.TOKEN_HISTOGRAM_SQL)
-    # r5-cohort keys slid past 50 to make window room for this
-    # round's newcomer certifications (r5 driver rows + two-SF
-    # local parity still stand)
-    register("q1_pricing_summary", tpch.q1_pricing_summary, tpch.Q1_SQL)
-    register("q5_local_supplier_volume", tpch.q5_local_supplier_volume, tpch.Q5_SQL)
-    register("q7_volume_shipping", tpch.q7_volume_shipping, tpch.Q7_SQL)
-    register("q13_customer_distribution", tpch.q13_customer_distribution, tpch.Q13_SQL)
-    register("q15_top_supplier", tpch_ext.q15_top_supplier, tpch_ext.Q15_SQL)
-    register("q21_sole_fault_supplier", tpch_ext.q21_sole_fault_supplier, tpch_ext.Q21_SQL)
-    register("percentiles_order_value", analytics.percentiles_order_value, analytics.PERCENTILES_SQL)
-    register("customer_running_total", analytics.customer_running_total, analytics.RUNNING_TOTAL_SQL)
-    register("q4_order_priority", tpch.q4_order_priority, tpch.Q4_SQL)
-    register("q6_revenue_change", tpch.q6_revenue_change, tpch.Q6_SQL)
-    register("q12_priority_shipping", tpch.q12_priority_shipping, tpch.Q12_SQL)
-    register("q14_promo_effect", tpch.q14_promo_effect, tpch.Q14_SQL)
-    register("q16_supplier_part_variety", tpch_ext.q16_supplier_part_variety, tpch_ext.Q16_SQL)
-    register("q17_small_quantity_revenue", tpch_ext.q17_small_quantity_revenue, tpch_ext.Q17_SQL)
-    register("q19_discounted_revenue", tpch.q19_discounted_revenue, tpch.Q19_SQL)
-    register("q22_global_sales_opportunity", tpch.q22_global_sales_opportunity, tpch.Q22_SQL)
-    # slid past 50 in round 8 to make window room for the streaming
-    # sink; r5 driver row + two-SF local parity still stand
-    register("pivot_status_by_priority", analytics.pivot_status_by_priority, analytics.PIVOT_SQL)
-    register("pack_sequences_check", packing.pack_sequences_check, packing.PACK_CHECK_SQL)
-
-    # rows-only raw forms of the invariant-check queries
-    register("approx_percentiles_order_value", analytics.approx_percentiles_order_value, None)
-    register("pack_sequences", packing.pack_sequences, None)
-
-    # hash-canonicalization probes, retired after proving the law in
-    # r2/r3 (probe_decimal stays EXPECTED-red by design — raw=True)
-    register("probe_decimal", probes.probe_decimal, probes.PROBE_DECIMAL_SQL, raw=True)
-    register("probe_bigint", probes.probe_bigint, probes.PROBE_BIGINT_SQL, raw=True)
-    register("probe_date", probes.probe_date, probes.PROBE_DATE_SQL, raw=True)
-    register("probe_timestamp", probes.probe_timestamp, probes.PROBE_TIMESTAMP_SQL, raw=True)
-    register("probe_boolean", probes.probe_boolean, probes.PROBE_BOOLEAN_SQL, raw=True)
-
-
-_register_past_window()
-
-# r10 newcomer PAST the window (the r10 window spends its slots on
-# the 8 r9 first-certs + the two cohort refreshes; first driver
-# certification r11): Delta DELETION VECTORS — positional
-# merge-on-read via the shared framed-Roaring codec, descriptors
-# surviving the checkpoint round-trip
-register("delta_dv_rows", _w_delta.delta_dv_rows, _w_delta.DELTA_DV_SQL)
-# ...and Change Data Feed: explicit cdc change files from
-# CDF-emitting DV commits + add/remove reconstruction otherwise
-register("delta_cdf_rows", _w_delta.delta_cdf_rows, _w_delta.DELTA_CDF_SQL)
-
-# r12 newcomer PAST the window (the r12 window spends its slots on
-# the broken-key first-certs + the r7/r8 refresh; two-SF local
-# parity every pytest run): Delta VACUUM — retention-gated physical
-# removal with live/DV-bin/recent-tombstone/cdc protection and the
-# in-flight mtime race guard
-register("delta_vacuum_rows", _w_delta.delta_vacuum_rows, _w_delta.DELTA_VACUUM_SQL)
-# ...and cross-format IVM: the per-cat COUNT/SUM state maintained
-# from the Delta fixture's CHANGE FEED must equal DuckDB's
-# independent full replay of the same transaction log — maintenance
-# vs recompute, two engines, two formats
-register("delta_ivm_rows", _w_mig.delta_ivm_rows, _w_delta.DELTA_LOG_SQL)
-
-# r13 newcomer: V2 (UUID-named, sidecar) checkpoints — what current
-# Delta writers emit; multi-sidecar write → discovery → sidecar
-# resolution → read, with every covered JSON commit deleted. The
-# r13 window reorder below gives it a first-certification slot.
-register(
-    "delta_v2_checkpoint_rows",
-    _w_delta.delta_v2_checkpoint_rows,
-    _w_delta.DELTA_V2_CHECKPOINT_SQL,
-)
-
-# r13 newcomer PAST the window (two-SF parity every pytest run):
-# Delta SOURCE schema evolution — the read schema comes from the
-# LOG, so pre-evolution files serve added columns as null and the
-# DV on a pre-evolution file still applies through a cdc file that
-# physically lacks the new column.
-register(
-    "delta_schema_evolution_rows",
-    _w_delta.delta_schema_evolution_rows,
-    _w_delta.DELTA_SCHEMA_EVOLUTION_SQL,
-)
-
-# r14 newcomer: Delta TYPE WIDENING reads — narrow pre-widening
-# footers upcast through the log schema (int→long, float→double),
-# composing with DV merge-on-read; the r14 window gives it a
-# first-certification slot alongside delta_schema_evolution_rows.
-register(
-    "delta_type_widening_rows",
-    _w_delta.delta_type_widening_rows,
-    _w_delta.DELTA_TYPE_WIDENING_SQL,
-)
-
-# r14 newcomer: REST-catalog resolution — by-name + time-traveled MoR
-# reads over the local spec-derived REST fixture server (the
-# now-dominant Iceberg deployment model, VERDICT r13 #6).
-from .iceberg import rest_catalog as _w_rest  # noqa: E402
-
-register(
-    "rest_catalog_rows",
-    _w_rest.rest_catalog_rows,
-    _w_rest.REST_CATALOG_SQL,
-)
-
-# r14 newcomer: Delta VARIANT reads — Spark-native VariantType over
-# the layout Delta writers land, variant_get extraction, DV
-# composition (the remaining common reader-feature refusal after
-# typeWidening, VERDICT r13 "What's missing" #1).
-register(
-    "delta_variant_rows",
-    _w_delta.delta_variant_rows,
-    _w_delta.DELTA_VARIANT_SQL,
-)
-
-# r15 newcomer: engine commits routed END-TO-END through the REST
-# catalog (VERDICT r14 #1) — append with a deterministic rival-writer
-# 409 rebased, DELETE WHERE over REST, SET TBLPROPERTIES, and the
-# ADVICE-r14 metadata-log accounting; golden oracle.
-from .iceberg import rest_ops as _w_restops  # noqa: E402
-
-register(
-    "rest_commit_roundtrip",
-    _w_restops.rest_commit_roundtrip,
-    _w_restops.REST_COMMIT_SQL,
-)
-
-# r15 newcomer (VERDICT r14 #7): Iceberg v3 VARIANT through the
-# migration bridge BOTH WAYS — Delta source → Iceberg v3 → export
-# back, variant_get extraction equal at every hop; golden oracle.
-register(
-    "variant_bridge_rows",
-    _w_mig.variant_bridge_rows,
-    _w_mig.VARIANT_BRIDGE_SQL,
-)
-
-# r15 newcomer PAST the window (two-SF parity every pytest run;
-# first-cert slot next round): Delta Row Tracking reads — fresh ids
-# from baseRowId + position, DV-stable, materialized-column override
-# at a rewrite's commit version.
-register(
-    "delta_row_tracking_rows",
-    _w_delta.delta_row_tracking_rows,
-    _w_delta.DELTA_ROW_TRACKING_SQL,
-)
-
-# r15 newcomer (VERDICT r14 #7): domainMetadata survival accounting
-# across the THREE checkpoint forms (classic parquet, v2 JSON top,
-# v2 parquet top) — live domains preserved with their latest
-# configuration, tombstoned domains dropped; golden oracle.
-register(
-    "domain_checkpoint_rows",
-    _w_delta.domain_checkpoint_rows,
-    _w_delta.DOMAIN_CHECKPOINT_SQL,
-)
-
-# ============================= ROUND-13 WINDOW (a dict REORDER, not
-# re-registration: every key keeps its single (fn, sql) declaration
-# above; this block only fixes which 50 the driver adjudicates).
-#
-# Budget (VERDICT r12 #1/#5): 1 canary; 2-4 FIRST CERTIFICATION —
-# delta_vacuum_rows + delta_ivm_rows (the only registry keys in
-# history with no CORRECTNESS row, VERDICT r12 #1) and the r13
-# v2-checkpoint capstone; 5-11 re-certification of keys whose
-# implementation changed this round (commit_delta_dv dataChange
-# semantics + CDF reconstruction churn, replay_log contiguity +
-# checkpoint protocol feature lists, CDF update_pre/postimage
-# mapping + cleaned-log refusal, partitioned Iceberg→Delta replicas,
-# distributed orphan reference side); 12-43 the FULL r8-evidence
-# cohort (32 keys, five rounds stale — VERDICT r12 #5); 44-50 the
-# oldest r9 metadata keys. After this round no oracle-checked key's
-# newest driver row predates r9.
-_R13_WINDOW = [
-    "probe_double",
-    # 2-4: first certification
-    "delta_vacuum_rows",
-    "delta_ivm_rows",
-    "delta_v2_checkpoint_rows",
-    # 5-11: changed-this-round re-certification
-    "delta_dv_rows",
-    "delta_cdf_rows",
-    "delta_cdf_replicate_rows",
-    "delta_log_rows",
-    "delta_replicate_rows",
-    "delta_export_rows",
-    "orphan_delete_roundtrip",
-    # 12-43: the FULL r8-evidence cohort (alphabetical)
-    "bpe_roundtrip_check",
-    "changelog_agg_maintenance",
-    "commit_conflict_roundtrip",
-    "cube_status_priority",
-    "decontaminate_embedding",
-    "dedup_paragraph_stats",
-    "dedup_semantic_pairs",
-    "group_sample_topk",
-    "lm_bigram_stats",
-    "media_frame_sample_stats",
-    "media_probe_stats",
-    "meta_all_manifests",
-    "meta_stats_incremental",
-    "meta_stats_partition_scoped",
-    "meta_table_stats",
-    "q10_returned_items",
-    "q11_important_part_value",
-    "q18_large_volume_customers",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q8_market_share",
-    "range_join_transit",
-    "rollup_revenue",
-    "snapshot_summary_audit",
-    "spec_evolution_write",
-    "stream_ingest_roundtrip",
-    "stream_ivm_rows",
-    "stream_join_rows",
-    "text_fingerprint",
-    "text_langid",
-    "wap_audit_publish_roundtrip",
-    "wap_cherrypick_roundtrip",
-    # 44-50: oldest r9 keys, metadata tables first
-    "meta_files",
-    "meta_history",
-    "meta_manifest_entries",
-    "meta_partitions",
-    "meta_snapshots",
-    "scan_plan_pruned",
-    "mor_live_rows",
-]
-
-
-def _apply_window(names: list[str]) -> None:
-    missing = [n for n in names if n not in _REGISTRY]
-    if missing:
-        raise RuntimeError(f"window names not registered: {missing}")
-    ordered = {n: _REGISTRY[n] for n in names}
-    ordered.update({k: v for k, v in _REGISTRY.items() if k not in ordered})
-    _REGISTRY.clear()
-    _REGISTRY.update(ordered)
-
-
-# ============================= ROUND-14 WINDOW (same mechanism:
-# a dict REORDER over the single declarations above).
-#
-# Budget (VERDICT r13 #1/#2): slot 1 canary; 2-5 FIRST
-# CERTIFICATION — delta_schema_evolution_rows (the only key in
-# history with no CORRECTNESS row, VERDICT r13 #1) and the three
-# r14 newcomers (typeWidening, REST catalog, variant); 6-10
-# re-certification of keys whose implementation changed this round
-# (vacuum's v2-JSON-top inline-action harvest, torn-top discovery
-# tolerance + atomic parquet tops, the empty-partition_filter
-# contract, the executor-side DV-blob replication rework + spec
-# partition-value serialization, the write_delta_dv_file→blobs
-# refactor under commit_delta_dv); 11-48 the FULL r9-evidence
-# cohort (38 keys, five rounds stale — VERDICT r13 #2); 49-50 the
-# oldest r11 keys. After this round no oracle-checked key's newest
-# driver row predates r11.
-_R14_WINDOW = [
-    "probe_double",
-    # 2-5: first certification
-    "delta_schema_evolution_rows",
-    "delta_type_widening_rows",
-    "rest_catalog_rows",
-    "delta_variant_rows",
-    # 6-10: changed-this-round re-certification
-    "delta_vacuum_rows",
-    "delta_v2_checkpoint_rows",
-    "delta_log_rows",
-    "delta_replicate_rows",
-    "delta_dv_rows",
-    # 11-48: the FULL r9-evidence cohort (alphabetical)
-    "ann_ivfpq_recall_check",
-    "ann_pq_recall_check",
-    "approx_percentiles_check",
-    "bpe_token_check",
-    "customer_running_total",
-    "dataset_split",
-    "dedup_ngram_jaccard",
-    "dedup_semantic_check",
-    "dedup_substring_coverage",
-    "embedding_norm_stats",
-    "funnel_view_click_purchase",
-    "monthly_revenue_delta",
-    "pack_sequences_check",
-    "parquet_import_rows",
-    "percentiles_order_value",
-    "pivot_status_by_priority",
-    "q12_priority_shipping",
-    "q13_customer_distribution",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_supplier_part_variety",
-    "q17_small_quantity_revenue",
-    "q19_discounted_revenue",
-    "q1_pricing_summary",
-    "q20_promo_part_shippers",
-    "q21_sole_fault_supplier",
-    "q22_global_sales_opportunity",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q6_revenue_change",
-    "q7_volume_shipping",
-    "retention_day_n",
-    "session_window_agg",
-    "sessionize_events",
-    "text_quality",
-    "text_stats",
-    "token_count_histogram",
-    "view_roundtrip_rows",
-    # 49-50: oldest r11 keys, reference-distinguishing first
-    "meta_manifests",
-    "meta_metadata_log",
-]
-
-_apply_window(_R14_WINDOW)
-
-# ============================= ROUND-15 WINDOW (same mechanism:
-# a dict REORDER over the single declarations above).
-#
-# Budget (VERDICT r14 #2/#7): slot 1 canary; 2-4 FIRST
-# CERTIFICATION — engine commits through the REST catalog
-# (rest_commit_roundtrip, the r14 #1 capstone), Iceberg v3 variant
-# through the migration bridge both ways, and domainMetadata
-# survival across the three checkpoint forms; 5-7 re-certification
-# of keys whose implementation changed this round (the REST
-# catalog's pagination/auth/create/commit-update growth +
-# metadata-log accounting, the importer's date-typed hive
-# partitions + the identity-partition attach rework, the v2
-# checkpoint pointer size fix); 8-50 the FULL r11-evidence cohort
-# (43 keys, four rounds stale — VERDICT r14 #2; probe_string, the
-# driver-canonicalization string twin, deliberately stays past 50
-# as always). delta_replicate_full_rows keeps its green r12 row:
-# the nested name-mapping change only ADDS a previously-refused
-# path, pinned by the new nested-fixture pytest + two-SF parity.
-# After this round no oracle-checked key's newest cert predates
-# r12.
-_R15_WINDOW = [
-    "probe_double",
-    # 2-4: first certification
-    "rest_commit_roundtrip",
-    "variant_bridge_rows",
-    "domain_checkpoint_rows",
-    # 5-7: changed-this-round re-certification
-    "rest_catalog_rows",
-    "parquet_import_rows",
-    "delta_v2_checkpoint_rows",
-    # 8-50: the FULL r11-evidence cohort (alphabetical)
-    "ann_ivf_topk",
-    "ann_topk_bruteforce",
-    "asof_join_events_orders",
-    "binpack_rewrite_roundtrip",
-    "bm25_topk",
-    "changelog_rows",
-    "commit_append_files",
-    "compaction_plan",
-    "corpus_filter_funnel",
-    "decile_value_customers",
-    "decontaminate_minhash",
-    "decontaminate_ngram",
-    "dedup_audio_afp",
-    "dedup_clusters",
-    "dedup_exact",
-    "dedup_images_dhash",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_videos_framehash",
-    "doc_repetition_stats",
-    "events_dedup_exact",
-    "events_props_stats",
-    "expire_snapshots_plan",
-    "files_added_between",
-    "files_at_snapshot",
-    "funnel_windowed",
-    "media_stream_dedup_rows",
-    "meta_entry_status_dist",
-    "meta_history_multi",
-    "meta_rewritten_files",
-    "meta_snapshots_multi",
-    "mixture_plan",
-    "orders_cume_dist",
-    "orphan_files_current",
-    "pii_scrub_stats",
-    "q9_product_type_profit",
-    "retention_matrix",
-    "sliding_window_agg",
-    "source_dup_stats",
-    "stratified_sample",
-    "top_k_per_group",
-    "view_ivm_minmax",
-    "view_ivm_roundtrip",
-]
-
-_apply_window(_R15_WINDOW)
+_REGISTRY = _index(_QUERIES)
 
 
 def queries() -> dict[str, QueryFn]:
@@ -1328,128 +436,3 @@ def oracle_sql() -> dict[str, str]:
         for k, (_, sql, raw) in _REGISTRY.items()
         if sql is not None
     }
-
-# r15 newcomer PAST the window (two-SF parity every pytest run;
-# first-cert slot next round): trained quality classifier — hashed
-# bag-of-token logistic regression, distributed gradients +
-# driver-side Adam; the check pins convergence (≥85% train/test on a
-# deterministic linear-rule label) and monotone loss.
-from .operators import quality_model as _w_qm  # noqa: E402
-
-register(
-    "quality_model_check",
-    _w_qm.quality_model_check,
-    _w_qm.QUALITY_MODEL_CHECK_SQL,
-)
-
-# r15 newcomer PAST the window (two-SF parity every pytest run;
-# first-cert slot next round): v3 geospatial scan planning — bbox
-# pruning over point-encoded geometry bounds.
-register(
-    "geo_scan_rows",
-    meta_snap.geo_scan_rows,
-    meta_snap.GEO_SCAN_SQL,
-)
-
-# r16 gate (VERDICT r15 #4): Delta In-Commit Timestamps — mixed log
-# with pre-enablement file-time semantics, mid-table enablement
-# provenance, monotonic clamp under a stale clock, and timestampAsOf
-# resolving by ICT while file mtimes point decades away.
-register(
-    "delta_ict_rows",
-    _w_delta.delta_ict_rows,
-    _w_delta.DELTA_ICT_SQL,
-)
-
-# ============================= ROUND-16 WINDOW (same mechanism:
-# a dict REORDER over the single declarations above/below; applied
-# at the END of this module, after every r16 registration).
-#
-# Budget (VERDICT r15 #1/#2): slot 1 canary; 2-4 FIRST
-# CERTIFICATION of the only keys with zero driver history —
-# delta_row_tracking_rows, quality_model_check, geo_scan_rows
-# (VERDICT r15 #1); 5-7 the r16 gates — lineage_bridge_rows (the
-# r15 capstone finally pinned, #3), delta_ict_rows (#4),
-# rest_view_rows (#10); 8-50 the FULL r12-evidence cohort (43 keys,
-# four rounds stale — VERDICT r15 #2). After this round no
-# oracle-checked key's newest cert predates r13. The newly-oracled
-# bpe_token_stats / dedup_semantic_stats (#9) and the additive
-# v3-arbitration change under rest_commit_roundtrip ride two-SF
-# pytest parity this round and take first-cert/re-cert slots next.
-_R16_WINDOW = [
-    "probe_double",
-    # 2-4: first certification (zero driver history)
-    "delta_row_tracking_rows",
-    "quality_model_check",
-    "geo_scan_rows",
-    # 5-7: r16 gates
-    "lineage_bridge_rows",
-    "delta_ict_rows",
-    "rest_view_rows",
-    # 8-50: the FULL r12-evidence cohort (alphabetical)
-    "cdc_replicate_roundtrip",
-    "changelog_stream_rows",
-    "column_stats_orders",
-    "commit_delete_roundtrip",
-    "commit_eq_delete_roundtrip",
-    "dedup_survivors",
-    "delete_compaction_plan",
-    "delete_where_dv_roundtrip",
-    "delete_where_roundtrip",
-    "delta_migrate_rows",
-    "delta_replicate_full_rows",
-    "embedding_near_dup",
-    "expire_execute_roundtrip",
-    "files_at_snapshot_mor",
-    "files_at_tag",
-    "incremental_stream_rows",
-    "merge_into_roundtrip",
-    "merge_transform_partitions",
-    "meta_all_files",
-    "meta_delete_files",
-    "meta_dv_blobs",
-    "meta_partition_stats",
-    "meta_position_deletes",
-    "meta_refs",
-    "meta_schemas",
-    "meta_typed_bounds",
-    "mor_live_rows_dv",
-    "mor_read_evolved",
-    "near_dup_rate_by_source",
-    "quality_score_linear",
-    "rewrite_datafiles_roundtrip",
-    "rewrite_pos_deletes_roundtrip",
-    "rollback_roundtrip",
-    "row_lineage_rows",
-    "scan_plan_evolved",
-    "scan_plan_mor",
-    "scan_plan_tasks_dv",
-    "scan_plan_transforms",
-    "schema_evolution_name_mapping",
-    "schema_evolution_read",
-    "sorted_rewrite_prunes",
-    "update_where_roundtrip",
-    "wap_publish_roundtrip",
-]
-
-# r16 gate (VERDICT r15 #3): row lineage through the migration
-# bridge BOTH ways including a source-side compaction — replica
-# _row_id == source lineage ids at every hop (forward into Delta
-# rowTracking, roundtrip back into Iceberg v3).
-register(
-    "lineage_bridge_rows",
-    _w_mig.lineage_bridge_rows,
-    _w_mig.LINEAGE_BRIDGE_SQL,
-)
-
-# r16 gate (VERDICT r15 #10): the view LIFECYCLE over REST —
-# create / replace / rename endpoints, then execution of the
-# renamed view's current version AND version-1 time travel against
-# real data (counts recomputed by the oracle from the same parquet).
-register(
-    "rest_view_rows",
-    _w_views.rest_view_rows,
-    _w_views.REST_VIEW_SQL,
-)
-
-_apply_window(_R16_WINDOW)

@@ -1,7 +1,7 @@
-"""Write plans/r17/<name>_<tag>.txt for the named queries (and the
+"""Write plans/<round>/<name>_<tag>.txt for the named queries (and the
 geo planning frame), without timing — evidence capture for the
 optimization round. Usage:
-    python scripts/capture_plans.py <tag> <query> [...]
+    python scripts/capture_plans.py --round rN <tag> <query> [...]
 Special names: geo_plan (the plan_scan decision-table frame with a
 geo_bbox predicate), mor_read (read_mor over the delete-bearing MoR
 fixture — shows the positional-delete scan consolidation).
@@ -9,6 +9,7 @@ fixture — shows the positional-delete scan consolidation).
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -18,14 +19,19 @@ def main() -> None:
     sys.path.insert(0, repo)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    tag, names = sys.argv[1], sys.argv[2:]
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--round", required=True, help="plans/<round>/ gets the plans, e.g. r18")
+    ap.add_argument("tag")
+    ap.add_argument("names", nargs="+")
+    a = ap.parse_args()
+    tag, names = a.tag, a.names
 
     from iceberg_tools_spark import registry
     from iceberg_tools_spark.plans.checks import plan_string
     from iceberg_tools_spark.session import get_spark
 
     spark = get_spark("plancap", cpus=cpus)
-    plans_dir = os.path.join(repo, "plans", "r17")
+    plans_dir = os.path.join(repo, "plans", a.round)
     os.makedirs(plans_dir, exist_ok=True)
     available = registry.queries()
 

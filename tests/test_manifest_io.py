@@ -261,34 +261,6 @@ def test_orphan_age_gate_uses_walk_mtime(spark, tmp_path):
     assert os.path.exists(young) and not os.path.exists(old)
 
 
-def test_round16_window_order_pinned():
-    """The driver adjudicates the FIRST 50 registry entries; pin the
-    round-16 window so an import reshuffle can't silently spend the
-    slots elsewhere. The window is declared once in
-    ``registry._R16_WINDOW`` and applied by a dict reorder; this test
-    pins its SHAPE, not a second copy of the list."""
-    from iceberg_tools_spark import registry
-
-    keys = list(registry._REGISTRY)
-    assert keys[:50] == registry._R16_WINDOW
-    assert keys[0] == "probe_double"
-    # 2-4: first certification — the only keys with zero driver
-    # history after r15
-    assert keys[1:4] == [
-        "delta_row_tracking_rows", "quality_model_check",
-        "geo_scan_rows",
-    ]
-    # 5-7: the r16 gates — lineage bridge (both directions + source
-    # compaction), Delta in-commit timestamps, REST view lifecycle
-    assert keys[4:7] == [
-        "lineage_bridge_rows", "delta_ict_rows", "rest_view_rows",
-    ]
-    # 8-50: the full 43-key r12-evidence cohort
-    assert len(set(keys[7:50])) == 43
-    # every key past the window is still alive (reorder, not removal)
-    assert len(keys) >= 198
-
-
 def test_map_manifests_empty_tasks(spark):
     """Zero manifests (an empty snapshot's plan) short-circuits on
     both paths."""

@@ -164,15 +164,20 @@ def test_scan_plan_rejects_unknown_partition_field(spark):
         )
 
 
-def test_ancestor_chain_raises_on_cycle():
+def test_ancestor_chain_raises_on_cycle(spark):
     """Corrupt metadata with a parent cycle fails fast instead of
-    hanging the driver."""
+    hanging the driver — in the ancestor walk and in the $history
+    table built on it."""
+    from iceberg_tools_spark.iceberg.tables import history_df
+
     meta = parse_metadata(S.MS_METADATA)
     by_id = {s["snapshot-id"]: s for s in meta.snapshots}
     by_id[1001]["parent-snapshot-id"] = 1002  # 1001 <-> 1002 cycle
     try:
         with pytest.raises(ValueError, match="cycle"):
             S.ancestor_chain(meta, 1003)
+        with pytest.raises(ValueError, match="cycle"):
+            history_df(spark, meta)
     finally:
         by_id[1001].pop("parent-snapshot-id", None)
 
