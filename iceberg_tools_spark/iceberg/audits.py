@@ -39,16 +39,6 @@ from ..session import local_frame
 from .deletes import mor_entries_at, mor_frame, read_mor
 from .metadata import parse_metadata
 
-AUDIT_SCHEMA = T.StructType(
-    [
-        T.StructField("check_idx", T.LongType()),
-        T.StructField("check_type", T.StringType()),
-        T.StructField("target", T.StringType()),
-        T.StructField("passed", T.BooleanType()),
-        T.StructField("observed", T.StringType()),
-    ]
-)
-
 
 def _staged_snapshot(raw: dict, ref: str) -> dict:
     staged = raw.get("refs", {}).get(ref)

@@ -1791,6 +1791,19 @@ FROM (VALUES (1, 341, 1, 1)) t(ff_refused, live_rows,
 """
 
 
+def _max_field_id(node: Any) -> int:
+    """The largest field id at any depth of a field list or type:
+    struct field ``id``, list ``element-id``, map ``key-id`` and
+    ``value-id``."""
+    if isinstance(node, list):
+        return max((_max_field_id(n) for n in node), default=0)
+    if not isinstance(node, dict):
+        return 0
+    ids = [node[k] for k in ("id", "element-id", "key-id", "value-id") if k in node]
+    kids = [node[k] for k in ("type", "fields", "element", "key", "value") if k in node]
+    return max(ids + [_max_field_id(k) for k in kids], default=0)
+
+
 def create_table(
     table_root: str,
     fields: list[tuple[str, str] | dict[str, Any]],
@@ -1847,7 +1860,7 @@ def create_table(
         "location": location or f"file://{os.path.abspath(table_root)}",
         "last-sequence-number": 0,
         "last-updated-ms": 0,
-        "last-column-id": max(f["id"] for f in ice_fields),
+        "last-column-id": _max_field_id(ice_fields),
         "current-schema-id": 0,
         "schemas": [{"schema-id": 0, "type": "struct", "fields": ice_fields}],
         "default-spec-id": 0,

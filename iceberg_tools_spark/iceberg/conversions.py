@@ -204,13 +204,9 @@ def _java_float_str(v: float, single: bool) -> str:
     return f"{mant}E{int(exp)}"
 
 
-def value_to_string(type_str: str, value: Any) -> str:
+def _to_string(t: str, value: Any) -> str:
     """Render a deserialized value the way Java `toString` would
     (the reference feeds `metricValue.toString()` into the output)."""
-    return _to_string(canonical_type(type_str), value)
-
-
-def _to_string(t: str, value: Any) -> str:
     if t == "boolean":
         return "true" if value else "false"
     if t == "float":

@@ -52,7 +52,6 @@ from pyspark.sql import types as T
 
 from ..avro.reader import AvroContainerFile
 from ..session import local_frame
-from .catalog import install_metadata
 from .metadata import TableMetadata, parse_metadata
 from .snapshots import _REPO_ROOT, _local, manifest_files_at
 
@@ -1531,41 +1530,18 @@ def row_lineage_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORIGINAL row ids (0,1,3,4,5,6,7 — stable under MoR deletes, the
     property row lineage exists for) and per-row
     ``_last_updated_sequence_number``. Golden oracle."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .commit import append_snapshot
+    from .commit import _scratch_dir, append_snapshot, create_table
     from .dml import delete_where_dv
 
-    root = tempfile.mkdtemp(prefix="row_lineage_")
-    os.makedirs(os.path.join(root, "metadata"))
-    os.makedirs(os.path.join(root, "data"))
-    meta0 = {
-        "format-version": 3,
-        "table-uuid": "00000000-0000-0000-0000-00000000e001",
-        "location": "file:///tmp/row_lineage_table",
-        "last-sequence-number": 0,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": 2,
-        "current-schema-id": 0,
-        "schemas": [{
-            "schema-id": 0, "type": "struct",
-            "fields": [
-                {"id": 1, "name": "id", "required": False, "type": "long"},
-                {"id": 2, "name": "category", "required": False, "type": "string"},
-            ],
-        }],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {}, "snapshots": [], "snapshot-log": [],
-        "metadata-log": [],
-    }
-    mp = os.path.join(root, "v1.metadata.json")
-    install_metadata(mp, meta0)
+    root = _scratch_dir("row_lineage_")
+    mp = create_table(
+        root, [("id", "long"), ("category", "string")], format_version=3,
+        table_uuid="00000000-0000-0000-0000-00000000e001",
+        location="file:///tmp/row_lineage_table",
+    )
 
     def _write(rel, ids, cat):
         pq.write_table(

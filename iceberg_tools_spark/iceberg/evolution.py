@@ -58,7 +58,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import local_frame
-from .catalog import install_metadata
 from .commit import commit_version
 from .metadata import TableMetadata, parse_metadata
 
@@ -851,35 +850,19 @@ def spec_evolution_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     spec-1 files must prune to the matching partition, and the full
     MoR read must see every row. Golden oracle over deterministic
     file names. (``sf_dir`` unused: scratch-table gate.)"""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .commit import append_snapshot
+    from .commit import _scratch_dir, append_snapshot, create_table
     from .deletes import read_mor
     from .snapshots import plan_scan
     from .transforms import bucket_value
 
-    root = os.path.join(tempfile.mkdtemp(prefix="spec_evo_"), "t")
-    os.makedirs(os.path.join(root, "metadata"))
-    os.makedirs(os.path.join(root, "data"))
-    meta0 = {
-        "format-version": 2,
-        "table-uuid": "00000000-0000-0000-0000-0000000000e2",
-        "location": f"file://{root}",
-        "last-sequence-number": 0, "last-updated-ms": 0, "last-column-id": 2,
-        "current-schema-id": 0,
-        "schemas": [{"schema-id": 0, "type": "struct", "fields": [
-            {"id": 1, "name": "id", "required": False, "type": "long"},
-            {"id": 2, "name": "category", "required": False, "type": "string"},
-        ]}],
-        "default-spec-id": 0, "partition-specs": [{"spec-id": 0, "fields": []}],
-        "default-sort-order-id": 0, "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {}, "snapshots": [], "snapshot-log": [], "metadata-log": [],
-    }
-    mp = os.path.join(root, "v1.metadata.json")
-    install_metadata(mp, meta0)
+    root = os.path.join(_scratch_dir("spec_evo_"), "t")
+    mp = create_table(
+        root, [("id", "long"), ("category", "string")],
+        table_uuid="00000000-0000-0000-0000-0000000000e2",
+    )
 
     def _write(rel: str, ids: list[int], cats: list[str]) -> None:
         p = os.path.join(root, rel)

@@ -414,9 +414,9 @@ def view_ivm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the state back THROUGH the view metadata. Oracle: full DuckDB
     recompute of head state from the physical parquet + v2
     sequence rules, plus the refresh range as constants."""
-    import tempfile
+    from .commit import _scratch_dir
 
-    root = tempfile.mkdtemp(prefix="view_ivm_") + "/mv"
+    root = _scratch_dir("view_ivm_") + "/mv"
     res = create_materialized_view(
         spark, root, MOR_METADATA,
         keys=["category"], sums=["id"],
@@ -455,9 +455,9 @@ def view_ivm_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     extremum-affected groups (and ONLY those) recompute from a
     group-scoped base read. Oracle: full DuckDB recompute of head
     state from the physical parquet + v2 sequence rules."""
-    import tempfile
+    from .commit import _scratch_dir
 
-    root = tempfile.mkdtemp(prefix="view_ivm_mm_") + "/mv"
+    root = _scratch_dir("view_ivm_mm_") + "/mv"
     res = create_materialized_view(
         spark, root, MOR_METADATA,
         keys=["category"], sums=["id"], mins=["id"], maxs=["id"],

@@ -202,14 +202,11 @@ def write_partition_stats(
 
     rel = f"metadata/partition-stats-{snapshot_id}.parquet"
     out_path = os.path.join(table_root, *rel.split("/"))
-    tmp = tempfile.mkdtemp(prefix="pstats_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="pstats_") as tmp:
         stats.coalesce(1).write.mode("overwrite").parquet(tmp)
         (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
         os.makedirs(os.path.dirname(out_path), exist_ok=True)
         shutil.move(part, out_path)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
     raw = json.loads(json.dumps(meta.raw))
     entry = {

@@ -625,12 +625,11 @@ def _gate_served_fixture() -> str:
         return _GATE_SERVER[0][1]
     import atexit
     import shutil
-    import tempfile
 
+    from .commit import _scratch_dir
     from .deletes import MOR_DIR
 
-    wh = tempfile.mkdtemp(prefix="rest_wh_")
-    atexit.register(shutil.rmtree, wh, ignore_errors=True)
+    wh = _scratch_dir("rest_wh_")
     root = os.path.join(wh, "db", "events")
     shutil.copytree(MOR_DIR, root)
     mdir = os.path.join(root, "metadata")

@@ -568,13 +568,10 @@ def _mk_rest_fixture() -> tuple[Any, str]:
     ``(server, uri)``; the warehouse lives until process exit (the
     returned frames stay lazy, same discipline as the FS commit
     gates)."""
-    import atexit
-    import tempfile
-
+    from .commit import _scratch_dir
     from .deletes import MOR_DIR
 
-    wh = tempfile.mkdtemp(prefix="rest_ops_wh_")
-    atexit.register(shutil.rmtree, wh, ignore_errors=True)
+    wh = _scratch_dir("rest_ops_wh_")
     root = os.path.join(wh, "db", "events")
     shutil.copytree(MOR_DIR, root)
     mdir = os.path.join(root, "metadata")

@@ -38,7 +38,6 @@ from pyspark.sql import functions as F
 
 from ..avro.reader import AvroContainerFile
 from ..session import local_frame
-from .catalog import install_metadata
 from .commit import ADDED, SnapshotProducer
 from .deletes import (
     EQUALITY_DELETES,
@@ -658,37 +657,18 @@ def binpack_rewrite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions (plus one delete-bearing file that must be excluded)
     → binpack → the new snapshot's listing + live-row preservation.
     Golden oracle over deterministic names/counts."""
-    import tempfile
-
     import pyarrow as pa
 
-    from .commit import append_snapshot
+    from .commit import _scratch_dir, append_snapshot, create_table
     from .deletes import read_mor
     from .snapshots import files_at
 
-    root = os.path.join(tempfile.mkdtemp(prefix="binpack_"), "t")
-    os.makedirs(os.path.join(root, "metadata"))
-    os.makedirs(os.path.join(root, "data"))
-    meta0 = {
-        "format-version": 2,
-        "table-uuid": "00000000-0000-0000-0000-0000000000c3",
-        "location": f"file://{root}",
-        "last-sequence-number": 0, "last-updated-ms": 0, "last-column-id": 2,
-        "current-schema-id": 0,
-        "schemas": [{"schema-id": 0, "type": "struct", "fields": [
-            {"id": 1, "name": "id", "required": False, "type": "long"},
-            {"id": 2, "name": "cat", "required": False, "type": "string"},
-        ]}],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": [
-            {"name": "cat", "transform": "identity", "source-id": 2,
-             "field-id": 1000},
-        ]}],
-        "default-sort-order-id": 0, "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {}, "snapshots": [], "snapshot-log": [], "metadata-log": [],
-    }
-    mp = os.path.join(root, "v1.metadata.json")
-    install_metadata(mp, meta0)
+    root = os.path.join(_scratch_dir("binpack_"), "t")
+    mp = create_table(
+        root, [("id", "long"), ("cat", "string")],
+        partition_by=[("cat", "identity", "cat")],
+        table_uuid="00000000-0000-0000-0000-0000000000c3",
+    )
 
     import pyarrow.parquet as _pq
 

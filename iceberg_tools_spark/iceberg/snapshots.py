@@ -1369,15 +1369,13 @@ def geo_scan_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Golden oracle (selection counts per box follow from the fixture
     geometry). Spec: Iceberg v3 "Bound serialization" for
     geometry/geography (point-encoded min/max corners)."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .commit import append_snapshot, create_table
+    from .commit import _scratch_dir, append_snapshot, create_table
     from .conversions import wkb_point
 
-    root = tempfile.mkdtemp(prefix="geo_scan_")
+    root = _scratch_dir("geo_scan_")
     mp = create_table(
         os.path.join(root, "t"),
         [

@@ -41,7 +41,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import install_metadata, table_root_of
+from .catalog import table_root_of
 from .commit import commit_version
 from .conversions import to_bytes
 from .metadata import parse_metadata
@@ -283,41 +283,15 @@ def sorted_rewrite_prunes(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .commit import _scratch_dir, append_snapshot
+    from .commit import _scratch_dir, append_snapshot, create_table
     from .snapshots import plan_scan
 
     root = os.path.join(_scratch_dir("sorted_gate_"), "t")
-    os.makedirs(os.path.join(root, "metadata"))
-    os.makedirs(os.path.join(root, "data"))
-    meta0 = {
-        "format-version": 2,
-        "table-uuid": "00000000-0000-0000-0000-00000000a001",
-        "location": "file:///tmp/sorted_table",
-        "last-sequence-number": 0,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": 2,
-        "current-schema-id": 0,
-        "schemas": [
-            {
-                "schema-id": 0,
-                "type": "struct",
-                "fields": [
-                    {"id": 1, "name": "id", "required": False, "type": "long"},
-                    {"id": 2, "name": "payload", "required": False, "type": "string"},
-                ],
-            }
-        ],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {},
-        "snapshots": [],
-        "snapshot-log": [],
-        "metadata-log": [],
-    }
-    v1 = os.path.join(root, "v1.metadata.json")
-    install_metadata(v1, meta0)
+    v1 = create_table(
+        root, [("id", "long"), ("payload", "string")],
+        table_uuid="00000000-0000-0000-0000-00000000a001",
+        location=_SLOC,
+    )
     files = []
     for k in range(3):  # residue classes mod 3: fully interleaved
         ids = list(range(k + 1, 301, 3))

@@ -565,14 +565,13 @@ def meta_metadata_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     the resulting five-version chain, deterministic timestamps.
     Golden oracle."""
     import os as _os
-    import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .commit import append_snapshot, create_table, update_table_properties
+    from .commit import _scratch_dir, append_snapshot, create_table, update_table_properties
 
-    root = _os.path.join(tempfile.mkdtemp(prefix="meta_log_"), "t")
+    root = _os.path.join(_scratch_dir("meta_log_"), "t")
     _os.makedirs(root)
     mp = create_table(root, [("id", "long"), ("cat", "string")])
     for i in range(3):

@@ -221,9 +221,9 @@ def view_roundtrip_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CURRENT version through the metadata roundtrip and execute
     it. Oracle: the V2 SQL string itself — byte-identical semantics
     across engines is the view contract."""
-    import tempfile
+    from .commit import _scratch_dir
 
-    root = os.path.join(tempfile.mkdtemp(prefix="ice_view_"), "v")
+    root = os.path.join(_scratch_dir("ice_view_"), "v")
     p1 = create_view(root, VIEW_SQL_V1)
     p2 = replace_view(p1, VIEW_SQL_V2)
     lineitem = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
@@ -241,13 +241,12 @@ def rest_view_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     appends, never rewrites). Lifecycle flags are golden; row/item
     counts bind both executed versions to the data, so the oracle
     recomputes them from the same parquet."""
-    import tempfile
-
     import pyspark.sql.functions as F
 
+    from .commit import _scratch_dir
     from .rest_catalog import RestCatalogClient, serve_rest_catalog
 
-    wh = tempfile.mkdtemp(prefix="rest_view_wh_")
+    wh = _scratch_dir("rest_view_wh_")
     server, uri = serve_rest_catalog(wh)
     try:
         c = RestCatalogClient(uri)

@@ -2451,13 +2451,13 @@ def delta_dv_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     live set from the same generation rule minus the deleted id
     list (rows were written id-ascending, so position == id offset
     within its file — an independent derivation, not a golden)."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
-    root = tempfile.mkdtemp(prefix="delta_dv_")
+    from ..iceberg.commit import _scratch_dir
+
+    root = _scratch_dir("delta_dv_")
     os.makedirs(os.path.join(root, "_delta_log"))
     meta_action = {"metaData": {
         "id": "00000000-0000-0000-0000-0000000000dv",
@@ -2549,13 +2549,13 @@ def delta_v2_checkpoint_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: DuckDB recomputes the live set from the same generation
     rule minus the deleted-id list (independent derivation, not a
     golden)."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
-    root = tempfile.mkdtemp(prefix="delta_v2cp_")
+    from ..iceberg.commit import _scratch_dir
+
+    root = _scratch_dir("delta_v2cp_")
     os.makedirs(os.path.join(root, "_delta_log"))
     meta_action = {"metaData": {
         "id": "00000000-0000-0000-0000-0000000000c2",
@@ -2657,13 +2657,13 @@ def delta_schema_evolution_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     LOG schema is the read schema — no footer sampling) and the DV
     must apply. Oracle: DuckDB re-derives the live set from the
     generation rule (independent derivation)."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
-    root = tempfile.mkdtemp(prefix="delta_evo_")
+    from ..iceberg.commit import _scratch_dir
+
+    root = _scratch_dir("delta_evo_")
     os.makedirs(os.path.join(root, "_delta_log"))
     s1 = json.dumps({"type": "struct", "fields": [
         {"name": "id", "type": "long", "nullable": True, "metadata": {}}]})
@@ -2739,13 +2739,13 @@ def delta_type_widening_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the DV applied. Oracle: DuckDB re-derives the live set from
     the generation rule (independent derivation). Spec:
     PROTOCOL.md "Type Widening"; reference has no Delta surface."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
-    root = tempfile.mkdtemp(prefix="delta_widen_")
+    from ..iceberg.commit import _scratch_dir
+
+    root = _scratch_dir("delta_widen_")
     os.makedirs(os.path.join(root, "_delta_log"))
 
     def _schema_json(id_t, score_t, changes=None):
@@ -2836,9 +2836,10 @@ def _write_variant_file(spark, root: str, rel: str, ids) -> None:
     a stable name."""
     import glob
     import shutil
-    import tempfile
 
     import pyspark.sql.functions as F
+
+    from ..iceberg.commit import _scratch_dir
 
     lo, hi = min(ids), max(ids) + 1
     df = (
@@ -2855,7 +2856,7 @@ def _write_variant_file(spark, root: str, rel: str, ids) -> None:
         )
         .coalesce(1)
     )
-    tmpdir = tempfile.mkdtemp(prefix="variant_part_")
+    tmpdir = _scratch_dir("variant_part_")
     df.write.mode("overwrite").parquet(tmpdir)
     part = glob.glob(os.path.join(tmpdir, "*.parquet"))[0]
     os.makedirs(os.path.dirname(os.path.join(root, rel)) or root, exist_ok=True)
@@ -2874,11 +2875,11 @@ def delta_variant_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: DuckDB re-derives the live set from the generation rule
     (independent derivation). Spec: PROTOCOL.md "Variant Data Type";
     reference has no Delta surface."""
-    import tempfile
-
     import pyspark.sql.functions as F
 
-    root = tempfile.mkdtemp(prefix="delta_variant_")
+    from ..iceberg.commit import _scratch_dir
+
+    root = _scratch_dir("delta_variant_")
     os.makedirs(os.path.join(root, "_delta_log"))
     schema = json.dumps({"type": "struct", "fields": [
         {"name": "id", "type": "long", "nullable": True, "metadata": {}},
@@ -2947,15 +2948,15 @@ def delta_vacuum_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     (in-flight guard). The vacuum must remove exactly the two
     reapable files and the head must still read. Oracle: live set
     re-derived from the generation rule, vacuum counters golden."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
+    from ..iceberg.commit import _scratch_dir
+
     now = 1700000000000
     day = 24 * 3600 * 1000
-    root = tempfile.mkdtemp(prefix="delta_vacuum_")
+    root = _scratch_dir("delta_vacuum_")
     os.makedirs(os.path.join(root, "_delta_log"))
 
     def write(rel, lo, n, mtime=now - 30 * day):
@@ -3041,8 +3042,6 @@ ORDER BY cat
 # actions — an added file's rows are inserts, a removed file's rows
 # are deletes (readable because tombstoned files outlive the commit
 # until VACUUM). This is the Delta dual of `iceberg/changelog.py`.
-
-CDF_TYPES = ("insert", "delete", "update_preimage", "update_postimage")
 
 
 def cdf_change_expr(col: str = "_change_type"):
@@ -3325,13 +3324,13 @@ def delta_cdf_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_commit_version, _change_type) row counts + id sums. Oracle:
     DuckDB derives every version's change set from the same
     generation rule + the deleted-position lists."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
-    root = tempfile.mkdtemp(prefix="delta_cdf_")
+    from ..iceberg.commit import _scratch_dir
+
+    root = _scratch_dir("delta_cdf_")
     os.makedirs(os.path.join(root, "_delta_log"))
     meta_action = {"metaData": {
         "id": "00000000-0000-0000-0000-000000000cdf",
@@ -3423,14 +3422,14 @@ def domain_checkpoint_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the data must read. Golden oracle. Spec: PROTOCOL.md
     "Domain Metadata" (checkpoint writers MUST preserve the latest
     metadata per live domain)."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from ..iceberg.commit import _scratch_dir
+
     rows = []
     for form in ("classic", "v2_json", "v2_parquet"):
-        root = tempfile.mkdtemp(prefix=f"domain_ckpt_{form}_")
+        root = _scratch_dir(f"domain_ckpt_{form}_")
         os.makedirs(os.path.join(root, "_delta_log"))
         pq.write_table(
             pa.table({"id": pa.array(range(7), "int64")}),
@@ -3527,13 +3526,13 @@ def delta_row_tracking_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     stable), and an UPDATE-style rewrite whose materialized columns
     preserve the original ids at a new commit version. Golden
     oracle. Spec: PROTOCOL.md "Row Tracking"."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
-    root = tempfile.mkdtemp(prefix="delta_rt_")
+    from ..iceberg.commit import _scratch_dir
+
+    root = _scratch_dir("delta_rt_")
     os.makedirs(os.path.join(root, "_delta_log"))
     pq.write_table(pa.table({"id": pa.array(range(10, 16), "int64")}),
                    os.path.join(root, "a.parquet"))
@@ -3619,15 +3618,15 @@ def delta_ict_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader ever fell back to file time post-enablement, every
     ``timestampAsOf`` measure below would shift. Golden oracle;
     spec: PROTOCOL.md "In-Commit Timestamps"."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from ..iceberg.commit import _scratch_dir
 
     t0 = 1700000000000  # v0 mtime (pre-enablement file-time semantics)
     t1 = t0 + 100000    # v1 enablement wall clock
     far = 4100000000    # seconds, year ~2099: decoy mtime for v1/v2
-    root = tempfile.mkdtemp(prefix="delta_ict_")
+    root = _scratch_dir("delta_ict_")
     os.makedirs(os.path.join(root, "_delta_log"))
     for name, ids in (("a.parquet", [1, 2, 3]),
                       ("b.parquet", [4, 5]),

@@ -11,7 +11,11 @@ The shape a real migration service uses:
   ``repartition(partition_cols)`` → ``partitionBy`` parquet write,
   so each partition lands as its own file regardless of source
   file layout;
-* the Iceberg side is an ordinary ``append_snapshot`` commit of
+* the Iceberg side is born by ``commit.create_table`` (one
+  prologue, :func:`_create_from_delta`, converts the Delta schema
+  and partition columns for every Delta → Iceberg path; the table
+  lands under ``metadata/`` with a version hint, so it resolves by
+  name) and filled by an ordinary ``append_snapshot`` commit of
   the written files with identity partition values — after which
   every engine feature (MoR deletes, time travel, stats, CDC,
   maintenance) applies to the migrated table.
@@ -33,7 +37,7 @@ from pyspark.sql import SparkSession
 
 from ..iceberg.catalog import install_metadata
 from ..session import local_frame
-from .delta_log import read_delta_log, replay_log
+from .delta_log import _column_mapping, read_delta_log, replay_log
 
 _DELTA_TO_ICEBERG_TYPE = {
     "long": "long", "integer": "int", "string": "string",
@@ -118,6 +122,56 @@ def _delta_fields_to_iceberg(
     for fd in tops:
         fd["type"] = _delta_type_to_iceberg(fd.pop("_delta")["type"], counter)
     return tops, counter[0] - 1
+
+
+def _create_from_delta(
+    meta: dict[str, Any],
+    target_root: str,
+    *,
+    table_uuid: str,
+    properties: dict[str, str],
+    partitioned: bool = True,
+    extra_fields: list[tuple[str, str]] = (),
+    v3: bool = False,
+    name_mapping: bool = False,
+) -> tuple[str, list[dict[str, Any]], list[str]]:
+    """Create the empty Iceberg table a Delta ``metaData`` action
+    describes, through :func:`..iceberg.commit.create_table`: the
+    schemaString with fresh ids at every depth, then
+    ``extra_fields`` (name, type) after them; an identity spec over
+    ``partitionColumns`` unless ``partitioned`` is false; format v3
+    when ``v3`` is set or a column is a variant (variant and row
+    lineage are v3-only Iceberg features, so a v2 table declaring
+    them is spec-invalid); a ``schema.name-mapping.default``
+    property binding column-mapped physical names when
+    ``name_mapping`` is set. Returns ``(metadata_path, iceberg
+    fields, partition columns)``."""
+    from ..iceberg.commit import create_table
+
+    schema_fields = json.loads(meta["schemaString"])["fields"]
+    part_cols = (meta.get("partitionColumns") or []) if partitioned else []
+    ice_fields, last_id = _delta_fields_to_iceberg(schema_fields)
+    ice_fields += [
+        {"id": last_id + j, "name": n, "required": False, "type": t}
+        for j, (n, t) in enumerate(extra_fields, start=1)
+    ]
+    if name_mapping and _column_mapping(meta):
+        properties = {
+            **properties,
+            "schema.name-mapping.default": json.dumps(
+                _nested_name_mapping(schema_fields, ice_fields)
+            ),
+        }
+    v3 = v3 or any(f["type"] == "variant" for f in ice_fields)
+    mp = create_table(
+        target_root,
+        ice_fields,
+        partition_by=[(c, "identity", c) for c in part_cols],
+        format_version=3 if v3 else 2,
+        properties=properties,
+        table_uuid=table_uuid,
+    )
+    return mp, ice_fields, part_cols
 
 
 def _nm_type_entries(delta_t, ice_t) -> list[dict[str, Any]]:
@@ -217,43 +271,13 @@ def migrate_delta_to_iceberg(
     from ..iceberg.commit import append_snapshot
 
     adds, meta, eff_version = replay_log(delta_root, version)
-    schema_fields = json.loads(meta["schemaString"])["fields"]
-    part_cols = meta.get("partitionColumns") or []
-    ice_fields, last_col_id = _delta_fields_to_iceberg(schema_fields)
-    by_name = {f["name"]: f["id"] for f in ice_fields}
-    spec_fields = [
-        {"name": c, "transform": "identity", "source-id": by_name[c],
-         "field-id": 1000 + i}
-        for i, c in enumerate(part_cols)
-    ]
-
-    os.makedirs(os.path.join(target_root, "metadata"))
-    os.makedirs(os.path.join(target_root, "data"))
-    meta0 = {
-        # variant is a v3-only Iceberg type: a v2 table declaring it
-        # is spec-invalid and foreign readers reject it (review r14)
-        "format-version": (
-            3 if any(f["type"] == "variant" for f in ice_fields) else 2
-        ),
-        "table-uuid": table_uuid,
-        "location": f"file://{os.path.abspath(target_root)}",
-        "last-sequence-number": 0,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": last_col_id,
-        "current-schema-id": 0,
-        "schemas": [{"schema-id": 0, "type": "struct", "fields": ice_fields}],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {
+    mp, ice_fields, part_cols = _create_from_delta(
+        meta, target_root, table_uuid=table_uuid,
+        properties={
             "migrated-from": "delta",
             "migrated-delta-version": str(eff_version),
         },
-        "snapshots": [], "snapshot-log": [], "metadata-log": [],
-    }
-    mp = os.path.join(target_root, "v1.metadata.json")
-    install_metadata(mp, meta0)
+    )
 
     # ---- ONE Spark job: restore partition cols, one file per
     # partition directory. partitionBy EXCLUDES its columns from
@@ -279,7 +303,7 @@ def migrate_delta_to_iceberg(
     # (a row per FILE, metadata-scale; gated so non-variant
     # migrations keep their job count)
     counts: dict[str, int] | None = None
-    if any(f["type"] == "variant" for f in schema_fields):
+    if any(f["type"] == "variant" for f in ice_fields):
         counts = {
             os.path.basename(r["f"]): r["n"]
             for r in spark.read.parquet(tmp)
@@ -345,14 +369,13 @@ def delta_migrate_rows(spark: SparkSession, sf_dir: str):
     pure-SQL Delta log replay (``DELTA_LOG_SQL``'s rollup) — the two
     sides cross the format boundary through fully disjoint code.
     (``sf_dir`` unused.)"""
-    import tempfile
-
     import pyspark.sql.functions as F
 
+    from ..iceberg.commit import _scratch_dir
     from ..iceberg.deletes import read_mor
     from .delta_log import DELTA_FIXTURE
 
-    target = os.path.join(tempfile.mkdtemp(prefix="delta_migrate_"), "t")
+    target = os.path.join(_scratch_dir("delta_migrate_"), "t")
     res = migrate_delta_to_iceberg(spark, DELTA_FIXTURE, target)
     migrated = read_mor(spark, res["metadata_path"], res["snapshot_id"], target)
     return (
@@ -502,14 +525,13 @@ def delta_export_rows(spark: SparkSession, sf_dir: str):
     state (``VIS_CTES``) — the Spark side crosses Iceberg MoR →
     parquet → Delta log; the oracle never leaves the original
     physical files. (``sf_dir`` unused.)"""
-    import tempfile
-
     import pyspark.sql.functions as F
 
+    from ..iceberg.commit import _scratch_dir
     from ..iceberg.deletes import MOR_DIR, MOR_METADATA
     from .delta_log import read_delta_log
 
-    target = os.path.join(tempfile.mkdtemp(prefix="delta_export_"), "t")
+    target = os.path.join(_scratch_dir("delta_export_"), "t")
     export_iceberg_to_delta(spark, MOR_METADATA, 2004, target, base_dir=MOR_DIR)
     return (
         read_delta_log(spark, target)
@@ -543,52 +565,15 @@ def replicate_delta_stream(
     has adds; here we replicate add-only histories (Delta removes
     need the DML path, which ``migrate_delta_to_iceberg`` covers by
     snapshotting)."""
-    import json as _json
-
     from ..streaming.ingest import ingest_stream_to_table
-    from .delta_log import delta_incremental_stream, replay_log
+    from .delta_log import delta_incremental_stream
 
     _, meta, _ = replay_log(delta_root, to_version)
-    schema_fields = _json.loads(meta["schemaString"])["fields"]
-    part_cols = meta.get("partitionColumns") or []
-    ice_fields, last_col_id = _delta_fields_to_iceberg(schema_fields)
-    last_col_id += 1
-    ice_fields.append({
-        "id": last_col_id, "name": "_delta_version",
-        "required": False, "type": "long",
-    })
-    by_name = {f["name"]: f["id"] for f in ice_fields}
-    os.makedirs(os.path.join(target_root, "metadata"))
-    os.makedirs(os.path.join(target_root, "data"))
-    meta0 = {
-        # variant is a v3-only Iceberg type: a v2 table declaring it
-        # is spec-invalid and foreign readers reject it (review r14)
-        "format-version": (
-            3 if any(f["type"] == "variant" for f in ice_fields) else 2
-        ),
-        "table-uuid": "00000000-0000-0000-0000-00000000f003",
-        "location": f"file://{os.path.abspath(target_root)}",
-        "last-sequence-number": 0,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": last_col_id,
-        "current-schema-id": 0,
-        "schemas": [{"schema-id": 0, "type": "struct", "fields": ice_fields}],
-        "default-spec-id": 0,
-        "partition-specs": [{
-            "spec-id": 0,
-            "fields": [
-                {"name": c, "transform": "identity", "source-id": by_name[c],
-                 "field-id": 1000 + i}
-                for i, c in enumerate(part_cols)
-            ],
-        }],
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {"replicated-from": "delta"},
-        "snapshots": [], "snapshot-log": [], "metadata-log": [],
-    }
-    mp = os.path.join(target_root, "v1.metadata.json")
-    install_metadata(mp, meta0)
+    mp, _fields, part_cols = _create_from_delta(
+        meta, target_root, table_uuid="00000000-0000-0000-0000-00000000f003",
+        properties={"replicated-from": "delta"},
+        extra_fields=[("_delta_version", "long")],
+    )
 
     # add-only replication is this function's DOCUMENTED limitation
     # (replicate_delta_versions is the removes-included path), so it
@@ -1453,16 +1438,14 @@ def delta_replicate_rows(spark: SparkSession, sf_dir: str):
     ``checkpoint_interval=5`` (parquet checkpoints at v5/v10 +
     ``_last_checkpoint``), and the replica is read back THROUGH the
     newest checkpoint. Golden oracle over the deterministic ids."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
-    from ..iceberg.commit import append_snapshot, create_table
+    from ..iceberg.commit import _scratch_dir, append_snapshot, create_table
     from .delta_log import latest_checkpoint, read_delta_log
 
-    work = tempfile.mkdtemp(prefix="delta_repl_")
+    work = _scratch_dir("delta_repl_")
     ice_root = os.path.join(work, "ice")
     os.makedirs(ice_root)
     mp = create_table(ice_root, [("id", "long"), ("cat", "string")])
@@ -1541,15 +1524,11 @@ def replicate_delta_versions(
 
     import pyarrow.parquet as _pq
 
-    from ..iceberg.commit import SnapshotProducer, append_snapshot
+    from ..iceberg.commit import SnapshotProducer, append_snapshot, commit_version
     from ..iceberg.deletes import mor_entries_at
+    from ..iceberg.metadata import parse_metadata
     from ..iceberg.rewrite_data import _replace_commit
-    from .delta_log import (
-        _column_mapping,
-        check_reader_support,
-        list_commits,
-        replay_log,
-    )
+    from .delta_log import check_reader_support, list_commits
 
     _, meta, head = replay_log(delta_root, to_version)
     # this path consumes data files DIRECTLY (verbatim copies + DV
@@ -1558,9 +1537,6 @@ def replicate_delta_versions(
         delta_root, head, proto=meta.get("__protocol__") or {"minReaderVersion": 1}
     )
     mapping = _column_mapping(meta)  # physical → logical, top-level
-    schema_fields = json.loads(meta["schemaString"])["fields"]
-    part_cols = meta.get("partitionColumns") or []
-    ice_fields, last_col_id = _delta_fields_to_iceberg(schema_fields)
     # Delta Row Tracking → Iceberg v3 row lineage (r15; r16 closes
     # the materialized-column refusal, VERDICT r15 #5): verbatim
     # copies carry first_row_id = baseRowId (positions identical →
@@ -1597,7 +1573,6 @@ def replicate_delta_versions(
                 ) + 1
             except (ValueError, TypeError):
                 rt_next = 0
-    by_name = {f["name"]: f["id"] for f in ice_fields}
     # column-mapped sources (VERDICT r13 #5, NESTED r15): the
     # verbatim copies carry PHYSICAL column names at every depth, so
     # the replica declares Iceberg's spec mechanism for foreign-named
@@ -1607,44 +1582,19 @@ def replicate_delta_versions(
     # mirroring struct internals. Reads stay zero-rewrite: `read_mor`
     # applies the mapping as one post-scan projection (struct-typed
     # columns rename through one positional CAST).
-    name_mapping_prop = None
     phys_of = {v: k for k, v in (mapping or {}).items()}  # logical → physical
-    if mapping:
-        name_mapping_prop = json.dumps(
-            _nested_name_mapping(schema_fields, ice_fields)
-        )
-    spec_fields = [
-        {"name": c, "transform": "identity", "source-id": by_name[c],
-         "field-id": 1000 + i}
-        for i, c in enumerate(part_cols)
-    ]
-    os.makedirs(os.path.join(target_root, "metadata"))
-    os.makedirs(os.path.join(target_root, "data"))
-    v3_out = rt_map or any(f["type"] == "variant" for f in ice_fields)
-    meta0 = {
-        # variant and row lineage are v3-only Iceberg features: a v2
-        # table declaring them is spec-invalid (review r14)
-        "format-version": 3 if v3_out else 2,
-        "table-uuid": table_uuid,
-        "location": f"file://{os.path.abspath(target_root)}",
-        "last-sequence-number": 0,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": last_col_id,
-        "current-schema-id": 0,
-        "schemas": [{"schema-id": 0, "type": "struct", "fields": ice_fields}],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {"replicated-from": "delta", "replication": "full-fidelity"},
-        "snapshots": [], "snapshot-log": [], "metadata-log": [],
-    }
-    if v3_out:
-        meta0["next-row-id"] = rt_next
-    if name_mapping_prop:
-        meta0["properties"]["schema.name-mapping.default"] = name_mapping_prop
-    mp = os.path.join(target_root, "v1.metadata.json")
-    install_metadata(mp, meta0)
+    mp, ice_fields, part_cols = _create_from_delta(
+        meta, target_root, table_uuid=table_uuid,
+        properties={"replicated-from": "delta", "replication": "full-fidelity"},
+        v3=rt_map, name_mapping=True,
+    )
+    if rt_next:
+        # the replica's row-id counter continues the source's
+        # high-water mark, so ids drawn for adds without a baseRowId
+        # never repeat a source row id
+        raw = json.loads(json.dumps(parse_metadata(mp).raw))
+        raw["next-row-id"] = rt_next
+        mp = commit_version(mp, raw)
 
     # Delta path → the replica rel that currently represents it: a
     # DV fold renames (data/dvN-<path>), so a LATER remove of the
@@ -1884,14 +1834,13 @@ def delta_replicate_full_rows(spark: SparkSession, sf_dir: str):
     through the ICEBERG reader. Oracle: DuckDB replays the DELTA
     transaction log in pure SQL (``DELTA_LOG_SQL``) — the two
     engines cross the format boundary by entirely different code."""
-    import tempfile
-
     import pyspark.sql.functions as F
 
+    from ..iceberg.commit import _scratch_dir
     from ..iceberg.deletes import read_mor
     from .delta_log import DELTA_FIXTURE
 
-    tgt = os.path.join(tempfile.mkdtemp(prefix="fullrepl_gate_"), "t")
+    tgt = os.path.join(_scratch_dir("fullrepl_gate_"), "t")
     res = replicate_delta_versions(spark, DELTA_FIXTURE, tgt)
     return (
         read_mor(spark, res["metadata_path"], 8000 + res["head_delta_version"])
@@ -1922,32 +1871,11 @@ def _init_cdf_replica(
     CDF-driven replication: (metadata_path, iceberg fields, head
     Delta version). Shared by the batch and streaming appliers."""
     _, meta, head = replay_log(delta_root, to_version)
-    schema_fields = json.loads(meta["schemaString"])["fields"]
-    ice_fields, last_col_id = _delta_fields_to_iceberg(schema_fields)
-    os.makedirs(os.path.join(target_root, "metadata"))
-    os.makedirs(os.path.join(target_root, "data"))
-    meta0 = {
-        # variant is a v3-only Iceberg type: a v2 table declaring it
-        # is spec-invalid and foreign readers reject it (review r14)
-        "format-version": (
-            3 if any(f["type"] == "variant" for f in ice_fields) else 2
-        ),
-        "table-uuid": table_uuid,
-        "location": f"file://{os.path.abspath(target_root)}",
-        "last-sequence-number": 0,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": last_col_id,
-        "current-schema-id": 0,
-        "schemas": [{"schema-id": 0, "type": "struct", "fields": ice_fields}],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {"replicated-from": "delta", "replication": "cdf"},
-        "snapshots": [], "snapshot-log": [], "metadata-log": [],
-    }
-    mp = os.path.join(target_root, "v1.metadata.json")
-    install_metadata(mp, meta0)
+    mp, ice_fields, _ = _create_from_delta(
+        meta, target_root, table_uuid=table_uuid,
+        properties={"replicated-from": "delta", "replication": "cdf"},
+        partitioned=False,
+    )
     return mp, ice_fields, head
 
 
@@ -2369,14 +2297,13 @@ def delta_cdf_replicate_rows(spark: SparkSession, sf_dir: str):
     the replica HEAD through the ICEBERG reader. Oracle: DuckDB
     replays the DELTA transaction log in pure SQL (``DELTA_LOG_SQL``)
     — two engines, two formats, two code paths, one answer."""
-    import tempfile
-
     import pyspark.sql.functions as F
 
+    from ..iceberg.commit import _scratch_dir
     from ..iceberg.deletes import read_mor
     from .delta_log import DELTA_FIXTURE
 
-    tgt = os.path.join(tempfile.mkdtemp(prefix="cdfrepl_gate_"), "t")
+    tgt = os.path.join(_scratch_dir("cdfrepl_gate_"), "t")
     res = replicate_delta_cdf(spark, DELTA_FIXTURE, tgt)
     return (
         read_mor(spark, res["metadata_path"], 8000 + res["head_delta_version"])
@@ -2398,10 +2325,9 @@ def variant_bridge_rows(spark: SparkSession, sf_dir: str):
     must agree with the generation rule. Golden oracle (30 ids, tag
     = ``t{id % 3}``, ``a = id``). Spec: Iceberg v3 "variant",
     Delta PROTOCOL.md "Variant Data Type"."""
-    import tempfile
-
     import pyspark.sql.functions as F
 
+    from ..iceberg.commit import _scratch_dir
     from ..iceberg.deletes import read_mor
     from ..iceberg.metadata import parse_metadata
     from .delta_log import (
@@ -2410,7 +2336,7 @@ def variant_bridge_rows(spark: SparkSession, sf_dir: str):
         read_delta_log,
     )
 
-    work = tempfile.mkdtemp(prefix="variant_bridge_")
+    work = _scratch_dir("variant_bridge_")
     root = os.path.join(work, "src")
     os.makedirs(os.path.join(root, "_delta_log"))
     schema = json.dumps({"type": "struct", "fields": [
@@ -2491,47 +2417,23 @@ def lineage_bridge_rows(spark: SparkSession, sf_dir: str):
     onto ``_row_id`` again). Every hop must show the SOURCE row
     ids for the 7 survivors — stable identity is the whole point of
     lineage. Golden oracle: 21 (hop, id, row_id) rows."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..iceberg.commit import append_snapshot
+    from ..iceberg.commit import _scratch_dir, append_snapshot, create_table
     from ..iceberg.deletes import read_mor_lineage
     from ..iceberg.dml import delete_where
     from ..iceberg.metadata import parse_metadata
     from ..iceberg.rewrite_data import rewrite_data_files
     from .delta_log import read_delta_log
 
-    work = tempfile.mkdtemp(prefix="lineage_bridge_")
+    work = _scratch_dir("lineage_bridge_")
     root = os.path.join(work, "src")
-    os.makedirs(os.path.join(root, "metadata"))
-    os.makedirs(os.path.join(root, "data"))
-    meta0 = {
-        "format-version": 3,
-        "table-uuid": "00000000-0000-0000-0000-00000000e0b1",
-        "location": "file:///tmp/lineage_bridge_table",
-        "last-sequence-number": 0,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": 2,
-        "current-schema-id": 0,
-        "schemas": [{
-            "schema-id": 0, "type": "struct",
-            "fields": [
-                {"id": 1, "name": "id", "required": False, "type": "long"},
-                {"id": 2, "name": "category", "required": False,
-                 "type": "string"},
-            ],
-        }],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {}, "snapshots": [], "snapshot-log": [],
-        "metadata-log": [],
-    }
-    mp = os.path.join(root, "v1.metadata.json")
-    install_metadata(mp, meta0)
+    mp = create_table(
+        root, [("id", "long"), ("category", "string")], format_version=3,
+        table_uuid="00000000-0000-0000-0000-00000000e0b1",
+        location="file:///tmp/lineage_bridge_table",
+    )
 
     def _write(rel, ids, cat):
         pq.write_table(

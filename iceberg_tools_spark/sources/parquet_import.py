@@ -49,8 +49,6 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..iceberg.catalog import install_metadata
-
 _EPOCH_DATE = date(1970, 1, 1)
 
 # arrow type id/name → iceberg type
@@ -158,6 +156,11 @@ def import_parquet_table(
     footer read per file, hard-linked data, no Spark job. Returns
     the commit dict + ``n_files``/``n_rows``.
 
+    The table is born by :func:`..iceberg.commit.create_table`
+    (``metadata/v1.metadata.json`` plus ``version-hint.text``), so a
+    ``target_root`` of ``<warehouse>/<ns>/<name>`` is found by name
+    through ``catalog.list_tables`` / ``catalog.load_table``.
+
     String bounds longer than ``max_string_bound`` are omitted
     (bounds are optional per column; parquet writers may themselves
     truncate long string stats — truncated-adjusted stats remain
@@ -165,7 +168,7 @@ def import_parquet_table(
     """
     import pyarrow.parquet as pq
 
-    from ..iceberg.commit import append_snapshot
+    from ..iceberg.commit import append_snapshot, create_table
     from ..iceberg.conversions import to_bytes
 
     files, part_cols = _discover(src_dir)
@@ -193,42 +196,18 @@ def import_parquet_table(
             {"id": data_col_n + 1 + j, "name": c, "required": False, "type": t}
         )
     by_name = {f["name"]: f for f in ice_fields}
-    spec_fields = [
-        {
-            "name": c,
-            "transform": "identity",
-            "source-id": by_name[c]["id"],
-            "field-id": 1000 + j,
-        }
-        for j, c in enumerate(part_cols)
-    ]
     name_mapping = [
         {"field-id": f["id"], "names": [f["name"]]} for f in ice_fields
     ]
-
-    os.makedirs(os.path.join(target_root, "metadata"))
-    os.makedirs(os.path.join(target_root, "data"))
-    meta0 = {
-        "format-version": 2,
-        "table-uuid": table_uuid,
-        "location": f"file://{os.path.abspath(target_root)}",
-        "last-sequence-number": 0,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": len(ice_fields),
-        "current-schema-id": 0,
-        "schemas": [{"schema-id": 0, "type": "struct", "fields": ice_fields}],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {
+    mp = create_table(
+        target_root, ice_fields,
+        partition_by=[(c, "identity", c) for c in part_cols],
+        properties={
             "imported-from": os.path.abspath(src_dir),
             "schema.name-mapping.default": json.dumps(name_mapping),
         },
-        "snapshots": [], "snapshot-log": [], "metadata-log": [],
-    }
-    mp = os.path.join(target_root, "v1.metadata.json")
-    install_metadata(mp, meta0)
+        table_uuid=table_uuid,
+    )
 
     # ---- per-file: hard link into the table layout + footer stats
     data_files: list[dict[str, Any]] = []
@@ -319,13 +298,12 @@ def parquet_import_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from manifest partition tuples, since the parquet files do not
     contain it. Oracle: the same rollup over the original ``orders``
     in DuckDB — the import must be lossless row-for-row."""
-    import tempfile
-
     import pyspark.sql.functions as F
 
+    from ..iceberg.commit import _scratch_dir
     from ..iceberg.deletes import read_mor
 
-    scratch = tempfile.mkdtemp(prefix="pq_import_")
+    scratch = _scratch_dir("pq_import_")
     lake = os.path.join(scratch, "lake")
     (
         spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))

@@ -29,7 +29,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..iceberg.catalog import install_metadata
 from ..iceberg.changelog import changelog_between
 from ..iceberg.metadata import parse_metadata
 from ..iceberg.snapshots import ancestor_chain
@@ -95,14 +94,13 @@ def changelog_stream_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALL over every snapshot's visible row set) — certifying that
     streamed CDC consumption loses/dups/reorders nothing vs the
     batch changelog. (``sf_dir`` unused.)"""
-    import tempfile
-
+    from ..iceberg.commit import _scratch_dir
     from ..iceberg.deletes import MOR_METADATA
     from .jobs import run_to_memory
 
     seq = next(_GATE_SEQ)
     name = f"cdc_stream_gate_rows_{seq}"
-    staging = tempfile.mkdtemp(prefix=f"cdc_stream_gate_{seq}_")
+    staging = _scratch_dir(f"cdc_stream_gate_{seq}_")
     try:
         stream, _ = changelog_stream(spark, MOR_METADATA, 2001, 2004, staging)
         got = run_to_memory(stream, name)
@@ -160,7 +158,7 @@ def replicate_changelog(
     "target_root"}``."""
     import os
 
-    from ..iceberg.commit import append_snapshot
+    from ..iceberg.commit import append_snapshot, create_table
     from ..iceberg.deletes import read_mor
     from ..iceberg.dml import delete_where
     from ..iceberg.rewrite_data import _write_single_parquet
@@ -168,32 +166,11 @@ def replicate_changelog(
     base_dir = base_dir or os.path.dirname(src_metadata)
 
     # ---- seed B with A@from_id
-    os.makedirs(os.path.join(target_root, "metadata"))
-    os.makedirs(os.path.join(target_root, "data"))
-    meta0 = {
-        "format-version": 2,
-        "table-uuid": "00000000-0000-0000-0000-00000000c001",
-        "location": "file:///tmp/cdc_replica_table",
-        "last-sequence-number": 0,
-        "last-updated-ms": 1700000000000,
-        "last-column-id": 2,
-        "current-schema-id": 0,
-        "schemas": [{
-            "schema-id": 0, "type": "struct",
-            "fields": [
-                {"id": 1, "name": "id", "required": False, "type": "long"},
-                {"id": 2, "name": "category", "required": False, "type": "string"},
-            ],
-        }],
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {}, "snapshots": [], "snapshot-log": [],
-        "metadata-log": [],
-    }
-    mp = os.path.join(target_root, "v1.metadata.json")
-    install_metadata(mp, meta0)
+    mp = create_table(
+        target_root, [("id", "long"), ("category", "string")],
+        table_uuid="00000000-0000-0000-0000-00000000c001",
+        location="file:///tmp/cdc_replica_table",
+    )
     seed = read_mor(spark, src_metadata, from_id, base_dir).select("id", "category")
     _write_single_parquet(seed.orderBy("id"), os.path.join(target_root, "data", "seed.parquet"))
     state = append_snapshot(mp, [{"path": "data/seed.parquet", "partition": {}}])

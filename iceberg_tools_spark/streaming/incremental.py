@@ -146,14 +146,13 @@ def incremental_stream_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental consumption loses/dups nothing vs a raw read of the
     planned files. (``sf_dir`` unused: metadata queries run on the
     repo fixture, like every other meta_* entry.)"""
-    import tempfile
-
+    from ..iceberg.commit import _scratch_dir
     from ..iceberg.deletes import MOR_METADATA
     from .jobs import run_to_memory
 
     seq = next(_GATE_SEQ)  # unique sink name + staging dir per call
     name = f"inc_stream_gate_rows_{seq}"
-    staging = tempfile.mkdtemp(prefix=f"inc_stream_gate_{seq}_")
+    staging = _scratch_dir(f"inc_stream_gate_{seq}_")
     try:
         stream = incremental_scan_stream(spark, MOR_METADATA, 2001, 2002, staging)
         got = run_to_memory(stream, name)

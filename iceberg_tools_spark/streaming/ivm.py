@@ -87,9 +87,9 @@ def stream_ivm_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the changelog STREAM (3 commits = 3 micro-batches). Oracle: the
     same independent DuckDB full-recompute of head state as the
     batch IVM key. (``sf_dir`` unused.)"""
-    import tempfile
+    from ..iceberg.commit import _scratch_dir
 
-    work = tempfile.mkdtemp(prefix="stream_ivm_")
+    work = _scratch_dir("stream_ivm_")
     # size shuffle partitions to the micro-batch volume (KB
     # changelogs), not the session's CPU count — the same
     # deliberate stream-start knob as stream_join_rows; measured

@@ -76,9 +76,9 @@ def media_stream_dedup_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparisons don't flip), so those groups collapse to 2 distinct
     fingerprints and the rest to 3 (consistent with the image
     gate's exact_hash_pairs accounting)."""
-    import tempfile
+    from ..iceberg.commit import _scratch_dir
 
-    work = tempfile.mkdtemp(prefix="media_stream_")
+    work = _scratch_dir("media_stream_")
     staging = stage_image_corpus(spark, work, n_groups=8)
     # two files per trigger: still a MULTI-batch streaming proof
     # (2 micro-batches over 4 shards) at half the availableNow

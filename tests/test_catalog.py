@@ -201,6 +201,46 @@ def test_create_table_visible_to_catalog(spark, tmp_path):
     assert load_table(spark, wh, "db.t1").count() == 7
 
 
+def _import_parquet(spark, tmp_path, target):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_tools_spark.sources.parquet_import import import_parquet_table
+
+    lake = tmp_path / "lake"
+    for p, ids in (("a", range(0, 4)), ("b", range(4, 7))):
+        (lake / f"p={p}").mkdir(parents=True)
+        pq.write_table(pa.table({"id": pa.array(ids, pa.int64())}),
+                       lake / f"p={p}" / "f.parquet")
+    res = import_parquet_table(spark, str(lake), target)
+    assert res["n_rows"] == 7
+    return res
+
+
+def _migrate_delta(spark, tmp_path, target):
+    from iceberg_tools_spark.sources.delta_log import DELTA_FIXTURE
+    from iceberg_tools_spark.sources.migrate import migrate_delta_to_iceberg
+
+    return migrate_delta_to_iceberg(spark, DELTA_FIXTURE, target)
+
+
+@pytest.mark.parametrize("birth", [_import_parquet, _migrate_delta],
+                         ids=["parquet_import", "delta_migrate"])
+def test_imported_and_migrated_tables_resolve_by_name(spark, tmp_path, birth):
+    """A table born by an import or a migration under a warehouse is
+    found by name, and reads the rows the function committed."""
+    from iceberg_tools_spark.iceberg.deletes import read_mor
+
+    wh = str(tmp_path / "wh")
+    res = birth(spark, tmp_path, os.path.join(wh, "db", "born"))
+    assert list_tables(wh) == ["db.born"]
+    assert current_metadata_path(wh, "db.born") == res["metadata_path"]
+    by_name = load_table(spark, wh, "db.born")
+    committed = read_mor(spark, res["metadata_path"], res["snapshot_id"])
+    assert by_name.count() > 0
+    assert sorted(by_name.collect()) == sorted(committed.collect())
+
+
 def test_install_metadata_racing_writers_one_wins(tmp_path):
     """More writers than cores race to install the same version: one
     links it, every other gets CommitConflictError, the file holds

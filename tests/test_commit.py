@@ -977,6 +977,50 @@ def test_create_table_api(spark, tmp_path):
                      [("id", "long")], partition_by=[("x", "identity", "nope")])
 
 
+def _schema_ids(node) -> list[int]:
+    """Every field id at every depth of a field list or type."""
+    if isinstance(node, list):
+        return [i for n in node for i in _schema_ids(n)]
+    if not isinstance(node, dict):
+        return []
+    own = [node[k] for k in ("id", "element-id", "key-id", "value-id") if k in node]
+    return own + [i for k in ("type", "fields", "element", "key", "value")
+                  for i in _schema_ids(node.get(k))]
+
+
+def test_create_table_counts_nested_ids(tmp_path):
+    """``last-column-id`` covers struct fields, list elements and map
+    keys/values, so a column added later gets a fresh id."""
+    import json
+
+    from iceberg_tools_spark.iceberg.commit import create_table
+    from iceberg_tools_spark.iceberg.evolution import evolve_schema
+
+    fields = [
+        {"id": 1, "name": "id", "required": False, "type": "long"},
+        {"id": 2, "name": "s", "required": False, "type": {
+            "type": "struct", "fields": [
+                {"id": 5, "name": "a", "required": False, "type": "int"},
+                {"id": 6, "name": "b", "required": False, "type": "string"},
+            ]}},
+        {"id": 3, "name": "tags", "required": False, "type": {
+            "type": "list", "element-id": 7, "element": "string",
+            "element-required": False}},
+        {"id": 4, "name": "attrs", "required": False, "type": {
+            "type": "map", "key-id": 8, "key": "string", "value-id": 9,
+            "value": {"type": "struct", "fields": [
+                {"id": 10, "name": "v", "required": False, "type": "long"},
+            ]}, "value-required": False}},
+    ]
+    mp = create_table(str(tmp_path / "t"), fields)
+    assert json.load(open(mp))["last-column-id"] == 10
+    res = evolve_schema(mp, add=[("c", "long"), ("d", "string")])
+    raw = json.load(open(res["metadata_path"]))
+    ids = _schema_ids(raw["schemas"][-1]["fields"])
+    assert len(ids) == len(set(ids)) == 12
+    assert raw["last-column-id"] == max(ids) == 12
+
+
 def test_update_table_properties_roundtrip(spark, tmp_path):
     """SET/UNSET TBLPROPERTIES: properties-only metadata commits —
     no snapshot added, metadata-log extended, catalog resolution

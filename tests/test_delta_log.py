@@ -211,7 +211,6 @@ def test_replicate_delta_stream_per_version_commits(spark, tmp_path):
     from iceberg_tools_spark.streaming.ingest import (
         STREAM_BATCH_PROP,
         STREAM_QUERY_PROP,
-        latest_metadata_path,
     )
 
     target = str(tmp_path / "replica")
@@ -219,7 +218,7 @@ def test_replicate_delta_stream_per_version_commits(spark, tmp_path):
         spark, DELTA_FIXTURE, target, 0, 3, str(tmp_path / "work")
     )
     assert res["n_versions"] == 3
-    head = latest_metadata_path(str(tmp_path / "replica" / "v1.metadata.json"))
+    head = res["head"]
     meta = parse_metadata(head)
     stream_snaps = [
         s for s in meta.snapshots

@@ -564,6 +564,73 @@ def e(f, rows):
     ]
 
 
+# ---- one table birth, one scratch-directory helper ----------------
+
+# the REST client's ``metadata_path(scratch_dir=...)`` copy lands in a
+# directory the caller names and keeps
+_MKDTEMP_SITES = {
+    ("iceberg/commit.py", "_scratch_dir"),
+    ("iceberg/rest_catalog.py", "metadata_path"),
+}
+
+
+def _births_and_scratch(tree: ast.Module):
+    """('birth', fn) for each dict literal shaped like a new table's
+    metadata (both a ``"last-column-id"`` and a ``"partition-specs"``
+    key) and ('mkdtemp', fn) for each ``tempfile.mkdtemp`` call."""
+    def candidate(n: ast.AST) -> bool:
+        return isinstance(n, ast.Dict) or (isinstance(n, ast.Call) and _call_name(n) == "mkdtemp")
+
+    for fn, node, _assigns in _scoped(tree, candidate):
+        if isinstance(node, ast.Call):
+            yield "mkdtemp", fn
+        elif {"last-column-id", "partition-specs"} <= {
+            k.value for k in node.keys if isinstance(k, ast.Constant)
+        }:
+            yield "birth", fn
+
+
+def test_tables_born_only_by_create_table():
+    """Every table's first ``metadata.json`` is built by
+    ``commit.create_table``, and every temp directory comes from
+    ``commit._scratch_dir`` (removed at process exit)."""
+    found: dict[str, set[tuple[str, str]]] = {"birth": set(), "mkdtemp": set()}
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        for kind, fn in _births_and_scratch(ast.parse(path.read_text())):
+            found[kind].add((rel, fn))
+    assert found["birth"] == {("iceberg/commit.py", "create_table")}
+    assert found["mkdtemp"] == _MKDTEMP_SITES
+
+
+def test_birth_scan_sees_hand_built_tables():
+    """The rule's detector flags a hand-built first version and a bare
+    ``mkdtemp``, and passes ``create_table`` calls, single-key updates
+    and self-removing temp directories."""
+    src = """
+def a(root):
+    meta0 = {"format-version": 2, "last-column-id": 2,
+             "partition-specs": [{"spec-id": 0, "fields": []}]}
+    install_metadata(os.path.join(root, "v1.metadata.json"), meta0)
+def b(root, fields):
+    return create_table(root, fields)
+def c(raw):
+    raw["last-column-id"] = 3
+    return {"last-column-id": 3, "schemas": raw["schemas"]}
+def d():
+    return tempfile.mkdtemp(prefix="x_")
+def e():
+    from tempfile import mkdtemp
+    return mkdtemp()
+def f():
+    with tempfile.TemporaryDirectory() as t:
+        return os.listdir(t)
+"""
+    assert sorted(_births_and_scratch(ast.parse(src))) == [
+        ("birth", "a"), ("mkdtemp", "d"), ("mkdtemp", "e"),
+    ]
+
+
 # ---- driver rows reach Spark through local_frame ------------------
 
 # (module, function) → why it still hands a driver list to
