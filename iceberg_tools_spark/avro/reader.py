@@ -6,7 +6,10 @@ manifest and manifest list, on the driver or in executor tasks
 process (``_DECODERS``, keyed by the header's ``avro.schema`` text) into
 nested ``(buf, pos) -> (value, pos)`` closures over a ``bytes`` block:
 records, arrays and maps are generated code with varints, strings and
-one-byte union indexes inline. Malformed input raises ``AvroError``.
+one-byte union indexes inline. Malformed input raises ``AvroError``,
+including an array, map or block count that cannot fit the bytes left
+(checked once per block against the items' least width; a count of
+zero-width items against ``ZERO_WIDTH_MAX_COUNT``).
 """
 
 from __future__ import annotations
@@ -142,6 +145,33 @@ def _resolve(schema: Any, names: dict[str, Any]) -> Any:
     return schema
 
 
+def _min_width(schema: Any, names: dict[str, Any], open_records: tuple = ()) -> int:
+    """A lower bound on the bytes one ``schema`` value takes: 0 for
+    null, fixed[0] and records of only those, 1 per varint."""
+    schema = _resolve(schema, names)
+    kind = _kind(schema)
+    if kind == "record":
+        if id(schema) in open_records:
+            return 0
+        inner = (*open_records, id(schema))
+        return sum(_min_width(f["type"], names, inner) for f in schema["fields"])
+    if kind == "fixed":
+        return max(int(schema["size"]), 0)
+    return {"null": 0, "float": 4, "double": 8}.get(kind, 1)
+
+
+# a count of zero-width items consumes no bytes, so only a fixed cap
+# bounds it (as Java Avro caps every collection length)
+ZERO_WIDTH_MAX_COUNT = 1 << 16
+
+
+def _count_check(width: int, left: str) -> list[str]:
+    """Source that rejects a count ``c`` of ``width``-byte items that
+    cannot fit the ``left`` bytes."""
+    over = f"c * {width} > {left}" if width else f"c > {ZERO_WIDTH_MAX_COUNT}"
+    return [f"if {over}:", f'    _fail("count", c, "cannot fit the", {left}, "bytes left")']
+
+
 def _inline_read(schema: Any, names: dict[str, Any], memo: dict[int, list], ns: dict[str, Any], t: str) -> str:
     """Source that reads one ``schema`` value into ``t``: primitives
     and one-byte union indexes inline, anything else a call."""
@@ -183,11 +213,14 @@ def _reader(schema: Any, names: dict[str, Any], memo: dict[int, list]) -> Reader
         ns.update((f"n{i}", f["name"]) for i, f in enumerate(fields))
         lines.append("return {" + ", ".join(f"n{i}: v{i}" for i in range(len(fields))) + "}, pos")
     elif kind in ("array", "map"):
-        item = _inline_read(schema["values" if kind == "map" else "items"], names, memo, ns, "v")
+        node = schema["values" if kind == "map" else "items"]
+        width = _min_width(node, names) + (kind == "map")  # a map key is a string
+        item = _inline_read(node, names, memo, ns, "v")
         item = _INLINE["string"].format(t="k") + f"\n{item}\nout[k] = v" if kind == "map" else f"{item}\nout.append(v)"
         lines = ["out = {}" if kind == "map" else "out = []", _LONG.format(t="c"), "while c:",
                  "    if c < 0:  # block with byte size prefix", "        c = -c",
-                 "        _, pos = _read_long(buf, pos)", "    for _ in range(c):",
+                 "        _, pos = _read_long(buf, pos)",
+                 *map(_indent, _count_check(width, "len(buf) - pos")), "    for _ in range(c):",
                  _indent(_indent(item)), _indent(_LONG.format(t="c")), "return out, pos"]
     elif kind == "enum":
         ns["symbols"] = list(schema["symbols"])
@@ -206,22 +239,25 @@ def _reader(schema: Any, names: dict[str, Any], memo: dict[int, list]) -> Reader
 _READERS = {k: _generated("read", "buf, pos", [src.format(t="v"), "return v, pos"], dict(_NS))
             for k, src in _INLINE.items()}
 _READ_META = _reader({"type": "map", "values": "bytes"}, {}, {})  # the file metadata
-_DECODERS: dict[bytes, Reader] = {}
+# header ``avro.schema`` text → (record reader, a block-count check)
+_DECODERS: dict[bytes, tuple[Reader, Callable[[int, int], None]]] = {}
 
 
-def _decoder(schema_text: bytes) -> Reader:
-    """The reader for a header's ``avro.schema`` text, compiled once per
-    process from a private parse. Executor workers fill their own cache;
-    no compiled reader rides in a task. The engine names each manifest's
-    records apart, so the cache starts over when full."""
-    read = _DECODERS.get(schema_text)
-    if read is None:
+def _decoder(schema_text: bytes) -> tuple[Reader, Callable[[int, int], None]]:
+    """The record reader for a header's ``avro.schema`` text and the
+    check of a block's record count against its bytes, compiled once
+    per process from a private parse. Executor workers fill their own
+    cache; no compiled reader rides in a task. The cache starts over
+    when full."""
+    hit = _DECODERS.get(schema_text)
+    if hit is None:
         if len(_DECODERS) >= 512:
             _DECODERS.clear()
         schema, names = json.loads(schema_text), {}
         _collect_named(schema, names)
-        read = _DECODERS[schema_text] = _reader(schema, names, {})
-    return read
+        check = _generated("check", "c, left", _count_check(_min_width(schema, names), "left"), dict(_NS))
+        hit = _DECODERS[schema_text] = (_reader(schema, names, {}), check)
+    return hit
 
 
 _PROMOTIONS = {
@@ -317,7 +353,7 @@ class AvroContainerFile:
             self.codec = self.meta.get("avro.codec", b"null").decode()
             self.names: dict[str, Any] = {}
             _collect_named(self.schema, self.names)
-            self._decode = _decoder(self.meta["avro.schema"])
+            self._decode, self._check_count = _decoder(self.meta["avro.schema"])
         except _MALFORMED as e:
             raise AvroError(f"malformed Avro header: {e!r}") from e
         # the blocks, as a BytesIO at the first (perfbench reads its size)
@@ -352,6 +388,7 @@ class AvroContainerFile:
                 if data[pos : pos + 16] != self.sync:
                     raise AvroError("sync marker mismatch (corrupt file)")
                 pos += 16
+                self._check_count(count, len(block))
                 for _ in range(count):
                     v, at = self._decode(block, at)
                     if reader_schema is not None:

@@ -39,7 +39,7 @@ import json
 import os
 import shutil
 import tempfile
-from typing import Any
+from typing import Any, Iterable
 
 from ..avro.writer import write_container
 from ..session import local_frame
@@ -86,17 +86,19 @@ def _kv(n: str, vtype: str) -> dict:
 
 def manifest_entry_schema(
     partition_fields: list[tuple[str, str]],
-    suffix: str,
     *,
     v3: bool = False,
     lineage: bool = False,
 ) -> dict:
     """v2 ``manifest_entry`` record (the shape `mor_entries_at` and
-    the reference's manifest reader consume). ``v3=True`` appends the
-    v3 deletion-vector locator fields (``referenced_data_file`` +
+    the reference's manifest reader consume), its records named as
+    Java Iceberg names them (``r2``, ``r102``, ``k126``, ``k129``), so
+    every manifest of one spec carries one schema text and shares one
+    compiled codec. ``v3=True`` appends the v3 deletion-vector locator
+    fields (``referenced_data_file`` +
     ``content_offset``/``content_size_in_bytes``); ``lineage=True``
     appends the v3 row-lineage ``first_row_id`` — both opt-in so v2
-    manifests stay byte-identical."""
+    manifests keep the v2 shape."""
     return {
         "type": "record",
         "name": "manifest_entry",
@@ -108,7 +110,7 @@ def manifest_entry_schema(
                 "name": "data_file",
                 "type": {
                     "type": "record",
-                    "name": f"r2_{suffix}",
+                    "name": "r2",
                     "fields": [
                         {"name": "content", "type": "int"},
                         {"name": "file_path", "type": "string"},
@@ -117,7 +119,7 @@ def manifest_entry_schema(
                             "name": "partition",
                             "type": {
                                 "type": "record",
-                                "name": f"r102_{suffix}",
+                                "name": "r102",
                                 "fields": [
                                     {"name": fn, "type": ["null", ft]}
                                     for fn, ft in partition_fields
@@ -128,12 +130,12 @@ def manifest_entry_schema(
                         {"name": "file_size_in_bytes", "type": "long"},
                         {
                             "name": "lower_bounds",
-                            "type": ["null", {"type": "array", "items": _kv(f"k126_{suffix}", "bytes")}],
+                            "type": ["null", {"type": "array", "items": _kv("k126", "bytes")}],
                             "default": None,
                         },
                         {
                             "name": "upper_bounds",
-                            "type": ["null", {"type": "array", "items": _kv(f"k129_{suffix}", "bytes")}],
+                            "type": ["null", {"type": "array", "items": _kv("k129", "bytes")}],
                             "default": None,
                         },
                         {
@@ -385,7 +387,6 @@ class SnapshotProducer:
         *,
         spec_id: int,
         content: int,
-        suffix: str,
         lineage: bool = False,
         seq: int | None = None,
         added_snapshot_id: int | None = None,
@@ -399,7 +400,7 @@ class SnapshotProducer:
         part_fields = _spec_partition_fields(self.meta, spec_id)
         v3 = any(e["data_file"].get("referenced_data_file") is not None for e in entries)
         blob = write_container(
-            manifest_entry_schema(part_fields, suffix, v3=v3, lineage=lineage), entries
+            manifest_entry_schema(part_fields, v3=v3, lineage=lineage), entries
         )
         with open(os.path.join(self.meta_dir, name), "wb") as f:
             f.write(blob)
@@ -432,31 +433,26 @@ class SnapshotProducer:
     def rebuild_manifest(
         self,
         mrow: dict[str, Any],
-        records: list[dict[str, Any]],
+        records: Iterable[dict[str, Any]],
         keep,
         tag: str,
         *,
         lineage: bool = False,
     ) -> dict[str, Any] | None:
-        """Rebuild the carried manifest ``mrow`` (its decoded
-        ``records``) as ``<name>-<tag><snapshot id>.avro`` holding the
-        live entries whose data file ``keep`` accepts, re-statused
-        EXISTING with their sequence number and snapshot id made
-        explicit. Returns its list row, or None when nothing
-        survives (the manifest is dropped)."""
+        """Rebuild the carried manifest ``mrow`` (its ``records`` as
+        ``manifest_io.read_manifest(mrow)`` returns them, inherited)
+        as ``<name>-<tag><snapshot id>.avro`` holding the live entries
+        whose data file ``keep`` accepts, re-statused EXISTING with
+        their sequence number and snapshot id made explicit. Returns
+        its list row, or None when nothing survives (the manifest is
+        dropped)."""
+        from .manifest_io import sequence_number
+
         kept = [
             {
                 "status": EXISTING,
-                "snapshot_id": (
-                    mrow.get("added_snapshot_id")
-                    if rec.get("snapshot_id") is None
-                    else rec["snapshot_id"]
-                ),
-                "sequence_number": (
-                    mrow.get("sequence_number", 0)
-                    if rec.get("sequence_number") is None
-                    else rec["sequence_number"]
-                ),
+                "snapshot_id": rec["snapshot_id"],
+                "sequence_number": sequence_number(rec),
                 "data_file": rec["data_file"],
             }
             for rec in records
@@ -470,7 +466,6 @@ class SnapshotProducer:
             kept,
             spec_id=mrow.get("partition_spec_id", 0),
             content=mrow.get("content", 0),
-            suffix=f"{tag}{self.snapshot_id}_{name}",
             lineage=lineage,
             seq=mrow.get("sequence_number", 0),
             added_snapshot_id=mrow.get("added_snapshot_id", self.parent_id),
@@ -680,15 +675,14 @@ def _retire_replaced_dvs(
     counts updated in place. Raises if a claimed-replaced ref has no
     live DV in any carried manifest (the caller's replacement set
     would silently diverge from table state)."""
-    from ..avro.reader import AvroContainerFile
+    from .manifest_io import read_manifest, sequence_number
 
     found: set[str] = set()
     for i, row in enumerate(rows):
         if row.get("content", 0) != 1:
             continue
         local = _local(row["manifest_path"], producer.base_dir, producer.loc)
-        with open(local, "rb") as f:
-            records = list(AvroContainerFile(f.read()))
+        records = list(read_manifest({**row, "local_path": local}))
         hits = [
             r
             for r in records
@@ -698,9 +692,8 @@ def _retire_replaced_dvs(
         if not hits:
             continue
         for r in hits:
-            r["status"] = DELETED  # tombstone
-            if r.get("sequence_number") is None:
-                r["sequence_number"] = row["sequence_number"]
+            r["sequence_number"] = sequence_number(r)  # a tombstone no longer inherits
+            r["status"] = DELETED
             found.add(r["data_file"]["referenced_data_file"])
         sid = producer.snapshot_id
         rebuilt = producer.write_manifest(
@@ -708,7 +701,6 @@ def _retire_replaced_dvs(
             records,
             spec_id=row.get("partition_spec_id", 0),
             content=1,
-            suffix=f"ret{sid}i{i}",
             seq=row["sequence_number"],
             added_snapshot_id=row["added_snapshot_id"],
         )
@@ -887,7 +879,6 @@ def _commit_files(
                 entries,
                 spec_id=gspec,
                 content=mc,
-                suffix=f"c{snapshot_id}m{mc}s{gspec}",
                 lineage=lineage and mc == 0,
             )
         )
@@ -1630,8 +1621,7 @@ def cherrypick_snapshot(
 
     Driver-side cost: the staged snapshot's own manifests (KB).
     """
-    from ..avro.reader import AvroContainerFile
-    from .snapshots import ancestor_chain, manifest_files_at, snapshot_by_id
+    from .snapshots import ancestor_chain, entries_added_by, snapshot_by_id
 
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
@@ -1658,25 +1648,18 @@ def cherrypick_snapshot(
     added: list[dict[str, Any]] = []
     specs: set[int] = set()
     loc = meta.raw.get("location")
-    for mrow in manifest_files_at(meta, snapshot_id, base_dir):
-        if mrow.get("content", 0) != 0:
-            continue
-        with open(mrow["local_path"], "rb") as f:
-            records = list(AvroContainerFile(f.read()))
-        for rec in records:
-            if rec["status"] != 1 or rec.get("snapshot_id") not in (None, snapshot_id):
-                continue
-            df_ = rec["data_file"]
-            local = _local(df_["file_path"], base_dir, loc)
-            added.append(
-                {
-                    "path": os.path.relpath(local, base_dir),
-                    "partition": df_.get("partition") or {},
-                    "record_count": df_["record_count"],
-                    "file_size_in_bytes": df_.get("file_size_in_bytes"),
-                }
-            )
-            specs.add(mrow.get("partition_spec_id", 0))
+    for mrow, rec in entries_added_by(meta, snapshot_id, base_dir):
+        df_ = rec["data_file"]
+        local = _local(df_["file_path"], base_dir, loc)
+        added.append(
+            {
+                "path": os.path.relpath(local, base_dir),
+                "partition": df_.get("partition") or {},
+                "record_count": df_["record_count"],
+                "file_size_in_bytes": df_.get("file_size_in_bytes"),
+            }
+        )
+        specs.add(mrow.get("partition_spec_id", 0))
     if not added:
         raise ValueError(f"snapshot {snapshot_id} added no data files")
     if len(specs) > 1:

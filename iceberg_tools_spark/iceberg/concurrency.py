@@ -47,7 +47,7 @@ from .catalog import CommitConflictError  # re-exported: the rebase API raises i
 from .commit import append_snapshot, commit_delete_snapshot
 from .deletes import EQUALITY_DELETES, mor_entries_at
 from .metadata import parse_metadata
-from .snapshots import ancestor_chain
+from .snapshots import ancestor_chain, entries_added_by
 
 
 def _heads(base_metadata_path: str, head_metadata_path: str, base_dir: str | None):
@@ -100,31 +100,15 @@ def _added_data_entries_between(meta, base_id: int, head_id: int, base_dir: str)
     inspects. REPLACE (compaction/rewrite) and DELETE snapshots add
     no logical rows, so their ADDED entries never conflict with an
     equality delete (their rows already existed at the base)."""
-    from ..avro.reader import AvroContainerFile
-    from .snapshots import manifest_files_at
-
     by_id = {s["snapshot-id"]: s for s in meta.snapshots}
     chain = ancestor_chain(meta, head_id)
-    between = chain[: chain.index(base_id)]
-    out = []
-    for sid in between:
-        op = by_id[sid].get("summary", {}).get("operation")
-        if op not in ("append", "overwrite"):
-            continue
-        for mrow in manifest_files_at(meta, sid, base_dir):
-            if mrow.get("content", 0) != 0:
-                continue
-            if mrow.get("added_snapshot_id") not in (None, sid):
-                continue  # carried-forward manifest: nothing new here
-            with open(mrow["local_path"], "rb") as f:
-                for rec in AvroContainerFile(f.read()):
-                    if (
-                        rec["status"] == 1
-                        and rec.get("snapshot_id") in (None, sid)
-                        and rec["data_file"].get("content", 0) == 0
-                    ):
-                        out.append(rec["data_file"])
-    return out
+    return [
+        e["data_file"]
+        for sid in chain[: chain.index(base_id)]
+        if by_id[sid].get("summary", {}).get("operation") in ("append", "overwrite")
+        for _mrow, e in entries_added_by(meta, sid, base_dir)
+        if e["data_file"].get("content", 0) == 0
+    ]
 
 
 def _partitions_can_match(delete_partition: dict, data_partition: dict) -> bool:

@@ -50,8 +50,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..avro.reader import AvroContainerFile
 from ..session import local_frame
+from .manifest_io import active_session, map_manifests, read_manifest, sequence_number
 from .metadata import TableMetadata, parse_metadata
 from .snapshots import _REPO_ROOT, _local, manifest_files_at
 
@@ -129,38 +129,29 @@ def _derived_partition_col(src_col: str, transform: str, typ: Any) -> Column:
 
 
 def _live_entries_worker(ctx: dict[str, Any], blob: bytes) -> list[dict[str, Any]]:
-    """Parse ONE manifest's live entries into the engine's entry
-    dicts (runs driver- or executor-side via
-    :func:`manifest_io.map_manifests`)."""
-    mseq, spec_id = ctx["mseq"], ctx["spec_id"]
-    base_dir, loc = ctx["base_dir"], ctx["loc"]
+    """Parse ONE manifest's live entries, inherited from its list row
+    ``ctx["manifest"]``, into the engine's entry dicts (runs driver-
+    or executor-side via :func:`manifest_io.map_manifests`)."""
+    mrow, base_dir, loc = ctx["manifest"], ctx["base_dir"], ctx["loc"]
+    spec_id = mrow.get("partition_spec_id", 0)
     out: list[dict[str, Any]] = []
-    for rec in AvroContainerFile(blob):
+    for rec in read_manifest(blob, mrow):
         if rec["status"] == 2:  # DELETED tombstone: not live
             continue
         df_ = rec["data_file"]
-        seq = rec.get("sequence_number")
-        if seq is None:
-            if rec["status"] == 1:  # ADDED inherits (v2 rule)
-                seq = mseq
-            else:
-                raise ValueError(
-                    f"EXISTING entry {df_['file_path']!r} carries no "
-                    "sequence_number; v2 inheritance only covers ADDED"
-                )
         out.append(
             {
                 "content": df_.get("content", 0),
                 # the snapshot that wrote this entry (WAP audits use
                 # it to scope added-data checks to the staged commit)
-                "snapshot_id": rec.get("snapshot_id"),
+                "snapshot_id": rec["snapshot_id"],
                 "file_path": df_["file_path"],
                 "local_path": _local(df_["file_path"], base_dir, loc),
                 "rel": _rel(df_["file_path"]),
                 "partition": df_.get("partition") or {},
                 "record_count": df_["record_count"],
                 "file_size_in_bytes": df_.get("file_size_in_bytes"),
-                "sequence_number": seq,
+                "sequence_number": sequence_number(rec),
                 "equality_ids": df_.get("equality_ids"),
                 "spec_id": spec_id,
                 "lower_bounds": df_.get("lower_bounds"),
@@ -180,28 +171,19 @@ def _live_entries_worker(ctx: dict[str, Any], blob: bytes) -> list[dict[str, Any
 def mor_entries_at(
     meta: TableMetadata, snapshot_id: int, base_dir: str
 ) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
-    """Live (data_entries, delete_entries) at a snapshot, with v2
-    sequence-number inheritance resolved.
+    """Live (data_entries, delete_entries) at a snapshot, with the
+    manifest list's snapshot ids and sequence numbers inherited
+    (``manifest_io.read_manifest``).
 
-    Manifest Avro decode runs executor-parallel above
-    ``manifest_io.PARALLEL_THRESHOLD`` manifests (the ambient
+    ``manifest_io.map_manifests`` places the manifest Avro decode on
+    executors from its threshold on (the ambient
     session; VERDICT r8 #1 — driver-side sequential parse was the
     engine's last metadata-path serialization); the returned entry
     LISTS are driver objects either way, KB per thousand files —
     what every commit/planner consumes."""
-    from .manifest_io import active_session, map_manifests
-
     loc = meta.raw.get("location")
     tasks = [
-        (
-            {
-                "mseq": mrow.get("sequence_number", 0),
-                "spec_id": mrow.get("partition_spec_id", 0),
-                "base_dir": base_dir,
-                "loc": loc,
-            },
-            mrow["local_path"],
-        )
+        ({"manifest": mrow, "base_dir": base_dir, "loc": loc}, mrow["local_path"])
         for mrow in manifest_files_at(meta, snapshot_id, base_dir)
     ]
     data, dels = [], []

@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import local_frame
-from .commit import commit_version
+from .commit import _max_field_id, commit_version
 from .metadata import TableMetadata, parse_metadata
 
 __all__ = [
@@ -164,9 +164,7 @@ def evolve_schema(
             g["name"] = rename[name]
         new_fields.append(g)
 
-    last_col = raw.get(
-        "last-column-id", max((f["id"] for f in cur["fields"]), default=0)
-    )
+    last_col = raw.get("last-column-id", _max_field_id(raw.get("schemas", [cur])))
     for spec_ in add:
         # 2-tuple (name, type) adds a nullable column; a 3-tuple
         # (name, type, default) also records the v3 initial-default

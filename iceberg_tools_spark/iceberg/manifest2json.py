@@ -36,9 +36,10 @@ from .metadata import field_id_types, parse_metadata
 
 BOUND_KEYS = frozenset(("lower_bounds", "upper_bounds"))
 # the data_file record is named "r2" (field-id-derived) in manifests
-# real Iceberg writes and "r2_<suffix>" in this engine's own
-# manifests — bounds decode under either (r15: engine-written
-# manifests' bounds passed through raw before)
+# real Iceberg and this engine write, and "r2_<suffix>" in the
+# committed fixtures an older engine wrote — bounds decode under
+# either (r15: engine-written manifests' bounds passed through raw
+# before)
 
 
 def _is_data_file_record(rec_name: str | None) -> bool:

@@ -1,49 +1,92 @@
-"""Executor-parallel manifest parsing — the concurrency level real
-Iceberg planning has (ManifestGroup reads manifests on a worker pool)
-and the reference's single-threaded CLI doesn't need
-(`ManifestFileReadTool.java` reads ONE manifest per invocation).
+"""Manifest reading: the one module that decodes manifest entries,
+applies Iceberg's inheritance rule to them and decides where the
+decode runs (the reference reads ONE manifest per invocation,
+`ManifestFileReadTool.java`; real Iceberg planning reads them on a
+worker pool, as ManifestGroup does).
 
-Every metadata path in this engine funnels manifest Avro through
-here: above ``PARALLEL_THRESHOLD`` manifests, the pure-Python decode
-(`avro/reader.py` — CPU-bound, about 0.1 s per MB of Avro on one
-core, 0.12–0.16 s/MB with typed bounds rendered) ships to executors
-as one RDD ``flatMap`` over ``(ctx, local_path)`` tasks. A task
-carries no compiled codec: each Python worker compiles the schemas
-it meets into its own process-wide cache and reuses it across tasks.
-Below the threshold the driver parses inline, because a Spark job over two
-manifests costs more in scheduling than it saves in parse time. The
-callers hand those driver-parsed rows to Spark with
-``session.local_frame`` (one Arrow ``LocalRelation``, no job to
-collect it); the executor path's rows stay in the RDD
-(``createDataFrame(rdd, schema)``).
+:func:`read_manifest` takes a manifest's bytes (the stored entries)
+or its manifest-list row, whose metadata null entry fields inherit
+(``InheritableMetadataFactory``): a null ``snapshot_id`` takes the
+manifest's ``added_snapshot_id``; a null sequence number takes the
+manifest's when the entry is ADDED or that number is 0 (v1 lists
+carry none); otherwise the null stays, and a consumer that needs the
+value calls :func:`sequence_number`, which raises.
 
-Both paths keep task order: ``parallelize`` cuts the task list into
-contiguous slices and ``flatMap`` keeps each slice's row order, so
-the RDD holds the rows exactly as the driver loop would return them.
-A caller that hands over its tasks in output order and has its
-worker return each task's rows in output order gets an ordered
-frame with no Spark sort: ``snapshots.plan_scan`` orders its tasks
-by manifest name and its rows by ``file_path``, so collecting a plan
-runs one job on the executor path and none on the driver path.
-
-This was VERDICT r8's #1 scale gap: an unselective scan of a
-100×-scale table (hundreds of manifests, hundreds of MB of Avro)
-serialized minutes of driver CPU even though manifest-LIST pruning
-had already made selective scans cheap. The RDD form is deliberate:
-the unit of work is "parse one opaque Avro container into Python
-records" — per-partition imperative logic with no columnar input to
-hand ``mapInPandas``.
-
-Executors must see the same filesystem as the driver (true in local
-mode and on any shared-FS / object-store cluster — the assumption
-the whole engine already makes for data files).
+:func:`map_manifests` (a driver list) and :func:`manifest_frame` (a
+DataFrame) run ``worker(ctx, manifest_bytes)`` over ``(ctx,
+local_path)`` tasks; :func:`_on_executors` is the one placement
+decision. From ``PARALLEL_THRESHOLD`` manifests on, the pure-Python
+decode (about 0.1 s per MB of Avro on one core, 0.12–0.16 s/MB with
+typed bounds rendered) ships to executors as one RDD ``flatMap`` and
+a frame's rows never land on the driver (``createDataFrame(rdd)``);
+below it, a Spark job over a few manifests costs more in scheduling
+than it saves, so the driver parses and a frame is one Arrow
+``LocalRelation`` (``session.local_frame``, no job to collect). A task
+carries no compiled codec: each Python worker compiles the schemas it
+meets into its own cache. Both placements keep task order
+(``parallelize`` slices are contiguous, ``flatMap`` keeps slice order),
+so a caller whose tasks and rows come in output order gets an ordered
+frame with no Spark sort (``snapshots.plan_scan``). Executors must see
+the driver's filesystem, as they must for data files.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable, Iterable
+from typing import Any, Callable, Iterable, Iterator
+
+from ..avro.reader import AvroContainerFile
 
 PARALLEL_THRESHOLD = 16
+ADDED = 1
+
+
+def decode_manifest(blob: bytes) -> tuple[Any, Iterator[dict[str, Any]]]:
+    """The writer schema and the stored entries of one manifest."""
+    f = AvroContainerFile(blob)
+    return f.schema, iter(f)
+
+
+def read_manifest(
+    src: bytes | dict[str, Any], row: dict[str, Any] | None = None
+) -> Iterator[dict[str, Any]]:
+    """One manifest's entries, decoded as they are consumed (one
+    pass: a list of every entry first costs about a fifth more in
+    garbage collection). ``src`` is the manifest's bytes, or its
+    manifest-list row (read from the row's ``local_path``); given a
+    row, either way, null entry fields inherit from it."""
+    if isinstance(src, dict):
+        row = src
+        with open(src["local_path"], "rb") as f:
+            src = f.read()
+    entries = decode_manifest(src)[1]
+    return entries if row is None else _inherit(entries, row)
+
+
+def _inherit(entries: Iterator[dict[str, Any]], row: dict[str, Any]) -> Iterator[dict[str, Any]]:
+    seq = row.get("sequence_number") or 0
+    for e in entries:
+        if e.get("snapshot_id") is None:
+            e["snapshot_id"] = row.get("added_snapshot_id")
+        if e["status"] == ADDED or seq == 0:
+            if e.get("sequence_number") is None:
+                e["sequence_number"] = seq
+            if "file_sequence_number" in e and e["file_sequence_number"] is None:
+                e["file_sequence_number"] = seq
+        yield e
+
+
+def sequence_number(entry: dict[str, Any]) -> int:
+    """An inherited entry's data sequence number; raises when the
+    inheritance rule left it null (an EXISTING or DELETED entry that
+    carries none is corrupt metadata, not a default)."""
+    seq = entry.get("sequence_number")
+    if seq is None:
+        raise ValueError(
+            f"entry {entry['data_file']['file_path']!r} (status "
+            f"{entry['status']}) carries no sequence_number; v2 "
+            "inheritance only covers ADDED"
+        )
+    return seq
 
 
 def active_session():
@@ -58,39 +101,11 @@ def active_session():
         return None
 
 
-def map_manifests(
-    spark,
-    tasks: list[tuple[Any, str]],
-    worker: Callable[[Any, bytes], Iterable[Any]],
-    *,
-    threshold: int | None = None,
-    collect: bool = True,
-):
-    """Run ``worker(ctx, manifest_bytes)`` over every ``(ctx,
-    local_path)`` task and concatenate the yielded rows in task
-    order (flatMap preserves partition order, so the parallel path
-    returns rows in exactly the sequential path's order — consumers
-    see one deterministic shape).
+def _on_executors(spark, tasks: list) -> bool:
+    return spark is not None and 0 < len(tasks) and len(tasks) >= PARALLEL_THRESHOLD
 
-    ``collect=False`` returns the RDD instead, so a caller building
-    a DataFrame (``createDataFrame(rdd, schema)``) keeps the parsed
-    entries executor-side end to end — the planning table never
-    materializes on the driver.
-    """
-    threshold = PARALLEL_THRESHOLD if threshold is None else threshold
-    n = len(tasks)
-    sc = spark.sparkContext if spark is not None else None
-    if sc is None or n < threshold:
-        out: list[Any] = []
-        for ctx, path in tasks:
-            with open(path, "rb") as f:
-                out.extend(worker(ctx, f.read()))
-        if collect:
-            return out
-        if sc is None:
-            raise ValueError("collect=False needs a SparkSession")
-        return sc.parallelize(out) if out else sc.emptyRDD()
 
+def _task_rdd(spark, tasks: list[tuple[Any, str]], worker: Callable[[Any, bytes], Iterable[Any]]):
     def _run(task):
         ctx, path = task
         with open(path, "rb") as f:
@@ -98,7 +113,38 @@ def map_manifests(
 
     # one task per manifest up to 2× the cluster's parallelism —
     # manifests vary in size, so over-decomposition load-balances
-    rdd = sc.parallelize(tasks, numSlices=min(n, sc.defaultParallelism * 2)).flatMap(
-        _run
-    )
-    return rdd.collect() if collect else rdd
+    sc = spark.sparkContext
+    return sc.parallelize(tasks, numSlices=min(len(tasks), sc.defaultParallelism * 2)).flatMap(_run)
+
+
+def map_manifests(
+    spark,
+    tasks: list[tuple[Any, str]],
+    worker: Callable[[Any, bytes], Iterable[Any]],
+) -> list[Any]:
+    """Run ``worker(ctx, manifest_bytes)`` over every ``(ctx,
+    local_path)`` task and concatenate the yielded rows in task
+    order, as a driver list (``spark=None`` parses on the driver)."""
+    if _on_executors(spark, tasks):
+        return _task_rdd(spark, tasks, worker).collect()
+    out: list[Any] = []
+    for ctx, path in tasks:
+        with open(path, "rb") as f:
+            out.extend(worker(ctx, f.read()))
+    return out
+
+
+def manifest_frame(
+    spark,
+    tasks: list[tuple[Any, str]],
+    worker: Callable[[Any, bytes], Iterable[Any]],
+    schema,
+):
+    """:func:`map_manifests` as a DataFrame of ``schema``: executor
+    rows stay in the RDD end to end, driver rows become one
+    ``local_frame``."""
+    if _on_executors(spark, tasks):
+        return spark.createDataFrame(_task_rdd(spark, tasks, worker), schema)
+    from ..session import local_frame
+
+    return local_frame(spark, map_manifests(None, tasks, worker), schema)

@@ -34,8 +34,8 @@ import json
 import os
 from typing import Any
 
-from ..avro.reader import AvroContainerFile
 from ..avro.writer import write_container
+from .manifest_io import decode_manifest
 
 ADDED, EXISTING, DELETED = 1, 0, 2
 
@@ -70,16 +70,16 @@ def rewrite_manifest_group(group: list[str], out_path: str) -> dict[str, Any]:
     n_in = n_dropped = 0
     for path in group:
         with open(path, "rb") as f:
-            avro = AvroContainerFile(f.read())
-        key = json.dumps(avro.schema, sort_keys=True)
+            writer_schema, records = decode_manifest(f.read())
+        key = json.dumps(writer_schema, sort_keys=True)
         if schema is None:
-            schema, schema_key = avro.schema, key
+            schema, schema_key = writer_schema, key
         elif key != schema_key:
             raise ValueError(
                 f"manifest {path} schema differs from the group's; "
                 "rewrite groups must share one partition spec/schema"
             )
-        for rec in avro:
+        for rec in records:
             n_in += 1
             if rec["status"] == DELETED:
                 n_dropped += 1

@@ -36,7 +36,6 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..avro.reader import AvroContainerFile
 from ..session import local_frame
 from .commit import ADDED, SnapshotProducer
 from .deletes import (
@@ -46,6 +45,7 @@ from .deletes import (
     apply_deletes,
     mor_entries_at,
 )
+from .manifest_io import read_manifest
 from .snapshots import manifest_files_at
 
 
@@ -385,8 +385,7 @@ def _replace_commit(
             # delete manifest: carry forward verbatim
             list_rows.append(mrow)
             continue
-        with open(mrow["local_path"], "rb") as f:
-            records = list(AvroContainerFile(f.read()))
+        records = list(read_manifest(mrow))
         if not any(
             rec["data_file"]["file_path"] in replaced_paths for rec in records
         ):
@@ -422,7 +421,6 @@ def _replace_commit(
                 group,
                 spec_id=spec_id,
                 content=0,
-                suffix=f"rwnew{snapshot_id}_{spec_id}",
                 lineage=lineage,
             )
         )

@@ -38,11 +38,11 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..avro.reader import AvroContainerFile
 from ..session import local_frame
 from .commit import ADDED, SnapshotProducer
 from .deletes import EQUALITY_DELETES, POSITION_DELETES, _is_dv, mor_entries_at
 from .rewrite_data import _write_single_parquet
+from .manifest_io import read_manifest
 from .snapshots import manifest_files_at
 
 
@@ -148,8 +148,7 @@ def rewrite_position_deletes(
         if mrow.get("content", 0) == 0:
             list_rows.append(mrow)
             continue
-        with open(mrow["local_path"], "rb") as f:
-            records = list(AvroContainerFile(f.read()))
+        records = read_manifest(mrow)
         # parquet positional entries are replaced by the compacted
         # files; equality AND v3 deletion-vector entries carry forward
         # (vectors were excluded from compaction — dropping them here
@@ -174,7 +173,6 @@ def rewrite_position_deletes(
                 group,
                 spec_id=spec_id,
                 content=1,
-                suffix=f"pdrw{snapshot_id}_{spec_id}",
             )
         )
 

@@ -13,10 +13,10 @@ driver-side with the pure-Python reader and handed to Spark through
 becomes a ``LocalRelation``, so selecting, filtering and collecting a
 metadata table runs no Spark job and no Python worker (a pickled
 ``createDataFrame(list)`` cost one Python-worker job per action,
-about 0.4 s each on a 4-core VM). Above
-``manifest_io.PARALLEL_THRESHOLD`` manifests the entries are parsed
-on executors and stay an RDD. Scan plans are born in output order
-on either path (tasks by manifest name, rows by file path), so
+about 0.4 s each on a 4-core VM). ``manifest_io.manifest_frame``
+decides where entries are parsed: from its manifest threshold on,
+on executors, where they stay an RDD. Scan plans are born in output
+order on either path (tasks by manifest name, rows by file path), so
 ``snapshots.plan_scan`` runs no Spark sort: one job to collect on
 executors, none on the driver. The DATA files they
 describe are what a cluster reads in parallel — planning metadata
@@ -26,13 +26,13 @@ through the driver is exactly what query engines do.
 from __future__ import annotations
 
 import datetime as _dt
+import json
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..avro.reader import AvroContainerFile
 from ..session import local_frame
 from .conversions import decode_bound
 from .metadata import TableMetadata, field_id_types, parse_metadata
@@ -119,61 +119,46 @@ def _kv_map(arr: Any) -> dict[int, int] | None:
     return {e["key"]: e["value"] for e in arr}
 
 
-def _entries_worker(ctx: dict[str, Any], blob: bytes) -> list[tuple]:
-    """Parse ONE manifest's entries into ENTRIES_SCHEMA tuples,
-    decoding bounds with the field-id → type map (driver- or
-    executor-side via :func:`manifest_io.map_manifests`)."""
-    import json as _json
-
-    fid_types = ctx["fid_types"]
-
-    def bounds(arr: Any) -> dict[int, str] | None:
-        if arr is None:
-            return None
-        out = {}
-        for e in arr:
-            k, v = e["key"], e["value"]
-            out[k] = decode_bound(fid_types[k], v) if k in fid_types else v.hex()
-        return out
-
-    rows = []
-    for rec in AvroContainerFile(blob):
-        df_ = rec["data_file"]
-        rows.append(
-            (
-                rec["status"],
-                ENTRY_STATUS.get(rec["status"], str(rec["status"])),
-                rec.get("snapshot_id"),
-                df_["file_path"],
-                df_["file_format"],
-                _json.dumps(df_.get("partition"), sort_keys=True),
-                df_["record_count"],
-                df_["file_size_in_bytes"],
-                _kv_map(df_.get("column_sizes")),
-                _kv_map(df_.get("value_counts")),
-                _kv_map(df_.get("null_value_counts")),
-                _kv_map(df_.get("nan_value_counts")),
-                bounds(df_.get("lower_bounds")),
-                bounds(df_.get("upper_bounds")),
-                df_.get("split_offsets"),
-                df_.get("sort_order_id"),
-            )
-        )
-    return rows
+def _bounds(arr: Any, fid_types: dict[int, str]) -> dict[int, str] | None:
+    if arr is None:
+        return None
+    out = {}
+    for e in arr:
+        k, v = e["key"], e["value"]
+        out[k] = decode_bound(fid_types[k], v) if k in fid_types else v.hex()
+    return out
 
 
-def manifest_entries_rows(
-    manifest_paths: list[str], meta_raw: dict[str, Any]
-) -> list[tuple]:
-    """Parse manifest avro files into ENTRIES_SCHEMA rows, decoding
-    bounds with the metadata's field-id → type map. Executor-parallel
-    above the manifest threshold (VERDICT r8 #1)."""
-    from .manifest_io import active_session, map_manifests
-
-    ctx = {"fid_types": field_id_types(meta_raw)}
-    return map_manifests(
-        active_session(), [(ctx, p) for p in manifest_paths], _entries_worker
+def _entry_row(rec: dict[str, Any], fid_types: dict[int, str]) -> tuple:
+    """One manifest entry as an ENTRIES_SCHEMA tuple, bounds decoded
+    with the field-id → type map."""
+    df_ = rec["data_file"]
+    return (
+        rec["status"],
+        ENTRY_STATUS.get(rec["status"], str(rec["status"])),
+        rec.get("snapshot_id"),
+        df_["file_path"],
+        df_["file_format"],
+        json.dumps(df_.get("partition"), sort_keys=True),
+        df_["record_count"],
+        df_["file_size_in_bytes"],
+        _kv_map(df_.get("column_sizes")),
+        _kv_map(df_.get("value_counts")),
+        _kv_map(df_.get("null_value_counts")),
+        _kv_map(df_.get("nan_value_counts")),
+        _bounds(df_.get("lower_bounds"), fid_types),
+        _bounds(df_.get("upper_bounds"), fid_types),
+        df_.get("split_offsets"),
+        df_.get("sort_order_id"),
     )
+
+
+def _entries_worker(ctx: dict[str, Any], blob: bytes) -> list[tuple]:
+    """Parse ONE manifest's stored entries into ENTRIES_SCHEMA tuples
+    (driver- or executor-side via :mod:`manifest_io`)."""
+    from .manifest_io import read_manifest
+
+    return [_entry_row(rec, ctx["fid_types"]) for rec in read_manifest(blob)]
 
 
 def manifest_entries_df(
@@ -184,16 +169,11 @@ def manifest_entries_df(
     rows become a DataFrame without ever landing on the driver
     (``createDataFrame`` over the parsed RDD) — the full
     metadata-table path is distributed end to end."""
-    from .manifest_io import PARALLEL_THRESHOLD, map_manifests
+    from .manifest_io import manifest_frame
 
     ctx = {"fid_types": field_id_types(meta_raw)}
-    tasks = [(ctx, p) for p in manifest_paths]
-    if len(tasks) >= PARALLEL_THRESHOLD:
-        rdd = map_manifests(spark, tasks, _entries_worker, collect=False)
-        return spark.createDataFrame(rdd, ENTRIES_SCHEMA)
-    return local_frame(
-        spark,
-        manifest_entries_rows(manifest_paths, meta_raw), ENTRIES_SCHEMA
+    return manifest_frame(
+        spark, [(ctx, p) for p in manifest_paths], _entries_worker, ENTRIES_SCHEMA
     )
 
 
@@ -267,29 +247,26 @@ ENTRIES_SCALAR_SCHEMA = T.StructType(
 
 
 def _jmap(d: dict | None) -> str | None:
-    import json as _json
-
     if d is None:
         return None
-    return _json.dumps({str(k): v for k, v in d.items()}, sort_keys=True)
+    return json.dumps({str(k): v for k, v in d.items()}, sort_keys=True)
+
+
+def _scalar_row(r: tuple) -> tuple:
+    """An ENTRIES_SCHEMA tuple in ENTRIES_SCALAR_SCHEMA form: maps as
+    JSON, split offsets as CSV."""
+    splits = None if r[14] is None else ",".join(map(str, r[14]))
+    return (*r[:8], *map(_jmap, r[8:14]), splits, r[15])
 
 
 def _scalar_entry_rows(manifest_paths: list[str], meta_raw: dict[str, Any]) -> list[tuple]:
-    rows = []
-    for r in manifest_entries_rows(manifest_paths, meta_raw):
-        (
-            status, status_name, snap, path, fmt, part_json, rc, fsz,
-            csz, vc, nvc, nanc, lb, ub, splits, soid,
-        ) = r
-        rows.append(
-            (
-                status, status_name, snap, path, fmt, part_json, rc, fsz,
-                _jmap(csz), _jmap(vc), _jmap(nvc), _jmap(nanc), _jmap(lb), _jmap(ub),
-                ",".join(str(x) for x in splits) if splits is not None else None,
-                soid,
-            )
-        )
-    return rows
+    """The manifests' stored entries as ENTRIES_SCALAR_SCHEMA rows
+    (executor-parallel above the manifest threshold, VERDICT r8 #1)."""
+    from .manifest_io import active_session, map_manifests
+
+    ctx = {"fid_types": field_id_types(meta_raw)}
+    rows = map_manifests(active_session(), [(ctx, p) for p in manifest_paths], _entries_worker)
+    return [_scalar_row(r) for r in rows]
 
 
 def meta_manifest_entries(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,16 +34,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from ..iceberg.metadata import parse_metadata
-from ..iceberg.snapshots import (
-    _local,
-    _scalar_entry_rows,
-    ancestor_chain,
-    manifest_paths_at,
-)
+from ..iceberg.snapshots import _increment, _local, entries_added_by
 from ..session import local_frame
-
-# _scalar_entry_rows tuple layout (ENTRIES_SCALAR_SCHEMA):
-_STATUS, _SNAPSHOT_ID, _FILE_PATH = 0, 2, 3
 
 import itertools
 
@@ -58,26 +50,17 @@ def added_data_file_paths(
 ) -> list[str]:
     """Resolved local paths of the data files ADDED on the ancestor
     chain ``(from_id, to_id]`` — the pure-Python planning twin of
-    :func:`snapshots.files_added_between` (same attribution rule:
-    status ADDED and ``snapshot_id`` equal to exactly that snapshot),
-    returning paths instead of a DataFrame so the stream can be
-    sourced without a Spark action."""
+    :func:`snapshots.files_added_between` (the same
+    :func:`snapshots.entries_added_by`), returning paths instead of a
+    DataFrame so the stream can be sourced without a Spark action."""
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
     loc = meta.raw.get("location")
-    chain = ancestor_chain(meta, to_id)
-    if from_id not in chain:
-        raise ValueError(
-            f"snapshot {from_id} is not an ancestor of {to_id}; "
-            "incremental scan undefined across branches"
-        )
-    wanted = sorted(set(chain[: chain.index(from_id)]))  # (from_id, to_id]
-    paths: list[str] = []
-    for sid in wanted:
-        for r in _scalar_entry_rows(manifest_paths_at(meta, sid, base_dir), meta.raw):
-            if r[_STATUS] == 1 and r[_SNAPSHOT_ID] == sid:
-                paths.append(_local(r[_FILE_PATH], base_dir, loc))
-    return paths
+    return [
+        _local(e["data_file"]["file_path"], base_dir, loc)
+        for sid in sorted(_increment(meta, from_id, to_id))
+        for _mrow, e in entries_added_by(meta, sid, base_dir)
+    ]
 
 
 def stage_increment(paths: list[str], staging_dir: str) -> str:

@@ -50,12 +50,10 @@ import pyarrow.parquet as pq
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from iceberg_tools_spark.avro.writer import write_container
-from iceberg_tools_spark.iceberg.commit import (
-    MANIFEST_LIST_SCHEMA,
-    manifest_entry_schema,
-)
+from iceberg_tools_spark.iceberg.commit import MANIFEST_LIST_SCHEMA
 from iceberg_tools_spark.iceberg.conversions import to_bytes
 from iceberg_tools_spark.iceberg.puffin import write_deletion_vectors
+from scripts.gen_mor_fixture import manifest_schema
 
 OUT_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -258,7 +256,7 @@ def main() -> None:
         "m2": [_data_entry("C", 3002), _data_entry("D", 3002)],
         "m5": [_dv_entry(n, by_name[n]) for n in sorted(DV_POSITIONS)],
     }
-    schema = manifest_entry_schema(SPEC_FIELDS, "dv", v3=True)
+    schema = manifest_schema(SPEC_FIELDS, "dv", v3=True)
     lengths: dict[str, int] = {}
     for mname, entries in mans.items():
         blob = write_container(schema, entries)

@@ -63,7 +63,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from iceberg_tools_spark.avro.writer import write_container
 from iceberg_tools_spark.iceberg.commit import (
     MANIFEST_LIST_SCHEMA,
-    manifest_entry_schema as manifest_schema,
+    manifest_entry_schema,
 )
 from iceberg_tools_spark.iceberg.conversions import to_bytes
 
@@ -97,9 +97,26 @@ ED1_IDS = [260, 270]
 SPEC0_FIELDS = [("category", "string")]
 SPEC1_FIELDS = [("category", "string"), ("id_trunc", "long")]
 
-# MANIFEST_LIST_SCHEMA / manifest_schema now come from
+# MANIFEST_LIST_SCHEMA / manifest_entry_schema come from
 # iceberg_tools_spark.iceberg.commit (single source of truth for the
 # v2 record shapes; this generator was their origin).
+
+
+def manifest_schema(partition_fields: list[tuple[str, str]], suffix: str, **kw) -> dict:
+    """``manifest_entry_schema`` with its records named ``<name>_<suffix>``,
+    as the committed fixtures were written (the engine now writes the
+    fixed Java names), so a regeneration reproduces their bytes."""
+    schema = manifest_entry_schema(partition_fields, **kw)
+    data_file = schema["fields"][3]["type"]
+    bounds = {f["name"]: f for f in data_file["fields"]}
+    for node in (
+        data_file,
+        bounds["partition"]["type"],
+        bounds["lower_bounds"]["type"][1]["items"],
+        bounds["upper_bounds"]["type"][1]["items"],
+    ):
+        node["name"] = f"{node['name']}_{suffix}"
+    return schema
 
 
 def _file_size(rel: str) -> int:

@@ -205,7 +205,7 @@ def test_quality_score_linear_discriminates(spark):
     assert [tuple(r) for r in rows] == [tuple(r) for r in again]
 
 
-def test_lm_bigram_stats_mechanism(spark):
+def test_lm_bigram_stats_mechanism(spark, tmp_path):
     """Hand-checkable micro-corpus: bigram counts are GLOBAL (cross-
     doc), one-word docs are excluded, and avg = sum/n exactly."""
     import pandas as pd
@@ -221,12 +221,8 @@ def test_lm_bigram_stats_mechanism(spark):
             "n_chars": [5, 3, 1],
         }
     )
-    import os
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="lm_micro_")
-    pdf.to_parquet(os.path.join(d, "documents.parquet"))
-    out = {r["doc_id"]: r for r in text_ops.lm_bigram_stats(spark, d).collect()}
+    pdf.to_parquet(tmp_path / "documents.parquet")
+    out = {r["doc_id"]: r for r in text_ops.lm_bigram_stats(spark, str(tmp_path)).collect()}
     # bigrams: doc1 = (a,b),(b,c); doc2 = (a,b). global c(a,b)=2, c(b,c)=1
     assert set(out) == {1, 2}  # doc3 (one word) excluded
     assert out[1]["n_bigrams"] == 2 and out[1]["sum_bigram_count"] == 3

@@ -557,3 +557,23 @@ def test_v3_geo_and_unknown_in_projection_schema():
     assert [f.name for f in sch.fields] == ["id", "shape", "region"]
     assert isinstance(sch["shape"].dataType, T.BinaryType)
     assert isinstance(sch["region"].dataType, T.BinaryType)
+
+
+def test_added_column_id_passes_nested_ids_without_last_column_id(tmp_path):
+    """A table whose metadata lacks ``last-column-id`` hands a new
+    column the id after the largest at ANY depth: with ``id`` (1) and
+    struct ``s`` (2) holding ``a`` (3), an added ``c`` gets 4, not a
+    second 3."""
+    from iceberg_tools_spark.iceberg.commit import commit_version, create_table
+
+    struct = {"type": "struct", "fields": [{"id": 3, "name": "a", "required": False, "type": "string"}]}
+    mp = create_table(str(tmp_path / "t"), [
+        {"id": 1, "name": "id", "required": False, "type": "long"},
+        {"id": 2, "name": "s", "required": False, "type": struct},
+    ])
+    raw = json.loads(json.dumps(parse_metadata(mp).raw))
+    del raw["last-column-id"]
+    res = evo.evolve_schema(commit_version(mp, raw), add=[("c", "string")])
+    fields = parse_metadata(res["metadata_path"]).raw["schemas"][-1]["fields"]
+    assert res["last_column_id"] == 4
+    assert [(f["name"], f["id"]) for f in fields] == [("id", 1), ("s", 2), ("c", 4)]

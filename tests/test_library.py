@@ -641,18 +641,11 @@ _PICKLED_ROW_FRAMES: dict[tuple[str, str], str] = {}
 def _rdd_built(expr: ast.expr, assigns: dict[str, list[ast.expr]]) -> bool:
     """True when ``expr`` — followed through the local assignments of
     the names it uses — is an RDD: a ``parallelize``/``emptyRDD``, a
-    ``map_manifests(..., collect=False)`` or a frame's ``.rdd``."""
+    ``manifest_io._task_rdd`` or a frame's ``.rdd``."""
     todo, seen = [expr], set()
     while todo:
         for n in ast.walk(todo.pop()):
-            if isinstance(n, ast.Call) and (
-                _call_name(n) in ("parallelize", "emptyRDD")
-                or _call_name(n) == "map_manifests" and any(
-                    k.arg == "collect" and isinstance(k.value, ast.Constant)
-                    and k.value.value is False
-                    for k in n.keywords
-                )
-            ):
+            if isinstance(n, ast.Call) and _call_name(n) in ("parallelize", "emptyRDD", "_task_rdd"):
                 return True
             if isinstance(n, ast.Attribute) and n.attr == "rdd":
                 return True
@@ -708,8 +701,7 @@ def c(spark, tasks):
 def d(spark, rows):
     return spark.createDataFrame(data=sorted(rows), schema="a long")
 def e(spark, tasks):
-    rdd = map_manifests(spark, tasks, worker, collect=False)
-    return spark.createDataFrame(rdd, SCHEMA)
+    return spark.createDataFrame(_task_rdd(spark, tasks, worker), SCHEMA)
 def f(spark, shards):
     rdd = spark.sparkContext.parallelize(shards).flatMap(walk)
     return spark.createDataFrame(rdd, SCHEMA)
@@ -782,3 +774,88 @@ def decode_value(schema, dec, names):
         "8 reads w._ENCODERS",
     ]
     assert _codec_breaches(ast.parse(src), in_avro=True) == ["9 defines decode_value"]
+
+
+# ---- one manifest reader ------------------------------------------
+
+# (module, function) → why it builds an Avro container itself
+_CONTAINER_SITES = {
+    ("iceberg/manifest_io.py", "decode_manifest"): "the one manifest decode",
+    ("iceberg/manifest2json.py", "manifest2json"): "walks the writer schema for the JSON dump",
+    ("iceberg/snapshots.py", "read_manifest_list"): "manifest lists are not manifests",
+}
+
+
+def _container_builds(tree: ast.Module):
+    """The enclosing function of every ``AvroContainerFile(...)`` call,
+    however the class is reached."""
+    def is_build(n: ast.AST) -> bool:
+        return isinstance(n, ast.Call) and _call_name(n) == "AvroContainerFile"
+
+    return [fn for fn, _call, _assigns in _scoped(tree, is_build)]
+
+
+def test_manifests_decoded_only_by_manifest_io():
+    """Outside ``avro/``, an Avro container is built only by
+    ``manifest_io`` (every manifest read, so one inheritance rule),
+    ``manifest2json`` and ``snapshots.read_manifest_list``."""
+    found = set()
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        if not rel.startswith("avro/"):
+            found |= {(rel, fn) for fn in _container_builds(ast.parse(path.read_text()))}
+    assert found == set(_CONTAINER_SITES)
+
+
+def test_container_scan_sees_each_build_shape():
+    src = """
+from ..avro.reader import AvroContainerFile
+from ..avro import reader
+def a(blob):
+    return list(AvroContainerFile(blob))
+def b(path):
+    with open(path, "rb") as f:
+        return [r for r in reader.AvroContainerFile(f.read())]
+def c(blob):
+    return read_manifest(blob)
+ROWS = list(AvroContainerFile(open("x", "rb").read()))
+"""
+    assert sorted(map(str, _container_builds(ast.parse(src)))) == ["None", "a", "b"]
+
+
+def _threshold_reads(tree: ast.Module) -> list[int]:
+    """Lines that read or import ``PARALLEL_THRESHOLD``."""
+    return sorted(
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Name) and n.id == "PARALLEL_THRESHOLD"
+        or isinstance(n, ast.Attribute) and n.attr == "PARALLEL_THRESHOLD"
+        or isinstance(n, ast.ImportFrom) and any(a.name == "PARALLEL_THRESHOLD" for a in n.names)
+    )
+
+
+def test_manifest_placement_decided_only_by_manifest_io():
+    """Only ``manifest_io`` reads ``PARALLEL_THRESHOLD``: every other
+    module hands its manifests to ``map_manifests`` or
+    ``manifest_frame`` and lets it place the decode."""
+    readers = {
+        path.relative_to(_PKG).as_posix()
+        for path in sorted(_PKG.rglob("*.py"))
+        if _threshold_reads(ast.parse(path.read_text()))
+    }
+    assert readers == {"iceberg/manifest_io.py"}
+
+
+def test_threshold_scan_sees_each_read_shape():
+    src = '''
+from .manifest_io import PARALLEL_THRESHOLD
+import iceberg_tools_spark.iceberg.manifest_io as mio
+def a(tasks):
+    return len(tasks) >= PARALLEL_THRESHOLD
+def b(tasks):
+    return len(tasks) >= mio.PARALLEL_THRESHOLD
+def c(tasks):
+    """above PARALLEL_THRESHOLD manifests"""
+    return map_manifests(None, tasks, worker)
+'''
+    assert _threshold_reads(ast.parse(src)) == [2, 5, 7]

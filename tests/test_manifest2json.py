@@ -255,7 +255,7 @@ def test_v3_geometry_bounds_through_manifest2json(tmp_path):
         },
     }
     man = tmp_path / "geo.avro"
-    man.write_bytes(write_container(manifest_entry_schema([], "geo"), [entry]))
+    man.write_bytes(write_container(manifest_entry_schema([]), [entry]))
     meta = {
         "format-version": 3,
         "table-uuid": "00000000-0000-0000-0000-00000000geo1",

@@ -121,7 +121,7 @@ def test_entries_df_parallel_equals_sequential(
     assert len(par) >= N_COMMITS
 
 
-def test_map_manifests_preserves_task_order(spark, tmp_path):
+def test_map_manifests_preserves_task_order(spark, tmp_path, monkeypatch):
     """flatMap keeps partition order: rows come back exactly in task
     order, so parallel consumers see the sequential shape."""
     paths = []
@@ -135,7 +135,8 @@ def test_map_manifests_preserves_task_order(spark, tmp_path):
         return [(ctx, blob[0])]
 
     tasks = [(i, p) for i, p in enumerate(paths)]
-    out = manifest_io.map_manifests(spark, tasks, worker, threshold=1)
+    _force_threshold(monkeypatch, 1)
+    out = manifest_io.map_manifests(spark, tasks, worker)
     assert out == [(i, i) for i in range(6)]
     # driver path agrees
     assert manifest_io.map_manifests(None, tasks, worker) == out
@@ -261,21 +262,22 @@ def test_orphan_age_gate_uses_walk_mtime(spark, tmp_path):
     assert os.path.exists(young) and not os.path.exists(old)
 
 
-def test_map_manifests_empty_tasks(spark):
+def test_map_manifests_empty_tasks(spark, monkeypatch):
     """Zero manifests (an empty snapshot's plan) short-circuits on
-    both paths."""
-    from iceberg_tools_spark.iceberg.manifest_io import map_manifests
+    both paths, as a list and as a frame."""
+    from iceberg_tools_spark.iceberg.manifest_io import manifest_frame, map_manifests
 
     def worker(ctx, blob):
         raise AssertionError("must not be called")
 
-    assert map_manifests(spark, [], worker) == []
-    assert map_manifests(None, [], worker) == []
-    rdd = map_manifests(spark, [], worker, collect=False)
-    assert rdd.isEmpty()
+    for threshold in (0, 1, 10**9):
+        _force_threshold(monkeypatch, threshold)
+        assert map_manifests(spark, [], worker) == []
+        assert map_manifests(None, [], worker) == []
+        assert manifest_frame(spark, [], worker, "p string").collect() == []
 
 
-def test_map_manifests_worker_error_propagates(spark, tmp_path):
+def test_map_manifests_worker_error_propagates(spark, tmp_path, monkeypatch):
     """A worker exception surfaces (wrapped by Spark on the parallel
     path) instead of silently dropping a manifest."""
     import pytest
@@ -291,8 +293,9 @@ def test_map_manifests_worker_error_propagates(spark, tmp_path):
 
     with pytest.raises(ValueError, match="boom-manifest"):
         map_manifests(None, [(0, p)], worker)
+    _force_threshold(monkeypatch, 1)
     with pytest.raises(Exception, match="boom-manifest"):
-        map_manifests(spark, [(0, p)], worker, threshold=1)
+        map_manifests(spark, [(0, p)], worker)
 
 
 def test_orphan_age_split_single_listing_job(spark, tmp_path, monkeypatch):
@@ -328,3 +331,153 @@ def test_orphan_age_split_single_listing_job(spark, tmp_path, monkeypatch):
     )
     assert calls["n"] == 1
     assert [os.path.basename(p) for p in res["orphans"]] == ["stray.bin"]
+
+
+# ---- one reader, one inheritance rule -----------------------------
+
+
+def _entry(status, path, snapshot_id=None, seq=None):
+    return {
+        "status": status, "snapshot_id": snapshot_id, "sequence_number": seq,
+        "file_sequence_number": None,
+        "data_file": {"file_path": path, "record_count": 1},
+    }
+
+
+_ENTRY_SCHEMA = {
+    "type": "record", "name": "manifest_entry", "fields": [
+        {"name": "status", "type": "int"},
+        {"name": "snapshot_id", "type": ["null", "long"]},
+        {"name": "sequence_number", "type": ["null", "long"]},
+        {"name": "file_sequence_number", "type": ["null", "long"]},
+        {"name": "data_file", "type": {"type": "record", "name": "r2", "fields": [
+            {"name": "file_path", "type": "string"},
+            {"name": "record_count", "type": "long"},
+        ]}},
+    ],
+}
+
+
+def test_read_manifest_inherits_from_the_list_row_only(tmp_path):
+    """Given its list row, a null snapshot id takes the manifest's
+    ``added_snapshot_id`` and a null sequence number the manifest's
+    when the entry is ADDED or that number is 0; given only bytes,
+    the stored values come back."""
+    from iceberg_tools_spark.avro.writer import write_container
+    from iceberg_tools_spark.iceberg.manifest_io import read_manifest, sequence_number
+
+    stored = [
+        _entry(1, "added"),
+        _entry(0, "existing"),
+        _entry(2, "deleted"),
+        _entry(0, "explicit", snapshot_id=3, seq=4),
+    ]
+    p = tmp_path / "m.avro"
+    p.write_bytes(write_container(_ENTRY_SCHEMA, stored))
+    row = {"local_path": str(p), "added_snapshot_id": 9, "sequence_number": 7}
+
+    assert list(read_manifest(p.read_bytes())) == stored
+    got = list(read_manifest(row))
+    assert got == list(read_manifest(p.read_bytes(), row))
+    assert [(e["snapshot_id"], e["sequence_number"], e["file_sequence_number"]) for e in got] == [
+        (9, 7, 7), (9, None, None), (9, None, None), (3, 4, None),
+    ]
+    assert sequence_number(got[0]) == 7
+    with pytest.raises(ValueError, match="'existing'.*no sequence_number"):
+        sequence_number(got[1])
+    # sequence number 0 (a v1 list carries none): every null inherits 0
+    v1 = read_manifest({"local_path": str(p), "added_snapshot_id": 9})
+    assert [e["sequence_number"] for e in v1] == [0, 0, 0, 4]
+
+
+def _three_appends(root: str, null_ids: bool) -> tuple[str, list[str], list[int]]:
+    """Three appends of one file each (f0, f1, f2), one manifest per
+    append. ``null_ids`` rewrites every manifest with its ADDED entries'
+    ``snapshot_id`` null, as the v2 spec lets a writer leave it for the
+    manifest list to supply. Returns the version after each append,
+    and the snapshot ids."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_tools_spark.avro.reader import AvroContainerFile
+    from iceberg_tools_spark.avro.writer import write_container
+
+    mp = create_table(root, [("id", "long")])
+    versions, sids = [], []
+    for i in range(3):
+        rel = f"data/f{i}.parquet"
+        pq.write_table(pa.table({"id": pa.array([i], pa.int64())}), os.path.join(root, rel))
+        res = append_snapshot(mp, [{"path": rel, "partition": {}}])
+        mp = res["metadata_path"]
+        versions.append(mp)
+        sids.append(res["snapshot_id"])
+    if null_ids:
+        for p in glob.glob(os.path.join(root, "metadata", "manifest-*.avro")):
+            f = AvroContainerFile(open(p, "rb").read())
+            entries = [{**e, "snapshot_id": None} if e["status"] == 1 else e for e in f]
+            with open(p, "wb") as out:
+                out.write(write_container(f.schema, entries))
+    return root, versions, sids
+
+
+@pytest.mark.parametrize("null_ids", [False, True], ids=["explicit", "inherited"])
+def test_added_sets_agree_whether_ids_are_explicit_or_inherited(spark, tmp_path, null_ids):
+    """Every consumer of "the files snapshot S added" reads them through
+    ``manifest_io.read_manifest`` with the list row, so a table whose
+    ADDED entries carry null snapshot ids answers exactly as its
+    explicit-id twin: the incremental scan, the concurrency
+    validation, cherry-pick, the summary audit and the WAP audit's
+    entry ids."""
+    from iceberg_tools_spark.avro.reader import AvroContainerFile
+    from iceberg_tools_spark.iceberg.commit import cherrypick_snapshot
+    from iceberg_tools_spark.iceberg.concurrency import _added_data_entries_between
+    from iceberg_tools_spark.iceberg.snapshots import audit_snapshot_summaries, files_added_between
+
+    root, versions, (s1, s2, s3) = _three_appends(str(tmp_path / "t"), null_ids)
+    head = versions[-1]
+    name = os.path.basename
+
+    got = {(r.snapshot_id, name(r.file_path)) for r in files_added_between(spark, head, s1, s3).collect()}
+    assert got == {(s2, "f1.parquet"), (s3, "f2.parquet")}
+
+    meta = parse_metadata(head)
+    added = _added_data_entries_between(meta, s1, s3, os.path.dirname(head))
+    assert sorted(name(d["file_path"]) for d in added) == ["f1.parquet", "f2.parquet"]
+
+    data, _ = mor_entries_at(meta, s3, os.path.dirname(head))
+    assert {name(e["file_path"]): e["snapshot_id"] for e in data} == {
+        "f0.parquet": s1, "f1.parquet": s2, "f2.parquet": s3,
+    }
+
+    audit = audit_snapshot_summaries(spark, head, os.path.dirname(head)).collect()
+    assert [(r.snapshot_id, r.added_files_actual, r.consistent) for r in audit] == [
+        (s1, 1, True), (s2, 1, True), (s3, 1, True),
+    ]
+
+    res = cherrypick_snapshot(head, s2)
+    new = parse_metadata(res["metadata_path"])
+    snap = next(s for s in new.snapshots if s["snapshot-id"] == res["snapshot_id"])
+    assert snap["summary"]["added-data-files"] == "1"
+    man = os.path.join(root, "metadata", f"manifest-{res['snapshot_id']}.avro")
+    assert [name(e["data_file"]["file_path"]) for e in AvroContainerFile(open(man, "rb").read())] == [
+        "f1.parquet"
+    ]
+
+
+def test_rewrite_merges_two_engine_written_manifests(tmp_path):
+    """Manifests the engine writes name their records as Java does, so
+    two manifests of one spec carry one schema text: they share one
+    compiled decoder and merge in one manifest rewrite."""
+    from iceberg_tools_spark.avro import reader
+    from iceberg_tools_spark.iceberg.rewrite import rewrite_manifests
+
+    root, versions, sids = _three_appends(str(tmp_path / "t"), null_ids=False)
+    paths = sorted(glob.glob(os.path.join(root, "metadata", "manifest-*.avro")))[:2]
+    reader._DECODERS.clear()
+    for p in paths:
+        list(manifest_io.read_manifest(open(p, "rb").read()))
+    assert len(reader._DECODERS) == 1
+    (stats,) = rewrite_manifests([paths], str(tmp_path / "out"))
+    assert stats["entries_in"] == stats["entries_out"] == 2
+    merged = list(manifest_io.read_manifest(open(stats["out_path"], "rb").read()))
+    assert [(e["status"], e["snapshot_id"]) for e in merged] == [(0, sids[0]), (0, sids[1])]

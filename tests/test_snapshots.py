@@ -269,7 +269,7 @@ def _write_scan_table(root: str, manifests: list) -> tuple[str, int]:
                     ] if bounded else None,
                 },
             })
-        rows.append(producer.write_manifest(name, records, spec_id=0, content=0, suffix="t"))
+        rows.append(producer.write_manifest(name, records, spec_id=0, content=0))
     res = producer.commit(rows, {"operation": "append"})
     return res["metadata_path"], res["snapshot_id"]
 
