@@ -40,10 +40,18 @@ PARALLEL_THRESHOLD = 16
 ADDED = 1
 
 
-def decode_manifest(blob: bytes) -> tuple[Any, Iterator[dict[str, Any]]]:
-    """The writer schema and the stored entries of one manifest."""
-    f = AvroContainerFile(blob)
-    return f.schema, iter(f)
+def decode_manifest(
+    src: bytes | dict[str, Any], row: dict[str, Any] | None = None
+) -> tuple[Any, Iterator[dict[str, Any]]]:
+    """The writer schema and the entries of one manifest, as
+    :func:`read_manifest` reads them."""
+    if isinstance(src, dict):
+        row = src
+        with open(src["local_path"], "rb") as f:
+            src = f.read()
+    f = AvroContainerFile(src)
+    entries = iter(f)
+    return f.schema, entries if row is None else _inherit(entries, row)
 
 
 def read_manifest(
@@ -54,12 +62,7 @@ def read_manifest(
     garbage collection). ``src`` is the manifest's bytes, or its
     manifest-list row (read from the row's ``local_path``); given a
     row, either way, null entry fields inherit from it."""
-    if isinstance(src, dict):
-        row = src
-        with open(src["local_path"], "rb") as f:
-            src = f.read()
-    entries = decode_manifest(src)[1]
-    return entries if row is None else _inherit(entries, row)
+    return decode_manifest(src, row)[1]
 
 
 def _inherit(entries: Iterator[dict[str, Any]], row: dict[str, Any]) -> Iterator[dict[str, Any]]:

@@ -38,6 +38,7 @@ from ..avro.writer import write_container
 from .manifest_io import decode_manifest
 
 ADDED, EXISTING, DELETED = 1, 0, 2
+_INHERITED = ("snapshot_id", "sequence_number", "file_sequence_number")
 
 
 def plan_manifest_groups(
@@ -60,17 +61,26 @@ def plan_manifest_groups(
     return [groups[g] for g in sorted(groups)]
 
 
-def rewrite_manifest_group(group: list[str], out_path: str) -> dict[str, Any]:
+def rewrite_manifest_group(
+    group: list[str | dict[str, Any]], out_path: str
+) -> dict[str, Any]:
     """Merge one group of manifests into a single new manifest:
     live entries only, re-statused EXISTING, original snapshot ids
-    and data_file structs byte-preserved. Returns rewrite stats."""
+    and data_file structs byte-preserved. A member is a manifest's
+    local path or its manifest-list row (with ``local_path``), as
+    ``manifest_io.read_manifest`` takes them; from a row, the snapshot
+    id and sequence numbers an entry inherits are written explicitly,
+    because an EXISTING entry inherits none. Returns rewrite stats."""
     schema: Any = None
     schema_key: str | None = None
     entries: list[dict[str, Any]] = []
     n_in = n_dropped = 0
-    for path in group:
-        with open(path, "rb") as f:
-            writer_schema, records = decode_manifest(f.read())
+    for src in group:
+        path = src["local_path"] if isinstance(src, dict) else src
+        if isinstance(src, str):
+            with open(src, "rb") as f:
+                src = f.read()
+        writer_schema, records = decode_manifest(src)
         key = json.dumps(writer_schema, sort_keys=True)
         if schema is None:
             schema, schema_key = writer_schema, key
@@ -84,17 +94,17 @@ def rewrite_manifest_group(group: list[str], out_path: str) -> dict[str, Any]:
             if rec["status"] == DELETED:
                 n_dropped += 1
                 continue
-            if rec.get("snapshot_id") is None:
-                # an ADDED entry may inherit its snapshot id from the
-                # manifest LIST, which this group-level rewrite does
-                # not see; silently re-statusing it EXISTING with a
-                # null id would lose attribution that real Iceberg
-                # RewriteManifests materializes (ADVICE r5)
-                raise ValueError(
-                    f"manifest {path} entry for "
-                    f"{rec['data_file']['file_path']!r} has an inherited "
-                    "(null) snapshot_id; materialize ids before rewrite"
-                )
+            for field in _INHERITED:
+                if field in rec and rec[field] is None:
+                    # an ADDED entry may inherit these from the
+                    # manifest LIST; re-statused EXISTING with a null
+                    # it would lose what real Iceberg RewriteManifests
+                    # materializes (a v1 schema has no sequence fields)
+                    raise ValueError(
+                        f"manifest {path} entry for "
+                        f"{rec['data_file']['file_path']!r} has an inherited "
+                        f"(null) {field}; pass the manifest's list row"
+                    )
             entries.append({**rec, "status": EXISTING})
     blob = write_container(schema, entries)
     with open(out_path, "wb") as f:
@@ -109,11 +119,12 @@ def rewrite_manifest_group(group: list[str], out_path: str) -> dict[str, Any]:
 
 
 def rewrite_manifests(
-    groups: list[list[str]], out_dir: str, prefix: str = "rewritten-m"
+    groups: list[list[str | dict[str, Any]]], out_dir: str, prefix: str = "rewritten-m"
 ) -> list[dict[str, Any]]:
     """Execute a manifest rewrite plan: one output manifest per
     group. ``groups`` is ``plan_compaction`` output collected to
-    path lists (or :func:`plan_manifest_groups`)."""
+    path lists (or :func:`plan_manifest_groups`), or lists of
+    manifest-list rows."""
     os.makedirs(out_dir, exist_ok=True)
     return [
         rewrite_manifest_group(g, os.path.join(out_dir, f"{prefix}{i}.avro"))

@@ -18,15 +18,20 @@ decides where entries are parsed: from its manifest threshold on,
 on executors, where they stay an RDD. Scan plans are born in output
 order on either path (tasks by manifest name, rows by file path), so
 ``snapshots.plan_scan`` runs no Spark sort: one job to collect on
-executors, none on the driver. The DATA files they
-describe are what a cluster reads in parallel — planning metadata
-through the driver is exactly what query engines do.
+executors, none on the driver. ``partitions_df`` folds while the
+entries decode and merges per-manifest partials on the driver, since
+a Spark aggregate or sort over a ``LocalRelation`` runs jobs (4 for 8
+rows on an 8-manifest table): one job on executors, none on the
+driver. The DATA files they describe are what a cluster reads in
+parallel — planning metadata through the driver is exactly what
+query engines do.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import json
+import operator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -182,22 +187,71 @@ def files_df(spark: SparkSession, manifest_paths: list[str], meta_raw: dict[str,
     return manifest_entries_df(spark, manifest_paths, meta_raw).filter(F.col("status") != 2)
 
 
+PARTITIONS_SCHEMA = T.StructType(
+    [
+        T.StructField("partition_json", T.StringType()),
+        T.StructField("file_count", T.LongType(), False),
+        T.StructField("record_count", T.LongType()),
+        T.StructField("total_size_in_bytes", T.LongType()),
+        T.StructField("min_file_size", T.LongType()),
+        T.StructField("max_file_size", T.LongType()),
+    ]
+)
+
+
+def _skip_null(op, a: int | None, b: int | None) -> int | None:
+    return b if a is None else a if b is None else op(a, b)
+
+
+def _fold(acc: dict[str, tuple], key: str, part: tuple) -> None:
+    """Merge the partial ``(files, records, bytes, min size, max size)``
+    into ``acc[key]``; nulls are skipped as Spark's sum/min/max skip
+    them."""
+    old = acc.get(key)
+    acc[key] = part if old is None else (
+        old[0] + part[0],
+        _skip_null(operator.add, old[1], part[1]),
+        _skip_null(operator.add, old[2], part[2]),
+        _skip_null(min, old[3], part[3]),
+        _skip_null(max, old[4], part[4]),
+    )
+
+
+def _partitions_worker(ctx: Any, blob: bytes) -> list[tuple[str, tuple]]:
+    """ONE manifest's live entries folded per partition: ``(partition
+    JSON, partial)`` pairs, at most one per partition the manifest
+    holds (driver- or executor-side via :mod:`manifest_io`)."""
+    from .manifest_io import read_manifest
+
+    acc: dict[str, tuple] = {}
+    for rec in read_manifest(blob):
+        if rec["status"] == 2:
+            continue
+        df_ = rec["data_file"]
+        size = df_["file_size_in_bytes"]
+        key = json.dumps(df_.get("partition"), sort_keys=True)
+        _fold(acc, key, (1, df_["record_count"], size, size, size))
+    return list(acc.items())
+
+
 def partitions_df(
     spark: SparkSession, manifest_paths: list[str], meta_raw: dict[str, Any]
 ) -> DataFrame:
-    """Per-partition rollup of the live files."""
-    return (
-        files_df(spark, manifest_paths, meta_raw)
-        .groupBy("partition_json")
-        .agg(
-            F.count(F.lit(1)).alias("file_count"),
-            F.sum("record_count").alias("record_count"),
-            F.sum("file_size_in_bytes").alias("total_size_in_bytes"),
-            F.min("file_size_in_bytes").alias("min_file_size"),
-            F.max("file_size_in_bytes").alias("max_file_size"),
-        )
-        .orderBy("partition_json")
-    )
+    """Per-partition rollup of the live files, folded while the
+    manifests decode (as Iceberg's ``PartitionsTable`` streams entries
+    into a per-partition map): each manifest yields one partial per
+    partition, the driver merges them in key order (Python's code-point
+    order is Spark's UTF-8 string order) into one ``local_frame``.
+    Building it takes one Spark job when the manifests decode on
+    executors (only the partials ship), none on the driver; collecting
+    it takes none. ``meta_raw`` is unused: no bounds are rendered."""
+    from .manifest_io import map_manifests
+
+    acc: dict[str, tuple] = {}
+    tasks = [(None, p) for p in manifest_paths]
+    for key, part in map_manifests(spark, tasks, _partitions_worker):
+        _fold(acc, key, part)
+    return local_frame(spark, [(k, *acc[k]) for k in sorted(acc)], PARTITIONS_SCHEMA)
 
 
 # ---------------------------------------------------------------------
@@ -293,19 +347,7 @@ def meta_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def meta_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        meta_manifest_entries(spark, sf_dir)
-        .filter(F.col("status") != 2)
-        .groupBy("partition_json")
-        .agg(
-            F.count(F.lit(1)).alias("file_count"),
-            F.sum("record_count").alias("record_count"),
-            F.sum("file_size_in_bytes").alias("total_size_in_bytes"),
-            F.min("file_size_in_bytes").alias("min_file_size"),
-            F.max("file_size_in_bytes").alias("max_file_size"),
-        )
-        .orderBy("partition_json")
-    )
+    return partitions_df(spark, [FIXTURE_MANIFEST], parse_metadata(FIXTURE_METADATA).raw)
 
 
 import os as _os

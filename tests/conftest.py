@@ -44,3 +44,33 @@ def spark_job_ids(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def regenerated_fixture_diffs(script: str, fixture_dir: str, out_dir: str) -> list[str]:
+    """Run ``scripts/<script>`` with its ``OUT_DIR`` global pointed at
+    ``out_dir`` (the committed fixture is never written) and return the
+    non-parquet files that differ from ``fixture_dir``, or that only one
+    side has. Parquet bytes pin the installed pyarrow, not the engine."""
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        f"{script[:-3]}_scratch", REPO_ROOT / "scripts" / script
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    mod.OUT_DIR = out_dir
+    mod.main()
+
+    def files(root: str) -> dict[str, bytes]:
+        out = {}
+        for dirpath, _, names in os.walk(root):
+            for fn in names:
+                if not fn.endswith(".parquet"):
+                    p = os.path.join(dirpath, fn)
+                    with open(p, "rb") as f:
+                        out[os.path.relpath(p, root)] = f.read()
+        return out
+
+    want, got = files(fixture_dir), files(out_dir)
+    return sorted(rel for rel in want.keys() | got.keys() if want.get(rel) != got.get(rel))

@@ -181,25 +181,10 @@ def test_oracle_parity_evolution(spark, duck):
 
 
 def test_fixture_regeneration_is_deterministic(tmp_path):
-    import subprocess
-    import sys
+    from .conftest import regenerated_fixture_diffs
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    before = {}
-    for dirpath, _, files in os.walk(EVO_DIR):
-        for fn in files:
-            p = os.path.join(dirpath, fn)
-            if not fn.endswith(".parquet"):  # parquet bytes pin pyarrow, not us
-                with open(p, "rb") as f:
-                    before[os.path.relpath(p, EVO_DIR)] = f.read()
-    subprocess.run(
-        [sys.executable, os.path.join(repo, "scripts", "gen_evolution_fixture.py")],
-        check=True,
-        capture_output=True,
-    )
-    for rel, blob in before.items():
-        with open(os.path.join(EVO_DIR, rel), "rb") as f:
-            assert f.read() == blob, f"non-deterministic fixture file {rel}"
+    out = str(tmp_path / "fixture")
+    assert regenerated_fixture_diffs("gen_evolution_fixture.py", EVO_DIR, out) == []
 
 
 def test_evolution_metadata_is_valid_json_chain():

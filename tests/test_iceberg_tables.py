@@ -4,8 +4,10 @@ reference fixture + synthetic metadata."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
-from iceberg_tools_spark.iceberg import tables
+from iceberg_tools_spark.iceberg import manifest_io, tables
 from iceberg_tools_spark.iceberg.maintenance import (
     compact_parquet,
     find_orphan_files,
@@ -39,6 +41,152 @@ def test_meta_partitions_rollup(spark):
     # fixture has two single-file partitions (data=a, data=b)
     assert len(rows) == 2
     assert all(r.file_count == 1 and r.record_count == 1 for r in rows)
+
+
+# ------------------------------------------------- $partitions fold
+
+# U+FF21 sorts before U+1F600 by code point and after it in UTF-16
+_CATS = ["a", "b", None, "\u00e9", "\uff21", "\U0001f600"]
+
+
+def _spark_partitions(live):
+    """The Spark rollup ``partitions_df`` replaced, kept as its oracle."""
+    from pyspark.sql import functions as F
+
+    return (
+        live.groupBy("partition_json")
+        .agg(
+            F.count(F.lit(1)).alias("file_count"),
+            F.sum("record_count").alias("record_count"),
+            F.sum("file_size_in_bytes").alias("total_size_in_bytes"),
+            F.min("file_size_in_bytes").alias("min_file_size"),
+            F.max("file_size_in_bytes").alias("max_file_size"),
+        )
+        .orderBy("partition_json")
+    )
+
+
+@st.composite
+def _partition_tables(draw):
+    """Appends of (category, bucket, records, bytes) files, under an
+    unpartitioned, an identity or an evolved spec (a bucket field added
+    after the first append); ``dv`` writes a deletion vector for the
+    first file and replaces it, leaving a DELETED entry."""
+    data_file = st.tuples(
+        st.sampled_from(_CATS), st.integers(0, 3), st.integers(0, 9), st.integers(1, 999)
+    )
+    return {
+        "spec": draw(st.sampled_from(["unpartitioned", "identity", "evolved"])),
+        "appends": draw(st.lists(st.lists(data_file, min_size=1, max_size=4), max_size=3)),
+        "dv": draw(st.booleans()),
+    }
+
+
+def _write_partition_table(root: str, table: dict) -> tuple[str, list[str]]:
+    """The table's metadata path and its head's manifest paths, data
+    and delete (none when nothing was appended)."""
+    from iceberg_tools_spark.iceberg.commit import (
+        append_snapshot,
+        commit_delete_snapshot,
+        create_table,
+    )
+    from iceberg_tools_spark.iceberg.evolution import evolve_partition_spec
+    from iceberg_tools_spark.iceberg.snapshots import manifest_files_at
+
+    spec = table["spec"]
+    mp = create_table(
+        root, [("id", "long"), ("cat", "string")],
+        partition_by=[] if spec == "unpartitioned" else [("cat", "identity", "cat")],
+    )
+
+    def part(cat, bucket, evolved):
+        if spec == "unpartitioned":
+            return {}
+        return {"cat": cat, "id_bucket": bucket} if evolved else {"cat": cat}
+
+    for i, files in enumerate(table["appends"]):
+        mp = append_snapshot(mp, [
+            {"path": f"data/a{i}-{j}.parquet",
+             "partition": part(cat, bucket, spec == "evolved" and i > 0),
+             "record_count": records, "file_size_in_bytes": size}
+            for j, (cat, bucket, records, size) in enumerate(files)
+        ])["metadata_path"]
+        if spec == "evolved" and i == 0:
+            mp = evolve_partition_spec(mp, add=[("id_bucket", "bucket[4]", "id")])["metadata_path"]
+    if table["dv"] and table["appends"]:
+        cat, bucket = table["appends"][0][0][:2]
+        ref = f"{parse_metadata(mp).raw['location']}/data/a0-0.parquet"
+        for n, replace in ((1, None), (2, {ref})):
+            dv = {
+                "path": f"data/dv{n}.puffin", "spec_id": 0, "content": 1,
+                "partition": part(cat, bucket, False),
+                "file_format": "PUFFIN", "referenced_data_file": ref,
+                "content_offset": 4, "content_size_in_bytes": 20,
+                "record_count": 1, "file_size_in_bytes": 30 + n,
+            }
+            mp = commit_delete_snapshot(mp, [dv], replace_dv_refs=replace)["metadata_path"]
+    meta = parse_metadata(mp)
+    if meta.current_snapshot_id is None:
+        return mp, []
+    return mp, [m["local_path"] for m in manifest_files_at(meta, meta.current_snapshot_id, root)]
+
+
+_MIXED_PARTITIONS = {
+    "spec": "evolved",
+    "appends": [
+        [("\U0001f600", 0, 3, 10), ("\uff21", 0, 1, 20), (None, 0, 0, 5), ("a", 0, 2, 7)],
+        [("\uff21", 1, 4, 9), (None, 3, 1, 1), ("\u00e9", 2, 5, 50)],
+    ],
+    "dv": True,
+}
+
+
+@pytest.mark.parametrize("threshold", [1, 10**9], ids=["executor", "driver"])
+@settings(
+    max_examples=6, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(table=_partition_tables())
+@example(table=_MIXED_PARTITIONS)
+@example(table={"spec": "unpartitioned", "appends": [[("a", 0, 1, 1)] * 2], "dv": True})
+@example(table={"spec": "identity", "appends": [], "dv": False})
+def test_partitions_df_equals_the_spark_rollup(spark, monkeypatch, threshold, table):
+    """The fold collects exactly the rows, order and schema (nullability
+    included) of the Spark groupBy/agg/orderBy over ``files_df``, on the
+    executor and on the driver placement."""
+    import shutil
+    import tempfile
+
+    monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", threshold)
+    root = tempfile.mkdtemp(prefix="partitions-")
+    try:
+        mp, paths = _write_partition_table(root, table)
+        raw = parse_metadata(mp).raw
+        got = tables.partitions_df(spark, paths, raw)
+        want = _spark_partitions(tables.files_df(spark, paths, raw))
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+    finally:
+        shutil.rmtree(root)
+
+
+@pytest.mark.parametrize("threshold", [1, 10**9], ids=["executor", "driver"])
+def test_meta_partitions_equals_the_spark_rollup(spark, monkeypatch, tmp_path, threshold):
+    """``meta_partitions`` is the same fold over the fixture manifest:
+    pointed at each manifest of a generated table, it collects what the
+    Spark rollup of ``meta_manifest_entries`` collects."""
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", threshold)
+    mp, paths = _write_partition_table(str(tmp_path / "t"), _MIXED_PARTITIONS)
+    monkeypatch.setattr(tables, "FIXTURE_METADATA", mp)
+    for path in paths:
+        monkeypatch.setattr(tables, "FIXTURE_MANIFEST", path)
+        got = tables.meta_partitions(spark, "unused")
+        entries = tables.meta_manifest_entries(spark, "unused")
+        want = _spark_partitions(entries.filter(F.col("status") != 2))
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
 
 
 def test_meta_snapshots_and_history(spark):

@@ -477,7 +477,40 @@ def test_rewrite_merges_two_engine_written_manifests(tmp_path):
     for p in paths:
         list(manifest_io.read_manifest(open(p, "rb").read()))
     assert len(reader._DECODERS) == 1
-    (stats,) = rewrite_manifests([paths], str(tmp_path / "out"))
+    rows = manifest_files_at(parse_metadata(versions[1]), sids[1], root)
+    assert sorted(os.path.basename(r["local_path"]) for r in rows) == [
+        os.path.basename(p) for p in paths
+    ]
+    (stats,) = rewrite_manifests([rows], str(tmp_path / "out"))
     assert stats["entries_in"] == stats["entries_out"] == 2
     merged = list(manifest_io.read_manifest(open(stats["out_path"], "rb").read()))
     assert [(e["status"], e["snapshot_id"]) for e in merged] == [(0, sids[0]), (0, sids[1])]
+
+
+def test_rewrite_from_list_rows_writes_inherited_fields(tmp_path):
+    """ADDED entries leave their snapshot id and sequence number to the
+    manifest list. Merged from the list rows, the rewritten EXISTING
+    entries carry both explicitly, so a read through any later list row
+    has them (``mor_entries_at`` needs the sequence number); merged
+    from bare paths, a null sequence number is refused like a null
+    snapshot id."""
+    from iceberg_tools_spark.iceberg.rewrite import rewrite_manifests
+
+    root, versions, sids = _three_appends(str(tmp_path / "t"), null_ids=True)
+    rows = manifest_files_at(parse_metadata(versions[1]), sids[1], root)
+    (stats,) = rewrite_manifests([rows], str(tmp_path / "out"))
+    stored = list(manifest_io.read_manifest(open(stats["out_path"], "rb").read()))
+    assert [(e["status"], e["snapshot_id"], e["sequence_number"]) for e in stored] == [
+        (0, sids[0], 1), (0, sids[1], 2),
+    ]
+    later = {**rows[0], "local_path": stats["out_path"], "sequence_number": 3,
+             "added_snapshot_id": sids[2]}
+    read = list(manifest_io.read_manifest(later))
+    assert [(e["snapshot_id"], manifest_io.sequence_number(e)) for e in read] == [
+        (sids[0], 1), (sids[1], 2),
+    ]
+
+    root, versions, sids = _three_appends(str(tmp_path / "u"), null_ids=False)
+    rows = manifest_files_at(parse_metadata(versions[1]), sids[1], root)
+    with pytest.raises(ValueError, match=r"inherited \(null\) sequence_number"):
+        rewrite_manifests([[r["local_path"] for r in rows]], str(tmp_path / "out2"))

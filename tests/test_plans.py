@@ -370,6 +370,38 @@ def test_plan_scan_collects_in_order_without_a_sort(
     assert keys == sorted(keys)
 
 
+@pytest.mark.parametrize(
+    "threshold, jobs", [(1, 1), (10**9, 0)], ids=["executor", "driver"]
+)
+def test_partitions_df_aggregates_without_a_spark_job(
+    spark, monkeypatch, threshold, jobs
+):
+    """partitions_df folds per-partition partials while the manifests
+    decode, so its plan holds no aggregate, Sort or Exchange: building
+    and collecting it runs one job when the manifests decode on
+    executors (collecting the partials) and none when they decode on
+    the driver."""
+    import re
+
+    from iceberg_tools_spark.iceberg import manifest_io
+    from iceberg_tools_spark.iceberg.deletes import MOR_DIR, MOR_METADATA
+    from iceberg_tools_spark.iceberg.metadata import parse_metadata
+    from iceberg_tools_spark.iceberg.snapshots import manifest_paths_at
+    from iceberg_tools_spark.iceberg.tables import partitions_df
+
+    from .conftest import spark_job_ids
+
+    meta = parse_metadata(MOR_METADATA)
+    paths = manifest_paths_at(meta, meta.current_snapshot_id, MOR_DIR)
+    monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", threshold)
+    with spark_job_ids(spark) as ids:
+        df = partitions_df(spark, paths, meta.raw)
+        rows = df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert re.findall(r"\b(?:\w*Aggregate|Sort|Exchange)\b", plan) == []
+    assert len(rows) > 1 and len(ids) == jobs
+
+
 def test_perceptual_dedup_plans_no_cartesian(spark):
     """The image/audio/video dedupers must join only through band
     buckets (equi-join) — never a cartesian — and keep exactly one

@@ -214,26 +214,11 @@ def test_source_pred_across_spec_evolution(spark):
         assert by_file[f]["selected"], f  # spec 0 has no id field
 
 
-def test_fixture_regeneration_is_deterministic():
-    import subprocess
-    import sys
+def test_fixture_regeneration_is_deterministic(tmp_path):
+    from .conftest import regenerated_fixture_diffs
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    before = {}
-    for dirpath, _, files in os.walk(TRANS_DIR):
-        for fn in files:
-            p = os.path.join(dirpath, fn)
-            if not fn.endswith(".parquet"):
-                with open(p, "rb") as f:
-                    before[os.path.relpath(p, TRANS_DIR)] = f.read()
-    subprocess.run(
-        [sys.executable, os.path.join(repo, "scripts", "gen_transforms_fixture.py")],
-        check=True,
-        capture_output=True,
-    )
-    for rel, blob in before.items():
-        with open(os.path.join(TRANS_DIR, rel), "rb") as f:
-            assert f.read() == blob, f"non-deterministic fixture file {rel}"
+    out = str(tmp_path / "fixture")
+    assert regenerated_fixture_diffs("gen_transforms_fixture.py", TRANS_DIR, out) == []
 
 
 def test_micros_pre_epoch_subsecond():
