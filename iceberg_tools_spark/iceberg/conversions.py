@@ -248,11 +248,10 @@ def double_sort_key(v: float) -> int:
     the numeric ``<``/``>`` over finite values and ±inf): the
     classic radix-sort transform — positive doubles keep their
     signed bit pattern, negative ones flip the non-sign bits. Used
-    by the geo scan-planning filter: bbox comparisons run over
-    these keys entirely in JVM integer arithmetic — no float
-    reconstruction, no Python eval in the plan — and stay bit-exact
-    with the ``struct.unpack`` reference decode
-    (:func:`parse_wkb_point`; pinned in tests/test_snapshots.py)."""
+    by the geo scan-planning check (``pruning.geo_keys``): bbox
+    comparisons run over these integer keys and stay bit-exact with
+    the ``struct.unpack`` reference decode (:func:`parse_wkb_point`;
+    pinned in tests/test_snapshots.py)."""
     (s,) = struct.unpack(">q", struct.pack(">d", v))
     if s == -(1 << 63):  # -0.0 → +0.0
         return 0

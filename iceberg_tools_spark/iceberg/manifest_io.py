@@ -26,8 +26,11 @@ carries no compiled codec: each Python worker compiles the schemas it
 meets into its own cache. Both placements keep task order
 (``parallelize`` slices are contiguous, ``flatMap`` keeps slice order),
 so a caller whose tasks and rows come in output order gets an ordered
-frame with no Spark sort (``snapshots.plan_scan``). Executors must see
-the driver's filesystem, as they must for data files.
+frame with no Spark sort. A worker can also decide or fold what it
+decodes, so only the result leaves it: ``snapshots.plan_scan`` prunes
+files there (``pruning``) and ``tables.partitions_df`` folds
+partitions. Executors must see the driver's filesystem, as they must
+for data files.
 """
 
 from __future__ import annotations

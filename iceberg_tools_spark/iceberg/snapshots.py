@@ -35,6 +35,7 @@ to the generator's declared fixture contents.
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Any
 
@@ -44,10 +45,10 @@ from pyspark.sql import types as T
 
 from ..avro.reader import AvroContainerFile
 from ..session import local_frame
-from .metadata import TableMetadata, parse_metadata
+from .metadata import TableMetadata, field_id_types, parse_metadata
 from .tables import (
     ENTRIES_SCALAR_SCHEMA,
-    ENTRIES_SCHEMA,
+    LIVE_FILES_SCALAR_SCHEMA,
     _scalar_entry_rows,
     history_df,
     snapshots_df,
@@ -175,12 +176,8 @@ def files_at(
     (that snapshot's manifests, DELETED entries dropped)."""
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
-    rows = _scalar_entry_rows(manifest_paths_at(meta, snapshot_id, base_dir), meta.raw)
-    return (
-        local_frame(spark, rows, ENTRIES_SCALAR_SCHEMA)
-        .filter(F.col("status") != 2)
-        .drop("status", "status_name")
-    )
+    rows = _scalar_entry_rows(manifest_paths_at(meta, snapshot_id, base_dir), meta.raw, live=True)
+    return local_frame(spark, rows, LIVE_FILES_SCALAR_SCHEMA)
 
 
 def entries_added_by(
@@ -216,21 +213,19 @@ def files_added_between(
     are not re-added). Raises if `from_id` is not an ancestor of
     `to_id` (divergent branches have no well-defined increment).
     """
-    from .tables import _entry_row, _scalar_row, field_id_types
+    from .tables import _entry_row, _scalar_row
 
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
     fid_types = field_id_types(meta.raw)
     rows = [
-        _scalar_row(_entry_row(e, fid_types))
+        _scalar_row(_entry_row(e, fid_types))[2:]
         for sid in sorted(_increment(meta, from_id, to_id))
         for _mrow, e in entries_added_by(meta, sid, base_dir)
     ]
     # empty increment (from_id == to_id) yields an empty, correctly-
     # typed frame rather than an error
-    return local_frame(spark, rows, ENTRIES_SCALAR_SCHEMA).drop(
-        "status", "status_name"
-    )
+    return local_frame(spark, rows, LIVE_FILES_SCALAR_SCHEMA)
 
 
 def _increment(meta: TableMetadata, from_id: int, to_id: int) -> set[int]:
@@ -615,15 +610,6 @@ def files_added_between_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------ scan planning
 
 
-def _transform_result_type(transform: str, source_type: str) -> str:
-    """Iceberg partition-transform result type (public spec table):
-    identity/truncate preserve the source type; bucket and the
-    temporal ordinals (year/month/day/hour) are int."""
-    from .transforms import transform_result_type
-
-    return transform_result_type(transform, source_type)
-
-
 def partition_spec_fields(
     meta: TableMetadata, spec_id: int | None = None
 ) -> list[tuple[str, str]]:
@@ -632,6 +618,8 @@ def partition_spec_fields(
     the source type; bucket is int). ``spec_id=None`` → the table's
     default spec; evolved tables carry several specs and `plan_scan`
     resolves each manifest against its OWN (VERDICT r5 #2)."""
+    from .transforms import transform_result_type
+
     raw = meta.raw
     if spec_id is None:
         spec_id = raw.get("default-spec-id", 0)
@@ -642,8 +630,8 @@ def partition_spec_fields(
     )
     by_id = {f["id"]: f for f in schema.get("fields", [])}
     return [
-        (f["name"], _transform_result_type(f.get("transform", "identity"),
-                                           by_id[f["source-id"]]["type"]))
+        (f["name"], transform_result_type(f.get("transform", "identity"),
+                                          by_id[f["source-id"]]["type"]))
         for f in spec.get("fields", [])
     ]
 
@@ -655,77 +643,37 @@ def partition_specs_by_id(meta: TableMetadata) -> dict[int, list[tuple[str, str]
     }
 
 
-def _geo_bound_keys(bmap: dict[int, str] | None, fid: int) -> tuple[int | None, int | None]:
-    """(x_key, y_key) of one rendered geometry/geography bound —
-    ``double_sort_key`` over the reference WKB decode, or NULLs for
-    absent/unparseable bounds/NaN coords (conservative keep). Runs
-    inside the manifest parse pass (driver- or executor-side plain
-    Python), so the geo planning FILTER is two bigint comparisons
-    per corner — no Python eval node, no heavyweight codegen in the
-    planning query (r16: the former per-plan Arrow-UDF decode cost a
-    Python worker round-trip; a pure-expression hex decode cost even
-    more in analysis+Janino time — the right place for the 21-byte
-    struct unpack is where the row is born)."""
-    import math
+def _plan_rows(pruned, tag: tuple, blob: bytes) -> list[tuple]:
+    """One manifest's live entries as ``SCAN_PLAN_SCHEMA`` rows, each
+    file decided by ``pruned`` (:func:`pruning.file_pruner`)."""
+    from .manifest_io import read_manifest
 
-    from .conversions import double_sort_key, parse_wkb_point
-
-    v = (bmap or {}).get(fid)
-    if not v or not v.startswith("value:0x"):
-        return (None, None)
-    try:
-        pt = parse_wkb_point(bytes.fromhex(v[8:].split(";", 1)[0]))
-    except ValueError:
-        return (None, None)
-    if pt is None:
-        return (None, None)
-    x, y = pt
-    return (
-        None if math.isnan(x) else double_sort_key(x),
-        None if math.isnan(y) else double_sort_key(y),
-    )
-
-
-def _tagged_live_entries(ctx: dict[str, Any], tag: tuple, blob: bytes) -> list[tuple]:
-    """One manifest's live entries as ENTRIES_SCHEMA tuples with
-    ``tag`` (name, spec id, level-1 decision) prepended. With
-    ``ctx["geo_fids"]``, each row additionally carries the decoded
-    bbox-corner sort keys (lo_x, lo_y, hi_x, hi_y per field id) for
-    the geo filter."""
-    from .tables import _entries_worker
-
-    geo_fids = ctx.get("geo_fids") or ()
-    if not geo_fids:
-        return [(*tag, *r) for r in _entries_worker(ctx, blob) if r[0] != 2]
+    mname, spec_id, m_pruned = tag
     out = []
-    for r in _entries_worker(ctx, blob):
-        if r[0] == 2:
-            continue
-        keys: list[int | None] = []
-        for fid in geo_fids:
-            keys.extend(_geo_bound_keys(r[12], fid))  # lower_bounds
-            keys.extend(_geo_bound_keys(r[13], fid))  # upper_bounds
-        out.append((*tag, *r, *keys))
+    for rec in read_manifest(blob):
+        if rec["status"] != 2:
+            df_ = rec["data_file"]
+            f_pruned = pruned(df_, spec_id)
+            part = json.dumps(df_.get("partition"), sort_keys=True)
+            out.append((mname, df_["file_path"], part, df_["record_count"],
+                        m_pruned, f_pruned, not (m_pruned or f_pruned)))
     return out
 
 
-def _file_path_order(row: tuple) -> tuple[bool, str]:
-    # Spark's ascending order: nulls first, then UTF-8 byte order,
-    # which for str is Python's code-point order
-    path = row[6]  # after the 3-field tag, ENTRIES_SCHEMA's file_path
-    return (path is not None, path or "")
+def _plan_worker(ctx: dict[str, Any], blob: bytes) -> list[tuple]:
+    """plan_scan's per-task decode (driver- or executor-side via
+    :func:`manifest_io.manifest_frame`): the decided rows of the
+    task's manifest and of the ``ctx["same_name"]`` manifests that
+    share its basename, in ``file_path`` order — Spark's: nulls
+    first, then UTF-8 byte order, which is Python's code-point order."""
+    from .pruning import file_pruner
 
-
-def _tagged_live_entries_worker(ctx: dict[str, Any], blob: bytes) -> list[tuple]:
-    """plan_scan's per-task parse (driver- or executor-side via
-    :func:`manifest_io.manifest_frame`): the live tagged entries of
-    the task's manifest and of the ``ctx["same_name"]`` manifests
-    that share its basename, in ``file_path`` order."""
-    rows = _tagged_live_entries(ctx, ctx["tag"], blob)
+    pruned = file_pruner(ctx["rules"])
+    rows = _plan_rows(pruned, ctx["tag"], blob)
     for tag, path in ctx["same_name"]:
         with open(path, "rb") as f:
-            rows += _tagged_live_entries(ctx, tag, f.read())
-    rows.sort(key=_file_path_order)
+            rows += _plan_rows(pruned, tag, f.read())
+    rows.sort(key=lambda r: (r[1] is not None, r[1] or ""))
     return rows
 
 
@@ -739,26 +687,21 @@ def _normalize_partition_pred(
     date-typed hive import made these partitions reachable)."""
     import datetime as _dt
 
+    from .pruning import _endpoint
+
     typ_of: dict[str, str] = {}
     for spec in specs.values():
         for fn, ft in spec:
             typ_of.setdefault(fn, ft)
-    out: dict[str, Any] = {}
+    out = dict(pred)
     for k, v in pred.items():
         t = typ_of.get(k)
-        if v is None or t is None:
-            out[k] = v
-        elif t == "date" and isinstance(v, str):
-            out[k] = (_dt.date.fromisoformat(v) - _dt.date(1970, 1, 1)).days
-        elif t == "date" and isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-            out[k] = (v - _dt.date(1970, 1, 1)).days
+        if t == "date" and isinstance(v, str):
+            v = _dt.date.fromisoformat(v)
+        if t == "date" and isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
+            out[k] = _endpoint("date", v)
         elif t in ("timestamp", "timestamptz") and isinstance(v, _dt.datetime):
-            if v.tzinfo is not None:
-                v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            d = v - _dt.datetime(1970, 1, 1)
-            out[k] = (d.days * 86400 + d.seconds) * 1_000_000 + d.microseconds
-        else:
-            out[k] = v
+            out[k] = _endpoint("timestamp", v)
     return out
 
 
@@ -848,26 +791,6 @@ def _project_source_pred(
     return out
 
 
-def tagged_entries_schema(geo_fids: list[int]) -> T.StructType:
-    """:func:`plan_scan`'s row schema: the manifest name, its spec id
-    and level-1 decision, the entry (``ENTRIES_SCHEMA``), then per
-    geo field the decoded bbox-corner sort keys (see
-    ``_geo_bound_keys`` — decoded where the row is born)."""
-    return T.StructType(
-        [
-            T.StructField("manifest_name", T.StringType()),
-            T.StructField("spec_id", T.IntegerType()),
-            T.StructField("manifest_pruned", T.BooleanType()),
-            *ENTRIES_SCHEMA.fields,
-            *[
-                T.StructField(f"_geo{fid}_{corner}", T.LongType())
-                for fid in geo_fids
-                for corner in ("lox", "loy", "hix", "hiy")
-            ],
-        ]
-    )
-
-
 def plan_scan(
     spark: SparkSession,
     metadata_path: str,
@@ -890,37 +813,28 @@ def plan_scan(
        summaries prune whole manifests whose partition-value range
        cannot contain the (identity-equality) predicate; a pruned
        manifest's Avro is never even opened (unless ``debug``);
-    2. **file level** — surviving manifests' live entries are pruned
-       by exact identity-partition match and by the decoded
-       column-bound interval (``pruning.prune_files`` semantics).
+    2. **file level** — the worker that decodes each surviving
+       manifest decides its live entries on typed values
+       (:mod:`.pruning`, the shape of Iceberg's ``planFiles``): the
+       exact partition match, the ``field_id`` bound interval
+       ``[lo, hi]`` read as ``cast_to`` (a bound that cannot be read
+       so raises ``ValueError``) and the ``geo_bbox`` boxes.
 
-    ``partition_pred`` constrains partition FIELDS by name (already
-    in partition space); ``source_pred`` constrains SOURCE columns
-    and is projected through each spec's own transforms — bucket,
-    year/month/day/hour, truncate, identity — so ``{"id": 260}``
-    prunes a ``bucket[4](id)``-partitioned table to one bucket per
-    spec (see :func:`_project_source_pred`).
+    ``partition_pred`` constrains partition FIELDS by name;
+    ``source_pred`` constrains SOURCE columns, projected through each
+    spec's own transforms (:func:`_project_source_pred`), so
+    ``{"id": 260}`` prunes a ``bucket[4](id)`` table to one bucket.
 
-    Returns the plan decision table (``SCAN_PLAN_SCHEMA``); the
-    production file set is ``.filter("selected")``. With ``debug``
-    pruned manifests ARE read so the table shows every file's
-    decision — the metadata analogue of ``EXPLAIN``.
-
-    Rows come in ``(manifest_name, file_path)`` order without a Spark
-    sort: the surviving manifests are parse tasks in manifest-name
-    order and each task returns its rows in ``file_path`` order
-    (nulls first, UTF-8 byte order, as ``orderBy`` sorts). The plan
-    has no ``Exchange``: collecting it runs one job when the
-    manifests parse on executors and none when they parse on the
-    driver (``manifest_io.manifest_frame`` decides).
-
-    At scale: manifest lists are KB per thousand manifests; level 1
-    drops whole MB-scale manifests before any parse, and level 2 is
-    a Spark filter over the entries of what remains, evaluated where
-    those entries were parsed — the same shape Spark's own Iceberg
-    source uses for scan planning.
+    Returns the decision table (``SCAN_PLAN_SCHEMA``); the production
+    file set is ``.filter("selected")``. With ``debug`` pruned
+    manifests ARE read, so every file's decision shows (``EXPLAIN``).
+    Rows come in ``(manifest_name, file_path)`` order with no Spark
+    sort or expression: tasks run in manifest-name order, each
+    returning its rows in ``file_path`` order, so collecting runs one
+    job when the manifests parse on executors and none on the driver.
     """
-    from .pruning import bound_value
+    from .manifest_io import manifest_frame
+    from .pruning import file_rules
 
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
@@ -935,27 +849,21 @@ def plan_scan(
             "a silently ignored predicate would return an over-selected plan"
         )
     derived = _project_source_pred(meta, source_pred) if source_pred else {}
-
-    # ONE frame over driver-tagged rows (manifest name, its spec id
-    # + level-1 decision prepended to each entry) — no per-manifest
-    # frame, no N-deep union chain; at thousands of manifests the
-    # plan stays a single scan
-    geo_fids = sorted(geo_bbox) if geo_bbox else []
-    tagged_schema = tagged_entries_schema(geo_fids)
-    from .manifest_io import manifest_frame
-    from .tables import field_id_types
-
-    fid_ctx = {"fid_types": field_id_types(meta.raw)}
-    if geo_fids:
-        fid_ctx["geo_fids"] = tuple(geo_fids)
+    # level 2's equalities per spec: the global predicates on its own
+    # fields, then the source predicate projected through its transforms
+    spec_preds = {
+        sid: [(f, pred[f]) for f in sorted({fn for fn, _ in sp} & set(pred))]
+        + sorted(derived.get(sid, {}).items())
+        for sid, sp in specs.items()
+    }
+    rules = file_rules(spec_preds, field_id_types(meta.raw), field_id, lo, hi, cast_to, geo_bbox)
     by_name: dict[str, list[tuple[tuple, str]]] = {}
     for mrow in manifest_files_at(meta, snapshot_id, base_dir):
         if mrow.get("content", 0) != 0:
             continue  # delete manifests: deletes.py's input, not data
         mname = os.path.basename(mrow["manifest_path"])
         spec_id = mrow.get("partition_spec_id", 0)
-        # each manifest's summaries align with its OWN spec's fields;
-        # source-derived predicates join the global ones per spec
+        # summaries align with the manifest's OWN spec's fields
         m_pruned = _manifest_partition_pruned(
             mrow, specs[spec_id], {**pred, **derived.get(spec_id, {})}
         )
@@ -967,94 +875,10 @@ def plan_scan(
     # tasks in manifest-name order; manifests sharing a basename parse
     # as one task, so their rows interleave by path as a sort would
     tasks = [
-        ({**fid_ctx, "tag": tag, "same_name": rest}, path)
+        ({"rules": rules, "tag": tag, "same_name": rest}, path)
         for _, ((tag, path), *rest) in sorted(by_name.items())
     ]
-    if not tasks:
-        return local_frame(spark, [], SCAN_PLAN_SCHEMA)
-    # level 2 distributed end to end from the manifest threshold on:
-    # surviving manifests parse in executors and the decision table
-    # is born as a DataFrame — no per-entry driver materialization
-    # (VERDICT r8 #1); either placement keeps task order
-    entries = manifest_frame(spark, tasks, _tagged_live_entries_worker, tagged_schema)
-
-    def _json_scalar(v: Any) -> str:
-        # get_json_object renders strings UNQUOTED and booleans as
-        # JSON literals; Python str() agrees except for bool
-        # (ADVICE r5: 'True' never matches 'true')
-        return "true" if v is True else "false" if v is False else str(v)
-
-    part_match = F.lit(True)
-    for fname in sorted(all_fields):
-        if fname in pred:
-            want = pred[fname]
-            got = F.get_json_object("partition_json", f"$.{fname}")
-            this_match = (
-                got.isNull() if want is None else (got == F.lit(_json_scalar(want)))
-            )
-            # a spec that lacks the field constrains nothing: its
-            # files may hold matching rows (pre-evolution data)
-            spec_ids_with = [sid for sid, sp in specs.items()
-                             if fname in {fn for fn, _ in sp}]
-            part_match = part_match & F.when(
-                F.col("spec_id").isin(spec_ids_with), this_match
-            ).otherwise(F.lit(True))
-    # source-derived predicates: per-spec wanted values (the SAME
-    # source predicate projects to DIFFERENT partition values under
-    # different specs — bucket counts, temporal granularities)
-    for sid, dmap in derived.items():
-        for fname, want in sorted(dmap.items()):
-            got = F.get_json_object("partition_json", f"$.{fname}")
-            this_match = (
-                got.isNull() if want is None else (got == F.lit(_json_scalar(want)))
-            )
-            part_match = part_match & F.when(
-                F.col("spec_id") == sid, this_match
-            ).otherwise(F.lit(True))
-    bounds_overlap = F.lit(True)
-    if field_id is not None:
-        lower = bound_value(F.element_at("lower_bounds", F.lit(field_id)), cast_to)
-        upper = bound_value(F.element_at("upper_bounds", F.lit(field_id)), cast_to)
-        if hi is not None:
-            bounds_overlap = bounds_overlap & (lower.isNull() | (lower <= F.lit(hi)))
-        if lo is not None:
-            bounds_overlap = bounds_overlap & (upper.isNull() | (upper >= F.lit(lo)))
-    if geo_bbox:
-        # v3 geospatial pruning: a geometry/geography column's bounds
-        # are WKB POINTS — lower = (min x, min y), upper =
-        # (max x, max y) of the file's bounding box (spec "Bound
-        # serialization"). A file survives iff its box INTERSECTS the
-        # query box; absent/unparseable bounds keep the file
-        # (conservative). The WKB decode happened in the manifest
-        # parse pass (_geo_bound_keys: IEEE-754 total-order bigint
-        # keys), so this filter is plain integer comparisons — no
-        # Python eval node and no heavyweight codegen in the
-        # planning query (guide §4.1; r16 optimization).
-        from .conversions import double_sort_key
-
-        def _k(v):
-            return F.lit(double_sort_key(float(v)))
-
-        for gfid, (xmin, ymin, xmax, ymax) in sorted(geo_bbox.items()):
-            disjoint = (
-                (F.col(f"_geo{gfid}_hix") < _k(xmin))
-                | (F.col(f"_geo{gfid}_lox") > _k(xmax))
-                | (F.col(f"_geo{gfid}_hiy") < _k(ymin))
-                | (F.col(f"_geo{gfid}_loy") > _k(ymax))
-            )
-            bounds_overlap = bounds_overlap & ~F.coalesce(
-                disjoint, F.lit(False)
-            )
-    file_pruned = ~(part_match & bounds_overlap)
-    return entries.select(
-        "manifest_name",
-        "file_path",
-        "partition_json",
-        "record_count",
-        "manifest_pruned",
-        file_pruned.alias("file_pruned"),
-        (~F.col("manifest_pruned") & ~file_pruned).alias("selected"),
-    )
+    return manifest_frame(spark, tasks, _plan_worker, SCAN_PLAN_SCHEMA)
 
 
 def scan_plan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:

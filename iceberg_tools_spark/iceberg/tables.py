@@ -7,24 +7,17 @@ live files, partition summaries — as queryable DataFrames (the
 `table$snapshots` / `$files` / `$partitions` surface of Spark's
 Iceberg connector, rebuilt from the raw metadata files).
 
-Scale note: manifest/metadata files are KB–MB; they are parsed
-driver-side with the pure-Python reader and handed to Spark through
-``session.local_frame`` with explicit schemas: one Arrow table that
-becomes a ``LocalRelation``, so selecting, filtering and collecting a
-metadata table runs no Spark job and no Python worker (a pickled
-``createDataFrame(list)`` cost one Python-worker job per action,
-about 0.4 s each on a 4-core VM). ``manifest_io.manifest_frame``
-decides where entries are parsed: from its manifest threshold on,
-on executors, where they stay an RDD. Scan plans are born in output
-order on either path (tasks by manifest name, rows by file path), so
-``snapshots.plan_scan`` runs no Spark sort: one job to collect on
-executors, none on the driver. ``partitions_df`` folds while the
-entries decode and merges per-manifest partials on the driver, since
-a Spark aggregate or sort over a ``LocalRelation`` runs jobs (4 for 8
-rows on an 8-manifest table): one job on executors, none on the
-driver. The DATA files they describe are what a cluster reads in
-parallel — planning metadata through the driver is exactly what
-query engines do.
+Scale note: manifest/metadata files are KB–MB. Driver-built rows
+reach Spark through ``session.local_frame`` (one Arrow
+``LocalRelation``: selecting, filtering and collecting runs no job).
+``manifest_io`` decides where manifests decode — on executors from
+its threshold on, where rows stay an RDD — and its workers return
+only what a table needs: ``snapshots.plan_scan`` decides its files
+there (``pruning``) in output order, ``files_at`` keeps the live
+scalar rows, and ``partitions_df`` folds per-partition partials (a
+Spark aggregate or sort over a ``LocalRelation`` runs jobs). Each
+collects with one job on executors and none on the driver. The DATA
+files they describe are what a cluster reads in parallel.
 """
 
 from __future__ import annotations
@@ -313,14 +306,27 @@ def _scalar_row(r: tuple) -> tuple:
     return (*r[:8], *map(_jmap, r[8:14]), splits, r[15])
 
 
-def _scalar_entry_rows(manifest_paths: list[str], meta_raw: dict[str, Any]) -> list[tuple]:
-    """The manifests' stored entries as ENTRIES_SCALAR_SCHEMA rows
+LIVE_FILES_SCALAR_SCHEMA = T.StructType(ENTRIES_SCALAR_SCHEMA.fields[2:])
+
+
+def _scalar_entries_worker(ctx: dict[str, Any], blob: bytes) -> list[tuple]:
+    """:func:`_entries_worker`'s rows as ENTRIES_SCALAR_SCHEMA rows;
+    with ``ctx["live"]``, the live ones as LIVE_FILES_SCALAR_SCHEMA
+    rows (``files_at``: no status columns)."""
+    cut = 2 if ctx["live"] else 0
+    return [_scalar_row(r)[cut:] for r in _entries_worker(ctx, blob) if not (cut and r[0] == 2)]
+
+
+def _scalar_entry_rows(
+    manifest_paths: list[str], meta_raw: dict[str, Any], *, live: bool = False
+) -> list[tuple]:
+    """The manifests' entries as :func:`_scalar_entries_worker` rows
     (executor-parallel above the manifest threshold, VERDICT r8 #1)."""
     from .manifest_io import active_session, map_manifests
 
-    ctx = {"fid_types": field_id_types(meta_raw)}
-    rows = map_manifests(active_session(), [(ctx, p) for p in manifest_paths], _entries_worker)
-    return [_scalar_row(r) for r in rows]
+    ctx = {"fid_types": field_id_types(meta_raw), "live": live}
+    tasks = [(ctx, p) for p in manifest_paths]
+    return map_manifests(active_session(), tasks, _scalar_entries_worker)
 
 
 def meta_manifest_entries(spark: SparkSession, sf_dir: str) -> DataFrame:

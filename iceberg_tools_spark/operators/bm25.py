@@ -120,7 +120,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str, *, k: int = TOP_K) -> DataFrame:
         "query_id", "doc_id", "dl", "tf", (F.col("idf") * tf_part).alias("s")
     )
     per_doc = per_term.groupBy("query_id", "doc_id").agg(
-        F.first("dl").alias("dl"),
+        F.min("dl").alias("dl"),
         F.sum("tf").cast("long").alias("tf_sum"),
         F.sum("s").alias("score"),
     )

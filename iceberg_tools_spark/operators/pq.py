@@ -126,7 +126,8 @@ def _query_tables(
     tbl[sub·KSUB + code] = dot(vec_sub, codebook[sub][code]) — all
     JVM expressions over a broadcast-sized frame (keys × m·ksub
     rows). ``carry`` columns (functionally dependent on the keys)
-    ride through via ``first``."""
+    ride through via ``min``: equal on every row of a key, so the
+    result does not depend on row order."""
     dsub = dim // PQ_M
     sub = _sub_slice(vec_col, dsub)
     exploded = queries.select(
@@ -142,7 +143,7 @@ def _query_tables(
         .select(*keys, *carry, "sub", "code", dot.alias("d"))
         .groupBy(*keys)
         .agg(
-            *[F.first(c).alias(c) for c in carry],
+            *[F.min(c).alias(c) for c in carry],
             F.expr(
                 "transform(array_sort(collect_list(struct(sub, code, d))),"
                 " x -> x.d)"

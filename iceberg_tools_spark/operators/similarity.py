@@ -240,8 +240,8 @@ def _ivf_assign(df: DataFrame, cents: DataFrame) -> DataFrame:
     map-side, so only N rows (one per vector, already reduced) cross
     the wire. Same result (struct comparison is lexicographic:
     d2 then cell — exactly the old ORDER BY d2, cell tie-break);
-    embedding/ss are functionally dependent on vec_id so ``first``
-    is deterministic."""
+    embedding/ss are functionally dependent on vec_id; ``min`` carries
+    them whatever order the rows arrive in."""
     d2 = F.col("ss") - 2 * dot_fast("embedding", "cemb") + F.col("css")
     return (
         df.crossJoin(F.broadcast(cents))
@@ -249,8 +249,8 @@ def _ivf_assign(df: DataFrame, cents: DataFrame) -> DataFrame:
         .groupBy("vec_id")
         .agg(
             F.min(F.struct("d2", "cell")).alias("m"),
-            F.first("embedding").alias("embedding"),
-            F.first("ss").alias("ss"),
+            F.min("embedding").alias("embedding"),
+            F.min("ss").alias("ss"),
         )
         .select("vec_id", "embedding", "ss", F.col("m.cell").alias("cell"))
     )

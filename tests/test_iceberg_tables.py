@@ -15,7 +15,7 @@ from iceberg_tools_spark.iceberg.maintenance import (
     plan_expire_snapshots,
 )
 from iceberg_tools_spark.iceberg.metadata import parse_metadata
-from iceberg_tools_spark.iceberg.pruning import prune_files, pruning_stats
+from iceberg_tools_spark.iceberg.pruning import file_pruner, file_rules
 
 
 def test_meta_files_from_fixture(spark):
@@ -29,11 +29,6 @@ def test_meta_files_from_fixture(spark):
     assert lb0["1"] == "value:1;type:long"
     assert lb0["2"] == "value:a;type:string"
     assert json.loads(rows[1].upper_bounds_json)["1"] == "value:2;type:long"
-
-
-def _fixture_files_df(spark):
-    meta = parse_metadata(tables.FIXTURE_METADATA)
-    return tables.files_df(spark, [tables.FIXTURE_MANIFEST], meta.raw)
 
 
 def test_meta_partitions_rollup(spark):
@@ -254,16 +249,28 @@ def test_compact_parquet_executor(spark, tmp_path):
 # ----------------------------------------------------------- pruning
 
 
-def test_prune_files_on_fixture_bounds(spark):
-    entries = _fixture_files_df(spark)
+def test_prune_files_on_fixture_bounds():
+    from iceberg_tools_spark.iceberg.conversions import decode_bound
+    from iceberg_tools_spark.iceberg.metadata import field_id_types
+
+    meta = parse_metadata(tables.FIXTURE_METADATA)
+    with open(tables.FIXTURE_MANIFEST, "rb") as f:
+        files = [e["data_file"] for e in manifest_io.read_manifest(f.read()) if e["status"] != 2]
+
+    def kept(field_id, lo=None, hi=None, cast_to="bigint"):
+        rules = file_rules({}, field_id_types(meta.raw), field_id, lo, hi, cast_to)
+        pruned = file_pruner(rules)
+        return [f for f in files if not pruned(f, 0)]
+
     # fixture: file A has id∈[1,1], file B id∈[2,2]
-    kept = prune_files(entries, field_id=1, lo=2, hi=None).collect()
-    assert len(kept) == 1 and kept[0].upper_bounds[1] == "value:2;type:long"
-    stats = pruning_stats(entries, field_id=1, lo=3)
+    (k,) = kept(1, lo=2)
+    upper = {e["key"]: e["value"] for e in k["upper_bounds"]}
+    assert decode_bound("long", upper[1]) == "value:2;type:long"
+    n = len(kept(1, lo=3))
+    stats = {"total_files": len(files), "kept_files": n, "skipped_files": len(files) - n}
     assert stats == {"total_files": 2, "kept_files": 0, "skipped_files": 2}
     # string column (field 2): value ranges a..a / b..b
-    kept2 = prune_files(entries, field_id=2, lo="b", hi=None, cast_to="string").collect()
-    assert len(kept2) == 1
+    assert len(kept(2, lo="b", cast_to="string")) == 1
 
 
 # ------------------------------------------------ orphan deletion

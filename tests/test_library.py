@@ -8,6 +8,7 @@ from __future__ import annotations
 import ast
 import datetime as dt
 import hashlib
+import re
 from pathlib import Path
 
 import duckdb
@@ -859,3 +860,79 @@ def c(tasks):
     return map_manifests(None, tasks, worker)
 '''
     assert _threshold_reads(ast.parse(src)) == [2, 5, 7]
+
+
+# ---- one bound evaluator ------------------------------------------
+
+_REPARSERS = {"regexp_extract", "get_json_object"}
+_RENDERED_COLUMNS = {"lower_bounds", "upper_bounds", "partition_json"}
+_REPARSE_SQL = re.compile(
+    r"\b(?:regexp_extract|get_json_object)\s*\(\s*(?:\w+\.)?(?:lower_bounds|upper_bounds|partition_json)\b"
+)
+
+
+def _bound_reparses(tree: ast.Module) -> list[str]:
+    """Spark re-parses of rendered bounds or partitions — a
+    ``regexp_extract``/``get_json_object`` call whose arguments,
+    followed through local assignments, name ``lower_bounds``,
+    ``upper_bounds`` or ``partition_json``, or SQL text doing the
+    same — and every definition, import or read of ``bound_value``
+    (the deleted Spark half of ``pruning``)."""
+    def is_reparse(n: ast.AST) -> bool:
+        return isinstance(n, ast.Call) and _call_name(n) in _REPARSERS
+
+    out = []
+    for _fn, call, assigns in _scoped(tree, is_reparse):
+        args = ast.Tuple(elts=[*call.args, *(k.value for k in call.keywords)])
+        if _RENDERED_COLUMNS & set(_trace(args, assigns)[0]):
+            out.append(f"{call.lineno} calls {_call_name(call)}")
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str) and _REPARSE_SQL.search(n.value):
+            out.append(f"{n.lineno} has SQL {_REPARSE_SQL.search(n.value).group(0)}")
+        elif isinstance(n, ast.ImportFrom) and (n.module or "").split(".")[-1] == "pruning":
+            out += [f"{n.lineno} imports bound_value" for a in n.names if a.name == "bound_value"]
+        elif isinstance(n, ast.Attribute) and n.attr == "bound_value":
+            out.append(f"{n.lineno} reads {ast.unparse(n)}")
+        elif isinstance(n, ast.FunctionDef) and n.name == "bound_value":
+            out.append(f"{n.lineno} defines bound_value")
+    return sorted(out, key=lambda b: int(b.split()[0]))
+
+
+def test_bounds_decided_only_by_the_worker_evaluator():
+    """Rendered bounds and partitions are never parsed back in Spark:
+    ``iceberg/pruning.py`` decides files on typed values inside the
+    manifest decode, and nothing brings back its deleted Spark half
+    (``bound_value``)."""
+    offenders = []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        offenders += [f"{rel}:{b}" for b in _bound_reparses(ast.parse(path.read_text()))]
+    assert offenders == [], "\n".join(offenders)
+
+
+def test_reparse_rule_sees_each_breach_shape():
+    src = '''
+from .pruning import bound_value, file_rules
+from iceberg_tools_spark.iceberg import pruning
+def a(df):
+    return df.select(F.get_json_object("partition_json", "$.x"))
+def b(df):
+    col = F.element_at("lower_bounds", F.lit(1))
+    return F.regexp_extract(col, "^value:(.*);", 1)
+def c(df):
+    return pruning.bound_value(F.col("upper_bounds")[1])
+def d(df):
+    return df.selectExpr("get_json_object(t.partition_json, '$.x')")
+def e(df):
+    return F.regexp_extract("file_path", "data/.*$", 0)
+def bound_value(col):
+    return col
+'''
+    assert _bound_reparses(ast.parse(src)) == [
+        "2 imports bound_value",
+        "5 calls get_json_object",
+        "8 calls regexp_extract",
+        "10 reads pruning.bound_value",
+        "12 has SQL get_json_object(t.partition_json",
+        "15 defines bound_value",
+    ]

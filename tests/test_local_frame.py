@@ -27,9 +27,9 @@ from iceberg_tools_spark.iceberg.metadata import parse_metadata
 from iceberg_tools_spark.iceberg.snapshots import (
     MS_DIR,
     MS_METADATA,
+    SCAN_PLAN_SCHEMA,
     files_at,
     plan_scan,
-    tagged_entries_schema,
 )
 from iceberg_tools_spark.iceberg.tables import (
     ENTRIES_SCALAR_SCHEMA,
@@ -68,7 +68,7 @@ SCHEMAS = {
     "entries_scalar": ENTRIES_SCALAR_SCHEMA,
     "snapshots": SNAPSHOTS_SCHEMA,
     "history": HISTORY_SCHEMA,
-    "plan_scan_tagged": tagged_entries_schema([7]),
+    "plan_scan_tagged": SCAN_PLAN_SCHEMA,
     "delete_files": DELETE_FILES_SCHEMA,
     "dml_parts_ddl": "p_rel string, sid int, pjson string",
     "mixed": _MIXED_SCHEMA,

@@ -345,10 +345,12 @@ def test_plan_scan_distributed_is_rdd_scan(spark, monkeypatch):
 def test_plan_scan_collects_in_order_without_a_sort(
     spark, monkeypatch, threshold, jobs
 ):
-    """plan_scan's rows are born in (manifest_name, file_path) order:
-    its plan holds no Sort and no Exchange, collecting it runs one
-    job when the manifests parse on executors and none when they
-    parse on the driver."""
+    """plan_scan's rows are born in (manifest_name, file_path) order
+    and decided in the manifest worker: its plan holds no Sort and no
+    Exchange, its analysed plan no re-parse or cast of a rendered
+    bound or partition, and collecting it runs one job when the
+    manifests parse on executors and none when they parse on the
+    driver."""
     import re
 
     from iceberg_tools_spark.iceberg import manifest_io
@@ -360,9 +362,13 @@ def test_plan_scan_collects_in_order_without_a_sort(
 
     meta = parse_metadata(MOR_METADATA)
     monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", threshold)
-    df = plan_scan(spark, MOR_METADATA, meta.current_snapshot_id)
+    df = plan_scan(
+        spark, MOR_METADATA, meta.current_snapshot_id, field_id=1, lo=0, hi=10**6
+    )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert re.findall(r"\b(?:Sort|Exchange)\b", plan) == []
+    analysed = df._jdf.queryExecution().analyzed().toString()
+    assert re.findall(r"(?i)\b(?:get_json_object|regexp_extract|cast)\b", analysed) == []
     with spark_job_ids(spark) as ids:
         rows = df.collect()
     assert len(rows) > 1 and len(ids) == jobs

@@ -315,3 +315,31 @@ def test_decontaminate_embedding_mechanism(spark):
     # top cosines (strictly fewer candidate pairs survive the gate)
     narrow = decontaminate_embedding(spark, sfd, n_planes=8).collect()
     assert float(narrow[0]["cosine"]) <= float(rows[0]["cosine"]) + 1e-9
+
+
+@pytest.mark.parametrize(
+    "module, fn",
+    [("similarity", "ann_ivf_topk"), ("pq", "ann_pq_topk"), ("bm25", "bm25_topk")],
+)
+def test_outputs_do_not_depend_on_input_order(spark, monkeypatch, module, fn):
+    """The columns the IVF assignment, the PQ lookup tables and the
+    BM25 per-document fold carry through a ``groupBy`` are taken with
+    ``min``: reading the corpus in reverse order leaves each output
+    unchanged."""
+    import importlib
+
+    from pyspark.sql import functions as F
+
+    from .conftest import SF_SMOKE
+
+    mod = importlib.import_module(f"iceberg_tools_spark.operators.{module}")
+    run = getattr(mod, fn)
+    want = sorted(tuple(r) for r in run(spark, SF_SMOKE).collect())
+    load = mod.load_table
+
+    def reversed_load(spark, sf_dir, table, cols):
+        df = load(spark, sf_dir, table, cols)
+        return df.orderBy(*[F.desc(c) for c in df.columns[:1]])
+
+    monkeypatch.setattr(mod, "load_table", reversed_load)
+    assert sorted(tuple(r) for r in run(spark, SF_SMOKE).collect()) == want
