@@ -46,7 +46,7 @@ def catalog_resolve_main(argv: list[str]) -> int:
 
 
 def delta2json_main(argv: list[str]) -> int:
-    from ..sources.delta_log import replay_log
+    from ..sources.delta_log import log_state
 
     version = None
     args = []
@@ -63,24 +63,24 @@ def delta2json_main(argv: list[str]) -> int:
         sys.stderr.write("usage: delta2json [--version=N] <table_root>\n")
         return 1
     try:
-        adds, meta, eff = replay_log(args[0], version)
+        state = log_state(args[0], version)
     except (FileNotFoundError, ValueError) as exc:
         sys.stderr.write(f"{exc}\n")
         return 1
+    meta = state.meta
     sys.stdout.write(json.dumps({
-        "version": eff,
+        "version": state.version,
         "partitionColumns": meta.get("partitionColumns") or [],
-        "n_live_files": len(adds),
+        "n_live_files": len(state.adds),
         # what a reader needs to know before touching the files:
         # the protocol it must satisfy and whether column names in
         # the parquet are physical (r12)
-        "protocol": meta.get("__protocol__")
-        or {"minReaderVersion": 1, "minWriterVersion": 2},
+        "protocol": state.protocol,
         "columnMapping": (meta.get("configuration") or {}).get(
             "delta.columnMapping.mode", "none"
         ),
     }) + "\n")
-    for a in sorted(adds, key=lambda x: x["path"]):
+    for a in sorted(state.adds.values(), key=lambda x: x["path"]):
         sys.stdout.write(json.dumps({
             "path": a["path"],
             "partitionValues": dict(a.get("partitionValues") or {}),

@@ -444,9 +444,9 @@ def test_dv_commit_upgrades_legacy_protocol(spark, tmp_path):
     declaration would ignore the deletionVector field and resurrect
     every masked row."""
     from iceberg_tools_spark.sources.delta_log import (
-        _current_protocol,
         commit_delta_dv,
         list_commits,
+        log_state,
         protocol_upgrade_action,
     )
 
@@ -469,7 +469,7 @@ def test_dv_commit_upgrades_legacy_protocol(spark, tmp_path):
     commit_delta_dv(root, {"f.parquet": [1]}, checkpoint_interval=None,
                     write_cdf=True)
     v = list_commits(root)[-1][0]
-    proto = _current_protocol(root, v)
+    proto = log_state(root, v).protocol
     assert proto["minReaderVersion"] == 3
     assert "deletionVectors" in proto["readerFeatures"]
     assert {"deletionVectors", "changeDataFeed"} <= set(proto["writerFeatures"])
@@ -495,8 +495,8 @@ def test_replication_upgrades_protocol_on_first_dv(spark, tmp_path):
         create_table,
     )
     from iceberg_tools_spark.sources.delta_log import (
-        _current_protocol,
         list_commits,
+        log_state,
     )
     from iceberg_tools_spark.sources.migrate import replicate_iceberg_to_delta
 
@@ -520,8 +520,8 @@ def test_replication_upgrades_protocol_on_first_dv(spark, tmp_path):
     tgt = str(tmp_path / "delta")
     replicate_iceberg_to_delta(spark, mp, tgt, now_ms=1700000001000)
     # v0 (append-only seed) stays legacy; v1 (the DV) upgrades
-    assert _current_protocol(tgt, 0)["minReaderVersion"] == 1
-    proto = _current_protocol(tgt, list_commits(tgt)[-1][0])
+    assert log_state(tgt, 0).protocol["minReaderVersion"] == 1
+    proto = log_state(tgt, list_commits(tgt)[-1][0]).protocol
     assert proto["minReaderVersion"] == 3
     assert "deletionVectors" in proto["readerFeatures"]
     # our own gate accepts the upgraded replica

@@ -254,7 +254,7 @@ def test_protocol_features_survive_classic_checkpoint(tmp_path):
     """The classic checkpoint's protocol struct carries the feature
     lists (they used to be dropped — any feature-gated read through
     a checkpoint-only table would have un-gated silently)."""
-    from iceberg_tools_spark.sources.delta_log import _current_protocol
+    from iceberg_tools_spark.sources.delta_log import log_state
 
     root = str(tmp_path / "t")
     _make_table(root)
@@ -266,7 +266,7 @@ def test_protocol_features_survive_classic_checkpoint(tmp_path):
     for v in range(head + 1):
         os.remove(os.path.join(root, "_delta_log", f"{v:020d}.json"))
     # no JSON commits left at all: protocol comes from the checkpoint
-    proto = _current_protocol(root, head)
+    proto = log_state(root, head).protocol
     assert proto["minReaderVersion"] == 3
     assert "deletionVectors" in proto["readerFeatures"]
 

@@ -936,3 +936,158 @@ def bound_value(col):
         "12 has SQL get_json_object(t.partition_json",
         "15 defines bound_value",
     ]
+
+
+# ---- one Delta log reader -----------------------------------------
+
+# (module, function) → why it reads ``_delta_log`` files itself
+_DELTA_LOG_SITES = {
+    ("sources/delta_log.py", "_checkpoint_part_rows"):
+        "the reader: decodes one checkpoint part or v2 JSON top",
+    ("sources/delta_log.py", "_replay"):
+        "the reader: the one (version, action) stream",
+    ("sources/delta_log.py", "_checkpoints"):
+        "latest_checkpoint_parts' sidecar probe: a v2 top is complete "
+        "only when every sidecar it names exists",
+    ("sources/delta_log.py", "cleanup_delta_log"):
+        "lists the sidecars that surviving v2 tops still name",
+    ("sources/delta_log.py", "vacuum_delta"):
+        "reads checkpoint parquet on executors: at scale its file "
+        "actions are data-sized",
+}
+# calls whose result is a path under ``_delta_log/``
+_LOG_PATHS = {"_log_dir", "list_commits", "latest_checkpoint", "latest_checkpoint_parts",
+              "_checkpoints", "_log_segment", "_resolve_sidecar"}
+_CHECKPOINT_PATHS = {"latest_checkpoint", "latest_checkpoint_parts", "_checkpoints",
+                     "_log_segment"}
+_PARQUET_READS = {"read_table", "ParquetFile", "read_metadata", "parquet"}
+
+
+def _bindings(scope: ast.AST) -> dict[str, list[ast.expr]]:
+    """name → bound values in a function: assignments (tuple targets
+    too), ``for`` and comprehension targets, ``with ... as``."""
+    out: dict[str, list[ast.expr]] = {}
+    for n in ast.walk(scope):
+        if isinstance(n, ast.Assign):
+            pairs = [(t, n.value) for t in n.targets]
+        elif isinstance(n, (ast.AnnAssign, ast.NamedExpr)) and n.value is not None:
+            pairs = [(n.target, n.value)]
+        elif isinstance(n, (ast.For, ast.comprehension)):
+            pairs = [(n.target, n.iter)]
+        elif isinstance(n, ast.With):
+            pairs = [(i.optional_vars, i.context_expr) for i in n.items if i.optional_vars]
+        else:
+            continue
+        for target, value in pairs:
+            for t in ast.walk(target):
+                if isinstance(t, ast.Name):
+                    out.setdefault(t.id, []).append(value)
+    return out
+
+
+def _reach(expr: ast.expr, binds: dict[str, list[ast.expr]]) -> tuple[str, set[str], set[str]]:
+    """(string literals, called function names, names) that ``expr``
+    reaches through the bindings of the names it uses."""
+    literals, calls, names = [], set(), set()
+    todo = [expr]
+    while todo:
+        for n in ast.walk(todo.pop()):
+            if isinstance(n, ast.Constant) and isinstance(n.value, str):
+                literals.append(n.value)
+            elif isinstance(n, ast.Call):
+                calls.add(_call_name(n))
+            elif isinstance(n, ast.Name) and n.id not in names:
+                names.add(n.id)
+                todo.extend(binds.get(n.id, ()))
+    return "\n".join(literals), calls, names
+
+
+def _delta_log_reads(tree: ast.Module) -> list[tuple[str | None, str]]:
+    """(innermost function, breach) for every read of ``_delta_log``
+    files: ``json.loads`` of a line looped out of an opened file or of
+    an opened log path, a ``_checkpoint_part_rows`` call, and a
+    parquet read of checkpoint parts."""
+    parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+    out = []
+    for call in ast.walk(tree):
+        name = _call_name(call) if isinstance(call, ast.Call) else ""
+        if name not in {"loads", "_checkpoint_part_rows", *_PARQUET_READS}:
+            continue
+        fns, n = [], call
+        while n in parent:
+            n = parent[n]
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                fns.append(n)
+        binds = _assignments(tree)
+        for fn in reversed(fns):
+            for k, v in _bindings(fn).items():
+                binds[k] = binds.get(k, []) + v
+        # names a loop draws from an opened file: its lines
+        lines = {
+            t.id
+            for fn in fns
+            for loop in ast.walk(fn)
+            if isinstance(loop, (ast.For, ast.comprehension))
+            and "open" in _reach(loop.iter, binds)[1]
+            for t in ast.walk(loop.target)
+            if isinstance(t, ast.Name)
+        }
+        args = ast.Tuple(elts=[*call.args, *(k.value for k in call.keywords)])
+        text, calls, names = _reach(args, binds)
+        log_path = "_delta_log" in text or bool(calls & _LOG_PATHS)
+        where = fns[0].name if fns else None
+        if name == "_checkpoint_part_rows":
+            out.append((where, f"{call.lineno} calls _checkpoint_part_rows"))
+        elif name == "loads" and "open" in calls and (log_path or names & lines):
+            out.append((where, f"{call.lineno} decodes log lines"))
+        elif name in _PARQUET_READS and calls & _CHECKPOINT_PATHS:
+            out.append((where, f"{call.lineno} reads checkpoint parquet"))
+    return sorted(out, key=lambda b: int(b[1].split()[0]))
+
+
+def test_delta_log_read_only_by_the_reader():
+    """Outside the reader (``log_actions``' generator and its
+    checkpoint-part decode), no library function decodes
+    ``_delta_log`` lines, calls ``_checkpoint_part_rows`` or reads
+    checkpoint parquet — every consumer filters the one stream, so
+    every consumer gets the one gap rule."""
+    found = {
+        (path.relative_to(_PKG).as_posix(), fn)
+        for path in sorted(_PKG.rglob("*.py"))
+        for fn, _breach in _delta_log_reads(ast.parse(path.read_text()))
+    }
+    assert found == set(_DELTA_LOG_SITES)
+
+
+def test_delta_log_rule_sees_each_read_shape():
+    src = '''
+import json, os
+def a(root):
+    for v, path in list_commits(root):
+        with open(path) as f:
+            for line in f:
+                act = json.loads(line.strip())
+def b(root):
+    return json.loads(open(os.path.join(root, "_delta_log", "0.json")).read())
+def c(root, name):
+    return [json.loads(ln) for ln in open(os.path.join(_log_dir(root), name))]
+def d(root):
+    return _checkpoint_part_rows(latest_checkpoint(root)[1])
+def e(spark, root):
+    v, parts = latest_checkpoint_parts(root)
+    return spark.read.parquet(*parts)
+def f(meta):
+    return json.loads(meta["schemaString"])
+def g(path):
+    with open(path) as fh:
+        return json.loads(fh.read())
+def h(spark, root):
+    return spark.read.parquet(os.path.join(root, "data"))
+'''
+    assert _delta_log_reads(ast.parse(src)) == [
+        ("a", "7 decodes log lines"),
+        ("b", "9 decodes log lines"),
+        ("c", "11 decodes log lines"),
+        ("d", "13 calls _checkpoint_part_rows"),
+        ("e", "16 reads checkpoint parquet"),
+    ]
