@@ -1129,7 +1129,8 @@ def _metadata_scale_unselective(spark) -> dict:
 
     from iceberg_tools_spark.iceberg import manifest_io
     from iceberg_tools_spark.iceberg.commit import append_snapshot
-    from iceberg_tools_spark.iceberg.snapshots import plan_scan
+    from iceberg_tools_spark.iceberg.metadata import parse_metadata
+    from iceberg_tools_spark.iceberg.snapshots import manifest_paths_at, plan_scan
 
     def build(n_snapshots: int, files_per: int) -> tuple[str, str]:
         root = tempfile.mkdtemp(prefix="meta_scale_unsel_")
@@ -1180,6 +1181,12 @@ def _metadata_scale_unselective(spark) -> dict:
         try:
             sid = 9000 + n_snaps - 1
             row = {"n_manifests": n_snaps, "n_files": n_snaps * files_per}
+            # the side of the default byte budget the shape falls on
+            tasks = [(None, p) for p in manifest_paths_at(parse_metadata(mp), sid, root)]
+            row["manifest_bytes"] = sum(os.path.getsize(p) for _, p in tasks)
+            row["default_placement"] = (
+                "distributed" if manifest_io._on_executors(spark, tasks) else "driver"
+            )
             # warm-up once so neither path pays session setup
             plan_scan(spark, mp, sid).count()
             for mode, thresh in (("driver", 10**9), ("distributed", 1)):

@@ -15,14 +15,19 @@ value calls :func:`sequence_number`, which raises.
 :func:`map_manifests` (a driver list) and :func:`manifest_frame` (a
 DataFrame) run ``worker(ctx, manifest_bytes)`` over ``(ctx,
 local_path)`` tasks; :func:`_on_executors` is the one placement
-decision. From ``PARALLEL_THRESHOLD`` manifests on, the pure-Python
-decode (about 0.1 s per MB of Avro on one core, 0.12–0.16 s/MB with
-typed bounds rendered) ships to executors as one RDD ``flatMap`` and
-a frame's rows never land on the driver (``createDataFrame(rdd)``);
-below it, a Spark job over a few manifests costs more in scheduling
-than it saves, so the driver parses and a frame is one Arrow
-``LocalRelation`` (``session.local_frame``, no job to collect). A task
-carries no compiled codec: each Python worker compiles the schemas it
+decision, made by size as Iceberg's ``read.data-planning-mode=auto``
+makes it. From ``PARALLEL_THRESHOLD`` bytes of manifest Avro on disk
+(summed over the tasks, stopping at the budget), the decode ships to
+executors as one RDD ``flatMap`` and a frame's rows never land on the
+driver (``createDataFrame(rdd)``); below it the driver decodes and a
+frame is one Arrow ``LocalRelation`` (``session.local_frame``, no job
+to collect). The budget, 4 MiB, is where the placements break even
+for ``plan_scan`` on a 4-core host: on the driver it costs about
+0.13 s per MB of Avro (decode, prune and collect), on executors a job
+floor of about 0.3 s plus 0.06 s per MB. ``partitions_df`` breaks
+even near 7 MB, so it is no worse off below the budget. A table with
+hundreds of MB of manifests fans out either way. A task carries no
+compiled codec: each Python worker compiles the schemas it
 meets into its own cache. Both placements keep task order
 (``parallelize`` slices are contiguous, ``flatMap`` keeps slice order),
 so a caller whose tasks and rows come in output order gets an ordered
@@ -35,11 +40,12 @@ for data files.
 
 from __future__ import annotations
 
+import os
 from typing import Any, Callable, Iterable, Iterator
 
 from ..avro.reader import AvroContainerFile
 
-PARALLEL_THRESHOLD = 16
+PARALLEL_THRESHOLD = 4 << 20  # bytes of manifest Avro
 ADDED = 1
 
 
@@ -107,8 +113,19 @@ def active_session():
         return None
 
 
-def _on_executors(spark, tasks: list) -> bool:
-    return spark is not None and 0 < len(tasks) and len(tasks) >= PARALLEL_THRESHOLD
+def _on_executors(spark, tasks: list[tuple[Any, str]]) -> bool:
+    """Whether the decode fans out: ``spark`` is set and the tasks'
+    manifests total at least ``PARALLEL_THRESHOLD`` bytes on disk.
+    The sum stops once it reaches the budget, so a table of thousands
+    of manifests stats only as many as it takes."""
+    if spark is None or not tasks:
+        return False
+    total = 0
+    for _, path in tasks:
+        if total >= PARALLEL_THRESHOLD:
+            break
+        total += os.path.getsize(path)
+    return total >= PARALLEL_THRESHOLD
 
 
 def _task_rdd(spark, tasks: list[tuple[Any, str]], worker: Callable[[Any, bytes], Iterable[Any]]):

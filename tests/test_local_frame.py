@@ -247,7 +247,7 @@ def test_metadata_tables_collect_without_a_job(spark):
     for build in (
         lambda: snapshots_df(spark, meta),
         lambda: history_df(spark, meta),
-        lambda: files_at(spark, MS_METADATA, 1004, MS_DIR),  # 3 manifests: driver branch
+        lambda: files_at(spark, MS_METADATA, 1004, MS_DIR),  # 3 small manifests: driver branch
     ):
         df = build()
         with spark_job_ids(spark) as ids:

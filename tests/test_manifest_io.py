@@ -17,13 +17,13 @@ from iceberg_tools_spark.iceberg.metadata import parse_metadata
 from iceberg_tools_spark.iceberg.snapshots import manifest_files_at, plan_scan
 from iceberg_tools_spark.iceberg.tables import manifest_entries_df
 
-N_COMMITS = 20  # ≥ default PARALLEL_THRESHOLD manifests
+N_COMMITS = 20  # one small manifest each: tests force the placement
 
 
 @pytest.fixture(scope="module")
 def many_manifest_table(spark, tmp_path_factory):
-    """A table with one manifest per commit — enough manifests to
-    cross the parallel threshold."""
+    """A table with one manifest per commit, far below the default
+    byte budget: each both-placement test forces the side it runs."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -53,11 +53,78 @@ def _force_threshold(monkeypatch, value):
     monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", value)
 
 
-def test_fixture_crosses_threshold(many_manifest_table):
+def _fixture_tasks(many_manifest_table) -> list[tuple[None, str]]:
     root, mp = many_manifest_table
     meta = parse_metadata(mp)
     mrows = manifest_files_at(meta, meta.current_snapshot_id, os.path.dirname(mp))
-    assert len(mrows) >= manifest_io.PARALLEL_THRESHOLD
+    return [(None, m["local_path"]) for m in mrows]
+
+
+def test_fixture_crosses_threshold(spark, many_manifest_table, monkeypatch):
+    """The fixture's manifests decode on the driver by default and on
+    executors once the budget is forced down to one byte."""
+    tasks = _fixture_tasks(many_manifest_table)
+    assert len(tasks) == N_COMMITS
+    assert not manifest_io._on_executors(spark, tasks)
+    _force_threshold(monkeypatch, 1)
+    assert manifest_io._on_executors(spark, tasks)
+
+
+# ---- placement by bytes ---------------------------------------------
+
+
+def test_placement_by_manifest_bytes(spark, many_manifest_table, monkeypatch):
+    """Placement compares the tasks' on-disk bytes with the budget:
+    no tasks or no session decode on the driver whatever the budget;
+    one byte short of it stays on the driver, exactly at it fans out."""
+    tasks = _fixture_tasks(many_manifest_table)
+    total = sum(os.path.getsize(p) for _, p in tasks)
+
+    for threshold in (0, 1, total, 10**9):
+        _force_threshold(monkeypatch, threshold)
+        assert not manifest_io._on_executors(spark, [])
+        assert not manifest_io._on_executors(None, tasks)
+    _force_threshold(monkeypatch, total + 1)
+    assert not manifest_io._on_executors(spark, tasks)
+    _force_threshold(monkeypatch, total)
+    assert manifest_io._on_executors(spark, tasks)
+
+
+def test_large_manifests_fan_out_and_stop_summing(spark, tmp_path, monkeypatch):
+    """Three manifests above the default budget fan out as one Spark
+    job, and the sum stops at the manifest that reaches the budget:
+    two of three, each over half the budget, are statted."""
+    from iceberg_tools_spark.avro.writer import write_container
+
+    from .conftest import spark_job_ids
+
+    size = manifest_io.PARALLEL_THRESHOLD // 2 + 1
+    paths = []
+    for i in range(3):
+        entries = [_entry(1, f"data/m{i}/{j:06d}-{'x' * 1000}.parquet") for j in range(size // 1000 + 1)]
+        p = tmp_path / f"large-{i}.avro"
+        p.write_bytes(write_container(_ENTRY_SCHEMA, entries))
+        assert p.stat().st_size >= size
+        paths.append(str(p))
+    tasks = list(enumerate(paths))
+    statted = []
+    real = os.path.getsize
+
+    def counting(path):
+        statted.append(path)
+        return real(path)
+
+    monkeypatch.setattr(manifest_io.os.path, "getsize", counting)
+    assert manifest_io._on_executors(spark, tasks)
+    assert statted == paths[:2]
+
+    def worker(ctx, blob):
+        return [(ctx, sum(1 for _ in manifest_io.read_manifest(blob)))]
+
+    with spark_job_ids(spark) as ids:
+        got = manifest_io.map_manifests(spark, tasks, worker)
+    assert len(ids) == 1
+    assert got == manifest_io.map_manifests(None, tasks, worker)
 
 
 def test_mor_entries_parallel_equals_sequential(

@@ -376,6 +376,36 @@ def test_plan_scan_collects_in_order_without_a_sort(
     assert keys == sorted(keys)
 
 
+def test_plan_scan_placement_boundary_is_the_manifest_byte_total(spark, monkeypatch):
+    """With the budget one byte under the data manifests' total,
+    collecting plan_scan runs one job; one byte over, it runs none.
+    Either way it collects the same rows in the same order."""
+    import os
+
+    from iceberg_tools_spark.iceberg import manifest_io
+    from iceberg_tools_spark.iceberg.deletes import MOR_DIR, MOR_METADATA
+    from iceberg_tools_spark.iceberg.metadata import parse_metadata
+    from iceberg_tools_spark.iceberg.snapshots import manifest_paths_at, plan_scan
+
+    from .conftest import spark_job_ids
+
+    meta = parse_metadata(MOR_METADATA)
+    sid = meta.current_snapshot_id
+    total = sum(map(os.path.getsize, manifest_paths_at(meta, sid, MOR_DIR)))
+
+    def collect(threshold):
+        monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", threshold)
+        df = plan_scan(spark, MOR_METADATA, sid)
+        with spark_job_ids(spark) as ids:
+            rows = df.collect()
+        return rows, len(ids)
+
+    above, above_jobs = collect(total - 1)
+    below, below_jobs = collect(total + 1)
+    assert (above_jobs, below_jobs) == (1, 0)
+    assert len(above) > 1 and above == below
+
+
 @pytest.mark.parametrize(
     "threshold, jobs", [(1, 1), (10**9, 0)], ids=["executor", "driver"]
 )
