@@ -16,18 +16,25 @@ value calls :func:`sequence_number`, which raises.
 DataFrame) run ``worker(ctx, manifest_bytes)`` over ``(ctx,
 local_path)`` tasks; :func:`_on_executors` is the one placement
 decision, made by size as Iceberg's ``read.data-planning-mode=auto``
-makes it. From ``PARALLEL_THRESHOLD`` bytes of manifest Avro on disk
-(summed over the tasks, stopping at the budget), the decode ships to
+makes it, and by how much of that size executors can spread. Once
+executors would take ``PARALLEL_THRESHOLD`` bytes of manifest Avro
+off the driver's critical path (all bytes but the larger of the
+largest manifest and an even per-core share), the decode ships to
 executors as one RDD ``flatMap`` and a frame's rows never land on the
 driver (``createDataFrame(rdd)``); below it the driver decodes and a
 frame is one Arrow ``LocalRelation`` (``session.local_frame``, no job
-to collect). The budget, 4 MiB, is where the placements break even
-for ``plan_scan`` on a 4-core host: on the driver it costs about
-0.13 s per MB of Avro (decode, prune and collect), on executors a job
-floor of about 0.3 s plus 0.06 s per MB. ``partitions_df`` breaks
-even near 7 MB, so it is no worse off below the budget. A table with
-hundreds of MB of manifests fans out either way. A task carries no
-compiled codec: each Python worker compiles the schemas it
+to collect). The budget, 3 MiB, comes from a sweep of ``plan_scan``
+on a 4-core host: the driver decodes, prunes and collects at about
+0.13 s per MB of Avro, and one manifest, however large, decodes
+about 0.1-0.15 s faster there than in a job of one task (6 and 12 MB
+measured). Tables of many small manifests break even near 4-4.5 MB
+in all (3-3.4 MB off the path); two to four large ones already near
+1.5 MB off the path, so they fan out with time to spare. ``partitions_df``
+breaks even later (near 7 MB of small manifests), so between the
+budget and there it pays up to about 0.1 s more on executors. A
+table with hundreds of MB of manifests fans out either way; that
+side is pinned by unit tests, not by a benchmark workload. A task
+carries no compiled codec: each Python worker compiles the schemas it
 meets into its own cache. Both placements keep task order
 (``parallelize`` slices are contiguous, ``flatMap`` keeps slice order),
 so a caller whose tasks and rows come in output order gets an ordered
@@ -45,7 +52,7 @@ from typing import Any, Callable, Iterable, Iterator
 
 from ..avro.reader import AvroContainerFile
 
-PARALLEL_THRESHOLD = 4 << 20  # bytes of manifest Avro
+PARALLEL_THRESHOLD = 3 << 20  # bytes of manifest Avro off the driver's path
 ADDED = 1
 
 
@@ -114,18 +121,26 @@ def active_session():
 
 
 def _on_executors(spark, tasks: list[tuple[Any, str]]) -> bool:
-    """Whether the decode fans out: ``spark`` is set and the tasks'
-    manifests total at least ``PARALLEL_THRESHOLD`` bytes on disk.
-    The sum stops once it reaches the budget, so a table of thousands
-    of manifests stats only as many as it takes."""
+    """Whether the decode fans out: ``spark`` is set and executors
+    would take at least ``PARALLEL_THRESHOLD`` bytes of manifest Avro
+    off the driver's critical path. Executors decode the tasks on
+    ``min(len(tasks), defaultParallelism)`` cores, so their wall time
+    follows the larger of the largest task and an even share; the
+    bytes beyond that are what fanning out saves, and a lone manifest
+    saves none. The bytes are each task's own ``local_path`` (further
+    files a worker opens are not counted), and summing stops once
+    the saving reaches the budget, which adding a task never lowers."""
     if spark is None or not tasks:
         return False
-    total = 0
+    cores = min(len(tasks), spark.sparkContext.defaultParallelism)
+    total = largest = 0
     for _, path in tasks:
-        if total >= PARALLEL_THRESHOLD:
-            break
-        total += os.path.getsize(path)
-    return total >= PARALLEL_THRESHOLD
+        size = os.path.getsize(path)
+        total += size
+        largest = max(largest, size)
+        if total - max(largest, total / cores) >= PARALLEL_THRESHOLD:
+            return True
+    return False
 
 
 def _task_rdd(spark, tasks: list[tuple[Any, str]], worker: Callable[[Any, bytes], Iterable[Any]]):

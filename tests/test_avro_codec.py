@@ -422,7 +422,7 @@ def test_compiled_codecs_stay_out_of_task_payloads(spark, tmp_path, monkeypatch)
         return real(spark_, tasks, worker)
 
     monkeypatch.setattr(manifest_io, "_task_rdd", spy)
-    monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", 1)
+    monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", 0)
     assert tables.manifest_entries_df(spark, paths, raw).count() == 15
     assert shipped and all(b"<avro>" not in p for p in shipped)
 

@@ -136,7 +136,7 @@ _MIXED_PARTITIONS = {
 }
 
 
-@pytest.mark.parametrize("threshold", [1, 10**9], ids=["executor", "driver"])
+@pytest.mark.parametrize("threshold", [0, 10**9], ids=["executor", "driver"])
 @settings(
     max_examples=6, deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
@@ -165,7 +165,7 @@ def test_partitions_df_equals_the_spark_rollup(spark, monkeypatch, threshold, ta
         shutil.rmtree(root)
 
 
-@pytest.mark.parametrize("threshold", [1, 10**9], ids=["executor", "driver"])
+@pytest.mark.parametrize("threshold", [0, 10**9], ids=["executor", "driver"])
 def test_meta_partitions_equals_the_spark_rollup(spark, monkeypatch, tmp_path, threshold):
     """``meta_partitions`` is the same fold over the fixture manifest:
     pointed at each manifest of a generated table, it collects what the

@@ -73,40 +73,56 @@ def test_fixture_crosses_threshold(spark, many_manifest_table, monkeypatch):
 # ---- placement by bytes ---------------------------------------------
 
 
-def test_placement_by_manifest_bytes(spark, many_manifest_table, monkeypatch):
-    """Placement compares the tasks' on-disk bytes with the budget:
-    no tasks or no session decode on the driver whatever the budget;
-    one byte short of it stays on the driver, exactly at it fans out."""
+def test_placement_by_bytes_off_the_driver(spark, many_manifest_table, monkeypatch):
+    """Placement compares the bytes executors take off the driver's
+    path with the budget: no tasks or no session decode on the driver
+    whatever the budget, and a lone manifest saves nothing. Two
+    manifests save the smaller one; twenty on eight cores save all but
+    an eighth. One byte more stays on the driver, exactly that fans
+    out."""
     tasks = _fixture_tasks(many_manifest_table)
-    total = sum(os.path.getsize(p) for _, p in tasks)
+    sizes = [os.path.getsize(p) for _, p in tasks]
+    cores = spark.sparkContext.defaultParallelism
+    assert len(tasks) > cores and max(sizes) <= sum(sizes) / cores
 
-    for threshold in (0, 1, total, 10**9):
+    for threshold in (0, 1, sum(sizes), 10**9):
         _force_threshold(monkeypatch, threshold)
         assert not manifest_io._on_executors(spark, [])
         assert not manifest_io._on_executors(None, tasks)
-    _force_threshold(monkeypatch, total + 1)
-    assert not manifest_io._on_executors(spark, tasks)
-    _force_threshold(monkeypatch, total)
-    assert manifest_io._on_executors(spark, tasks)
+    _force_threshold(monkeypatch, 1)
+    assert not manifest_io._on_executors(spark, tasks[:1])
+    _force_threshold(monkeypatch, 0)
+    assert manifest_io._on_executors(spark, tasks[:1])
+    for some, saved in (
+        (tasks[:2], min(sizes[:2])),
+        (tasks, int(sum(sizes) - sum(sizes) / cores)),
+    ):
+        _force_threshold(monkeypatch, saved + 1)
+        assert not manifest_io._on_executors(spark, some)
+        _force_threshold(monkeypatch, saved)
+        assert manifest_io._on_executors(spark, some)
 
 
 def test_large_manifests_fan_out_and_stop_summing(spark, tmp_path, monkeypatch):
-    """Three manifests above the default budget fan out as one Spark
-    job, and the sum stops at the manifest that reaches the budget:
-    two of three, each over half the budget, are statted."""
+    """At the default budget, a manifest over half the budget decodes
+    on the driver alone and with a second, which is all fanning out
+    could spare; a third tips the placement to one Spark job, and the
+    sum stops there: the fourth is never statted."""
     from iceberg_tools_spark.avro.writer import write_container
 
     from .conftest import spark_job_ids
 
     size = manifest_io.PARALLEL_THRESHOLD // 2 + 1
     paths = []
-    for i in range(3):
+    for i in range(4):
         entries = [_entry(1, f"data/m{i}/{j:06d}-{'x' * 1000}.parquet") for j in range(size // 1000 + 1)]
         p = tmp_path / f"large-{i}.avro"
         p.write_bytes(write_container(_ENTRY_SCHEMA, entries))
         assert p.stat().st_size >= size
         paths.append(str(p))
     tasks = list(enumerate(paths))
+    assert not manifest_io._on_executors(spark, tasks[:1])
+    assert not manifest_io._on_executors(spark, tasks[:2])
     statted = []
     real = os.path.getsize
 
@@ -116,7 +132,7 @@ def test_large_manifests_fan_out_and_stop_summing(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(manifest_io.os.path, "getsize", counting)
     assert manifest_io._on_executors(spark, tasks)
-    assert statted == paths[:2]
+    assert statted == paths[:3]
 
     def worker(ctx, blob):
         return [(ctx, sum(1 for _ in manifest_io.read_manifest(blob)))]
@@ -136,7 +152,7 @@ def test_mor_entries_parallel_equals_sequential(
     bd = os.path.dirname(mp)
     _force_threshold(monkeypatch, 10**9)  # force driver path
     seq_data, seq_dels = mor_entries_at(meta, sid, bd)
-    _force_threshold(monkeypatch, 1)  # force executor path
+    _force_threshold(monkeypatch, 0)  # force executor path
     par_data, par_dels = mor_entries_at(meta, sid, bd)
     assert par_data == seq_data  # identical dicts, identical ORDER
     assert par_dels == seq_dels
@@ -156,7 +172,7 @@ def test_plan_scan_parallel_equals_sequential(
             map(tuple, plan_scan(spark, mp, sid).collect())
         )
 
-    assert rows(1) == rows(10**9)
+    assert rows(0) == rows(10**9)
     # and the pruned form agrees too (level-1 pruning stays driver-side)
     def pruned(threshold):
         _force_threshold(monkeypatch, threshold)
@@ -168,7 +184,7 @@ def test_plan_scan_parallel_equals_sequential(
             if r.selected
         )
 
-    p1, p2 = pruned(1), pruned(10**9)
+    p1, p2 = pruned(0), pruned(10**9)
     assert p1 == p2 and len(p1) == N_COMMITS // 4
 
 
@@ -182,7 +198,7 @@ def test_entries_df_parallel_equals_sequential(
 
     _force_threshold(monkeypatch, 10**9)
     seq = sorted(map(tuple, manifest_entries_df(spark, paths, meta.raw).collect()))
-    _force_threshold(monkeypatch, 1)
+    _force_threshold(monkeypatch, 0)
     par = sorted(map(tuple, manifest_entries_df(spark, paths, meta.raw).collect()))
     assert par == seq
     assert len(par) >= N_COMMITS
@@ -202,7 +218,7 @@ def test_map_manifests_preserves_task_order(spark, tmp_path, monkeypatch):
         return [(ctx, blob[0])]
 
     tasks = [(i, p) for i, p in enumerate(paths)]
-    _force_threshold(monkeypatch, 1)
+    _force_threshold(monkeypatch, 0)
     out = manifest_io.map_manifests(spark, tasks, worker)
     assert out == [(i, i) for i in range(6)]
     # driver path agrees
@@ -360,7 +376,7 @@ def test_map_manifests_worker_error_propagates(spark, tmp_path, monkeypatch):
 
     with pytest.raises(ValueError, match="boom-manifest"):
         map_manifests(None, [(0, p)], worker)
-    _force_threshold(monkeypatch, 1)
+    _force_threshold(monkeypatch, 0)
     with pytest.raises(Exception, match="boom-manifest"):
         map_manifests(spark, [(0, p)], worker)
 

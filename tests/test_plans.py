@@ -318,7 +318,7 @@ def test_distributed_entries_df_is_rdd_scan(spark, monkeypatch, tmp_path):
         m["local_path"]
         for m in manifest_files_at(meta, meta.current_snapshot_id, MOR_DIR)
     ]
-    monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", 1)
+    monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", 0)
     df = manifest_entries_df(spark, paths, meta.raw)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan
@@ -332,7 +332,7 @@ def test_plan_scan_distributed_is_rdd_scan(spark, monkeypatch):
     from iceberg_tools_spark.iceberg.snapshots import plan_scan
 
     meta = parse_metadata(MOR_METADATA)
-    monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", 1)
+    monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", 0)
     df = plan_scan(spark, MOR_METADATA, meta.current_snapshot_id)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan
@@ -340,7 +340,7 @@ def test_plan_scan_distributed_is_rdd_scan(spark, monkeypatch):
 
 
 @pytest.mark.parametrize(
-    "threshold, jobs", [(1, 1), (10**9, 0)], ids=["executor", "driver"]
+    "threshold, jobs", [(0, 1), (10**9, 0)], ids=["executor", "driver"]
 )
 def test_plan_scan_collects_in_order_without_a_sort(
     spark, monkeypatch, threshold, jobs
@@ -376,10 +376,12 @@ def test_plan_scan_collects_in_order_without_a_sort(
     assert keys == sorted(keys)
 
 
-def test_plan_scan_placement_boundary_is_the_manifest_byte_total(spark, monkeypatch):
-    """With the budget one byte under the data manifests' total,
-    collecting plan_scan runs one job; one byte over, it runs none.
-    Either way it collects the same rows in the same order."""
+def test_plan_scan_placement_boundary_is_the_bytes_off_the_driver(spark, monkeypatch):
+    """The fixture's three data manifests fit on as many cores, so
+    fanning out spares the driver all but the largest one. With the
+    budget at those bytes, collecting plan_scan runs one job; one byte
+    over, it runs none. Either way it collects the same rows in the
+    same order."""
     import os
 
     from iceberg_tools_spark.iceberg import manifest_io
@@ -391,7 +393,9 @@ def test_plan_scan_placement_boundary_is_the_manifest_byte_total(spark, monkeypa
 
     meta = parse_metadata(MOR_METADATA)
     sid = meta.current_snapshot_id
-    total = sum(map(os.path.getsize, manifest_paths_at(meta, sid, MOR_DIR)))
+    sizes = list(map(os.path.getsize, manifest_paths_at(meta, sid, MOR_DIR)))
+    assert 1 < len(sizes) <= spark.sparkContext.defaultParallelism
+    off_path = sum(sizes) - max(sizes)
 
     def collect(threshold):
         monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", threshold)
@@ -400,14 +404,14 @@ def test_plan_scan_placement_boundary_is_the_manifest_byte_total(spark, monkeypa
             rows = df.collect()
         return rows, len(ids)
 
-    above, above_jobs = collect(total - 1)
-    below, below_jobs = collect(total + 1)
+    above, above_jobs = collect(off_path)
+    below, below_jobs = collect(off_path + 1)
     assert (above_jobs, below_jobs) == (1, 0)
     assert len(above) > 1 and above == below
 
 
 @pytest.mark.parametrize(
-    "threshold, jobs", [(1, 1), (10**9, 0)], ids=["executor", "driver"]
+    "threshold, jobs", [(0, 1), (10**9, 0)], ids=["executor", "driver"]
 )
 def test_partitions_df_aggregates_without_a_spark_job(
     spark, monkeypatch, threshold, jobs

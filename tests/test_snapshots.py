@@ -288,7 +288,7 @@ _MIXED_TABLE = {
 }
 
 
-@pytest.mark.parametrize("threshold", [1, 10**9], ids=["executor", "driver"])
+@pytest.mark.parametrize("threshold", [0, 10**9], ids=["executor", "driver"])
 @settings(
     max_examples=8, deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
@@ -324,6 +324,34 @@ def test_plan_scan_rows_come_in_sorted_order(spark, monkeypatch, threshold, tabl
         (r.manifest_name, r.file_path) for r in want
     ]
     assert Counter(got) == Counter(want)
+
+
+def test_plan_scan_same_basename_manifests_place_as_one_task(spark, monkeypatch, tmp_path):
+    """Manifests sharing a basename decode in one task, and placement
+    counts only the task's own file: like any lone manifest, the pair
+    stays on the driver at a budget of one byte and fans out at zero,
+    with the same rows either way."""
+    from iceberg_tools_spark.iceberg import manifest_io
+    from iceberg_tools_spark.iceberg.snapshots import plan_scan
+
+    from .conftest import spark_job_ids
+
+    mp, sid = _write_scan_table(str(tmp_path), [
+        ("m.avro", [("b", "x", 1, False)]),
+        ("a/m.avro", [("a", "y", 2, False)]),
+    ])
+
+    def collect(threshold):
+        monkeypatch.setattr(manifest_io, "PARALLEL_THRESHOLD", threshold)
+        df = plan_scan(spark, mp, sid, base_dir=str(tmp_path))
+        with spark_job_ids(spark) as ids:
+            rows = df.collect()
+        return rows, len(ids)
+
+    driver, driver_jobs = collect(1)
+    fanned, fanned_jobs = collect(0)
+    assert (driver_jobs, fanned_jobs) == (0, 1)
+    assert len(driver) == 2 and driver == fanned
 
 
 # ------------------------------------------------ rewrite executor
@@ -918,7 +946,7 @@ def _outcome(build):
         return ("raises", str(e))
 
 
-@pytest.mark.parametrize("threshold", [1, 10**9], ids=["executor", "driver"])
+@pytest.mark.parametrize("threshold", [0, 10**9], ids=["executor", "driver"])
 @pytest.mark.parametrize("cast_to", ["bigint", "double", "string", "date", "timestamp"])
 @settings(
     max_examples=3, deadline=None,
