@@ -46,7 +46,7 @@ from pyspark.sql import types as T
 
 from ..session import local_frame
 from .deletes import MOR_DIR, MOR_METADATA, apply_deletes, mor_entries_at, mor_frame
-from .metadata import TableMetadata, parse_metadata
+from .metadata import TableMetadata, current_schema, parse_metadata
 from .snapshots import ancestor_chain
 
 _ICEBERG_TO_SPARK = {
@@ -61,11 +61,7 @@ _ICEBERG_TO_SPARK = {
 
 
 def _table_schema(meta: TableMetadata) -> T.StructType:
-    raw = meta.raw
-    schema = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(meta.raw)
     fields = []
     for f in schema.get("fields", []):
         t = _ICEBERG_TO_SPARK.get(f["type"])

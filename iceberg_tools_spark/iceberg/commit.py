@@ -51,7 +51,7 @@ from .catalog import (
     write_version_hint,
 )
 from .conversions import to_bytes
-from .metadata import TableMetadata, parse_metadata
+from .metadata import TableMetadata, current_schema, parse_metadata
 from .snapshots import _local, read_manifest_list
 
 ADDED, EXISTING, DELETED = 1, 0, 2
@@ -243,10 +243,7 @@ def _spec_partition_fields(meta: TableMetadata, spec_id: int) -> list[tuple[str,
     """(partition field name, avro type) for a spec, derived from
     the transform's result type over the source column."""
     raw = meta.raw
-    schema = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(raw)
     col_type = {f["id"]: f["type"] for f in schema.get("fields", [])}
     spec = next(
         s for s in raw.get("partition-specs", []) if s.get("spec-id", 0) == spec_id

@@ -52,7 +52,7 @@ from pyspark.sql import types as T
 
 from ..session import local_frame
 from .manifest_io import active_session, map_manifests, read_manifest, sequence_number
-from .metadata import TableMetadata, parse_metadata
+from .metadata import TableMetadata, current_schema, parse_metadata
 from .snapshots import _REPO_ROOT, _local, manifest_files_at
 
 MOR_DIR = os.path.join(_REPO_ROOT, "tests", "fixtures", "mor")
@@ -75,11 +75,7 @@ def _rel(path: str) -> str:
 
 
 def _schema_field_names(meta: TableMetadata) -> dict[int, str]:
-    raw = meta.raw
-    schema = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(meta.raw)
     return {f["id"]: f["name"] for f in schema.get("fields", [])}
 
 
@@ -89,11 +85,7 @@ def _spec_partition_fields(
     """The spec's partition fields joined to their source schema
     columns: ``[(partition_field_name, source_column_name,
     transform, source_type)]``."""
-    raw = meta.raw
-    schema = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(meta.raw)
     by_id = {f["id"]: f for f in schema.get("fields", [])}
     spec = next(
         s for s in meta.raw.get("partition-specs", [])
@@ -574,10 +566,7 @@ def attach_identity_partition_columns(
     Callers whose tables are uniformly physical keep the default:
     zero extra plan nodes."""
     raw = meta.raw
-    schema = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(raw)
     col_name = {f["id"]: f["name"] for f in schema.get("fields", [])}
     col_type = {f["id"]: f["type"] for f in schema.get("fields", [])}
     have = set(df.columns)

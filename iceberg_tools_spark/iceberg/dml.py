@@ -38,7 +38,7 @@ from ..session import local_frame
 from .catalog import table_root_of
 from .commit import commit_delete_snapshot
 from .deletes import apply_deletes, mor_entries_at, mor_frame
-from .metadata import parse_metadata
+from .metadata import current_schema, parse_metadata
 
 
 def _victims(live: DataFrame, predicate: "str | DataFrame") -> DataFrame:
@@ -675,10 +675,7 @@ def _insert_partition_exprs(meta, spec_id: int) -> dict[str, "F.Column"]:
     from .transforms import transform_column
 
     names = _schema_field_names(meta)
-    schema = next(
-        s for s in meta.raw.get("schemas", [meta.raw.get("schema", {})])
-        if s.get("schema-id", 0) == meta.raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(meta.raw)
     col_type = {f["id"]: f["type"] for f in schema.get("fields", [])}
     spec = next(
         s for s in meta.raw.get("partition-specs", [])

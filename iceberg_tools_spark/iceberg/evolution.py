@@ -59,7 +59,7 @@ from pyspark.sql import types as T
 
 from ..session import local_frame
 from .commit import _max_field_id, commit_version
-from .metadata import TableMetadata, parse_metadata
+from .metadata import TableMetadata, current_schema, parse_metadata
 
 __all__ = [
     "evolve_schema",
@@ -114,11 +114,7 @@ def evolve_schema(
         raise ValueError("evolve_schema with no changes")
     raw = json.loads(json.dumps(parse_metadata(metadata_path).raw))
 
-    cur = next(
-        s
-        for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    cur = current_schema(raw)
     by_name = {f["name"]: f for f in cur.get("fields", [])}
     for group, names in (("rename", rename), ("drop", drop), ("promote", promote)):
         for n in names:
@@ -491,10 +487,7 @@ def apply_table_name_mapping(df, meta: "TableMetadata | dict[str, Any]"):
     if not nm:
         return df
     raw = meta.raw if isinstance(meta, TableMetadata) else meta
-    cur = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    cur = current_schema(raw)
     names_of = {m["field-id"]: m["names"] for m in nm}
     cols = set(df.columns)
     renames: dict[str, str] = {}  # physical → logical (logical absent)
@@ -640,11 +633,7 @@ def projected_scan_parts(
     # v3 initial-defaults: fields added with a default read that
     # value from files written BEFORE the field existed (file-side
     # absence decides — a post-add NULL stays NULL)
-    raw = meta.raw
-    ice_cur = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    ice_cur = current_schema(meta.raw)
     init_defaults = {
         f["id"]: f["initial-default"]
         for f in ice_cur.get("fields", [])
@@ -799,10 +788,7 @@ def evolve_partition_spec(
     cur = next(
         s for s in specs if s.get("spec-id", 0) == raw.get("default-spec-id", 0)
     )
-    schema = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(raw)
     by_name = {f["name"]: f for f in schema.get("fields", [])}
 
     fields = [dict(f) for f in cur.get("fields", []) if f["name"] not in set(remove)]

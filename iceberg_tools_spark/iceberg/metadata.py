@@ -2,7 +2,9 @@
 
 Parity target: `ManifestFileReadTool.parseMetaData`
 (`ManifestFileReadTool.java:170-197`) — v1 uses the top-level
-`schema` object, v2 selects from `schemas` by `current-schema-id` —
+`schema` object, v2 selects from `schemas` by `current-schema-id`;
+:func:`current_schema` takes `schemas` whenever present (Iceberg
+Java's rule), which agrees wherever a v1 `schema` copy is current —
 plus a fuller structured parse (snapshots, specs, log) that feeds the
 metadata-table DataFrames in `tables.py`.
 """
@@ -32,14 +34,17 @@ class TableMetadata:
 
 
 def current_schema(meta: dict[str, Any]) -> dict[str, Any]:
-    """v1: `schema`; v2: `schemas[current-schema-id]` — exactly the
-    reference's selection logic."""
-    schema = meta.get("schema")
-    if schema is not None:
-        return schema
-    schema_id = meta["current-schema-id"]
-    for s in meta.get("schemas", ()):
-        if s.get("schema-id") == schema_id:
+    """The table's current schema: ``schemas[current-schema-id]``
+    (id 0 when absent) whenever ``schemas`` is present, else the v1
+    ``schema`` — Iceberg Java's ``TableMetadataParser`` rule. A v1
+    table carrying both keys keeps ``schema`` only as a copy for old
+    readers, and schema evolution may leave that copy stale."""
+    schemas = meta.get("schemas")
+    if schemas is None:
+        return meta["schema"]
+    schema_id = meta.get("current-schema-id", 0)
+    for s in schemas:
+        if s.get("schema-id", 0) == schema_id:
             return s
     raise ValueError(f"no schema with schema-id={schema_id} in metadata")
 

@@ -45,7 +45,7 @@ from pyspark.sql import types as T
 
 from ..avro.reader import AvroContainerFile
 from ..session import local_frame
-from .metadata import TableMetadata, field_id_types, parse_metadata
+from .metadata import TableMetadata, current_schema, field_id_types, parse_metadata
 from .tables import (
     ENTRIES_SCALAR_SCHEMA,
     LIVE_FILES_SCALAR_SCHEMA,
@@ -624,10 +624,7 @@ def partition_spec_fields(
     if spec_id is None:
         spec_id = raw.get("default-spec-id", 0)
     spec = next(s for s in raw.get("partition-specs", []) if s.get("spec-id") == spec_id)
-    schema = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(raw)
     by_id = {f["id"]: f for f in schema.get("fields", [])}
     return [
         (f["name"], transform_result_type(f.get("transform", "identity"),
@@ -760,10 +757,7 @@ def _project_source_pred(
     there. Raises if a predicated column is a source of NO spec."""
     from .transforms import apply_transform
 
-    schema = next(
-        s for s in meta.raw.get("schemas", [meta.raw.get("schema", {})])
-        if s.get("schema-id", 0) == meta.raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(meta.raw)
     by_id = {f["id"]: f for f in schema.get("fields", [])}
     out: dict[int, dict[str, Any]] = {}
     matched: set[str] = set()

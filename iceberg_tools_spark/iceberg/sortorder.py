@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from .catalog import table_root_of
 from .commit import commit_version
 from .conversions import to_bytes
-from .metadata import parse_metadata
+from .metadata import current_schema, parse_metadata
 
 __all__ = [
     "commit_sort_order",
@@ -67,10 +67,7 @@ def commit_sort_order(
     sorted rewrite actually materializes the order."""
     meta = parse_metadata(metadata_path)
     raw = json.loads(json.dumps(meta.raw))
-    schema = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(raw)
     by_name = {f["name"]: f for f in schema.get("fields", [])}
     order_fields = []
     for col, direction in fields:
@@ -126,10 +123,7 @@ def _sort_columns(meta, order_id: int | None) -> list[tuple[str, str, int, str]]
     )
     if order is None or not order.get("fields"):
         raise ValueError(f"no usable sort order {order_id} in table metadata")
-    schema = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(raw)
     by_id = {f["id"]: f for f in schema.get("fields", [])}
     out = []
     for f in order["fields"]:

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..session import WINDOW_GROUP_LIMIT, local_frame
 from .catalog import table_root_of
-from .metadata import parse_metadata
+from .metadata import current_schema, parse_metadata
 from .theta import (
     DEFAULT_LG_K,
     THETA_BLOB_TYPE,
@@ -55,20 +55,12 @@ NDV_BLOB_TYPE = THETA_BLOB_TYPE  # kept name: the registered blob type
 
 
 def _field_ids(meta) -> dict[str, int]:
-    raw = meta.raw
-    schema = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(meta.raw)
     return {f["name"]: f["id"] for f in schema.get("fields", [])}
 
 
 def _field_types(meta) -> dict[str, str]:
-    raw = meta.raw
-    schema = next(
-        s for s in raw.get("schemas", [raw.get("schema", {})])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(meta.raw)
     return {
         f["name"]: f["type"]
         for f in schema.get("fields", [])

@@ -37,7 +37,14 @@ from pyspark.sql import SparkSession
 
 from ..iceberg.catalog import install_metadata
 from ..session import local_frame
-from .delta_log import _column_mapping, read_delta_log, replay_log
+from .delta_log import (
+    _DEFAULT_PROTOCOL,
+    LogState,
+    _column_mapping,
+    log_state,
+    read_delta_log,
+    replay_log,
+)
 
 _DELTA_TO_ICEBERG_TYPE = {
     "long": "long", "integer": "int", "string": "string",
@@ -393,6 +400,20 @@ def delta_migrate_rows(spark: SparkSession, sf_dir: str):
 _ICEBERG_TO_DELTA_TYPE = {v: k for k, v in _DELTA_TO_ICEBERG_TYPE.items()}
 
 
+def _seed_protocol(delta_fields: list[dict[str, Any]]) -> dict[str, Any]:
+    """The protocol a Delta table written from Iceberg starts at: the
+    log's ``{1, 2}`` default, or table features declaring
+    ``variantType`` when a column is a variant — a legacy-protocol
+    reader would misparse the type. Only the feature the schema
+    needs: ``protocol_upgrade_action`` would also list the writer
+    features the legacy versions imply."""
+    if any(f["type"] == "variant" for f in delta_fields):
+        return {"minReaderVersion": 3, "minWriterVersion": 7,
+                "readerFeatures": ["variantType"],
+                "writerFeatures": ["variantType"]}
+    return dict(_DEFAULT_PROTOCOL)
+
+
 def export_iceberg_to_delta(
     spark: SparkSession,
     metadata_path: str,
@@ -411,15 +432,12 @@ def export_iceberg_to_delta(
     Together with :func:`migrate_delta_to_iceberg` this closes the
     interop circle — the round-trip equality is pytest-pinned."""
     from ..iceberg.deletes import mor_entries_at, read_mor
-    from ..iceberg.metadata import parse_metadata
+    from ..iceberg.metadata import current_schema, parse_metadata
 
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
     raw = meta.raw
-    schema = next(
-        s for s in raw.get("schemas", [])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(raw)
     spec = next(
         s for s in raw.get("partition-specs", [])
         if s.get("spec-id", 0) == raw.get("default-spec-id", 0)
@@ -477,17 +495,8 @@ def export_iceberg_to_delta(
 
     shutil.rmtree(tmp, ignore_errors=True)
 
-    # a variant column obliges the replica to DECLARE the feature —
-    # a legacy-protocol reader would misparse the type (review r14)
-    proto0 = (
-        {"minReaderVersion": 3, "minWriterVersion": 7,
-         "readerFeatures": ["variantType"],
-         "writerFeatures": ["variantType"]}
-        if any(f["type"] == "variant" for f in delta_fields)
-        else {"minReaderVersion": 1, "minWriterVersion": 2}
-    )
     actions = [
-        {"protocol": proto0},
+        {"protocol": _seed_protocol(delta_fields)},
         {"metaData": {
             "id": "00000000-0000-0000-0000-00000000f002",
             "format": {"provider": "parquet", "options": {}},
@@ -770,7 +779,7 @@ def replicate_iceberg_to_delta(
         mor_frame,
         plan_scan_tasks,
     )
-    from ..iceberg.metadata import parse_metadata
+    from ..iceberg.metadata import current_schema, parse_metadata
     from ..iceberg.snapshots import ancestor_chain
     from .delta_log import (
         CHECKPOINT_INTERVAL,
@@ -801,10 +810,7 @@ def replicate_iceberg_to_delta(
     # seed first, then (from, to] oldest-first
     rng = [from_id] + list(reversed(chain[: chain.index(from_id)]))
 
-    schema = next(
-        s for s in raw.get("schemas", [])
-        if s.get("schema-id", 0) == raw.get("current-schema-id", 0)
-    )
+    schema = current_schema(raw)
     delta_fields = []
     for f in schema["fields"]:
         t = _ICEBERG_TO_DELTA_TYPE.get(f["type"])
@@ -1038,13 +1044,7 @@ def replicate_iceberg_to_delta(
     dv_blobs_seen: dict[str, bytes] = {}
     dv_descriptors: dict[str, dict] = {}  # iceberg rel → DV descriptor
     n_checkpoints = n_removed = n_folded = n_dvs = n_cdf = 0
-    cur_proto = (
-        {"minReaderVersion": 3, "minWriterVersion": 7,
-         "readerFeatures": ["variantType"],
-         "writerFeatures": ["variantType"]}
-        if any(f["type"] == "variant" for f in delta_fields)
-        else {"minReaderVersion": 1, "minWriterVersion": 2}
-    )  # the seed's (variant columns oblige the feature, review r14)
+    cur_proto = _seed_protocol(delta_fields)
     if lineage:
         # rowTracking + its high-water-mark domain need v7 WRITERS;
         # both are writer-only features, so minReaderVersion stays
@@ -1528,7 +1528,7 @@ def replicate_delta_versions(
     from ..iceberg.deletes import mor_entries_at
     from ..iceberg.metadata import parse_metadata
     from ..iceberg.rewrite_data import _replace_commit
-    from .delta_log import _file_actions_between, check_reader_support, log_state
+    from .delta_log import _file_actions_between, check_reader_support
 
     state = log_state(delta_root, to_version)
     meta, head = state.meta, state.version
@@ -1842,17 +1842,18 @@ _ICEBERG_TO_SPARK_CAST = {
 
 def _init_cdf_replica(
     delta_root: str, target_root: str, to_version: int | None, table_uuid: str
-) -> tuple[str, list[dict[str, Any]], int]:
+) -> tuple[str, list[dict[str, Any]], LogState]:
     """Schema-translated EMPTY unpartitioned Iceberg replica for a
-    CDF-driven replication: (metadata_path, iceberg fields, head
-    Delta version). Shared by the batch and streaming appliers."""
-    _, meta, head = replay_log(delta_root, to_version)
+    CDF-driven replication: (metadata_path, iceberg fields, the Delta
+    log state at the replicated head). Shared by the batch and
+    streaming appliers."""
+    state = log_state(delta_root, to_version)
     mp, ice_fields, _ = _create_from_delta(
-        meta, target_root, table_uuid=table_uuid,
+        state.meta, target_root, table_uuid=table_uuid,
         properties={"replicated-from": "delta", "replication": "cdf"},
         partitioned=False,
     )
-    return mp, ice_fields, head
+    return mp, ice_fields, state
 
 
 def replicate_delta_cdf(
@@ -1887,8 +1888,9 @@ def replicate_delta_cdf(
     audit trail). Versions whose commits
     change no rows (pure metadata, or a DV commit from a writer that
     ignored its PROTOCOL.md CDF obligation) produce no replica
-    snapshot; ``read_delta_cdf``'s guided errors surface the
-    missing-commit case.
+    snapshot. The versions come from one read of the log
+    (``delta_log.delta_cdf_versions``: every version folds with the
+    head's schema), whose gap error surfaces the missing-commit case.
 
     The replica is UNPARTITIONED with every column physical
     (partition values arrive through the CDF frame itself), matching
@@ -1902,11 +1904,12 @@ def replicate_delta_cdf(
         commit_delete_snapshot,
         commit_row_delta,
     )
-    from .delta_log import log_actions, read_delta_cdf
+    from .delta_log import _cdf_versions
 
-    mp, ice_fields, head = _init_cdf_replica(
+    mp, ice_fields, state = _init_cdf_replica(
         delta_root, target_root, to_version, table_uuid
     )
+    head = state.version
     col_names = [f["name"] for f in ice_fields]
 
     def _casts(present: set[str]):
@@ -1977,17 +1980,11 @@ def replicate_delta_cdf(
 
     n_inserted = n_deleted = n_snapshots = 0
     # CDF replication needs EVERY commit from version 0: the gap rule
-    # of a commit-range read runs when it is called (no file is read),
-    # so a cleaned log raises before any replica snapshot instead of
-    # replaying only the surviving tail
-    log_actions(delta_root, 0, head)
-    for v in range(head + 1):
-        try:
-            cdf = read_delta_cdf(spark, delta_root, v, v)
-        except ValueError as exc:
-            if "no changes" in str(exc):
-                continue  # metadata-only version: no replica snapshot
-            raise
+    # runs when the versions are collected, so a cleaned log raises
+    # before any replica snapshot instead of replaying only the
+    # surviving tail; metadata-only versions yield no frame and make
+    # no replica snapshot
+    for v, cdf in _cdf_versions(spark, delta_root, state, 0):
         ins_rels, del_rels = _spill(cdf, v)
         sid, ts = 8000 + v, 1700000000000 + (v + 1) * 1000
         data_files = [{"path": r, "partition": {}} for r in ins_rels]
@@ -2061,9 +2058,10 @@ def replicate_delta_cdf_stream(
     )
     from .delta_log import delta_cdf_stream
 
-    mp, ice_fields, head = _init_cdf_replica(
+    mp, ice_fields, state = _init_cdf_replica(
         delta_root, target_root, to_version, table_uuid
     )
+    head = state.version
     casts = [
         F.col(f["name"]).cast(_ICEBERG_TO_SPARK_CAST[f["type"]]).alias(f["name"])
         for f in ice_fields
@@ -2182,22 +2180,21 @@ def delta_grouped_ivm(
     Iceberg-IVM-shaped grouped aggregate (COUNT/SUM, optional
     MIN/MAX) OVER A DELTA TABLE from its change feed — seed once at
     ``from_version`` (the only full scan), then fold each later
-    version's CDF through the SAME `maintain_grouped_agg` kernel the
-    Iceberg materialized views use. At 100 TB the fold touches
-    changelog-sized frames; MIN/MAX versions additionally scope
-    their extremum-affected-group recompute to the Delta table read
-    AT that version (the `read_delta_log` time travel). Versions
+    version's CDF (``delta_cdf_versions``: one read of the log, every
+    version under the end version's schema) through the SAME
+    `maintain_grouped_agg` kernel the Iceberg materialized views
+    use. At 100 TB the fold touches changelog-sized frames; MIN/MAX
+    versions additionally scope their extremum-affected-group
+    recompute to the Delta table read AT that version (the
+    `read_delta_log` time travel). Versions
     that changed no rows fold nothing. Returns the maintained
     DataFrame at ``to_version`` — pytest pins it equal to a full
     recompute at EVERY intermediate version."""
     import pyspark.sql.functions as F
 
     from ..iceberg.ivm import grouped_agg, maintain_grouped_agg
-    from .delta_log import list_commits, read_delta_cdf, read_delta_log
+    from .delta_log import cdf_change_expr, delta_cdf_versions, read_delta_log
 
-    commits = dict(list_commits(delta_root))
-    head = max(commits)
-    to_v = head if to_version is None else int(to_version)
     seed = read_delta_log(spark, delta_root, from_version)
     missing = [
         c for c in [*keys, *sums, *mins, *maxs] if c not in seed.columns
@@ -2210,15 +2207,9 @@ def delta_grouped_ivm(
             f"would otherwise fail with an unresolved-column crash)"
         )
     state = grouped_agg(seed, keys, sums, mins, maxs)
-    for v in range(int(from_version) + 1, to_v + 1):
-        try:
-            cdf = read_delta_cdf(spark, delta_root, v, v)
-        except ValueError as exc:
-            if "no changes" in str(exc):
-                continue
-            raise
-        from .delta_log import cdf_change_expr
-
+    for v, cdf in delta_cdf_versions(
+        spark, delta_root, int(from_version) + 1, to_version
+    ):
         # update_postimage folds as INSERT, update_preimage as DELETE
         # (ADVICE r12 — the isin filter silently dropped updates and
         # the maintained aggregate diverged); unknown types raise

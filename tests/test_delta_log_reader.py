@@ -16,6 +16,7 @@ import pytest
 
 import iceberg_tools_spark.sources.delta_log as dl
 from iceberg_tools_spark.sources.migrate import (
+    delta_grouped_ivm,
     replicate_delta_cdf,
     replicate_delta_versions,
 )
@@ -77,6 +78,14 @@ _GAP_READS = {
         lambda spark, root, tmp: dl.delta_incremental_stream(
             spark, root, 0, 3, os.path.join(tmp, "stage")), 2),
     "read_delta_cdf": (lambda spark, root, tmp: dl.read_delta_cdf(spark, root, 0, 3), 2),
+    "delta_cdf_versions": (
+        lambda spark, root, tmp: dl.delta_cdf_versions(spark, root, 0, 3), 2),
+    "delta_cdf_stream": (
+        lambda spark, root, tmp: dl.delta_cdf_stream(
+            spark, root, 0, 3, os.path.join(tmp, "stage")), 2),
+    # the IVM seeds with a state read at version 0
+    "delta_grouped_ivm": (
+        lambda spark, root, tmp: delta_grouped_ivm(spark, root, ["cat"], ["id"]), 3),
     "replicate_delta_versions": (
         lambda spark, root, tmp: replicate_delta_versions(
             spark, root, os.path.join(tmp, "full")), 2),

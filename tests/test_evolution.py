@@ -562,3 +562,30 @@ def test_added_column_id_passes_nested_ids_without_last_column_id(tmp_path):
     fields = parse_metadata(res["metadata_path"]).raw["schemas"][-1]["fields"]
     assert res["last_column_id"] == 4
     assert [(f["name"], f["id"]) for f in fields] == [("id", 1), ("s", 2), ("c", 4)]
+
+
+def test_evolved_v1_table_reads_its_current_schema(tmp_path):
+    """A v1 table carrying both the ``schema`` copy and ``schemas``
+    takes its current schema from ``schemas[current-schema-id]``:
+    evolution appends to ``schemas`` and leaves the copy stale, and
+    bound decoding must use the promoted type."""
+    from iceberg_tools_spark.iceberg.commit import commit_version, create_table
+    from iceberg_tools_spark.iceberg.metadata import current_schema, field_id_types
+    from iceberg_tools_spark.iceberg.table_stats import _field_types
+
+    mp = create_table(str(tmp_path / "t"), [("id", "int"), ("name", "string")],
+                      format_version=1)
+    raw = json.loads(json.dumps(parse_metadata(mp).raw))
+    raw["schema"] = {"type": "struct", "fields": raw["schemas"][0]["fields"]}
+    mp = commit_version(mp, raw)
+    assert field_id_types(parse_metadata(mp).raw) == {1: "int", 2: "string"}
+
+    meta = parse_metadata(evo.evolve_schema(mp, promote={"id": "long"})["metadata_path"])
+    assert meta.raw["schema"]["fields"][0]["type"] == "int"  # the stale copy
+    assert meta.raw["current-schema-id"] == 1
+    assert meta.current_schema["schema-id"] == 1
+    assert field_id_types(meta.raw) == {1: "long", 2: "string"}
+    assert _field_types(meta) == {"id": "long", "name": "string"}
+    # without a schemas list the v1 key is the schema
+    legacy = {k: v for k, v in meta.raw.items() if k not in ("schemas", "current-schema-id")}
+    assert current_schema(legacy) is legacy["schema"]

@@ -1091,3 +1091,70 @@ def h(spark, root):
         ("d", "13 calls _checkpoint_part_rows"),
         ("e", "16 reads checkpoint parquet"),
     ]
+
+
+# ---- errors are typed, not parsed -----------------------------------
+
+
+def _message_branches(tree: ast.Module) -> list[tuple[str | None, int]]:
+    """(innermost function, line) of every membership test whose
+    container mentions an exception caught ``as`` a name — ``… in
+    str(exc)``, ``… in repr(exc).lower()``, ``… not in exc.args``: a
+    branch on the message text of an error."""
+    def bound_handler(n: ast.AST) -> bool:
+        return isinstance(n, ast.ExceptHandler) and n.name is not None
+
+    out = []
+    for fn, handler, _assigns in _scoped(tree, bound_handler):
+        for node in ast.walk(handler):
+            if isinstance(node, ast.Compare) and any(
+                isinstance(op, (ast.In, ast.NotIn)) and any(
+                    isinstance(n, ast.Name) and n.id == handler.name
+                    for n in ast.walk(side)
+                )
+                for op, side in zip(node.ops, node.comparators)
+            ):
+                out.append((fn, node.lineno))
+    return out
+
+
+def test_no_branch_on_exception_message_text():
+    """No library function decides what to do from an exception's
+    message: an expected outcome is a value (an empty iterator, a
+    None), and a text match breaks silently when the wording moves."""
+    found = [
+        (path.relative_to(_PKG).as_posix(), fn, line)
+        for path in sorted(_PKG.rglob("*.py"))
+        for fn, line in _message_branches(ast.parse(path.read_text()))
+    ]
+    assert found == []
+
+
+def test_message_rule_sees_each_branch_shape():
+    src = '''
+def a(x):
+    try:
+        f(x)
+    except ValueError as exc:
+        if "no changes" in str(exc):
+            return None
+        raise
+def b(x):
+    try:
+        f(x)
+    except (KeyError, ValueError) as e:
+        return "gone" in repr(e).lower()
+def c(x):
+    try:
+        f(x)
+    except OSError as err:
+        if err.errno in (2, 17):
+            return None
+        return "busy" not in err.args
+def d(x):
+    try:
+        f(x)
+    except ValueError:
+        return "x" in str(x)
+'''
+    assert _message_branches(ast.parse(src)) == [("a", 6), ("b", 13), ("c", 20)]
