@@ -2,14 +2,23 @@
 specification (the reference reads manifests with Java Avro's
 `DataFileStream`, `ManifestFileReadTool.java:130-159`). It decodes every
 manifest and manifest list, on the driver or in executor tasks
-(``manifest_io.map_manifests``). Each writer schema compiles once per
-process (``_DECODERS``, keyed by the header's ``avro.schema`` text) into
-nested ``(buf, pos) -> (value, pos)`` closures over a ``bytes`` block:
-records, arrays and maps are generated code with varints, strings and
-one-byte union indexes inline. Malformed input raises ``AvroError``,
-including an array, map or block count that cannot fit the bytes left
-(checked once per block against the items' least width; a count of
-zero-width items against ``ZERO_WIDTH_MAX_COUNT``).
+(``manifest_io.map_manifests``). Each writer schema is parsed once per
+process (``_SCHEMAS``, keyed by the header's ``avro.schema`` text; the
+parsed schema is shared and read-only) and compiles once per
+(schema text, projection) (``_DECODERS``) into nested ``(buf, pos) ->
+(value, pos)`` closures over a ``bytes`` block: records, arrays and
+maps are generated code with varints, strings and one-byte union
+indexes inline. A projection (:meth:`AvroContainerFile.select`) names
+the record fields a consumer reads as dotted paths from the root
+(``data_file.file_path``), as Iceberg Java's ``ManifestReader.select``
+does; every other field compiles to generated skip code that walks
+its varints, lengths and collection counts without building a value.
+Malformed input raises ``AvroError`` in a skipped field as in a
+decoded one, including an array, map or block count that cannot fit
+the bytes left (checked once per block against the items' least
+width; a count of zero-width items against ``ZERO_WIDTH_MAX_COUNT``).
+Skipped strings are not checked for UTF-8, as Java Avro's
+``skipString`` does not check them.
 """
 
 from __future__ import annotations
@@ -18,7 +27,8 @@ import io
 import json
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
+from functools import lru_cache
 from types import SimpleNamespace
 from typing import Any, BinaryIO, Callable
 
@@ -172,7 +182,34 @@ def _count_check(width: int, left: str) -> list[str]:
     return [f"if {over}:", f'    _fail("count", c, "cannot fit the", {left}, "bytes left")']
 
 
-def _inline_read(schema: Any, names: dict[str, Any], memo: dict[int, list], ns: dict[str, Any], t: str) -> str:
+# a projection: the record fields a decode builds, as a frozen tree
+# ``((name, sub-projection or None), ...)``; None builds the whole value
+Projection = tuple | None
+
+
+@lru_cache(maxsize=256)
+def _projection(fields: tuple[str, ...]) -> tuple:
+    """The projection tree of dotted field paths; a path that names a
+    whole field covers every longer path under it."""
+    tree: dict[str, Any] = {}
+    for path in fields:
+        node = tree
+        *heads, last = path.split(".")
+        for head in heads:
+            if head in node and node[head] is None:
+                break
+            node = node.setdefault(head, {})
+        else:
+            node[last] = None
+
+    def freeze(node: dict[str, Any]) -> tuple:
+        return tuple(sorted((k, None if v is None else freeze(v)) for k, v in node.items()))
+
+    return freeze(tree)
+
+
+def _inline_read(schema: Any, names: dict[str, Any], memo: dict, ns: dict[str, Any], t: str,
+                 proj: Projection = None) -> str:
     """Source that reads one ``schema`` value into ``t``: primitives
     and one-byte union indexes inline, anything else a call."""
     schema = _resolve(schema, names)
@@ -180,48 +217,139 @@ def _inline_read(schema: Any, names: dict[str, Any], memo: dict[int, list], ns: 
     if kind in _INLINE:
         return _INLINE[kind].format(t=t)
     call = f"r{len(ns)}"
-    ns[call] = _reader(schema, names, memo)
+    ns[call] = _reader(schema, names, memo, proj)
     fallback = f"{t}, pos = {call}(buf, pos)"
     if kind != "union" or len(schema) > 64:
         return fallback
     arms = [
-        f"{'el' if i else ''}if b == {2 * i}:\n    pos += 1\n" + _indent(_inline_read(br, names, memo, ns, t))
+        f"{'el' if i else ''}if b == {2 * i}:\n    pos += 1\n" + _indent(_inline_read(br, names, memo, ns, t, proj))
         for i, br in enumerate(schema)
     ]
     return "\n".join(["b = buf[pos]", *arms, "else:", _indent(fallback)])
 
 
-def _reader(schema: Any, names: dict[str, Any], memo: dict[int, list]) -> Reader:
-    """Compile one schema node. ``memo`` holds each compound node's reader
-    by id; a recursive reference calls through its record's cell."""
+# inline code that steps over one value without building it; a step
+# past the buffer's end is caught where the decode ends (``_END``)
+_SKIP_LONG = "while buf[pos] >= 0x80:\n    pos += 1\npos += 1"
+_SKIP = {
+    "null": "pass",
+    "boolean": "pos += 1",
+    **dict.fromkeys(("int", "long"), _SKIP_LONG),
+    "float": "pos += 4",
+    "double": "pos += 8",
+    **dict.fromkeys(("bytes", "string"), _SPAN.replace("{t} = buf[pos:end]{decode}\n", "")),
+}
+_END = ["if pos > len(buf):", '    _fail("unexpected EOF in a skipped value")']
+
+
+def _inline_skip(schema: Any, names: dict[str, Any], memo: dict, ns: dict[str, Any],
+                 open_records: tuple = ()) -> str:
+    """Source that steps ``pos`` over one ``schema`` value with the
+    decode's checks: span bounds, union and enum index ranges, array
+    and map counts against the bytes left. Records inline their
+    fields; arrays, maps, recursive records and wide unions call a
+    generated skipper."""
+    schema = _resolve(schema, names)
+    kind = _kind(schema)
+    if kind in _SKIP:
+        return _SKIP[kind]
+    if kind == "fixed":
+        size = f"z{len(ns)}"
+        ns[size] = int(schema["size"])
+        return f"pos += {size}" if ns[size] >= 0 else f"_fail('unexpected EOF: wanted', {size}, 'bytes')"
+    if kind == "enum":
+        count = f"z{len(ns)}"
+        ns[count] = len(schema["symbols"])
+        return _LONG.format(t="i") + f"\nif not 0 <= i < {count}:\n    _fail('enum index', i, 'out of range')"
+    if kind == "record" and id(schema) not in open_records:
+        inner = (*open_records, id(schema))
+        return "\n".join(["pass"] + [_inline_skip(f["type"], names, memo, ns, inner) for f in schema["fields"]])
+    call = f"s{len(ns)}"
+    ns[call] = _skipper(schema, names, memo)
+    if kind != "union" or len(schema) > 64:
+        return f"pos = {call}(buf, pos)"
+    arms = [
+        f"{'el' if i else ''}if b == {2 * i}:\n    pos += 1\n" + _indent(_inline_skip(br, names, memo, ns, open_records))
+        for i, br in enumerate(schema)
+    ]
+    return "\n".join(["b = buf[pos]", *arms, "else:", _indent(f"pos = {call}(buf, pos)")])
+
+
+def _collection(kind: str, width: int, item: str, end: str) -> list[str]:
+    """The body of an array or map reader or skipper: blocks of items
+    (``item`` per item, a map's string key first) until a zero count."""
+    return [_LONG.format(t="c"), "while c:", "    if c < 0:  # block with byte size prefix", "        c = -c",
+            "        _, pos = _read_long(buf, pos)",
+            *map(_indent, _count_check(width, "len(buf) - pos")), "    for _ in range(c):",
+            _indent(_indent(item)), _indent(_LONG.format(t="c")), end]
+
+
+def _skipper(schema: Any, names: dict[str, Any], memo: dict) -> Callable[[bytes, int], int]:
+    """Compile one compound node's ``(buf, pos) -> pos`` skipper
+    (memoized as ``_reader`` memoizes its readers)."""
+    cell = memo.get((id(schema), "skip"))
+    if cell is not None:
+        return cell[0] or (lambda buf, pos: cell[0](buf, pos))
+    cell = memo[(id(schema), "skip")] = [None]
+    kind, ns = _kind(schema), dict(_NS)
+    if kind == "union":
+        def branch(b: Any) -> Callable[[bytes, int], int]:
+            bns = dict(_NS)
+            return _generated("skip", "buf, pos", [_inline_skip(b, names, memo, bns), "return pos"], bns)
+
+        ns["branches"] = [branch(b) for b in schema]
+        lines = [_LONG.format(t="i"), "if 0 <= i < len(branches):", "    return branches[i](buf, pos)",
+                 '_fail("union index", i, "out of range")']
+    elif kind == "record":
+        lines = [_inline_skip(f["type"], names, memo, ns, (id(schema),)) for f in schema["fields"]] + ["return pos"]
+    else:
+        node = schema["values" if kind == "map" else "items"]
+        width = _min_width(node, names) + (kind == "map")  # a map key is a string
+        item = _inline_skip(node, names, memo, ns)
+        lines = _collection(kind, width, _SKIP["string"] + "\n" + item if kind == "map" else item, "return pos")
+    cell[0] = _generated("skip", "buf, pos", lines, ns)
+    return cell[0]
+
+
+def _reader(schema: Any, names: dict[str, Any], memo: dict, proj: Projection = None,
+            root: bool = False) -> Reader:
+    """Compile one schema node under a projection (records keep its
+    fields, unions, arrays and maps pass it to their records). ``memo``
+    holds each compound node's reader by (id, projection); a recursive
+    reference calls through its record's cell. A ``root`` record with
+    skipped fields checks that no skip stepped past the buffer."""
     schema = _resolve(schema, names)
     kind = _kind(schema)
     if kind in _INLINE:
         return _READERS[kind]
-    cell = memo.get(id(schema))
+    cell = memo.get((id(schema), proj))
     if cell is not None:
         return cell[0] or (lambda buf, pos: cell[0](buf, pos))
-    cell = memo[id(schema)] = [None]
+    cell = memo[(id(schema), proj)] = [None]
     ns = dict(_NS)
     if kind == "union":
-        ns["branches"] = [_reader(b, names, memo) for b in schema]
+        ns["branches"] = [_reader(b, names, memo, proj) for b in schema]
         lines = [_LONG.format(t="i"), "if 0 <= i < len(branches):", "    return branches[i](buf, pos)",
                  '_fail("union index", i, "out of range")']
     elif kind == "record":
-        fields = schema["fields"]
-        lines = [_inline_read(f["type"], names, memo, ns, f"v{i}") for i, f in enumerate(fields)]
-        ns.update((f"n{i}", f["name"]) for i, f in enumerate(fields))
-        lines.append("return {" + ", ".join(f"n{i}: v{i}" for i in range(len(fields))) + "}, pos")
+        keep = None if proj is None else dict(proj)
+        lines, kept = [], []
+        for i, f in enumerate(schema["fields"]):
+            if keep is None or f["name"] in keep:
+                lines.append(_inline_read(f["type"], names, memo, ns, f"v{i}", keep and keep[f["name"]]))
+                ns[f"n{i}"] = f["name"]
+                kept.append(i)
+            else:
+                lines.append(_inline_skip(f["type"], names, memo, ns, (id(schema),)))
+        if root and len(kept) < len(schema["fields"]):
+            lines += _END
+        lines.append("return {" + ", ".join(f"n{i}: v{i}" for i in kept) + "}, pos")
     elif kind in ("array", "map"):
         node = schema["values" if kind == "map" else "items"]
         width = _min_width(node, names) + (kind == "map")  # a map key is a string
-        item = _inline_read(node, names, memo, ns, "v")
+        item = _inline_read(node, names, memo, ns, "v", proj)
         item = _INLINE["string"].format(t="k") + f"\n{item}\nout[k] = v" if kind == "map" else f"{item}\nout.append(v)"
-        lines = ["out = {}" if kind == "map" else "out = []", _LONG.format(t="c"), "while c:",
-                 "    if c < 0:  # block with byte size prefix", "        c = -c",
-                 "        _, pos = _read_long(buf, pos)",
-                 *map(_indent, _count_check(width, "len(buf) - pos")), "    for _ in range(c):",
-                 _indent(_indent(item)), _indent(_LONG.format(t="c")), "return out, pos"]
+        lines = ["out = {}" if kind == "map" else "out = []", *_collection(kind, width, item, "return out, pos")]
     elif kind == "enum":
         ns["symbols"] = list(schema["symbols"])
         lines = [_LONG.format(t="i"), "if 0 <= i < len(symbols):", "    return symbols[i], pos",
@@ -239,24 +367,40 @@ def _reader(schema: Any, names: dict[str, Any], memo: dict[int, list]) -> Reader
 _READERS = {k: _generated("read", "buf, pos", [src.format(t="v"), "return v, pos"], dict(_NS))
             for k, src in _INLINE.items()}
 _READ_META = _reader({"type": "map", "values": "bytes"}, {}, {})  # the file metadata
-# header ``avro.schema`` text → (record reader, a block-count check)
-_DECODERS: dict[bytes, tuple[Reader, Callable[[int, int], None]]] = {}
+# header ``avro.schema`` text → (parsed schema, its named types); shared, read-only
+_SCHEMAS: dict[bytes, tuple[Any, dict[str, Any]]] = {}
+# (header ``avro.schema`` text, projection) → (record reader, a block-count check)
+_DECODERS: dict[tuple[bytes, Projection], tuple[Reader, Callable[[int, int], None]]] = {}
 
 
-def _decoder(schema_text: bytes) -> tuple[Reader, Callable[[int, int], None]]:
-    """The record reader for a header's ``avro.schema`` text and the
-    check of a block's record count against its bytes, compiled once
-    per process from a private parse. Executor workers fill their own
+def _parsed(schema_text: bytes) -> tuple[Any, dict[str, Any]]:
+    """A header's schema and its named types, parsed once per process.
+    Callers share them and must not mutate them."""
+    hit = _SCHEMAS.get(schema_text)
+    if hit is None:
+        if len(_SCHEMAS) >= 512:
+            _SCHEMAS.clear()
+        schema, names = json.loads(schema_text), {}
+        _collect_named(schema, names)
+        hit = _SCHEMAS[schema_text] = (schema, names)
+    return hit
+
+
+def _decoder(schema_text: bytes, proj: Projection = None) -> tuple[Reader, Callable[[int, int], None]]:
+    """The record reader for a header's ``avro.schema`` text under a
+    projection, and the check of a block's record count against its
+    bytes, compiled once per process. Executor workers fill their own
     cache; no compiled reader rides in a task. The cache starts over
     when full."""
-    hit = _DECODERS.get(schema_text)
+    hit = _DECODERS.get((schema_text, proj))
     if hit is None:
         if len(_DECODERS) >= 512:
             _DECODERS.clear()
-        schema, names = json.loads(schema_text), {}
-        _collect_named(schema, names)
+        schema, names = _parsed(schema_text)
         check = _generated("check", "c, left", _count_check(_min_width(schema, names), "left"), dict(_NS))
-        hit = _DECODERS[schema_text] = (_reader(schema, names, {}), check)
+        # a projection selects the root record's fields
+        root = _reader(schema, names, {}, proj if _kind(_resolve(schema, names)) == "record" else None, root=True)
+        hit = _DECODERS[(schema_text, proj)] = (root, check)
     return hit
 
 
@@ -349,10 +493,9 @@ class AvroContainerFile:
             self.sync = body[pos : pos + 16]
             if len(self.sync) != 16:
                 raise AvroError("unexpected EOF in the sync marker")
-            self.schema = json.loads(self.meta["avro.schema"])
+            # shared with every file of this schema text: read-only
+            self.schema, self.names = _parsed(self.meta["avro.schema"])
             self.codec = self.meta.get("avro.codec", b"null").decode()
-            self.names: dict[str, Any] = {}
-            _collect_named(self.schema, self.names)
             self._decode, self._check_count = _decoder(self.meta["avro.schema"])
         except _MALFORMED as e:
             raise AvroError(f"malformed Avro header: {e!r}") from e
@@ -372,6 +515,15 @@ class AvroContainerFile:
                 raise AvroError("snappy codec requires python-snappy") from e
             return snappy.decompress(block[:-4])  # trailing CRC32
         raise AvroError(f"unsupported codec {self.codec!r}")
+
+    def select(self, fields: Iterable[str]) -> AvroContainerFile:
+        """Build only ``fields`` of each record from here on: dotted
+        paths of record fields from the root (``data_file.file_path``;
+        unions, arrays and maps pass a path to their records). A record
+        holds its selected fields, in schema order; the others are
+        walked and checked, not built. Returns ``self``."""
+        self._decode, self._check_count = _decoder(self.meta["avro.schema"], _projection(tuple(fields)))
+        return self
 
     def __iter__(self) -> Iterator[Any]:
         return self.records()

@@ -181,10 +181,13 @@ def evolve_schema(
         new_fields.append(field)
 
     new_schema_id = max(s.get("schema-id", 0) for s in raw.get("schemas", [cur])) + 1
+    new_schema = {"schema-id": new_schema_id, "type": "struct", "fields": new_fields}
     raw.setdefault("schemas", [cur])
-    raw["schemas"].append(
-        {"schema-id": new_schema_id, "type": "struct", "fields": new_fields}
-    )
+    raw["schemas"].append(new_schema)
+    if "schema" in raw:
+        # v1's single-schema key names the current schema, as Java
+        # Iceberg writes it; older readers take it alone
+        raw["schema"] = dict(new_schema)
     raw["current-schema-id"] = new_schema_id
     raw["last-column-id"] = last_col
     new_path = commit_version(metadata_path, raw, base_dir=base_dir, timestamp_ms=timestamp_ms)

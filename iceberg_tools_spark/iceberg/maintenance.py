@@ -265,7 +265,7 @@ def _referenced_files_worker(ctx: dict, blob: bytes) -> list[tuple[str]]:
 
     return [
         (os.path.abspath(_local(rec["data_file"]["file_path"], ctx["base_dir"], ctx["loc"])),)
-        for rec in read_manifest(blob)
+        for rec in read_manifest(blob, fields=("data_file.file_path",))
     ]
 
 

@@ -23,15 +23,22 @@ Behavior parity (reference: `ManifestFileReadTool.java`):
   plain byte values rendered as UTF-8 strings
   (`IcebergEncoder.writeIndex/writeByteArray`)
 * v1 + v2 metadata schema selection (`:170-197`)
+
+Each (emit schema, field-id → type map) compiles once per process into
+closures (``_Compiler``, cached in ``_EMITTERS``): a union picks its
+branch once per value type (``_branch_for`` decides by ``isinstance``
+alone), and each field id's bound renderer is looked up once. The
+per-value interpreter they replaced is the test oracle
+``tests/manifest2json_oracle.py``.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Any, TextIO
+from typing import Any, Callable, TextIO
 
 from ..avro.reader import AvroContainerFile, _branch_for, _resolve
-from .conversions import decode_bound
+from .conversions import _bound_renderer
 from .metadata import field_id_types, parse_metadata
 
 BOUND_KEYS = frozenset(("lower_bounds", "upper_bounds"))
@@ -46,68 +53,149 @@ def _is_data_file_record(rec_name: str | None) -> bool:
     return rec_name == "r2" or (rec_name or "").startswith("r2_")
 
 
-def _emit(
-    schema: Any,
-    value: Any,
-    names: dict[str, Any],
-    fields_by_id: dict[int, str],
-    in_bounds: bool = False,
-    record_name: str | None = None,
-    bound_key: int | None = None,
-) -> Any:
-    """Walk schema+value into a JSON-ready tree, decoding bound bytes
-    and label-wrapping unions exactly like the reference writer."""
-    schema = _resolve(schema, names)
-    if isinstance(schema, list):  # union
-        branch = _branch_for(value, schema, names)
-        rb = _resolve(branch, names)
-        t = rb if isinstance(rb, str) else rb.get("type")
-        inner = _emit(branch, value, names, fields_by_id, in_bounds, record_name, bound_key)
-        if t == "null":
-            return None
-        label = rb if isinstance(rb, str) else rb.get("name", t)
-        return {label: inner}
-    if isinstance(schema, str):
-        if schema == "bytes":
-            if in_bounds and bound_key is not None and bound_key in fields_by_id:
-                return decode_bound(fields_by_id[bound_key], value)
+Emit = Callable[[Any, "int | None"], Any]
+
+
+def _raiser(exc: Exception) -> Emit:
+    """An emitter for a node that failed to compile: it raises when a
+    value reaches it, as walking that node would."""
+    def emit(value: Any, key: int | None) -> Any:
+        raise exc.with_traceback(None)
+
+    return emit
+
+
+def _utf8(value: Any, key: int | None) -> Any:
+    return value.decode("utf-8", errors="replace")
+
+
+def _same(value: Any, key: int | None) -> Any:
+    return value
+
+
+class _Compiler:
+    """Compiles one emit schema into closures ``emit(value, key)`` that
+    build the JSON-ready tree: bound bytes decoded, unions label-wrapped
+    as the reference writer does. ``key`` is the field id of the
+    nearest enclosing record whose value has an int ``key`` (a bounds
+    map entry). Nodes compile once per (node, inside a bounds map);
+    a node that cannot compile raises when a value reaches it."""
+
+    def __init__(self, schema: Any, names: dict[str, Any], fields_by_id: dict[int, str]):
+        # the schema stays referenced, so the memo's node ids stay unique
+        self.schema, self.names, self.fields_by_id = schema, names, fields_by_id
+        self.memo: dict[tuple[int, bool], list] = {}
+        self.renderers: dict[int, Callable[[bytes], str]] = {}
+
+    def node(self, get: Callable[[], Any], in_bounds: bool) -> Emit:
+        """The emitter of the node ``get()`` returns. A recursive
+        reference calls through its node's cell."""
+        try:
+            schema = _resolve(get(), self.names)
+        except Exception as e:  # noqa: BLE001 - raised where the walk would raise it
+            return _raiser(e)
+        if isinstance(schema, str):
+            return self._bytes(in_bounds) if schema == "bytes" else _same
+        cell = self.memo.get((id(schema), in_bounds))
+        if cell is not None:
+            return cell[0] or (lambda value, key: cell[0](value, key))
+        cell = self.memo[(id(schema), in_bounds)] = [None]
+        try:
+            cell[0] = self._compound(schema, in_bounds)
+        except Exception as e:  # noqa: BLE001
+            cell[0] = _raiser(e)
+        return cell[0]
+
+    def _bytes(self, in_bounds: bool) -> Emit:
+        if not in_bounds:
+            return _utf8
+        fields_by_id, renderers = self.fields_by_id, self.renderers
+
+        def emit(value: bytes, key: int | None) -> str:
+            if key is not None and key in fields_by_id:
+                render = renderers.get(key)
+                if render is None:
+                    render = renderers[key] = _bound_renderer(fields_by_id[key])
+                return render(value)
             return value.decode("utf-8", errors="replace")
-        return value
-    t = schema["type"]
-    if t == "record":
-        rec_name = schema.get("name")
-        out: dict[str, Any] = {}
-        # inside a bounds map entry the key field identifies the column
-        key_val = value.get("key") if isinstance(value, dict) else None
-        for f in schema["fields"]:
-            f_bounds = in_bounds
-            if _is_data_file_record(rec_name):
-                f_bounds = f["name"].lower() in BOUND_KEYS
-            out[f["name"]] = _emit(
-                f["type"],
-                value[f["name"]],
-                names,
-                fields_by_id,
-                f_bounds,
-                rec_name,
-                key_val if isinstance(key_val, int) else bound_key,
-            )
-        return out
-    if t == "array":
-        return [
-            _emit(schema["items"], v, names, fields_by_id, in_bounds, record_name, bound_key)
-            for v in value
-        ]
-    if t == "map":
-        return {
-            k: _emit(schema["values"], v, names, fields_by_id, in_bounds, record_name, bound_key)
-            for k, v in value.items()
-        }
-    if t == "fixed":
-        return value.decode("utf-8", errors="replace")
-    if t in ("enum",):
-        return value
-    return _emit(t, value, names, fields_by_id, in_bounds, record_name, bound_key)
+
+        return emit
+
+    def _compound(self, schema: Any, in_bounds: bool) -> Emit:
+        if isinstance(schema, list):
+            return self._union(schema, in_bounds)
+        t = schema["type"]
+        if t == "record":
+            data_file = _is_data_file_record(schema.get("name"))
+            pairs = [
+                (f["name"], self.node(lambda f=f: f["type"],
+                                      f["name"].lower() in BOUND_KEYS if data_file else in_bounds))
+                for f in schema["fields"]
+            ]
+
+            def record(value: Any, key: int | None) -> dict[str, Any]:
+                # inside a bounds map entry the key field identifies the column
+                kv = value.get("key") if isinstance(value, dict) else None
+                if isinstance(kv, int):
+                    key = kv
+                return {name: emit(value[name], key) for name, emit in pairs}
+
+            return record
+        if t == "array":
+            items = self.node(lambda: schema["items"], in_bounds)
+            return lambda value, key: [items(v, key) for v in value]
+        if t == "map":
+            values = self.node(lambda: schema["values"], in_bounds)
+            return lambda value, key: {k: values(v, key) for k, v in value.items()}
+        if t == "fixed":
+            return _utf8
+        if t == "enum":
+            return _same
+        return self.node(lambda: t, in_bounds)
+
+    def _union(self, union: list, in_bounds: bool) -> Emit:
+        # the branch per value type: ``_branch_for`` decides by isinstance
+        # alone, so one value of a type decides for all of that type
+        by_type: dict[type, tuple[Emit | None, Any]] = {}
+        names = self.names
+
+        def pick(value: Any) -> tuple[Emit | None, Any]:
+            branch = _branch_for(value, union, names)
+            rb = _resolve(branch, names)
+            t = rb if isinstance(rb, str) else rb.get("type")
+            if t == "null":
+                return None, None
+            return self.node(lambda: branch, in_bounds), rb if isinstance(rb, str) else rb.get("name", t)
+
+        def emit(value: Any, key: int | None) -> Any:
+            hit = by_type.get(type(value))
+            if hit is None:
+                hit = by_type[type(value)] = pick(value)
+            inner, label = hit
+            return None if inner is None else {label: inner(value, key)}
+
+        return emit
+
+
+# (header schema text, reader schema JSON, field-id → type items) → the
+# entry emitter; a table's manifests share one schema text
+_EMITTERS: dict[tuple, Callable[[Any], Any]] = {}
+
+
+def _emitter(avro: AvroContainerFile, reader_schema: Any | None, fields_by_id: dict[int, str]) -> Callable[[Any], Any]:
+    """The compiled emitter of one (emit schema, field-id → type map),
+    from a process-wide cache that starts over when full. Named types
+    resolve against the writer schema's names, as they always have."""
+    key = (avro.meta["avro.schema"], None if reader_schema is None else json.dumps(reader_schema, sort_keys=True),
+           tuple(sorted(fields_by_id.items())))
+    hit = _EMITTERS.get(key)
+    if hit is None:
+        if len(_EMITTERS) >= 512:
+            _EMITTERS.clear()
+        schema = avro.schema if reader_schema is None else reader_schema
+        root = _Compiler(schema, avro.names, fields_by_id).node(lambda: schema, False)
+        hit = _EMITTERS[key] = lambda value: root(value, None)
+    return hit
 
 
 def _dumps_compact(v: Any) -> str:
@@ -153,8 +241,7 @@ def manifest2json(
     fields_by_id = field_id_types(meta.raw)
 
     avro = AvroContainerFile(data)
-    schema = reader_schema if reader_schema is not None else avro.schema
-    names = dict(avro.names)
+    emit = _emitter(avro, reader_schema, fields_by_id)
 
     limit = head if head is not None else float("inf")
     out.write("[\n")
@@ -163,7 +250,7 @@ def manifest2json(
     it = avro.records(reader_schema)
     rec = next(it, _SENTINEL := object())
     while rec is not _SENTINEL and n < limit:
-        tree = _emit(schema, rec, names, fields_by_id)
+        tree = emit(rec)
         text = _dumps_pretty(tree) if pretty else _dumps_compact(tree)
         nxt = next(it, _SENTINEL)
         if first:

@@ -10,7 +10,15 @@ or its manifest-list row, whose metadata null entry fields inherit
 manifest's ``added_snapshot_id``; a null sequence number takes the
 manifest's when the entry is ADDED or that number is 0 (v1 lists
 carry none); otherwise the null stays, and a consumer that needs the
-value calls :func:`sequence_number`, which raises.
+value calls :func:`sequence_number`, which raises. A consumer passes
+``fields=``, the entry fields it reads (``data_file.file_path``), as
+Iceberg Java plans with ``ManifestReader.select``: only those are built
+(with a list row, plus the ones inheritance needs), the rest are walked
+and checked by the compiled decoder's skip code. Each consumer declares
+its fields next to its worker; a test rule names the few that read
+whole entries (rewrites, commit carry-forward, MoR planning, ``$entries``).
+:func:`partition_json` renders one manifest's partition values with one
+``json.dumps`` per distinct value.
 
 :func:`map_manifests` (a driver list) and :func:`manifest_frame` (a
 DataFrame) run ``worker(ctx, manifest_bytes)`` over ``(ctx,
@@ -47,6 +55,7 @@ for data files.
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Any, Callable, Iterable, Iterator
 
@@ -56,29 +65,44 @@ PARALLEL_THRESHOLD = 3 << 20  # bytes of manifest Avro off the driver's path
 ADDED = 1
 
 
+# the entry fields the inheritance rule reads and writes
+INHERITED = ("status", "snapshot_id", "sequence_number", "file_sequence_number")
+
+
 def decode_manifest(
-    src: bytes | dict[str, Any], row: dict[str, Any] | None = None
+    src: bytes | dict[str, Any],
+    row: dict[str, Any] | None = None,
+    *,
+    fields: Iterable[str] | None = None,
 ) -> tuple[Any, Iterator[dict[str, Any]]]:
-    """The writer schema and the entries of one manifest, as
-    :func:`read_manifest` reads them."""
+    """The writer schema (shared: read-only) and the entries of one
+    manifest, as :func:`read_manifest` reads them."""
     if isinstance(src, dict):
         row = src
         with open(src["local_path"], "rb") as f:
             src = f.read()
     f = AvroContainerFile(src)
+    if fields is not None:
+        f.select((*fields, *INHERITED) if row is not None else fields)
     entries = iter(f)
     return f.schema, entries if row is None else _inherit(entries, row)
 
 
 def read_manifest(
-    src: bytes | dict[str, Any], row: dict[str, Any] | None = None
+    src: bytes | dict[str, Any],
+    row: dict[str, Any] | None = None,
+    *,
+    fields: Iterable[str] | None = None,
 ) -> Iterator[dict[str, Any]]:
     """One manifest's entries, decoded as they are consumed (one
     pass: a list of every entry first costs about a fifth more in
     garbage collection). ``src`` is the manifest's bytes, or its
     manifest-list row (read from the row's ``local_path``); given a
-    row, either way, null entry fields inherit from it."""
-    return decode_manifest(src, row)[1]
+    row, either way, null entry fields inherit from it. ``fields``
+    (dotted entry paths, ``data_file.file_path``) builds only those
+    fields, plus the ones inheritance needs when a row is given; an
+    entry lacks the others (``AvroContainerFile.select``)."""
+    return decode_manifest(src, row, fields=fields)[1]
 
 
 def _inherit(entries: Iterator[dict[str, Any]], row: dict[str, Any]) -> Iterator[dict[str, Any]]:
@@ -92,6 +116,27 @@ def _inherit(entries: Iterator[dict[str, Any]], row: dict[str, Any]) -> Iterator
             if "file_sequence_number" in e and e["file_sequence_number"] is None:
                 e["file_sequence_number"] = seq
         yield e
+
+
+def partition_json() -> Callable[[dict[str, Any] | None], str]:
+    """``json.dumps(partition, sort_keys=True)`` for the entries of ONE
+    manifest, memoized by the partition's values: a manifest has one
+    spec, so each field has one type and equal values render alike. A
+    float is rendered every time (``-0.0 == 0.0`` renders apart)."""
+    memo: dict[tuple, str] = {}
+
+    def render(part: dict[str, Any] | None) -> str:
+        if part is None:
+            return "null"
+        key = tuple(part.values())
+        text = memo.get(key)
+        if text is None:
+            text = json.dumps(part, sort_keys=True)
+            if not any(isinstance(v, float) for v in key):
+                memo[key] = text
+        return text
+
+    return render
 
 
 def sequence_number(entry: dict[str, Any]) -> int:

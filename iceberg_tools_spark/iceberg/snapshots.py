@@ -35,7 +35,6 @@ to the generator's declared fixture contents.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Any
 
@@ -213,16 +212,17 @@ def files_added_between(
     are not re-added). Raises if `from_id` is not an ancestor of
     `to_id` (divergent branches have no well-defined increment).
     """
-    from .tables import _entry_row, _scalar_row
+    from .tables import _entry_rows, _scalar_row
 
     base_dir = base_dir or os.path.dirname(metadata_path)
     meta = parse_metadata(metadata_path)
     fid_types = field_id_types(meta.raw)
-    rows = [
-        _scalar_row(_entry_row(e, fid_types))[2:]
-        for sid in sorted(_increment(meta, from_id, to_id))
-        for _mrow, e in entries_added_by(meta, sid, base_dir)
-    ]
+    rows, last = [], None
+    for sid in sorted(_increment(meta, from_id, to_id)):
+        for mrow, e in entries_added_by(meta, sid, base_dir):
+            if mrow is not last:  # one row function per manifest
+                row, last = _entry_rows(fid_types), mrow
+            rows.append(_scalar_row(row(e))[2:])
     # empty increment (from_id == to_id) yields an empty, correctly-
     # typed frame rather than an error
     return local_frame(spark, rows, LIVE_FILES_SCALAR_SCHEMA)
@@ -416,6 +416,8 @@ def audit_snapshot_summaries(
     }
     from .manifest_io import read_manifest
 
+    # the entry fields the count walk reads (inheritance adds its own)
+    fields = ("status", "snapshot_id", "data_file.record_count", "data_file.content")
     seen_manifests: set[str] = set()
     for sid in claimed:
         for m in manifest_files_at(meta, sid, base_dir):
@@ -424,7 +426,7 @@ def audit_snapshot_summaries(
                 continue
             seen_manifests.add(p)
             mcontent = m.get("content", 0)
-            for rec in read_manifest(m):
+            for rec in read_manifest(m, fields=fields):
                 esid = rec["snapshot_id"]
                 if esid not in actual:
                     continue
@@ -640,19 +642,25 @@ def partition_specs_by_id(meta: TableMetadata) -> dict[int, list[tuple[str, str]
     }
 
 
-def _plan_rows(pruned, tag: tuple, blob: bytes) -> list[tuple]:
+# the entry fields _plan_rows reads; the bounds maps only for rules
+# that compare bounds
+PLAN_FIELDS = ("status", "data_file.file_path", "data_file.partition", "data_file.record_count")
+PLAN_BOUND_FIELDS = (*PLAN_FIELDS, "data_file.lower_bounds", "data_file.upper_bounds")
+
+
+def _plan_rows(pruned, fields: tuple[str, ...], tag: tuple, blob: bytes) -> list[tuple]:
     """One manifest's live entries as ``SCAN_PLAN_SCHEMA`` rows, each
     file decided by ``pruned`` (:func:`pruning.file_pruner`)."""
-    from .manifest_io import read_manifest
+    from .manifest_io import partition_json, read_manifest
 
     mname, spec_id, m_pruned = tag
+    part_json = partition_json()
     out = []
-    for rec in read_manifest(blob):
+    for rec in read_manifest(blob, fields=fields):
         if rec["status"] != 2:
             df_ = rec["data_file"]
             f_pruned = pruned(df_, spec_id)
-            part = json.dumps(df_.get("partition"), sort_keys=True)
-            out.append((mname, df_["file_path"], part, df_["record_count"],
+            out.append((mname, df_["file_path"], part_json(df_.get("partition")), df_["record_count"],
                         m_pruned, f_pruned, not (m_pruned or f_pruned)))
     return out
 
@@ -665,11 +673,13 @@ def _plan_worker(ctx: dict[str, Any], blob: bytes) -> list[tuple]:
     first, then UTF-8 byte order, which is Python's code-point order."""
     from .pruning import file_pruner
 
-    pruned = file_pruner(ctx["rules"])
-    rows = _plan_rows(pruned, ctx["tag"], blob)
+    rules = ctx["rules"]
+    pruned = file_pruner(rules)
+    fields = PLAN_BOUND_FIELDS if rules["bounds"] is not None or rules["geo"] else PLAN_FIELDS
+    rows = _plan_rows(pruned, fields, ctx["tag"], blob)
     for tag, path in ctx["same_name"]:
         with open(path, "rb") as f:
-            rows += _plan_rows(pruned, tag, f.read())
+            rows += _plan_rows(pruned, fields, tag, f.read())
     rows.sort(key=lambda r: (r[1] is not None, r[1] or ""))
     return rows
 

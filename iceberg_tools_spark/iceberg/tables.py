@@ -25,14 +25,14 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import operator
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import local_frame
-from .conversions import decode_bound
+from .conversions import _bound_renderer
 from .metadata import TableMetadata, field_id_types, parse_metadata
 
 ENTRY_STATUS = {0: "EXISTING", 1: "ADDED", 2: "DELETED"}
@@ -117,38 +117,50 @@ def _kv_map(arr: Any) -> dict[int, int] | None:
     return {e["key"]: e["value"] for e in arr}
 
 
-def _bounds(arr: Any, fid_types: dict[int, str]) -> dict[int, str] | None:
-    if arr is None:
-        return None
-    out = {}
-    for e in arr:
-        k, v = e["key"], e["value"]
-        out[k] = decode_bound(fid_types[k], v) if k in fid_types else v.hex()
-    return out
+def _entry_rows(fid_types: dict[int, str]) -> Callable[[dict[str, Any]], tuple]:
+    """The ENTRIES_SCHEMA tuple of each entry of ONE manifest, bounds
+    rendered with the field-id → type map: each field id's renderer is
+    looked up once, the partition JSON is memoized
+    (``manifest_io.partition_json``)."""
+    from .manifest_io import partition_json
 
+    renderers: dict[int, Callable[[bytes], str]] = {}
+    part_json = partition_json()
 
-def _entry_row(rec: dict[str, Any], fid_types: dict[int, str]) -> tuple:
-    """One manifest entry as an ENTRIES_SCHEMA tuple, bounds decoded
-    with the field-id → type map."""
-    df_ = rec["data_file"]
-    return (
-        rec["status"],
-        ENTRY_STATUS.get(rec["status"], str(rec["status"])),
-        rec.get("snapshot_id"),
-        df_["file_path"],
-        df_["file_format"],
-        json.dumps(df_.get("partition"), sort_keys=True),
-        df_["record_count"],
-        df_["file_size_in_bytes"],
-        _kv_map(df_.get("column_sizes")),
-        _kv_map(df_.get("value_counts")),
-        _kv_map(df_.get("null_value_counts")),
-        _kv_map(df_.get("nan_value_counts")),
-        _bounds(df_.get("lower_bounds"), fid_types),
-        _bounds(df_.get("upper_bounds"), fid_types),
-        df_.get("split_offsets"),
-        df_.get("sort_order_id"),
-    )
+    def bounds(arr: Any) -> dict[int, str] | None:
+        if arr is None:
+            return None
+        out = {}
+        for e in arr:
+            k = e["key"]
+            render = renderers.get(k)
+            if render is None:
+                render = renderers[k] = _bound_renderer(fid_types[k]) if k in fid_types else bytes.hex
+            out[k] = render(e["value"])
+        return out
+
+    def row(rec: dict[str, Any]) -> tuple:
+        df_ = rec["data_file"]
+        return (
+            rec["status"],
+            ENTRY_STATUS.get(rec["status"], str(rec["status"])),
+            rec.get("snapshot_id"),
+            df_["file_path"],
+            df_["file_format"],
+            part_json(df_.get("partition")),
+            df_["record_count"],
+            df_["file_size_in_bytes"],
+            _kv_map(df_.get("column_sizes")),
+            _kv_map(df_.get("value_counts")),
+            _kv_map(df_.get("null_value_counts")),
+            _kv_map(df_.get("nan_value_counts")),
+            bounds(df_.get("lower_bounds")),
+            bounds(df_.get("upper_bounds")),
+            df_.get("split_offsets"),
+            df_.get("sort_order_id"),
+        )
+
+    return row
 
 
 def _entries_worker(ctx: dict[str, Any], blob: bytes) -> list[tuple]:
@@ -156,7 +168,8 @@ def _entries_worker(ctx: dict[str, Any], blob: bytes) -> list[tuple]:
     (driver- or executor-side via :mod:`manifest_io`)."""
     from .manifest_io import read_manifest
 
-    return [_entry_row(rec, ctx["fid_types"]) for rec in read_manifest(blob)]
+    row = _entry_rows(ctx["fid_types"])
+    return [row(rec) for rec in read_manifest(blob)]
 
 
 def manifest_entries_df(
@@ -210,20 +223,24 @@ def _fold(acc: dict[str, tuple], key: str, part: tuple) -> None:
     )
 
 
+# the entry fields _partitions_worker reads
+PARTITIONS_FIELDS = ("status", "data_file.partition", "data_file.record_count", "data_file.file_size_in_bytes")
+
+
 def _partitions_worker(ctx: Any, blob: bytes) -> list[tuple[str, tuple]]:
     """ONE manifest's live entries folded per partition: ``(partition
     JSON, partial)`` pairs, at most one per partition the manifest
     holds (driver- or executor-side via :mod:`manifest_io`)."""
-    from .manifest_io import read_manifest
+    from .manifest_io import partition_json, read_manifest
 
     acc: dict[str, tuple] = {}
-    for rec in read_manifest(blob):
+    part_json = partition_json()
+    for rec in read_manifest(blob, fields=PARTITIONS_FIELDS):
         if rec["status"] == 2:
             continue
         df_ = rec["data_file"]
         size = df_["file_size_in_bytes"]
-        key = json.dumps(df_.get("partition"), sort_keys=True)
-        _fold(acc, key, (1, df_["record_count"], size, size, size))
+        _fold(acc, part_json(df_.get("partition")), (1, df_["record_count"], size, size, size))
     return list(acc.items())
 
 

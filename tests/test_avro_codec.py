@@ -497,3 +497,191 @@ def test_codec_is_3x_the_interpreter(benchmark, tmp_path, op):
     t_old, t_new = _best(old, 3), _best(new)
     benchmark.pedantic(new, rounds=3, iterations=1)
     assert t_old / t_new >= 3.0, f"{op}: interpreter {t_old * 1e3:.0f} ms, compiled {t_new * 1e3:.0f} ms"
+
+
+# ---- projected decode ----------------------------------------------
+
+
+def _enc(schema: object, v: object, names: dict, sized: bool, out: bytearray) -> None:
+    """Avro binary of ``v``, arrays and maps in one block each: with
+    ``sized``, a negative count followed by the block's byte size."""
+    schema = reader._resolve(schema, names)
+    kind = reader._kind(schema)
+    if kind == "union":
+        branch = reader._branch_for(v, schema, names)
+        out += _zz(next(i for i, b in enumerate(schema) if b is branch))
+        _enc(branch, v, names, sized, out)
+    elif kind == "record":
+        for f in schema["fields"]:
+            _enc(f["type"], v[f["name"]] if f["name"] in v else f["default"], names, sized, out)
+    elif kind in ("array", "map"):
+        body = bytearray()
+        for item in v.items() if kind == "map" else v:
+            if kind == "map":
+                _enc("string", item[0], names, sized, body)
+                item = item[1]
+            _enc(schema["values" if kind == "map" else "items"], item, names, sized, body)
+        if v:
+            out += _zz(-len(v)) + _zz(len(body)) if sized else _zz(len(v))
+            out += body
+        out += _zz(0)
+    elif kind == "enum":
+        out += _zz(schema["symbols"].index(v))
+    elif kind == "fixed":
+        out += v
+    elif kind in ("bytes", "string"):
+        raw = v.encode() if kind == "string" else v
+        out += _zz(len(raw)) + raw
+    elif kind == "boolean":
+        out.append(1 if v else 0)
+    elif kind in ("int", "long"):
+        out += _zz(v)
+    elif kind in ("float", "double"):
+        out += struct.pack("<f" if kind == "float" else "<d", v)
+
+
+def _paths(schema: object, names: dict, prefix: str = "", seen: tuple = ()) -> list[str]:
+    """Every dotted record-field path under ``schema``."""
+    schema = reader._resolve(schema, names)
+    kind = reader._kind(schema)
+    if kind == "union":
+        return [p for b in schema for p in _paths(b, names, prefix, seen)]
+    if kind in ("array", "map"):
+        return _paths(schema["values" if kind == "map" else "items"], names, prefix, seen)
+    if kind != "record" or id(schema) in seen:
+        return []
+    out = []
+    for f in schema["fields"]:
+        path = f"{prefix}{f['name']}"
+        out += [path, *_paths(f["type"], names, path + ".", (*seen, id(schema)))]
+    return out
+
+
+def _restrict(schema: object, v: object, proj: tuple | None, names: dict) -> object:
+    """``v`` with only the fields ``proj`` keeps."""
+    schema = reader._resolve(schema, names)
+    kind = reader._kind(schema)
+    if proj is None:
+        return v
+    if kind == "union":
+        return _restrict(reader._branch_for(v, schema, names), v, proj, names)
+    if kind == "array":
+        return [_restrict(schema["items"], x, proj, names) for x in v]
+    if kind == "map":
+        return {k: _restrict(schema["values"], x, proj, names) for k, x in v.items()}
+    if kind == "record":
+        keep = dict(proj)
+        return {f["name"]: _restrict(f["type"], v[f["name"]], keep[f["name"]], names)
+                for f in schema["fields"] if f["name"] in keep}
+    return v
+
+
+def _draw_projected(data: st.DataObject) -> tuple[object, list, bytes, list[str]]:
+    """A random file (arrays and maps written in sized or unsized
+    blocks) and a random set of its field paths."""
+    schema, records, _codec = _draw_file(data)
+    names: dict = {}
+    reader._collect_named(schema, names)
+    sized = data.draw(st.booleans())
+    header = write_container(schema, [])
+    body = bytearray()
+    for rec in records:
+        _enc(schema, rec, names, sized, body)
+    blob = header + (_zz(len(records)) + _zz(len(body)) + body + AvroContainerFile(header).sync if records else b"")
+    paths = _paths(schema, names)
+    fields = data.draw(st.lists(st.sampled_from(paths), max_size=4, unique=True)) if paths else []
+    return schema, records, blob, fields
+
+
+@settings(max_examples=300, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(st.data())
+def test_projected_decode_is_the_full_decode_restricted(data):
+    schema, records, blob, fields = _draw_projected(data)
+    names: dict = {}
+    reader._collect_named(schema, names)
+    full = list(AvroContainerFile(blob))
+    assert _bits(full) == _bits(list(oracle.AvroContainerFile(blob)))
+    proj = reader._projection(tuple(fields))
+    want = [_restrict(schema, r, proj, names) for r in full]
+    assert _bits(list(AvroContainerFile(blob).select(fields))) == _bits(want)
+
+
+def _utf8_failure(exc: BaseException) -> bool:
+    return isinstance(exc.__cause__, UnicodeDecodeError)
+
+
+@settings(max_examples=300, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(st.data())
+def test_damage_in_skipped_fields_still_raises_avro_error(data):
+    """Truncated or bit-flipped files: a projected decode raises
+    ``AvroError`` wherever the full decode does (a skipped string's
+    UTF-8 is not checked, as Java Avro's ``skipString`` does not check
+    it), and where the full decode succeeds it gives its records,
+    restricted."""
+    schema, records, blob, fields = _draw_projected(data)
+    assume(records)
+    header = len(write_container(schema, []))
+    at = data.draw(st.integers(header, len(blob) - 1))
+    if data.draw(st.booleans()):
+        bad = blob[:at]
+    else:
+        bad = blob[:at] + bytes([blob[at] ^ data.draw(st.integers(1, 255))]) + blob[at + 1:]
+    names: dict = {}
+    reader._collect_named(schema, names)
+    try:
+        want = list(AvroContainerFile(bad))
+    except AvroError as e:
+        want = e
+    try:
+        got = list(AvroContainerFile(bad).select(fields))
+    except AvroError as e:
+        got = e
+    if isinstance(want, list):
+        proj = reader._projection(tuple(fields))
+        assert _bits(got) == _bits([_restrict(schema, r, proj, names) for r in want])
+    elif not _utf8_failure(want):
+        assert isinstance(got, AvroError), (want, got)
+
+
+@pytest.mark.parametrize(
+    "field,value,good,bad",
+    [
+        ("string", "xy", b"\x04xy", b"\x03xy"),  # length -2
+        (["null", "long"], 5, b"\x02\x0a", b"\x04\x0a"),  # branch 2 of 2
+        (_ENUM, "B", b"\x02", b"\x04"),  # symbol 2 of 2
+        ({"type": "fixed", "name": "f", "size": 4}, b"abcd", b"abcd", b"abc"),  # block ends early
+        ("double", 0.0, bytes(8), bytes(7)),  # block ends early
+        ({"type": "array", "items": "long"}, [3], b"\x02\x06\x00", _zz(10**6) + b"\x06\x00"),  # count
+        ({"type": "array", "items": "long"}, [3], b"\x02\x06\x00", _zz(-(10**6)) + _zz(1) + b"\x06\x00"),
+    ],
+)
+def test_each_check_holds_in_a_skipped_field(field, value, good, bad):
+    """The decode's checks on a field the projection skips: span
+    bounds, union and enum index ranges, counts against the bytes
+    left (a sized block's too), a value past the block's end."""
+    fields = [{"name": "a", "type": field}, {"name": "z", "type": "long"}]
+    sound = _one_block(fields, 1, good + b"\x0e")
+    assert list(AvroContainerFile(sound)) == [{"a": value, "z": 7}]
+    assert list(AvroContainerFile(sound).select(["z"])) == [{"z": 7}]
+    broken = _one_block(fields, 1, bad + (b"\x0e" if len(bad) >= len(good) else b""))
+    with pytest.raises(AvroError):
+        list(AvroContainerFile(broken))
+    with pytest.raises(AvroError):
+        list(AvroContainerFile(broken).select(["z"]))
+
+
+def test_each_schema_and_projection_compiles_once(tmp_path):
+    """A header's schema text is parsed once and shared; each (schema
+    text, projection) compiles one decoder, whatever order the paths
+    come in."""
+    paths, _ = _manifests(tmp_path, n=2, per=3)
+    blobs = [open(p, "rb").read() for p in paths]
+    reader._DECODERS.clear()
+    reader._SCHEMAS.clear()
+    files = [AvroContainerFile(b) for b in blobs]
+    assert files[0].schema is files[1].schema and len(reader._SCHEMAS) == 1
+    a = files[0].select(["status", "data_file.file_path"])._decode
+    assert files[1].select(["data_file.file_path", "status"])._decode is a
+    assert AvroContainerFile(blobs[0]).select(["data_file"])._decode is not a
+    assert sorted(proj is not None for _text, proj in reader._DECODERS) == [False, True, True]
+    assert [set(e) for e in AvroContainerFile(blobs[1]).select(["status"])] == [{"status"}] * 3

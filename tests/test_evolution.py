@@ -567,8 +567,9 @@ def test_added_column_id_passes_nested_ids_without_last_column_id(tmp_path):
 def test_evolved_v1_table_reads_its_current_schema(tmp_path):
     """A v1 table carrying both the ``schema`` copy and ``schemas``
     takes its current schema from ``schemas[current-schema-id]``:
-    evolution appends to ``schemas`` and leaves the copy stale, and
-    bound decoding must use the promoted type."""
+    evolution appends to ``schemas`` and rewrites the copy to the new
+    current schema (as Java Iceberg writes v1 metadata), and bound
+    decoding must use the promoted type."""
     from iceberg_tools_spark.iceberg.commit import commit_version, create_table
     from iceberg_tools_spark.iceberg.metadata import current_schema, field_id_types
     from iceberg_tools_spark.iceberg.table_stats import _field_types
@@ -581,7 +582,7 @@ def test_evolved_v1_table_reads_its_current_schema(tmp_path):
     assert field_id_types(parse_metadata(mp).raw) == {1: "int", 2: "string"}
 
     meta = parse_metadata(evo.evolve_schema(mp, promote={"id": "long"})["metadata_path"])
-    assert meta.raw["schema"]["fields"][0]["type"] == "int"  # the stale copy
+    assert meta.raw["schema"]["fields"][0]["type"] == "long"  # the copy follows
     assert meta.raw["current-schema-id"] == 1
     assert meta.current_schema["schema-id"] == 1
     assert field_id_types(meta.raw) == {1: "long", 2: "string"}

@@ -824,6 +824,54 @@ ROWS = list(AvroContainerFile(open("x", "rb").read()))
     assert sorted(map(str, _container_builds(ast.parse(src)))) == ["None", "a", "b"]
 
 
+# (module, function) → why it decodes whole manifest entries
+_FULL_ENTRY_SITES = {
+    ("iceberg/rewrite.py", "rewrite_manifest_group"): "rewrite: writes entries back whole",
+    ("iceberg/rewrite_data.py", "_replace_commit"): "rewrite: rebuilds manifests from whole entries",
+    ("iceberg/commit.py", "_retire_replaced_dvs"): "commit carry-forward: rewrites entries whole",
+    ("iceberg/deletes.py", "_live_entries_worker"): "MoR planning keeps most of each entry",
+    ("iceberg/snapshots.py", "entries_added_by"): "incremental scans render whole entries",
+    ("iceberg/tables.py", "_entries_worker"): "the $entries table shows every field",
+    ("iceberg/rewrite_deletes.py", "rewrite_position_deletes"): "rewrite: rebuilds delete manifests whole",
+}
+
+
+def _unprojected_reads(tree: ast.Module) -> list:
+    """The enclosing function of every ``read_manifest``/``decode_manifest``
+    call that passes no ``fields=``."""
+    def is_full(n: ast.AST) -> bool:
+        return (isinstance(n, ast.Call) and _call_name(n) in ("read_manifest", "decode_manifest")
+                and not any(k.arg == "fields" for k in n.keywords))
+
+    return [fn for fn, _call, _assigns in _scoped(tree, is_full)]
+
+
+def test_manifest_consumers_declare_their_fields():
+    """Under ``iceberg/``, every manifest read names the entry fields it
+    reads (``fields=``), or is one of the named full-entry consumers; a
+    new consumer cannot decode whole entries unnoticed."""
+    found = set()
+    for path in sorted((_PKG / "iceberg").glob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        found |= {(rel, fn) for fn in _unprojected_reads(ast.parse(path.read_text()))}
+    assert found == set(_FULL_ENTRY_SITES)
+
+
+def test_unprojected_read_scan_sees_each_call_shape():
+    src = """
+from . import manifest_io
+def a(blob):
+    return list(read_manifest(blob))
+def b(row):
+    return manifest_io.decode_manifest(row, fields=("status",))
+def c(row):
+    return [e for e in manifest_io.read_manifest(row, row)]
+def d(blob, fields):
+    return read_manifest(blob, fields=fields)
+"""
+    assert _unprojected_reads(ast.parse(src)) == ["a", "c"]
+
+
 def _threshold_reads(tree: ast.Module) -> list[int]:
     """Lines that read or import ``PARALLEL_THRESHOLD``."""
     return sorted(

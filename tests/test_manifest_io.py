@@ -597,3 +597,78 @@ def test_rewrite_from_list_rows_writes_inherited_fields(tmp_path):
     rows = manifest_files_at(parse_metadata(versions[1]), sids[1], root)
     with pytest.raises(ValueError, match=r"inherited \(null\) sequence_number"):
         rewrite_manifests([[r["local_path"] for r in rows]], str(tmp_path / "out2"))
+
+
+# ---- projected consumers give the rows of a full decode -------------
+
+
+def _full_decode(monkeypatch):
+    """Make every ``select`` a no-op: each entry decodes whole."""
+    from iceberg_tools_spark.avro.reader import AvroContainerFile
+
+    monkeypatch.setattr(AvroContainerFile, "select", lambda self, fields: self)
+
+
+def _projected_consumers(spark, mp, sid, root):
+    """What each projected manifest consumer returns on the table."""
+    from iceberg_tools_spark.iceberg.maintenance import referenced_paths_df
+    from iceberg_tools_spark.iceberg.snapshots import files_at, manifest_paths_at
+    from iceberg_tools_spark.iceberg.tables import partitions_df
+
+    from .test_snapshots import _PLAN_KW
+
+    meta = parse_metadata(mp)
+    out = {
+        f"plan_{name}": plan_scan(spark, mp, sid, base_dir=root, debug=True, **kw).collect()
+        for name, kw in sorted(_PLAN_KW.items())
+    }
+    out["partitions"] = partitions_df(spark, manifest_paths_at(meta, sid, root), meta.raw).collect()
+    out["files_at"] = files_at(spark, mp, sid, base_dir=root).collect()
+    out["referenced"] = sorted(referenced_paths_df(spark, mp, root).collect())
+    return out
+
+
+def test_projected_consumers_match_a_full_decode(spark, monkeypatch, tmp_path):
+    """``plan_scan`` (no rules, partition, bound and geo rules),
+    ``partitions_df``, ``files_at`` and the referenced-files worker
+    give, on the driver and on the executor placement, the rows they
+    give when every entry decodes whole."""
+    from .test_snapshots import _MIXED_TABLE, _write_scan_table
+
+    root = str(tmp_path / "t")
+    mp, sid = _write_scan_table(root, _MIXED_TABLE["manifests"])
+    with monkeypatch.context() as m:
+        _full_decode(m)
+        _force_threshold(m, 10**9)
+        want = _projected_consumers(spark, mp, sid, root)
+    assert all(want.values())
+    for threshold in (10**9, 0):
+        _force_threshold(monkeypatch, threshold)
+        assert _projected_consumers(spark, mp, sid, root) == want, threshold
+
+
+@pytest.mark.parametrize("fixture,metadata", [("mor", "v2"), ("dv", "v3"), ("multi_snapshot", "v2")])
+def test_audit_count_walk_matches_a_full_decode(spark, monkeypatch, fixture, metadata):
+    """The snapshot-summary audit counts what a full decode counts,
+    delete manifests included."""
+    from iceberg_tools_spark.iceberg.snapshots import audit_snapshot_summaries
+
+    root = os.path.join(os.path.dirname(__file__), "fixtures", fixture)
+    mp = os.path.join(root, f"{metadata}.metadata.json")
+    got = audit_snapshot_summaries(spark, mp, root).collect()
+    _full_decode(monkeypatch)
+    assert got and got == audit_snapshot_summaries(spark, mp, root).collect()
+
+
+def test_partition_json_renders_what_json_dumps_renders():
+    """Memoized per manifest, the partition JSON still tells -0.0 from
+    0.0 and NaN from NaN, and a repeated value renders from the memo."""
+    import json
+    import math
+
+    render = manifest_io.partition_json()
+    parts = [{"x": 0.0, "y": "a"}, {"x": -0.0, "y": "a"}, {"x": math.nan, "y": None},
+             {"x": math.nan, "y": None}, None, {"x": 1.5, "y": "a"}]
+    assert [render(p) for p in parts] == [json.dumps(p, sort_keys=True) for p in parts]
+    render = manifest_io.partition_json()
+    assert render({"b": 2, "a": "é"}) is render({"b": 2, "a": "é"}) == '{"a": "\\u00e9", "b": 2}'
